@@ -373,32 +373,15 @@ object Dedup {
     val spark = p0.sparkSession
     val edgesRaw = p0.select(col("id_a").alias("src"), col("id_b").alias("dst"))
       .unionByName(p0.select(col("id_b").alias("src"), col("id_a").alias("dst")))
-    val raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10m")
-    val threshold = raw.toLongOption.getOrElse(
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw))
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
     // threshold <= 0 disables broadcast joins outright -> always SMJ
     val labelsBroadcastable =
       threshold > 0 && p0.count() * 2L * 32L <= threshold
     if (labelsBroadcastable) edgesRaw.localCheckpoint(false)
-    else {
-      // The layout only helps if the checkpoint REPORTS it: under AQE,
-      // Dataset.localCheckpoint captures the AdaptiveSparkPlanExec's
-      // pre-finalization UnknownPartitioning — measured in r17, every
-      // round then re-planned the edge exchange it was supposed to skip
-      // (the re-shuffle of already-clustered rows and the near-sorted
-      // sort are cheaper than a cold shuffle, which is why the r16 A/B
-      // still improved, but the exchange was NOT removed). Planning the
-      // checkpoint with AQE off for this one statement makes LogicalRDD
-      // carry hashpartitioning(dst, shuffle.partitions) + dst ordering,
-      // so every round's sort-merge join consumes the layout with no
-      // exchange and no sort on the edge side (pinned in GraphSpec; AQE
-      // buys nothing here anyway — the plan is one static shuffle+sort).
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try edgesRaw.repartition(col("dst")).sortWithinPartitions(col("dst"))
-        .localCheckpoint(false)
-      finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    }
+    // every round's sort-merge join then consumes the edge side with no
+    // exchange and no sort (pinned in GraphSpec)
+    else Pin.clustered(edgesRaw, Seq(col("dst")),
+      spark.sessionState.conf.defaultNumShufflePartitions)
   }
 
   /** [[clusters]] plus the executed round count — the pure-propagation

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Distributed graph operators over edge tables.
   *
@@ -79,41 +80,28 @@ object Graph {
     // tax). An adaptively-partitioned CACHE (ops.Pin) fixes the count but
     // loses the reported hash layout: measured here, the loop re-planned
     // Exchange+Sort on the adjacency side of every round's join — fine at
-    // sf0.1, a per-round shuffle of the biggest table at 100 TB. The
-    // [[Dedup.edgeTable]] pattern gives both: derive the partition count
-    // from the PLANNER's size estimate of the edge relation against the
-    // AQE advisory partition size (bytes-derived, so it tracks data scale,
-    // not core count; session partitioning is kept when the estimate is
-    // unavailable), and localCheckpoint the explicitly-partitioned window
-    // output with AQE off so the LogicalRDD carries hashpartitioning(src)
-    // + src ordering — every round's contribution join still consumes adj
-    // with no exchange and no sort on the materialized side (the window
-    // reuses the same explicit repartition: one edge shuffle total, as
-    // before). nodes inherits the co-partitioned layout (distinct over
-    // adj adds no exchange) and is checkpointed for the same reason.
-    val spark = edges.sparkSession
+    // sf0.1, a per-round shuffle of the biggest table at 100 TB. So the
+    // partition count is derived from the PLANNER's size estimate of the
+    // edge relation against the AQE advisory partition size (bytes-derived,
+    // so it tracks data scale, not core count; session partitioning is
+    // kept when the estimate is unavailable), and adj is materialized
+    // clustered on src (Pin.clustered): every round's contribution join
+    // consumes it with no exchange and no sort, and the degree window
+    // rides the same edge shuffle. nodes inherits the co-partitioned
+    // layout (distinct over adj adds no exchange).
+    val conf = edges.sparkSession.sessionState.conf
     val sizeEst = e.queryExecution.optimizedPlan.stats.sizeInBytes
-    val advisoryRaw =
-      spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-    val advisory = advisoryRaw.toLongOption.getOrElse(
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(advisoryRaw))
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
+    val advisory = conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
     val unknown = sizeEst <= 0 ||
       sizeEst >= BigInt(Long.MaxValue) / 4 // defaultSizeInBytes: no estimate
     val nParts =
-      if (unknown) sessionParts
+      if (unknown) conf.defaultNumShufflePartitions
       else ((sizeEst + advisory - 1) / advisory)
         .max(1).min(1 << 20).toInt
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val (adj, nodes) =
-      try {
-        val a = e.repartition(nParts, col("src"))
-          .sortWithinPartitions("src")
-          .withColumn("deg", count(lit(1)).over(w))
-          .localCheckpoint(false)
-        (a, a.select(col("src").as("node")).distinct().localCheckpoint(false))
-      } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    val adj = Pin.clustered(e, Seq(col("src")), nParts,
+      _.withColumn("deg", count(lit(1)).over(w)))
+    val nodes = Pin.clustered(adj, Seq(col("src")), nParts,
+      _.select(col("src").as("node")).distinct())
     nodes.count() // materialize adj + nodes once, before the loop
     val unit = 1000000000000L // 1e12 units == rank 1.0
     val base = 150000000000L  // 0.15

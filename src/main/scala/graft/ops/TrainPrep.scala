@@ -70,8 +70,8 @@ object TrainPrep {
       value: Column,
       out: String): DataFrame = {
     val keys = (groupCols ++ orderCols).map(col)
-    val parts = math.max(2, df.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "32").toInt / 2)
+    val parts = math.max(2,
+      df.sparkSession.sessionState.conf.defaultNumShufflePartitions / 2)
     val parted = Pin(df
       .withColumn("__grs_v", value.cast("long"))
       .repartitionByRange(parts, keys: _*)

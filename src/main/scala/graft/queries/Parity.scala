@@ -70,8 +70,7 @@ object Parity {
   def tWide(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val df = t(spark, sfDir, name)
     val bytes = inputBytes(new java.io.File(s"$sfDir/$name.parquet"))
-    val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
+    val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
     if (bytes >= 256L * 1024 && bytes < maxSplit)
       df.repartition(spark.sparkContext.defaultParallelism)
     else df

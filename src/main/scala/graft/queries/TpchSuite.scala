@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Pin
+
 /** The remaining TPC-H query shapes (the suite's Q1/3/5/6/10/18 live in
   * [[Parity]] / [[graft.SparkEntry]]), adapted to the driver testdata's
   * schema: there is no `partsupp` table and no ship mode / commit /
@@ -368,14 +370,12 @@ object TpchSuite {
   //    cache is a fraction of one join's shuffle, and both consumers
   //    read it (PlanSpec pins the two InMemoryTableScans).
   //
-  //    r17 (§2.3/§2.4): `lo` is materialized clustered on l_orderkey — the
-  //    [[graft.ops.Dedup.edgeTable]] / pageRank mechanism: an explicit
-  //    repartition + sortWithinPartitions, localCheckpoint'ed with AQE
-  //    off so the LogicalRDD REPORTS hashpartitioning(l_orderkey) +
-  //    ordering (a cache reports UnknownPartitioning under AQE, and so
-  //    does a checkpoint without the explicit repartition — the BHJ
-  //    output inherits the scan's unknown layout; both variants were
-  //    measured here and still planned all three downstream exchanges).
+  //    r17 (§2.3/§2.4): `lo` is materialized clustered on l_orderkey
+  //    ([[graft.ops.Pin.clustered]]) so it REPORTS hashpartitioning
+  //    (l_orderkey) + ordering (a cache, and a checkpoint without the
+  //    explicit repartition — the BHJ output inherits the scan's unknown
+  //    layout — were both measured here and still planned all three
+  //    downstream exchanges).
   //    One clustering shuffle of the three narrow columns replaces the
   //    THREE downstream exchanges that re-keyed the same cached rows
   //    (the probe's shuffle+sort into the final join, the Expand'ed
@@ -392,19 +392,13 @@ object TpchSuite {
   //    is flat (interleaved best-of-tail 1.49/2.08 vs 1.79/1.86 s); the
   //    win is the deleted fact-derived shuffles at scale.
   def q21(s: SparkSession, dir: String): DataFrame = {
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled", "true")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    val lo =
-      try {
-        t(s, dir, "lineitem")
-          .join(t(s, dir, "orders").filter(col("o_orderstatus") === "F"),
-            col("l_orderkey") === col("o_orderkey"))
-          .select(col("l_orderkey"), col("l_suppkey"),
-            (shipDelayDays > 60).alias("late"))
-          .repartition(col("l_orderkey"))
-          .sortWithinPartitions(col("l_orderkey"))
-          .localCheckpoint(false)
-      } finally s.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    val lo = Pin.clustered(
+      t(s, dir, "lineitem")
+        .join(t(s, dir, "orders").filter(col("o_orderstatus") === "F"),
+          col("l_orderkey") === col("o_orderkey"))
+        .select(col("l_orderkey"), col("l_suppkey"),
+          (shipDelayDays > 60).alias("late")),
+      Seq(col("l_orderkey")), s.sessionState.conf.defaultNumShufflePartitions)
     val perOrder = lo.groupBy(col("l_orderkey"), col("l_suppkey"))
       .agg(max(col("late")).alias("slate"))
       .groupBy(col("l_orderkey").alias("po_okey"))

@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.Column
+import org.apache.spark.internal.config.ConfigEntry
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, classic}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -31,6 +32,25 @@ object Shims {
 
   def unescapePathName(part: String): String =
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(part)
+
+  /** `df`'s plan on a clone of its session with `confs` set on the clone
+    * only (`cloneSession` is `private[sql]`). The clone shares the
+    * SparkContext and SharedState (CacheManager, catalogs) and copies the
+    * conf, temp views, extensions and query listeners — the same move
+    * Spark's CacheManager makes to plan a cache under other confs
+    * (`getOrCloneSessionWithConfigsOff`). The caller's conf is never
+    * written, so queries planned concurrently on it never observe `confs`. */
+  def withConf(df: DataFrame, confs: (ConfigEntry[Boolean], Boolean)*): DataFrame = {
+    val clone = df.sparkSession.asInstanceOf[classic.SparkSession].cloneSession()
+    confs.foreach { case (entry, value) => clone.sessionState.conf.setConf(entry, value) }
+    onSession(df, clone)
+  }
+
+  /** `df`'s analyzed plan as a DataFrame of `session`, which shares
+    * `df`'s SharedState (`Dataset.ofRows` is `private[sql]`). */
+  def onSession(df: DataFrame, session: SparkSession): DataFrame =
+    classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession],
+      df.asInstanceOf[classic.Dataset[_]].logicalPlan)
 
   /** Block until every queued listener event has been delivered
     * (`SparkContext.listenerBus` is `private[spark]`): a profiler reading
