@@ -2,7 +2,7 @@ package graft.layers
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Gold layer: brewery counts by (type, country, state, city, date).
@@ -56,7 +56,11 @@ object Gold {
         count(lit(1)).alias("brewery_count"),
         approx_count_distinct(col("id")).alias("unique_brewery_count")))
 
-  /** Pipeline-total check: sum(brewery_count) (gold:55). */
+  /** Pipeline total: sum(brewery_count) (gold:55), 0 over no rows. The one
+    * definition behind [[total]] and the Runner's observed gold total. */
+  val totalColumn: Column = coalesce(sum(col("brewery_count")), lit(0L)).alias("total")
+
+  /** Pipeline-total check over a gold DataFrame. */
   def total(gold: DataFrame): Long =
-    gold.agg(sum(col("brewery_count"))).first().getLong(0)
+    gold.agg(totalColumn).first().getLong(0)
 }

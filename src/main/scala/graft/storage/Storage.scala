@@ -95,6 +95,7 @@ final class CatalogWarehouse(spark: SparkSession, namespace: String = "graft")
       // is V1 insertInto under partitionOverwriteMode=dynamic; on an
       // Iceberg catalog the same call site would be
       // `df.writeTo(t).overwritePartitions()`.
+      // Conf, not a write option: V1 insertInto ignores the option on Spark 4.1.2.
       df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       df.write.mode(SaveMode.Overwrite).insertInto(qualified(table))
     }
