@@ -88,7 +88,7 @@ object Bench {
     // dedup_lcp_stats) is deliberately NOT headline: its ~13 s sf0.1 cost
     // is the algorithm's documented nature (log-round global sorts) and
     // would swamp the suite's round-over-round comparability — it is
-    // measured standalone in SCALE.md §suffix-array via BenchOne.
+    // measured standalone in SCALE.md §suffix-array via graft.Scenarios.
     "sim_topk_pq", "text_kneser_ney",
     // round-12: the SQL DML surface measured where regressions in the
     // rewrite-pricing path show up — a stats-pruned point DELETE, a
@@ -190,6 +190,12 @@ object Bench {
     "q_dml_merge_mor" -> ((s, dir) => dmlMerge(s, dir, "benchcat.b.docs_mor")),
     "q_dml_merge_cow" -> ((s, dir) => dmlMerge(s, dir, "benchcat.b.docs_cowm")),
     "q_dml_merge_pos" -> ((s, dir) => dmlMerge(s, dir, "benchcat.b.docs_pos")))
+
+  /** What the bench times for `name`: its production variant when one
+    * exists, else its `SparkEntry.queries` entry. Callers decide whether
+    * to run the untimed [[productionSetup]] first. */
+  private[graft] def resolve(name: String): Option[(SparkSession, String) => DataFrame] =
+    productionVariants.get(name).orElse(SparkEntry.queries.get(name))
 
   private[graft] lazy val incStateDir =
     java.nio.file.Files.createTempDirectory("graft-bench-incstate").toString
@@ -379,7 +385,7 @@ object Bench {
     }
 
     val results = headline.flatMap { name =>
-      productionVariants.get(name).orElse(SparkEntry.queries.get(name)).map { fn =>
+      resolve(name).map { fn =>
         productionSetup.get(name).foreach { prep =>
           prep(spark, sfDir); clearAll()
         }
@@ -420,7 +426,7 @@ object Bench {
     val unstable = okResults.filter { case (_, _, _, ws, _, _) =>
       ws.nonEmpty && ws.max / ws.min > 2.0 }.map(_._1)
     val remeasured = unstable.flatMap { name =>
-      productionVariants.get(name).orElse(SparkEntry.queries.get(name)).flatMap { fn =>
+      resolve(name).flatMap { fn =>
         clearAll(); if (gcBetween) System.gc()
         val settleOk = time(fn)._3; clearAll()
         val t2 = (1 to WarmIters).map { _ => val t = time(fn); clearAll(); t }
@@ -524,9 +530,7 @@ object Bench {
             else {
               clearAll(); System.gc()
               val rows = outliers.map { case (n, w, b, r) =>
-                val settled = productionVariants.get(n)
-                  .orElse(SparkEntry.queries.get(n))
-                  .map { fn => val t = time(fn); clearAll(); t }
+                val settled = resolve(n).map { fn => val t = time(fn); clearAll(); t }
                   .collect { case (sec, _, true) => sec }.getOrElse(-1.0)
                 f"""{"q":"$n","warm":$w%.3f,"history_median":$b%.3f,""" +
                   f""""ratio":$r%.2f,"settled":$settled%.3f}"""
@@ -541,9 +545,7 @@ object Bench {
               // was in-suite pressure this number recovers; if the machine
               // itself is loaded both stay high and the verdict says so
               clearAll(); System.gc()
-              val t = core19.flatMap { n =>
-                productionVariants.get(n).orElse(SparkEntry.queries.get(n))
-              }.map { fn =>
+              val t = core19.flatMap(resolve).map { fn =>
                 val r = time(fn); clearAll(); r
               }.collect { case (sec, _, true) => sec }.sum
               f""","core19_retail":$t%.3f"""

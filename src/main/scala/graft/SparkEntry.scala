@@ -106,12 +106,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions._
       // one warehouse per session (the catalog instance is cached by
       // name; createOrReplace keeps reruns fresh)
-      if (s.conf.getOption("spark.sql.catalog.qmor").isEmpty) {
-        s.conf.set("spark.sql.catalog.qmor",
-          classOf[graft.storage.GraftCatalog].getName)
-        s.conf.set("spark.sql.catalog.qmor.warehouse",
-          java.nio.file.Files.createTempDirectory("graft-qmor").toString)
-      }
+      graft.storage.GraftCatalog.registerTemp(s, "qmor")
       s.sql("CREATE NAMESPACE IF NOT EXISTS qmor.s")
       val d = docsRaw(s, dir).select(
         coalesce(col("doc_id"), lit(-1L)).alias("doc_id"),
@@ -150,16 +145,9 @@ object SparkEntry {
     // the raw documents — evolution must be invisible to query results.
     "q_partition_evolution" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      // one warehouse per session: the catalog instance is cached by
-      // name, so re-setting the conf on reruns (bench warm iterations)
-      // would neither take effect nor stop leaking temp dirs —
-      // createOrReplace below keeps each rerun's table fresh
-      if (s.conf.getOption("spark.sql.catalog.qevo").isEmpty) {
-        s.conf.set("spark.sql.catalog.qevo",
-          classOf[graft.storage.GraftCatalog].getName)
-        s.conf.set("spark.sql.catalog.qevo.warehouse",
-          java.nio.file.Files.createTempDirectory("graft-qevo").toString)
-      }
+      // one warehouse per session; createOrReplace below keeps each
+      // rerun's table fresh
+      graft.storage.GraftCatalog.registerTemp(s, "qevo")
       s.sql("CREATE NAMESPACE IF NOT EXISTS qevo.s")
       val d = docsRaw(s, dir).select(col("doc_id"), col("source"), col("n_chars"))
       // null-safe split key: both pmod predicates are NULL for null
@@ -186,12 +174,7 @@ object SparkEntry {
     // aggregates off the raw documents.
     "q_evolution_agg" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      if (s.conf.getOption("spark.sql.catalog.qevoa").isEmpty) {
-        s.conf.set("spark.sql.catalog.qevoa",
-          classOf[graft.storage.GraftCatalog].getName)
-        s.conf.set("spark.sql.catalog.qevoa.warehouse",
-          java.nio.file.Files.createTempDirectory("graft-qevoa").toString)
-      }
+      graft.storage.GraftCatalog.registerTemp(s, "qevoa")
       s.sql("CREATE NAMESPACE IF NOT EXISTS qevoa.s")
       val d = docsRaw(s, dir).select(col("doc_id"), col("source"), col("n_chars"))
       val splitKey = pmod(coalesce(col("doc_id"), lit(-1L)), lit(3))
@@ -216,12 +199,7 @@ object SparkEntry {
     // aggregates off the raw documents.
     "q_evolution_agg_hybrid" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      if (s.conf.getOption("spark.sql.catalog.qevoh").isEmpty) {
-        s.conf.set("spark.sql.catalog.qevoh",
-          classOf[graft.storage.GraftCatalog].getName)
-        s.conf.set("spark.sql.catalog.qevoh.warehouse",
-          java.nio.file.Files.createTempDirectory("graft-qevoh").toString)
-      }
+      graft.storage.GraftCatalog.registerTemp(s, "qevoh")
       s.sql("CREATE NAMESPACE IF NOT EXISTS qevoh.s")
       val d = docsRaw(s, dir).select(col("doc_id"), col("source"), col("n_chars"))
       val splitKey = pmod(coalesce(col("doc_id"), lit(-1L)), lit(3))
@@ -246,12 +224,7 @@ object SparkEntry {
     // The oracle derives the same end state with CASE arithmetic.
     "q_migrate_layout" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      if (s.conf.getOption("spark.sql.catalog.qmig").isEmpty) {
-        s.conf.set("spark.sql.catalog.qmig",
-          classOf[graft.storage.GraftCatalog].getName)
-        s.conf.set("spark.sql.catalog.qmig.warehouse",
-          java.nio.file.Files.createTempDirectory("graft-qmig").toString)
-      }
+      graft.storage.GraftCatalog.registerTemp(s, "qmig")
       s.sql("CREATE NAMESPACE IF NOT EXISTS qmig.s")
       val d = docsRaw(s, dir).select(col("doc_id"), col("source"), col("n_chars"))
       val splitKey = pmod(coalesce(col("doc_id"), lit(-1L)), lit(3))
@@ -284,12 +257,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions._
       // one warehouse per session (the catalog instance is cached by
       // name; createOrReplace keeps reruns fresh)
-      if (s.conf.getOption("spark.sql.catalog.qpos").isEmpty) {
-        s.conf.set("spark.sql.catalog.qpos",
-          classOf[graft.storage.GraftCatalog].getName)
-        s.conf.set("spark.sql.catalog.qpos.warehouse",
-          java.nio.file.Files.createTempDirectory("graft-qpos").toString)
-      }
+      graft.storage.GraftCatalog.registerTemp(s, "qpos")
       s.sql("CREATE NAMESPACE IF NOT EXISTS qpos.s")
       val d = docsRaw(s, dir).select(
         coalesce(col("doc_id"), lit(-1L)).alias("doc_id"),
@@ -1564,10 +1532,7 @@ object SparkEntry {
     // hash-matches sim_topk_ivf's oracle verbatim.
     "sim_topk_ivf_indexed" -> ((s, dir) => {
       val e = embs(s, dir)
-      val whDir = java.nio.file.Files.createTempDirectory("graft-vidxq").toString
-      s.conf.set("spark.sql.catalog.vidxq",
-        classOf[graft.storage.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.vidxq.warehouse", whDir)
+      graft.storage.GraftCatalog.registerTemp(s, "vidxq")
       s.sql("CREATE NAMESPACE IF NOT EXISTS vidxq.s")
       ops.VectorIndex.build(s, e, "vec_id", "embedding", "vidxq.s.emb",
         numCentroids = 16)
@@ -1584,10 +1549,7 @@ object SparkEntry {
     // the surviving rows under the full-corpus codebook.
     "sim_topk_ivf_deleted" -> ((s, dir) => {
       val e = embs(s, dir)
-      val whDir = java.nio.file.Files.createTempDirectory("graft-vidxd").toString
-      s.conf.set("spark.sql.catalog.vidxd",
-        classOf[graft.storage.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.vidxd.warehouse", whDir)
+      graft.storage.GraftCatalog.registerTemp(s, "vidxd")
       s.sql("CREATE NAMESPACE IF NOT EXISTS vidxd.s")
       ops.VectorIndex.build(s, e, "vec_id", "embedding", "vidxd.s.emb",
         numCentroids = 16)
@@ -1605,10 +1567,7 @@ object SparkEntry {
     // oracle verbatim.
     "sim_topk_pq_indexed" -> ((s, dir) => {
       val e = embs(s, dir)
-      val whDir = java.nio.file.Files.createTempDirectory("graft-vpqq").toString
-      s.conf.set("spark.sql.catalog.vpqq",
-        classOf[graft.storage.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.vpqq.warehouse", whDir)
+      graft.storage.GraftCatalog.registerTemp(s, "vpqq")
       s.sql("CREATE NAMESPACE IF NOT EXISTS vpqq.s")
       ops.VectorIndex.build(s, e, "vec_id", "embedding", "vpqq.s.emb",
         numCentroids = 16)

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   * ([[graft.ops.Multimodal.ahashKernel]]/`mhashKernel` — shared code, so
   * the bits cannot diverge) as one virtual call per row inside the
   * generated stage: the binary payload is read straight from the unsafe
-  * row, nothing else materializes. `MediaDecodeBench` measures the two
+  * row, nothing else materializes. The `media_decode` scenario measures the two
   * spellings; SCALE.md §media-decode records the verdict.
   */
 abstract class MediaHashExpression extends TernaryExpression {

@@ -102,7 +102,7 @@ object Dedup {
     * one-character string per character and ran two interpreted lambdas
     * per character — this hash runs per TOKEN in every oracle-gated
     * sketch query and per DOCUMENT in the prep_corpus fingerprint, the
-    * hottest interpreted loop in the engine (PolyHashBench: 7.1× on the
+    * hottest interpreted loop in the engine (the `poly_hash` scenario: 7.1× on the
     * fingerprint+token-hash shape). Bit-identical semantics pinned in
     * VectorExprSpec. */
   def polyHash(s: Column, mulSeed: Long): Column =
@@ -385,7 +385,7 @@ object Dedup {
   }
 
   /** [[clusters]] plus the executed round count — the pure-propagation
-    * baseline [[graft.GraphSkewBench]] measures pointer doubling against. */
+    * baseline the `graph_skew` scenario measures pointer doubling against. */
   private[graft] def clustersCounted(
       pairs: DataFrame, maxIter: Int = 5): (DataFrame, Int) = {
     // pin the pair table FIRST: the symmetric union references it twice,

@@ -226,7 +226,7 @@ object Relational {
     * cluster scale the exchange is the cost, and this plan moves each row
     * once where the join-per-op alternative (anti join deletes +
     * full-outer upserts) moves snapshot-sized inputs twice. All three
-    * candidate shapes are measured head-to-head in `MaintenanceBench`
+    * candidate shapes are measured head-to-head in the `maintenance` scenario
     * (SCALE.md): the window form also wins locally over a `max_by` hash
     * aggregate, whose struct buffer forces ObjectHashAggregate (2.4×
     * slower measured) — a declarative-looking "optimization" the

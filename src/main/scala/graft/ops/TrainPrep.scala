@@ -1093,7 +1093,7 @@ object TrainPrep {
     *    shape AQE's skew-join subdivides at runtime (the probe splits,
     *    the 1-row build duplicates — measured working end-to-end in
     *    SCALE.md's SPJ skew section). Measured on the 300 k-doc Zipf
-    *    corpus (`BigramSkewBench`): the plain join beats the round-5
+    *    corpus (the `bigram_skew` scenario): the plain join beats the round-5
     *    hot/cold broadcast split 10.7 s vs 14.9 s — after the single-join
     *    restructure, the split's broadcast/anti/union machinery costs
     *    more than the skew it insures against. The split is RETAINED
@@ -1132,7 +1132,7 @@ object TrainPrep {
       .withColumn("c1", sum(col("c12")).over(wCtx)))
     // (3) the single count join. Default: plain shuffle join — AQE's
     // skew-join subdivides Zipf-hot probe partitions at runtime, and the
-    // split machinery below measures SLOWER than this (BigramSkewBench).
+    // split machinery below measures SLOWER than this (the `bigram_skew` scenario).
     // With a finite hotCount: the top-K hot pairs resolve via a broadcast
     // inner join (TakeOrdered over the persisted counts — no full sort),
     // the rest (excluded by a broadcast anti on the same ≤ K-row set)

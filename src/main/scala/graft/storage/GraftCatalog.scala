@@ -1824,6 +1824,21 @@ object GraftCatalog {
 
   val MetaFile = "_graft_table.json"
 
+  /** Registers a GraftCatalog named `name` over a fresh `graft-<name>`
+    * temp warehouse, unless `spark.sql.catalog.<name>` is already set, and
+    * returns the warehouse in use. The guard matters on reruns: Spark's
+    * CatalogManager keeps the instance it loaded first, so repointing the
+    * conf would neither take effect nor stop leaking a temp dir per run. */
+  def registerTemp(spark: SparkSession, name: String): String = {
+    val key = s"spark.sql.catalog.$name"
+    if (spark.conf.getOption(key).isEmpty) {
+      spark.conf.set(key, classOf[GraftCatalog].getName)
+      spark.conf.set(s"$key.warehouse",
+        java.nio.file.Files.createTempDirectory(s"graft-$name").toString)
+    }
+    spark.conf.get(s"$key.warehouse")
+  }
+
   /** Write options for idempotent commits (Delta's txnAppId/txnVersion
     * shape): a commit carrying (app-id, version) is skipped when the table
     * already recorded an equal-or-newer version for that app-id. */
