@@ -2,9 +2,12 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
+  SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.graftshim.Shims
 
 import graft.scenarios._
@@ -19,8 +22,10 @@ import graft.scenarios._
   * `SparkEntry.queries` name instead runs what [[Bench]] times for it (its
   * production variant, after that variant's untimed setup) `iters` times,
   * printing each iteration's wall time, GC time and heap, then the final
-  * iteration's slowest stages; with a `planDir` it also writes the
-  * formatted and the AQE-final plan to `<planDir>/<query>.txt`.
+  * iteration's slowest stages and its jobs grouped by SQL execution (each
+  * execution named by the engine frames that started it, with its wall
+  * time, jobs and tasks); with a `planDir` it also writes the formatted
+  * and the AQE-final plan to `<planDir>/<query>.txt`.
   *
   * The session is `Engine.session` at `local[SPARK_GRAFT_CPUS]` (default:
   * all cores) with as many shuffle partitions; the data directory is
@@ -82,11 +87,34 @@ object Scenarios {
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageRow]()
     // per-stage max task duration, fed by onTaskEnd — the straggler signal
     val maxTask = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Double]()
+    // jobs by SQL execution; -1 collects jobs run outside any execution.
+    // Listener events arrive on one thread, and are read after a drain.
+    final class Exec(var name: String, var startMs: Long = 0L, var endMs: Long = 0L,
+        var jobs: Int = 0, var tasks: Int = 0)
+    val execs = scala.collection.mutable.LinkedHashMap.empty[Long, Exec]
+    val stageExec = scala.collection.mutable.Map.empty[Int, Long]
+    def exec(id: Long): Exec = execs.getOrElseUpdate(id, new Exec("(no SQL execution)"))
     @volatile var record = false
     val listener = new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        if (record && te.taskInfo != null)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = if (record) e match {
+        case s: SparkListenerSQLExecutionStart =>
+          val x = exec(s.executionId)
+          x.name = engineFrames(s.details); x.startMs = s.time
+        case s: SparkListenerSQLExecutionEnd => exec(s.executionId).endMs = s.time
+        case _ =>
+      }
+      override def onJobStart(js: SparkListenerJobStart): Unit = if (record) {
+        val id = Option(js.properties)
+          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+          .fold(-1L)(_.toLong)
+        exec(id).jobs += 1
+        js.stageIds.foreach(stageExec(_) = id)
+      }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = if (record) {
+        if (te.taskInfo != null)
           maxTask.merge(te.stageId, te.taskInfo.duration / 1e3, (a, b) => math.max(a, b))
+        stageExec.get(te.stageId).foreach(exec(_).tasks += 1)
+      }
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
         if (record) {
           val i = sc.stageInfo
@@ -117,6 +145,13 @@ object Scenarios {
         + f"taskTime=${s.taskSecs}%8.3f s maxTask=${s.maxTaskSecs}%7.3f s "
         + f"tasks=${s.tasks}%4d  ${s.name}")
     }
+    val jobs = execs.values.map(_.jobs).sum
+    println(f"[profile] final-iteration jobs by SQL execution ($jobs jobs total):")
+    execs.foreach { case (id, x) => if (x.jobs > 0) {
+      val wall = if (x.endMs >= x.startMs) (x.endMs - x.startMs) / 1e3 else Double.NaN
+      println(f"[profile]   sql $id%5d wall=$wall%7.3f s jobs=${x.jobs}%3d "
+        + f"tasks=${x.tasks}%4d  ${x.name}")
+    }}
 
     val plan = planDir.map { dir =>
       val df = fn(spark, dataDir)
@@ -136,7 +171,18 @@ object Scenarios {
       clearAll()
       out.toString
     }
-    Seq("runs_s" -> runs, "stages" -> stages.size()) ++ plan.map("plan" -> _)
+    Seq("runs_s" -> runs, "stages" -> stages.size(), "jobs" -> jobs) ++ plan.map("plan" -> _)
+  }
+
+  /** The first two engine frames of a SQL execution's call site (its
+    * `details`), skipping this runner, its scenarios and [[Bench]]: the
+    * operator that started the execution, and its caller. */
+  private[graft] def engineFrames(details: String): String = {
+    val runner = Seq("graft.Scenarios", "graft.scenarios.", "graft.Bench")
+    val frames = details.linesIterator.map(_.trim.replace("$", ""))
+      .filter(f => f.startsWith("graft.") && !runner.exists(f.startsWith))
+      .toSeq.distinct.take(2)
+    if (frames.isEmpty) "(the profiled action)" else frames.mkString(" < ")
   }
 
   private def json(v: Any): String = v match {

@@ -364,19 +364,19 @@ object Dedup {
     * per round. The regime is DERIVED, not assumed: the label table has
     * at most 2·|pairs| rows, so when its conservative broadcast-side
     * size (~32 B/row) is under `spark.sql.autoBroadcastJoinThreshold`
-    * AQE will broadcast the labels and the layout would never be
+    * the planner will broadcast the labels and the layout would never be
     * consulted — the upfront exchange+sort is skipped (measured +0.15 s
-    * of pure overhead per query at sf0.1). The pair count is read from
-    * the already-checkpointed pair table, a near-free job it needed
-    * before round one anyway. */
+    * of pure overhead per query at sf0.1). The pair count is the row
+    * count of `p0`'s plan statistics, which [[Pin.measured]] sets; a pair
+    * table of unknown size takes the sort-merge layout. */
   private[graft] def edgeTable(p0: DataFrame): DataFrame = {
     val spark = p0.sparkSession
     val edgesRaw = p0.select(col("id_a").alias("src"), col("id_b").alias("dst"))
       .unionByName(p0.select(col("id_b").alias("src"), col("id_a").alias("dst")))
     val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
     // threshold <= 0 disables broadcast joins outright -> always SMJ
-    val labelsBroadcastable =
-      threshold > 0 && p0.count() * 2L * 32L <= threshold
+    val labelsBroadcastable = threshold > 0 &&
+      p0.queryExecution.optimizedPlan.stats.rowCount.exists(_ * 2L * 32L <= threshold)
     if (labelsBroadcastable) edgesRaw.localCheckpoint(false)
     // every round's sort-merge join then consumes the edge side with no
     // exchange and no sort (pinned in GraphSpec)
@@ -390,8 +390,9 @@ object Dedup {
       pairs: DataFrame, maxIter: Int = 5): (DataFrame, Int) = {
     // pin the pair table FIRST: the symmetric union references it twice,
     // and an unpinned union evaluates the (possibly expensive — LSH) pair
-    // pipeline once per branch at materialization
-    val p0 = pairs.select(col("id_a"), col("id_b")).localCheckpoint(false)
+    // pipeline once per branch at materialization; measured, so the edge
+    // and label tables built over it plan their joins by its real size
+    val (p0, _) = Pin.measured(pairs.select(col("id_a"), col("id_b")))
     val edges = edgeTable(p0)
     // carry the prior round's checksum forward — re-aggregating the
     // previous label table every round would double the probe cost; the
@@ -446,14 +447,15 @@ object Dedup {
     * old form 4 jobs/round, fused 3, identical sums). Same DECIMAL(38)
     * accumulation and null-on-empty semantics as [[labelChecksum]]
     * (pinned against it in OpsSpec, along with the no-extra-job
-    * property). */
+    * property). The checkpoint is [[Pin.measured]]: the next round's
+    * joins over the label table plan by its real size, so a small table
+    * broadcasts before execution instead of after AQE shuffled both
+    * sides. */
   private[graft] def checkpointWithChecksum(
       labels: DataFrame): (DataFrame, java.math.BigDecimal) = {
-    val obs = new org.apache.spark.sql.Observation()
-    val ck = labels
-      .observe(obs, sum(col("label").cast("decimal(38,0)")).alias("labelSum"))
-      .localCheckpoint(true)
-    (ck, obs.get("labelSum").asInstanceOf[java.math.BigDecimal])
+    val (ck, seen) = Pin.measured(labels,
+      sum(col("label").cast("decimal(38,0)")).alias("labelSum"))
+    (ck, seen("labelSum").asInstanceOf[java.math.BigDecimal])
   }
 
   /** Connected components in O(log diameter) rounds: min-label propagation
@@ -487,7 +489,7 @@ object Dedup {
   private[graft] def clustersFastCounted(
       pairs: DataFrame, maxIter: Int = 25,
       prePartition: Boolean = true): (DataFrame, Int) = {
-    val p0 = pairs.select(col("id_a"), col("id_b")).localCheckpoint(false)
+    val (p0, _) = Pin.measured(pairs.select(col("id_a"), col("id_b")))
     val edges =
       if (prePartition) edgeTable(p0)
       else p0.select(col("id_a").alias("src"), col("id_b").alias("dst"))
@@ -556,7 +558,7 @@ object Dedup {
       history: DataFrame, newPairs: DataFrame,
       maxIter: Int = 25): (DataFrame, Int) = {
     val h = history.select(col("id"), col("cluster_id"))
-    val p0 = newPairs.select(col("id_a"), col("id_b")).localCheckpoint(false)
+    val (p0, _) = Pin.measured(newPairs.select(col("id_a"), col("id_b")))
     // contract each endpoint to its history representative; new ids pass
     // through (they are their own contracted node)
     val byA = h.select(col("id").alias("id_a"), col("cluster_id").alias("__ra"))

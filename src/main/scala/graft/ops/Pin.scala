@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.catalyst.plans.physical.ClusteredDistribution
+import org.apache.spark.sql.functions.{col, count, lit, sum}
 import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
@@ -27,9 +28,18 @@ import org.apache.spark.storage.StorageLevel
   * applied only inside operators whose reduction is always consumed (their
   * result is meaningless without it), never at API boundaries.
   *
-  * Both entry points plan under confs of their own in a clone of the
-  * caller's session ([[Shims.withConf]]) and never write the caller's conf:
-  * a query planned concurrently on the same session keeps its own plan.
+  * [[Pin.apply]] and [[Pin.clustered]] plan under confs of their own in a
+  * clone of the caller's session ([[Shims.withConf]]) and never write the
+  * caller's conf: a query planned concurrently on the same session keeps
+  * its own plan.
+  *
+  * [[Pin.measured]] is the checkpoint whose statistics are measured, not
+  * estimated. The rule for choosing it: measure where the checkpoint's
+  * input crosses a join or an aggregate, the only places where Spark's
+  * size estimate multiplies (a join's estimate is the product of its
+  * sides'). A narrow projection of a measured or file-backed frame already
+  * carries the right estimate, so it stays a lazy checkpoint: making it
+  * eager costs one job for no better plan.
   */
 private[graft] object Pin {
   def apply(df: DataFrame): DataFrame = {
@@ -87,5 +97,33 @@ private[graft] object Pin {
       else in.repartition(nParts, keys: _*)
     val laidOut = within(hashed.sortWithinPartitions(keys: _*))
     Shims.onSession(laidOut.localCheckpoint(false), df.sparkSession)
+  }
+
+  /** `df` eagerly local-checkpointed, with its measured row count and
+    * exact `UnsafeRow` bytes ([[graft.functions.UnsafeRowBytes]]) as the
+    * checkpoint's plan statistics. Both are observed on the checkpoint's
+    * own materialization job, together with the caller's `metrics`, so
+    * measuring adds no job. Returns the checkpoint and the observed
+    * metrics by name: `rows`, `bytes` and each of `metrics`' aliases (an
+    * aggregate over no rows observes null).
+    *
+    * A plain checkpoint's statistics are the estimate of the plan it was
+    * taken from: over a join that is the product of the sides' estimates
+    * (8 EiB after a few joins), so every join over it plans sort-merge and
+    * AQE shuffles both sides before it can demote the join to a broadcast.
+    * With the measured bytes the planner broadcasts a small checkpoint
+    * before execution; above the broadcast threshold the plan is the same
+    * sort-merge plan as before. The bytes are the rows' real size, not a
+    * schema width: a string column counted at 20 bytes would broadcast a
+    * checkpoint of whole documents. */
+  def measured(df: DataFrame, metrics: Column*): (DataFrame, Map[String, Any]) = {
+    val obs = new Observation()
+    val ck = df.observe(obs, count(lit(1)).alias("rows"),
+        sum(graft.functions.RowBytes.unsafeRowBytes(df.columns.map(c => col(s"`$c`")): _*))
+          .alias("bytes") +: metrics: _*)
+      .localCheckpoint(true)
+    val seen = obs.get
+    val bytes = Option(seen("bytes")).fold(0L)(_.asInstanceOf[Long])
+    (Shims.withStats(ck, seen("rows").asInstanceOf[Long], bytes), seen)
   }
 }

@@ -678,11 +678,16 @@ object TrainPrep {
     val gb = gatedWithFp(batch, idCol, textCol, langCol, minTokens,
       minDistinctRatio, textHash).localCheckpoint(false)
     // batch fold: within-batch min per fingerprint, Bloom-gated anti join
-    // against the history's fingerprints — first seen wins.
-    val survB = gb.join(
+    // against the history's fingerprints — first seen wins. Measured
+    // (Pin.measured): its input crosses the gate's aggregate and joins,
+    // so a plain checkpoint would carry their multiplied size estimate
+    // into the signature, pair and manifest joins below. `gb` above and
+    // `batchSigs` below are narrow over a file scan or this checkpoint —
+    // their estimates are already right, so they stay lazy.
+    val (survB, _) = Pin.measured(gb.join(
       graft.ops.Dedup.incrementalBloom(historyGated, gb, Seq("__fp"), idCol,
           precomputed = bloom)
-        .select(col(idCol)), Seq(idCol)).localCheckpoint(false)
+        .select(col(idCol)), Seq(idCol)))
     // checkpoint the batch signatures: minhashPairsAgainst references
     // them THREE times (its own band keys, the history∪batch band keys,
     // and the scoring join's signature lookup) — unpinned, the
@@ -722,9 +727,9 @@ object TrainPrep {
     // incremental label assembly's four joins). The checkpoint is skinny
     // (ids + counts, never text) so at any scale it trades one re-run of
     // the join tree for a manifest-width materialization (guide §2.3).
-    val keptSkinny = kept
-      .select(col(idCol), col(langCol), col("n_tokens"), col("n_redactions"))
-      .localCheckpoint(false)
+    // Measured: the packing's joins then plan by its real size.
+    val (keptSkinny, _) = Pin.measured(kept
+      .select(col(idCol), col(langCol), col("n_tokens"), col("n_redactions")))
     packManifest(keptSkinny, idCol, langCol, budget)
   }
 

@@ -113,121 +113,6 @@ object TrainPrepScenarios {
         "fold_sec" -> tF, "scratch_sec" -> tS, "speedup" -> tS / tF)
     }),
 
-    /* Phase attribution for `prep_corpus_incremental`: rebuilds the
-     * bench's production fold step by step over the same persisted state
-     * and times each phase's materialization, each localCheckpoint'd so
-     * later phases don't recompute earlier ones — the same pinning as
-     * [[TrainPrep.incrementalFold]], of which this is a hand copy. */
-    Scenario("fold_phases", Seq("3"), (spark, sfDir, args) => {
-      val iters = args(0).toInt
-      Bench.productionSetup("prep_corpus_incremental")(spark, sfDir)
-      val st = Bench.incStateDir
-      def noop(df: DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-
-      val phases = (1 to iters).map { _ =>
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        val historyGated = spark.read.parquet(s"$st/corpus_gated")
-        val historySigs = spark.read.parquet(s"$st/corpus_sigs")
-        val historyLabels = spark.read.parquet(s"$st/corpus_labels")
-        val bloom = spark.read.parquet(s"$st/corpus_bloom")
-        val batch = queries.Parity.t(spark, sfDir, "documents")
-          .filter(pmod(col("doc_id"), lit(5)) === 0)
-
-        val marks = Seq.newBuilder[(String, Any)]
-        val t0 = System.nanoTime()
-        var t = t0
-        def mark(label: String): Unit = {
-          val now = System.nanoTime()
-          marks += label -> (now - t) / 1e9
-          t = now
-        }
-        val gb = TrainPrep.gatedFront(batch, "doc_id", "text", "lang")
-          .localCheckpoint(false)
-        noop(gb); mark("gate-front")
-        val survB = gb.join(
-          Dedup.incrementalBloom(historyGated, gb, Seq("__fp"), "doc_id",
-              precomputed = Some(bloom))
-            .select(col("doc_id")), Seq("doc_id")).localCheckpoint(false)
-        noop(survB); mark("bloom-gate")
-        val batchSigs = Dedup.minhashSignatures(
-          survB.select(col("doc_id"), col("scrubbed")), "doc_id", "scrubbed",
-          k = 3, numHashes = 32).localCheckpoint(false)
-        noop(batchSigs); mark("batch-sigs")
-        val newPairs = Dedup.minhashPairsAgainst(
-            batchSigs, historySigs.unionByName(batchSigs),
-            numHashes = 32, bands = 8, minJaccard = 0.5)
-          .select("id_a", "id_b").localCheckpoint(false)
-        noop(newPairs); mark("new-pairs")
-        // components, inlined step-by-step (mirrors clustersIncrementalCounted)
-        val h = historyLabels.select(col("id"), col("cluster_id"))
-        val p0 = newPairs.select(col("id_a"), col("id_b")).localCheckpoint(false)
-        val byA = h.select(col("id").alias("id_a"), col("cluster_id").alias("__ra"))
-        val byB = h.select(col("id").alias("id_b"), col("cluster_id").alias("__rb"))
-        val contracted = p0
-          .join(byA, Seq("id_a"), "left")
-          .join(byB, Seq("id_b"), "left")
-          .select(
-            coalesce(col("__ra"), col("id_a")).alias("id_a"),
-            coalesce(col("__rb"), col("id_b")).alias("id_b"))
-          .filter(col("id_a") =!= col("id_b"))
-          .localCheckpoint(false)
-        noop(contracted); mark("cc-contract")
-        val cp0 = contracted.localCheckpoint(false)
-        val edges = cp0.select(col("id_a").alias("src"), col("id_b").alias("dst"))
-          .unionByName(cp0.select(col("id_b").alias("src"), col("id_a").alias("dst")))
-          .localCheckpoint(false)
-        var lab = edges.select(col("src").alias("id")).distinct()
-          .withColumn("label", col("id")).localCheckpoint(false)
-        var lastSum = lab.agg(sum(col("label").cast("decimal(38,0)")))
-          .collect()(0).getDecimal(0)
-        mark("cc-init")
-        var itr = 0; var converged = false
-        while (itr < 25 && !converged) {
-          val viaNbr = edges
-            .join(lab.withColumnRenamed("id", "dst2"), col("dst") === col("dst2"))
-            .groupBy(col("src").alias("id"))
-            .agg(min(col("label")).alias("nbr_label"))
-          val stepped = lab.join(viaNbr, Seq("id"), "left")
-            .select(col("id"),
-              least(col("label"), coalesce(col("nbr_label"), col("label"))).alias("label"))
-          val next = stepped
-            .join(stepped.select(col("id").alias("pid"), col("label").alias("plabel")),
-              stepped("label") === col("pid"), "left")
-            .select(col("id"),
-              least(col("label"), coalesce(col("plabel"), col("label"))).alias("label"))
-            .localCheckpoint(false)
-          val nextSum = next.agg(sum(col("label").cast("decimal(38,0)")))
-            .collect()(0).getDecimal(0)
-          converged = nextSum == lastSum
-          lastSum = nextSum; lab = next; itr += 1
-          mark(s"cc-round$itr")
-        }
-        val cl = lab.withColumnRenamed("label", "cluster_id")
-        val rep = cl.select(
-          col("id").alias("cluster_id"), col("cluster_id").alias("__relabel"))
-        val hOut = h.join(rep, Seq("cluster_id"), "left")
-          .select(col("id"),
-            coalesce(col("__relabel"), col("cluster_id")).alias("cluster_id"))
-        val newNodes = p0.select(col("id_a").alias("id"))
-          .unionByName(p0.select(col("id_b").alias("id")))
-          .distinct()
-          .join(h.select(col("id")), Seq("id"), "left_anti")
-        val nOut = newNodes.join(cl, Seq("id"), "left")
-          .select(col("id"),
-            coalesce(col("cluster_id"), col("id")).alias("cluster_id"))
-        val labels = hOut.unionByName(nOut).localCheckpoint(false)
-        noop(labels); mark("cc-assembly")
-        val manifest = TrainPrep.manifestFromState(
-          historyGated.unionByName(survB), labels, "doc_id", "lang")
-        noop(manifest); mark("manifest")
-        marks.result() :+ ("total" -> (t - t0) / 1e9)
-      }
-      Seq("sf" -> sfDir, "iters" -> phases)
-    }),
-
     /* The Bloom-gated incremental dedup (SCALE.md §bloom-gate): a large
      * deduped history against a mostly-new daily batch, three spellings
      * of one exact result: [[Dedup.incremental]] (every batch key probes

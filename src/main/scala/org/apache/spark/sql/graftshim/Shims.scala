@@ -46,6 +46,23 @@ object Shims {
     onSession(df, clone)
   }
 
+  /** Checkpoint `df` (a bare `LogicalRDD`) with `rows` and `bytes` as its
+    * plan statistics. `LogicalRDD`'s origin statistics are otherwise the
+    * estimate of the plan it was taken from, which multiplies across every
+    * join below it. */
+  def withStats(df: DataFrame, rows: Long, bytes: Long): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    ds.logicalPlan match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        val stats = org.apache.spark.sql.catalyst.plans.logical.Statistics(
+          sizeInBytes = BigInt(bytes), rowCount = Some(BigInt(rows)))
+        classic.Dataset.ofRows(ds.sparkSession,
+          r.copy()(ds.sparkSession, Some(stats), Some(r.constraints)))
+      case p => throw new IllegalArgumentException(
+        s"withStats needs a checkpoint, got ${p.nodeName}")
+    }
+  }
+
   /** `df`'s analyzed plan as a DataFrame of `session`, which shares
     * `df`'s SharedState (`Dataset.ofRows` is `private[sql]`). */
   def onSession(df: DataFrame, session: SparkSession): DataFrame =

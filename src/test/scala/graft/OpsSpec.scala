@@ -165,6 +165,14 @@ class OpsSpec extends SparkSpec {
     assert(fusedJobs == bareJobs && probeJobs >= 1,
       s"fused=$fusedJobs bare=$bareJobs probe=$probeJobs — the checksum " +
         "must ride the materialization job, not add one")
+    // the same over an aggregate (a shuffle stage before the final one):
+    // the observed count, bytes and checksum still add no job
+    val reduced = spark.range(200).groupBy((col("id") % 7).as("id"))
+      .agg(min(col("id")).as("label"))
+    val reducedFused = jobsIn("ckpt-fused-agg") { ops.Dedup.checkpointWithChecksum(reduced) }
+    val reducedBare = jobsIn("ckpt-bare-agg") { reduced.localCheckpoint(true) }
+    assert(reducedFused == reducedBare && reducedBare >= 2,
+      s"fused=$reducedFused bare=$reducedBare over an aggregate")
     // null-on-empty parity with labelChecksum (sum over no rows is null)
     val empty = labels.filter(col("id") < 0L)
     val (eCk, eSum) = ops.Dedup.checkpointWithChecksum(empty)

@@ -8,15 +8,18 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shims
 
 import graft.ops.{Dedup, Graph, Pin}
 import graft.queries.TpchSuite
 
-/** The materialization primitive in [[graft.ops.Pin]]: its contracts, and
-  * that no operator writes the shared session conf while materializing. */
+/** The materialization primitives in [[graft.ops.Pin]]: their contracts,
+  * and that no operator writes the shared session conf while
+  * materializing. */
 class PinSpec extends SparkSpec {
 
   import spark.implicits._
@@ -72,6 +75,51 @@ class PinSpec extends SparkSpec {
     assert(leaf.outputOrdering.map(_.sql).exists(_.contains("id")), leaf.outputOrdering)
     assert(c.count() == 100)
     assert(spark.conf.get(aqeKey) == "true")
+  }
+
+  test("Pin.measured: exact row count, and bytes that are the rows' " +
+      "UnsafeRow bytes, so a string-heavy checkpoint is not broadcast") {
+    val docs = spark.range(2000).select(col("id"), repeat(lit("x"), 8192).as("text"))
+    val (ck, seen) = Pin.measured(docs)
+    val stats = ck.queryExecution.optimizedPlan.stats
+    assert(seen("rows") == 2000L && stats.rowCount.contains(BigInt(2000)), stats)
+    val stored = ck.queryExecution.toRdd
+      .map(_.asInstanceOf[org.apache.spark.sql.catalyst.expressions.UnsafeRow]
+        .getSizeInBytes.toLong).sum().toLong
+    assert(stats.sizeInBytes == BigInt(stored) && seen("bytes") == stored, stats)
+    assert(stats.sizeInBytes >= 16000000L, stats)
+    // at the default 10 MB threshold neither side may broadcast: a
+    // schema-width estimate (20 bytes a string) would put this at 72 KB
+    assert(spark.conf.get("spark.sql.autoBroadcastJoinThreshold").stripSuffix("b")
+      .toLong == 10L * 1024 * 1024)
+    val join = ck.as("a").join(ck.as("b"), col("a.id") === col("b.id"))
+    val plan = join.queryExecution.sparkPlan
+    assert(plan.collect { case j: BroadcastHashJoinExec => j }.isEmpty, plan)
+    assert(join.count() == 2000)
+  }
+
+  test("Pin.measured: a small aggregate over a join plans a broadcast " +
+      "before execution; a plain checkpoint of it plans sort-merge") {
+    // own session: a 64 KB threshold keeps the ~400 KB fact file from
+    // being the broadcast side, at a test-sized input
+    val s = Engine.tune(spark.newSession())
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", (64 * 1024).toString)
+    val dir = java.nio.file.Files.createTempDirectory("pin-measured").toString
+    s.range(50000).select(col("id"), (col("id") % 40).as("k"))
+      .write.parquet(s"$dir/facts")
+    val facts = s.read.parquet(s"$dir/facts")
+    val base = s.range(4000).select((col("id") % 40).as("k"), col("id").as("v"))
+    // the aggregate's input crosses a join: its estimate is a product
+    val agg = base.join(base.select(col("k"), col("v").as("w")), "k")
+      .groupBy("k").agg(count(lit(1)).as("n"))
+    def initial(dim: DataFrame) = facts.join(dim, "k").queryExecution.sparkPlan
+    val (measured, seen) = Pin.measured(agg)
+    assert(seen("rows") == 40L)
+    val bhj = initial(measured).collect { case j: BroadcastHashJoinExec => j }
+    assert(bhj.size == 1 && bhj.head.buildSide == BuildRight, initial(measured))
+    val plain = initial(agg.localCheckpoint(true))
+    assert(plain.collect { case j: SortMergeJoinExec => j }.size == 1, plain)
+    assert(facts.join(measured, "k").count() == 50000)
   }
 
   test("materializing operators never flip conf under a query planned " +

@@ -22,7 +22,6 @@ class ScenarioSpec extends SparkSpec {
     "graph_skew" -> Seq("500", "20", "500"),
     "cc_regime" -> Seq("2000", "64", "1"),
     "corpus_fold" -> Seq("150"),
-    "fold_phases" -> Seq("1"),
     "bloom_gate" -> Seq("20000", "2000", "5"),
     "excise" -> Seq("4", "200", "8"),
     "span_index" -> Seq("3"),
@@ -53,8 +52,7 @@ class ScenarioSpec extends SparkSpec {
   /** Scenarios that clear the shared cache or unpersist every RDD run one
     * at a time, after the rest; the rest run four at a time, the slowest
     * started first, so their many small jobs overlap on local[4]. */
-  private val alone = Set("cc_regime", "fold_phases", "span_index", "grouped_enum",
-    "bigram_skew")
+  private val alone = Set("cc_regime", "span_index", "grouped_enum", "bigram_skew")
   private val slowest = Seq("codebook_drift", "corpus_fold", "ivf_skew", "graph_skew")
   private val (solo, overlapped) = Scenarios.registry.map(_.name).partition(alone)
   private lazy val started: Map[String, Future[String]] = {
@@ -91,6 +89,7 @@ class ScenarioSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("scenario-plans")
     val line = Scenarios.run(spark, sf, "q_total", Seq("2", dir.toString))
     assert(line.startsWith("""{"query":"q_total","runs_s":["""), line)
+    assert(""""jobs":[1-9]""".r.findFirstIn(line).isDefined, line)
     val plan = java.nio.file.Files.readString(dir.resolve("q_total.txt"))
     assert(plan.contains("explain(\"formatted\")") && plan.contains("AQE final"), plan)
   }

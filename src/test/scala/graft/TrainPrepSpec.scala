@@ -132,6 +132,24 @@ class TrainPrepSpec extends SparkSpec {
     assert(kept == Seq(7L), s"history must win the exact tie, kept $kept")
   }
 
+  test("incrementalFold over the stored production state: the day's job " +
+    "count stays at what measured checkpoints plan") {
+    val sf = s"${sys.props("user.home")}/testdata/sf0.001"
+    val name = "prep_corpus_incremental"
+    Bench.productionSetup(name)(spark, sf)
+    val sc = spark.sparkContext
+    sc.setJobGroup("fold-jobs", "fold-jobs", interruptOnCancel = false)
+    val rows = try Bench.productionVariants(name)(spark, sf).count()
+      finally sc.clearJobGroup()
+    org.apache.spark.sql.graftshim.Shims.drainListenerBus(sc)
+    val jobs = sc.statusTracker.getJobIdsForGroup("fold-jobs").length
+    // every checkpoint over a join or aggregate is measured (Pin.measured),
+    // so its consumers plan broadcasts before execution: 45 jobs here,
+    // where plain checkpoints ran 55 (AQE shuffled both sides of each
+    // small join, then broadcast one)
+    assert(rows > 0 && jobs <= 45, s"$jobs jobs for $rows manifest rows")
+  }
+
   test("temperatureMixture: sqrt weights flatten source skew; Hamilton " +
     "quotas sum to the target; tiny sources cap at their size") {
     // 900 / 100 / 4 docs: raw proportions 90/10/0.4%; sqrt weights
