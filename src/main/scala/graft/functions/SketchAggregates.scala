@@ -365,9 +365,6 @@ object SketchAggregates {
   def minhashAgg(h: Column, numHashes: Int): Column =
     Shims.column(MinhashAgg(Shims.expression(h), numHashes).toAggregateExpression())
 
-  def simhashAgg(h: Column): Column =
-    Shims.column(SimhashAgg(Shims.expression(h)).toAggregateExpression())
-
   def vecFixedSumAgg(vec: Column, dim: Int): Column =
     Shims.column(VecFixedSumAgg(Shims.expression(vec), dim).toAggregateExpression())
 

@@ -36,11 +36,6 @@ object Dedup {
   def exactByKey(df: DataFrame, keyCol: String, idCol: String): DataFrame =
     df.groupBy(col(keyCol)).agg(min(col(idCol)).alias(idCol))
 
-  /** Exact-dup groups report: rows per identical value of `keyCol`. */
-  def exactGroups(df: DataFrame, keyCol: String, idCol: String): DataFrame =
-    df.groupBy(col(keyCol))
-      .agg(count(lit(1)).alias("copies"), min(col(idCol)).alias("keeper"))
-
   // ── Shingles + MinHash ─────────────────────────────────────────────────
 
   /** Word k-shingles of a text column, as an array of strings. */

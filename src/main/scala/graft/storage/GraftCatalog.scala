@@ -371,8 +371,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     val dir = tableDir(ident)
     if (GraftCatalog.readMeta(fs, dir).isEmpty) throw new NoSuchTableException(ident)
     val base = GraftCatalog.latestSnapshot(fs, dir)
-    GraftCatalog.writeNumberFileExclusive(fs, GraftCatalog.refFile(dir, branch),
-      base, s"branch '$branch'")
+    GraftCatalog.createRef(fs, dir, branch, base, tag = false)
     base
   }
 
@@ -385,22 +384,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     val snap = snapshot.getOrElse(GraftCatalog.latestSnapshot(fs, dir))
     require(GraftCatalog.readManifest(fs, dir, snap).isDefined,
       s"table $ident has no snapshot $snap to tag")
-    GraftCatalog.writeNumberFileExclusive(fs, GraftCatalog.tagFile(dir, tag),
-      snap, s"tag '$tag'")
+    GraftCatalog.createRef(fs, dir, tag, snap, tag = true)
     snap
   }
 
   /** Delete a branch ref and its commit sequence (tags are permanent). */
-  def dropBranch(ident: Identifier, branch: String): Boolean = {
-    val dir = tableDir(ident)
-    val existed = fs.exists(GraftCatalog.refFile(dir, branch))
-    if (existed) {
-      fs.delete(GraftCatalog.refFile(dir, branch), false)
-      (1L to GraftCatalog.latestBranchSnap(fs, dir, branch)).foreach(k =>
-        fs.delete(new Path(dir, s"_bsnap-$branch-$k.manifest"), false))
-    }
-    existed
-  }
+  def dropBranch(ident: Identifier, branch: String): Boolean =
+    GraftCatalog.dropBranch(fs, tableDir(ident), branch)
 
   /** Current main head snapshot id (0 = pre-manifest/empty table). */
   def currentSnapshot(ident: Identifier): Long =
@@ -410,24 +400,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
   def branchState(ident: Identifier, branch: String): Option[(Long, Long)] = {
     val dir = tableDir(ident)
     GraftCatalog.readBranchBase(fs, dir, branch)
-      .map(b => (b, GraftCatalog.latestBranchSnap(fs, dir, branch)))
+      .map(b => (b, GraftCatalog.latestSnapshot(fs, dir, Some(branch))))
   }
 
   /** All named refs: (kind, name, snapshot) — branches report their fork
     * base, tags their pinned snapshot. */
-  def listRefs(ident: Identifier): Seq[(String, String, Long)] = {
-    val dir = tableDir(ident)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).map(_.getPath.getName).toSeq.sorted.flatMap { n =>
-      if (n.startsWith("_ref-"))
-        GraftCatalog.readBranchBase(fs, dir, n.stripPrefix("_ref-"))
-          .map(("branch", n.stripPrefix("_ref-"), _))
-      else if (n.startsWith("_tag-"))
-        GraftCatalog.readTagSnap(fs, dir, n.stripPrefix("_tag-"))
-          .map(("tag", n.stripPrefix("_tag-"), _))
-      else None
-    }
-  }
+  def listRefs(ident: Identifier): Seq[(String, String, Long)] =
+    GraftCatalog.listRefs(fs, tableDir(ident))
 
   /** Fast-forward merge: make main's next snapshot the branch head's file
     * set. Fails loudly when main advanced past the fork base (the
@@ -444,8 +423,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
         s"merge conflict: main is at snapshot $latest but branch '$branch' " +
           s"forked from $base — main advanced since the fork; re-branch and " +
           "replay the work")
-    val files = GraftCatalog.branchHeadFiles(fs, dir, branch).get
-    val txns = GraftCatalog.branchHeadTxns(fs, dir, branch)
+    val headLines = GraftCatalog.head(fs, dir, Some(branch))._2
+    val files = headLines.map(GraftCatalog.parseFiles)
+      .getOrElse(GraftCatalog.listDataFiles(fs, dir))
+    val txns = GraftCatalog.parseTxns(headLines.getOrElse(Seq.empty))
     // the merge's kind is derived from its EFFECT on main, since branch
     // commits record no kinds: a merge that keeps every base file is a
     // pure append of the branch's work; one that drops base files carried
@@ -585,13 +566,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     val out0 = GraftCatalog.readFilesWithDeletes(
       spark, dir, meta, legacy, eqDels, addMap, posDels)
     import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-    // bucketed current spec: the `__bucket_<col>` dir level is derived —
-    // recompute it with the writer's exact arithmetic (murmur3, seed 42)
-    val withBucket = meta.bucket match {
-      case Some((bn, c)) if !out0.columns.contains(s"__bucket_$c") =>
-        out0.withColumn(s"__bucket_$c", pmod(hash(col(c)), lit(bn)))
-      case _ => out0
-    }
+    val withBucket = withBucketLevel(meta, out0)
     // bound files per partition VALUE the same way compact does: shuffle
     // on (partition levels, hash spread) so no task fans out across
     // every partition directory
@@ -605,53 +580,21 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
           lit(targetFilesPerPartition))
         withBucket.repartition(meta.partitionCols.map(col) :+ spread: _*)
       }
-    // stage → promote → snapshot, the runDeleteCompaction promotion
-    // discipline (atomic: readers see either the pre- or post-migration
-    // snapshot, never duplicates)
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
-    val stageRel = s"_stage_migr_$stamp"
-    val stagePath = new Path(dir, stageRel)
-    val writer = migrated.write.mode("overwrite")
-    (if (meta.partitionCols.isEmpty) writer
-     else writer.partitionBy(meta.partitionCols: _*))
-      // stamped parquet: staged files carry the stats-truncation stamp, so
-      // their string bounds classify exact and metadata-only min()/max()
-      // keeps working on the files this maintenance promotes
-      .format(classOf[StampedParquetFileFormat].getName)
-      .save(stagePath.toString)
-    val it = fs.listFiles(stagePath, true)
-    val stagedFiles = Seq.newBuilder[String]
-    val stageUri = stagePath.toUri.getPath
-    while (it.hasNext) {
-      val st = it.next()
-      val rel = st.getPath.toUri.getPath.stripPrefix(stageUri).stripPrefix("/")
-      if (rel.endsWith(".parquet") && !rel.split("/").last.startsWith("_"))
-        stagedFiles += rel
-    }
-    val promoted = stagedFiles.result().sorted.zipWithIndex.map { case (rel, i) =>
-      val sub = rel.split("/").dropRight(1)
-      val target = (sub :+ s"migr-$stamp-$i.parquet").mkString("/")
-      if (sub.nonEmpty) fs.mkdirs(new Path(dir, sub.mkString("/")))
-      if (!fs.rename(new Path(stagePath, rel), new Path(dir, target)))
-        throw new java.io.IOException(
-          s"migrateLayout: cannot promote $stageRel/$rel to $target")
-      target
-    }
-    fs.delete(stagePath, true)
     val kept = live.filterNot(legacy.toSet)
-    // test seam: opens the OCC window between promotion and the snapshot
-    // commit so specs can inject a concurrent writer deterministically
-    GraftCatalog.migratePreCommitHook()
-    // eqdels NOT cleared: they still apply to the conforming files (whose
-    // add-sequences they postdate); the promoted files' add = latest+1
-    // postdates every pending delete, so none re-applies to migrated rows.
-    // kind=rewrite: row-set invariant — incremental/streaming consumers
-    // skip this commit instead of re-receiving the migrated rows
-    try GraftCatalog.writeSnapshotAt(fs, dir, latest + 1, kept ++ promoted,
-      GraftCatalog.readTxns(fs, dir, latest), kind = GraftCatalog.KindRewrite)
-    catch { case e: Throwable =>
-      promoted.foreach(f => fs.delete(new Path(dir, f), false))
-      throw e
+    val (stageRel, moves) = stageParquet(dir, meta, migrated, "migr")
+    // atomic: readers see either the pre- or post-migration snapshot,
+    // never duplicates
+    GraftCatalog.publish(fs, dir, stageRel, moves) { promoted =>
+      // test seam: opens the OCC window between promotion and the commit
+      // so specs can inject a concurrent writer deterministically
+      GraftCatalog.migratePreCommitHook()
+      // eqdels NOT cleared: they still apply to the conforming files (whose
+      // add-sequences they postdate); the promoted files' add = latest+1
+      // postdates every pending delete, so none re-applies to migrated
+      // rows. kind=rewrite: row-set invariant — incremental/streaming
+      // consumers skip this commit instead of re-receiving the rows
+      GraftCatalog.writeSnapshotAt(fs, dir, latest + 1, kept ++ promoted,
+        GraftCatalog.readTxns(fs, dir, latest), kind = GraftCatalog.KindRewrite)
     }
     // the legacy files were replaced: re-point an existing bloom index at
     // the new files (incremental — conforming files keep their entries)
@@ -898,52 +841,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     }
     val out0 = GraftCatalog.readFilesWithDeletes(
       spark, dir, meta, affected, eqDels, addMap, posDels)
-    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-    val out = (meta.bucket match {
-      case Some((n, c)) if !out0.columns.contains(s"__bucket_$c") =>
-        out0.withColumn(s"__bucket_$c", pmod(hash(col(c)), lit(n)))
-      case _ => out0
-    }).coalesce(math.max(1, affected.size))
-    // stage → promote → snapshot, the cowRewrite promotion discipline
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
-    val stageRel = s"_stage_delc_$stamp"
-    val stagePath = new Path(dir, stageRel)
-    val writer = out.write.mode("overwrite")
-    (if (meta.partitionCols.isEmpty) writer
-     else writer.partitionBy(meta.partitionCols: _*))
-      // stamped parquet: staged files carry the stats-truncation stamp, so
-      // their string bounds classify exact and metadata-only min()/max()
-      // keeps working on the files this maintenance promotes
-      .format(classOf[StampedParquetFileFormat].getName)
-      .save(stagePath.toString)
-    val it = fs.listFiles(stagePath, true)
-    val stagedFiles = Seq.newBuilder[String]
-    val stageUri = stagePath.toUri.getPath
-    while (it.hasNext) {
-      val st = it.next()
-      val rel = st.getPath.toUri.getPath.stripPrefix(stageUri).stripPrefix("/")
-      if (rel.endsWith(".parquet") && !rel.split("/").last.startsWith("_"))
-        stagedFiles += rel
-    }
-    val promoted = stagedFiles.result().sorted.zipWithIndex.map { case (rel, i) =>
-      val sub = rel.split("/").dropRight(1)
-      val target = (sub :+ s"delc-$stamp-$i.parquet").mkString("/")
-      if (sub.nonEmpty) fs.mkdirs(new Path(dir, sub.mkString("/")))
-      if (!fs.rename(new Path(stagePath, rel), new Path(dir, target)))
-        throw new java.io.IOException(
-          s"compactDeletes: cannot promote $stageRel/$rel to $target")
-      target
-    }
-    fs.delete(stagePath, true)
+    val out = withBucketLevel(meta, out0).coalesce(math.max(1, affected.size))
     val kept = live.filterNot(affected.toSet)
+    val (stageRel, moves) = stageParquet(dir, meta, out, "delc")
     // kind=rewrite: folding already-visible MoR deletes leaves the LOGICAL
     // row set unchanged, so incremental/streaming consumers skip it
-    try GraftCatalog.writeSnapshotAt(fs, dir, latest + 1, kept ++ promoted,
-      GraftCatalog.readTxns(fs, dir, latest), clearEqDels = true,
-      kind = GraftCatalog.KindRewrite)
-    catch { case e: Throwable =>
-      promoted.foreach(f => fs.delete(new Path(dir, f), false))
-      throw e
+    GraftCatalog.publish(fs, dir, stageRel, moves) { promoted =>
+      GraftCatalog.writeSnapshotAt(fs, dir, latest + 1, kept ++ promoted,
+        GraftCatalog.readTxns(fs, dir, latest), clearEqDels = true,
+        kind = GraftCatalog.KindRewrite)
     }
     (affected.size, kept.size)
   }
@@ -1220,6 +1126,52 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     })
   }
 
+  /** Bucketed layout: a rewrite's rows re-route by recomputing the
+    * derived `__bucket_<col>` dir level with the writer's exact
+    * arithmetic (pmod(murmur3(col, 42), n) — hash() IS Murmur3 seed 42,
+    * and a null key hashes to the bare seed on both sides). */
+  private def withBucketLevel(
+      meta: GraftTableMeta, df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+    meta.bucket match {
+      case Some((n, c)) if !df.columns.contains(s"__bucket_$c") =>
+        df.withColumn(s"__bucket_$c", pmod(hash(col(c)), lit(n)))
+      case _ => df
+    }
+  }
+
+  /** Write a maintenance rewrite's rows as stamped parquet under
+    * `_stage_<prefix>_<stamp>` and name each staged file's promotion
+    * target: `<partition path>/<prefix>-<stamp>-<i>.parquet`, in sorted
+    * staged-path order. The stamp carries the stats-truncation setting,
+    * so promoted string bounds classify exact and metadata-only
+    * min()/max() keeps working on the files maintenance rewrites. */
+  private def stageParquet(
+      dir: Path, meta: GraftTableMeta, out: org.apache.spark.sql.DataFrame,
+      prefix: String): (String, Seq[(String, String)]) = {
+    val stamp = java.util.UUID.randomUUID().toString.take(8)
+    val stageRel = s"_stage_${prefix}_$stamp"
+    val stagePath = new Path(dir, stageRel)
+    val writer = out.write.mode("overwrite")
+    (if (meta.partitionCols.isEmpty) writer
+     else writer.partitionBy(meta.partitionCols: _*))
+      .format(classOf[StampedParquetFileFormat].getName)
+      .save(stagePath.toString)
+    val it = fs.listFiles(stagePath, true)
+    val staged = Seq.newBuilder[String]
+    val stageUri = stagePath.toUri.getPath
+    while (it.hasNext) {
+      val rel = it.next().getPath.toUri.getPath.stripPrefix(stageUri).stripPrefix("/")
+      // skip marker FILES (_SUCCESS and friends) only — dir segments may
+      // legitimately start with "_" (the bucketed layout's __bucket_<col>=N)
+      if (rel.endsWith(".parquet") && !rel.split("/").last.startsWith("_"))
+        staged += rel
+    }
+    (stageRel, staged.result().sorted.zipWithIndex.map { case (rel, i) =>
+      rel -> (rel.split("/").dropRight(1) :+ s"$prefix-$stamp-$i.parquet").mkString("/")
+    })
+  }
+
   /** The shared copy-on-write core of [[deleteWhere]]/[[updateWhere]]:
     * candidate files = what the PRUNED scan plans for `cond` (manifest
     * min/max + bloom index — an unpushable predicate prunes nothing and
@@ -1364,64 +1316,16 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
         kind = GraftCatalog.KindDelete)
       return (proven.size, kept.size, provenRows)
     }
-    // bucketed layout: rewritten rows re-route by recomputing the derived
-    // `__bucket_<col>` dir level with the writer's exact arithmetic
-    // (pmod(murmur3(col, 42), n) — hash() IS Murmur3 seed 42, and a null
-    // key hashes to the bare seed on both sides)
-    val out0 = rewrite(candDf, hit)
-    val out = (meta.bucket match {
-      case Some((n, c)) if !out0.columns.contains(s"__bucket_$c") =>
-        out0.withColumn(s"__bucket_$c",
-          org.apache.spark.sql.functions.pmod(
-            org.apache.spark.sql.functions.hash(
-              org.apache.spark.sql.functions.col(c)), lit(n)))
-      case _ => out0
-    }).coalesce(math.max(1, cands.size))
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
-    val stageRel = s"_stage_${stampPrefix}_$stamp"
-    val stagePath = new Path(dir, stageRel)
-    val writer = out.write.mode("overwrite")
-    (if (meta.partitionCols.isEmpty) writer
-     else writer.partitionBy(meta.partitionCols: _*))
-      // stamped parquet: staged files carry the stats-truncation stamp, so
-      // their string bounds classify exact and metadata-only min()/max()
-      // keeps working on the files this maintenance promotes
-      .format(classOf[StampedParquetFileFormat].getName)
-      .save(stagePath.toString)
-    // promote every staged parquet file, preserving its partition subpath
-    val it = fs.listFiles(stagePath, true)
-    val stagedFiles = Seq.newBuilder[String]
-    val stageUri = stagePath.toUri.getPath
-    while (it.hasNext) {
-      val st = it.next()
-      val rel = st.getPath.toUri.getPath.stripPrefix(stageUri).stripPrefix("/")
-      // skip marker FILES (_SUCCESS and friends) only — dir segments may
-      // legitimately start with "_" (the bucketed layout's __bucket_<col>=N)
-      if (rel.endsWith(".parquet") && !rel.split("/").last.startsWith("_"))
-        stagedFiles += rel
-    }
-    val promoted = stagedFiles.result().sorted.zipWithIndex.map { case (rel, i) =>
-      val sub = rel.split("/").dropRight(1)
-      val target =
-        (sub :+ s"$stampPrefix-$stamp-$i.parquet").mkString("/")
-      if (sub.nonEmpty) fs.mkdirs(new Path(dir, sub.mkString("/")))
-      if (!fs.rename(new Path(stagePath, rel), new Path(dir, target)))
-        throw new java.io.IOException(
-          s"row-level DML: cannot promote $stageRel/$rel to $target")
-      target
-    }
-    fs.delete(stagePath, true)
+    val out = withBucketLevel(meta, rewrite(candDf, hit))
+      .coalesce(math.max(1, cands.size))
     val kept = live.filterNot(allCands)
+    val (stageRel, moves) = stageParquet(dir, meta, out, stampPrefix)
     // kind=overwrite: CoW DML changes the row set — incremental consumers
     // get the rewritten files in full (the documented file-level limit)
-    try GraftCatalog.writeSnapshotAt(fs, dir, latest + 1,
-      kept ++ promoted, GraftCatalog.readTxns(fs, dir, latest),
-      kind = GraftCatalog.KindOverwrite)
-    catch { case e: Throwable =>
-      // commit lost (concurrent writer): drop the promoted files — they
-      // are referenced by nothing — and surface the conflict
-      promoted.foreach(f => fs.delete(new Path(dir, f), false))
-      throw e
+    GraftCatalog.publish(fs, dir, stageRel, moves) { promoted =>
+      GraftCatalog.writeSnapshotAt(fs, dir, latest + 1,
+        kept ++ promoted, GraftCatalog.readTxns(fs, dir, latest),
+        kind = GraftCatalog.KindOverwrite)
     }
     (allCands.size, kept.size, rowsAffected)
   }
@@ -1468,8 +1372,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     dead.foreach(f => fs.delete(new Path(dir, f), false))
     // drop expired manifests — except snapshots pinned by a tag or serving
     // as a branch fork base
-    (1L until oldestKept).filterNot(pinnedSnaps).foreach(n =>
-      fs.delete(new Path(dir, s"_snap-$n.manifest"), false))
+    GraftCatalog.dropManifests(fs, dir, (1L until oldestKept).filterNot(pinnedSnaps))
     // equality-delete sidecars referenced by NO retained manifest are
     // garbage (their deletes were folded in by compaction, expired with
     // their snapshots, or orphaned by a failed delta commit)
@@ -1983,12 +1886,6 @@ object GraftCatalog {
         "for the synthesized metadata columns (_file, _pos)")
   }
 
-  /** Test seam for [[GraftCatalog.migrateLayout]]'s OCC window (between
-    * file promotion and the snapshot commit): a spec swaps in a
-    * conflicting writer to pin that the migration loses the race loudly
-    * and cleans its promoted files. No-op in production. */
-  @volatile private[storage] var migratePreCommitHook: () => Unit = () => ()
-
   /** Parse a `write.partition-by` value of the form `bucket(n, col)` —
     * the bucket-spec-evolution spelling. Case-insensitive and
     * whitespace-tolerant (`BUCKET (4, id)` parses; `bucket 4, id` is
@@ -2089,16 +1986,6 @@ object GraftCatalog {
     finally out.close()
   }
 
-  // ── snapshot manifests ─────────────────────────────────────────────────
-  // `_snap-<n>.manifest`: newline-separated table-relative data-file paths
-  // as of commit n — the source of truth for the live view AND time
-  // travel. Data files are content-immutable (unique names, never
-  // appended); overwrites supersede them in the next manifest without
-  // touching disk, so every snapshot stays readable until `vacuum`.
-  // Single-writer-at-a-time assumption (like the session catalog); a
-  // production deployment swaps in Iceberg, whose catalog arbitrates
-  // concurrent commits ([[IcebergNessieProfile]]).
-
   private[storage] def listDataFiles(fs: FileSystem, root: Path): Seq[String] = {
     val it = fs.listFiles(root, true)
     val out = Seq.newBuilder[String]
@@ -2115,18 +2002,6 @@ object GraftCatalog {
     }
     out.result().sorted
   }
-
-  private[storage] def latestSnapshot(fs: FileSystem, dir: Path): Long =
-    if (!fs.exists(dir)) 0L
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.startsWith("_snap-") && n.endsWith(".manifest"))
-      .map(_.stripPrefix("_snap-").stripSuffix(".manifest").toLong)
-      .foldLeft(0L)(math.max)
-
-  private[storage] def writeSnapshot(
-      fs: FileSystem, dir: Path, files: Seq[String],
-      txns: Map[String, Long] = Map.empty): Long =
-    writeSnapshotAt(fs, dir, latestSnapshot(fs, dir) + 1, files, txns)
 
   // ── file-level column statistics (manifest data-skipping) ─────────────
   // `# stats:<file>=<col>|<kind>|<nulls>|<b64min>|<b64max>;...` header
@@ -3046,12 +2921,151 @@ object GraftCatalog {
     } finally reader.close()
   }
 
-  /** Write snapshot `next` exclusively. `next` must be derived from the
-    * SAME table-state read the manifest contents were based on — that is
-    * what makes the exclusive create a real conflict check rather than a
-    * re-read (see commit()). Per-file column stats are carried forward
-    * from snapshot `next − 1` and computed from parquet footers for files
-    * new to main's lineage (one footer read per new file, once ever). */
+  /** `incr:a..b` version-string form for incremental reads. */
+  private[storage] val IncrRange = """incr:(\d+)\.\.(\d+)""".r
+
+  // ── table log ──────────────────────────────────────────────────────────
+  // The one place a table changes, modelled on Iceberg's
+  // `TableOperations.commit(base, metadata)`. Two kinds of lineage share
+  // it: MAIN (`_snap-<n>.manifest`) and each branch's own sequence
+  // (`_bsnap-<b>-<n>.manifest`, named by `branch = Some(b)`); a manifest
+  // lists the table-relative data files live as of commit n, under `# `
+  // header lines. Named refs (`_ref-<b>` holds a branch's fork base,
+  // `_tag-<t>` an immutably pinned main snapshot) are Nessie's per-table
+  // core, offline — the reference deploys Nessie for git-like catalog
+  // versioning (its `spark-defaults.conf:15-31`).
+  //
+  // Every write runs stage → promote → commit ([[publish]]): staged files
+  // are renamed to their table paths on a bounded pool, refusing to
+  // clobber; the next manifest is then created EXCLUSIVELY — two writers
+  // that both read commit n race to create n+1 and the loser gets a
+  // [[CommitConflict]] instead of silently replacing the winner (the
+  // caller re-runs from the fresh head or fails loudly). Only that typed
+  // loss removes the promoted files and sidecars: a write or close failure
+  // after the create succeeded may have left a manifest that lists them.
+  // Data files are content-immutable (unique names, never appended), so
+  // every snapshot stays readable until `vacuum`. A production deployment
+  // swaps in Iceberg, whose catalog arbitrates commits
+  // ([[IcebergNessieProfile]]).
+
+  /** The exclusive create of a manifest, ref or tag lost to another
+    * writer: nothing this commit wrote is referenced by the table. */
+  final class CommitConflict(message: String, cause: Throwable)
+    extends java.io.IOException(message, cause)
+
+  private def manifestPrefix(branch: Option[String]): String =
+    branch.fold("_snap-")(b => s"_bsnap-$b-")
+
+  private def manifestPath(dir: Path, n: Long, branch: Option[String]): Path =
+    new Path(dir, s"${manifestPrefix(branch)}$n.manifest")
+
+  /** Latest commit of main or of `branch`'s own sequence (0 = none: an
+    * empty or pre-manifest table, or a branch still at its fork base). */
+  private[storage] def latestSnapshot(
+      fs: FileSystem, dir: Path, branch: Option[String] = None): Long = {
+    val prefix = manifestPrefix(branch)
+    if (!fs.exists(dir)) 0L
+    else fs.listStatus(dir).map(_.getPath.getName)
+      .filter(n => n.startsWith(prefix) && n.endsWith(".manifest"))
+      .flatMap(_.stripPrefix(prefix).stripSuffix(".manifest").toLongOption)
+      .foldLeft(0L)(math.max)
+  }
+
+  private[storage] def manifestLines(
+      fs: FileSystem, dir: Path, snap: Long,
+      branch: Option[String] = None): Option[Seq[String]] = {
+    val f = manifestPath(dir, snap, branch)
+    if (!fs.exists(f)) None
+    else {
+      val in = fs.open(f)
+      try {
+        val reader = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
+        Some(Iterator.continually(reader.readLine()).takeWhile(_ != null)
+          .map(_.trim).filter(_.nonEmpty).toSeq)
+      } finally in.close()
+    }
+  }
+
+  /** A lineage's head: its latest commit id and that commit's lines. A
+    * branch without commits of its own reads its fork base's main
+    * manifest (`None` lines = a legacy table: callers list the dir). */
+  private[storage] def head(
+      fs: FileSystem, dir: Path, branch: Option[String]): (Long, Option[Seq[String]]) = {
+    val n = latestSnapshot(fs, dir, branch)
+    val lines =
+      if (n > 0L || branch.isEmpty) manifestLines(fs, dir, n, branch)
+      else readBranchBase(fs, dir, branch.get).flatMap(manifestLines(fs, dir, _))
+    (n, lines)
+  }
+
+  private[storage] def readManifest(fs: FileSystem, dir: Path, snap: Long): Option[Seq[String]] =
+    manifestLines(fs, dir, snap).map(parseFiles)
+
+  /** The non-header (data file) lines of an already-read manifest. */
+  private[storage] def parseFiles(lines: Seq[String]): Seq[String] =
+    lines.filterNot(_.startsWith("#"))
+
+  private[storage] def parseCommitKind(lines: Seq[String]): Option[String] =
+    lines.find(_.startsWith("# kind:")).map(_.stripPrefix("# kind:").trim)
+      .filter(CommitKinds.contains)
+
+  /** Writer-transaction watermarks (`# txn:<appId>=<version>` header lines)
+    * recorded by the snapshot the data committed in — reading them from the
+    * latest manifest is what makes idempotent retries atomic with the data
+    * (same single-file commit point; Delta's txnAppId/txnVersion shape). */
+  private[storage] def readTxns(fs: FileSystem, dir: Path, snap: Long): Map[String, Long] =
+    parseTxns(manifestLines(fs, dir, snap).getOrElse(Seq.empty))
+
+  private[storage] def parseTxns(lines: Seq[String]): Map[String, Long] =
+    lines.filter(_.startsWith("# txn:"))
+      .flatMap { l =>
+        l.stripPrefix("# txn:").split("=", 2) match {
+          case Array(app, v) => v.toLongOption.map(app -> _)
+          case _ => None
+        }
+      }.toMap
+
+  private def renderTxns(txns: Map[String, Long]): Seq[String] =
+    txns.toSeq.sorted.map { case (app, v) => s"# txn:$app=$v" }
+
+  private def createExclusive(fs: FileSystem, f: Path, body: String, conflict: => String): Unit = {
+    val out =
+      try fs.create(f, false)
+      catch { case e: java.io.IOException => throw new CommitConflict(conflict, e) }
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** Commit `next` to main or `branch` with the given header + file lines.
+    * `next` must be derived from the SAME head read the lines were built
+    * from — that is what makes the exclusive create a real conflict check
+    * rather than a re-read. */
+  private[storage] def commit(
+      fs: FileSystem, dir: Path, branch: Option[String], next: Long,
+      lines: Seq[String]): Long = {
+    createExclusive(fs, manifestPath(dir, next, branch), lines.mkString("\n") + "\n",
+      branch match {
+        case None =>
+          s"GraftCatalog: concurrent commit detected — snapshot $next was " +
+            "created by another writer after this commit read the table state; " +
+            "re-run the write against the current snapshot"
+        case Some(b) =>
+          s"GraftCatalog: concurrent commit detected on branch '$b' — " +
+            s"commit $next was created by another writer; re-run against the " +
+            "current branch head"
+      })
+    next
+  }
+
+  /** Commit a branch's next head: its writer-txn header, then the files. */
+  private[storage] def commitBranch(
+      fs: FileSystem, dir: Path, branch: String, next: Long,
+      files: Seq[String], txns: Map[String, Long]): Long =
+    commit(fs, dir, Some(branch), next, renderTxns(txns) ++ files.sorted)
+
+  /** Write main snapshot `next` exclusively (see [[commit]]). Per-file
+    * column stats are carried forward from snapshot `next − 1` and computed
+    * from parquet footers for files new to main's lineage (one footer read
+    * per new file, once ever). */
   private[storage] def writeSnapshotAt(
       fs: FileSystem, dir: Path, next: Long, files: Seq[String],
       txns: Map[String, Long] = Map.empty,
@@ -3079,29 +3093,13 @@ object GraftCatalog {
     // pay SERIALLY: ~10-30 ms per footer × dozens of files was the
     // dominant driver-side gap of the evolution/DML bench queries
     // (stage wall times accounted for under half their iteration time).
-    // Read them concurrently on a bounded pool; per-file results are
-    // independent so ordering cannot change the rendered stats.
+    // Per-file results are independent, so ordering cannot change the
+    // rendered stats.
     val newFiles = files.filterNot(carried.contains)
-    val computed: Map[String, Map[String, ColStat]] =
-      if (newFiles.lengthCompare(2) < 0)
-        newFiles.map(f => f ->
-          (try footerStats(fs, dir, f)
-           catch { case _: Exception => Map.empty[String, ColStat] })).toMap
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(newFiles.size, 8))
-        try {
-          import scala.jdk.CollectionConverters._
-          val tasks = newFiles.map { f =>
-            new java.util.concurrent.Callable[(String, Map[String, ColStat])] {
-              override def call(): (String, Map[String, ColStat]) = f ->
-                (try footerStats(fs, dir, f)
-                 catch { case _: Exception => Map.empty[String, ColStat] })
-            }
-          }
-          pool.invokeAll(tasks.asJava).asScala.map(_.get()).toMap
-        } finally pool.shutdown()
-      }
+    val computed: Map[String, Map[String, ColStat]] = parallel(newFiles) { f =>
+      f -> (try footerStats(fs, dir, f)
+            catch { case _: Exception => Map.empty[String, ColStat] })
+    }.toMap
     val stats = files.sorted.flatMap { f =>
       val st = carried.getOrElse(f, computed.getOrElse(f, Map.empty))
       if (st.nonEmpty) Some(renderStats(f, st)) else None
@@ -3114,8 +3112,7 @@ object GraftCatalog {
     // live in the previous manifest but never stamped (written before
     // this header existed) gets 0: it provably predates every eqdel.
     val prevAdd = parseAddMap(prevLines)
-    val prevFiles: Set[String] =
-      prevLines.filterNot(_.startsWith("#")).toSet
+    val prevFiles: Set[String] = parseFiles(prevLines).toSet
     val addMap: Map[String, Long] = files.map { f =>
       f -> prevAdd.getOrElse(f, if (prevFiles.contains(f)) 0L else next)
     }.toMap
@@ -3145,104 +3142,91 @@ object GraftCatalog {
       eqdels.sorted.map { case (f, s) => s"# eqdel:${b64e(f)}=$s" } ++
       posdels.sorted.map { case (sc, t, s) =>
         s"# posdel:${b64e(sc)}:${b64e(t)}=$s" } ++
-      txns.toSeq.sorted.map { case (app, v) => s"# txn:$app=$v" }
-    // exclusive create (overwrite=false) = optimistic concurrency control:
-    // two writers that both based their manifest on snapshot `next-1` race
-    // to create `_snap-next`; the loser gets FileAlreadyExists instead of
-    // silently clobbering the winner's commit (Iceberg's commit-conflict
-    // model; the caller retries from the fresh snapshot or fails loudly)
-    val out =
-      try fs.create(new Path(dir, s"_snap-$next.manifest"), false)
-      catch {
-        case e: java.io.IOException => throw new java.io.IOException(
-          s"GraftCatalog: concurrent commit detected — snapshot $next was " +
-            "created by another writer after this commit read the table state; " +
-            "re-run the write against the current snapshot", e)
-      }
-    try out.write(
-      ((header ++ files.sorted).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    next
+      renderTxns(txns)
+    commit(fs, dir, None, next, header ++ files.sorted)
   }
 
-  private[storage] def manifestLines(fs: FileSystem, dir: Path, snap: Long): Option[Seq[String]] = {
-    val f = new Path(dir, s"_snap-$snap.manifest")
-    if (!fs.exists(f)) None
+  private[storage] def writeSnapshot(
+      fs: FileSystem, dir: Path, files: Seq[String],
+      txns: Map[String, Long] = Map.empty): Long =
+    writeSnapshotAt(fs, dir, latestSnapshot(fs, dir) + 1, files, txns)
+
+  /** `f` over `xs` on a bounded driver pool (serially below two items):
+    * the promotion renames and new-file footer reads of a multi-file
+    * commit are independent, IO-bound metadata ops. The first failure is
+    * rethrown after every task finished. */
+  private def parallel[A, B](xs: Seq[A])(f: A => B): Seq[B] =
+    if (xs.lengthCompare(2) < 0) xs.map(f)
     else {
-      val in = fs.open(f)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(xs.size, 8))
       try {
-        val reader = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
-        Some(Iterator.continually(reader.readLine()).takeWhile(_ != null)
-          .map(_.trim).filter(_.nonEmpty).toSeq)
-      } finally in.close()
+        val tasks = xs.map(x => new java.util.concurrent.Callable[B] {
+          override def call(): B = f(x)
+        })
+        pool.invokeAll(tasks.asJava).asScala.map(_.get()).toSeq
+      } catch {
+        case e: java.util.concurrent.ExecutionException => throw e.getCause
+      } finally pool.shutdown()
+    }
+
+  /** Stage → promote → commit. Renames each `(staged, target)` pair —
+    * staged relative to `stageRel`, target relative to `dir` — refusing
+    * to clobber an existing target (a POSIX rename clobbers and an HDFS
+    * one returns false; either would lose data the manifest records),
+    * drops the stage dir, then runs `commit` with the promoted targets.
+    * When `commit` loses the race, the promoted files and `sidecars`
+    * (table-relative, written before the commit) are referenced by
+    * nothing and are deleted; any other failure leaves them for the
+    * manifest that may list them, or for vacuum. */
+  private[storage] def publish(
+      fs: FileSystem, dir: Path, stageRel: String, moves: Seq[(String, String)],
+      sidecars: Seq[String] = Seq.empty)(commit: Seq[String] => Long): Long = {
+    parallel(moves) { case (staged, target) =>
+      val dst = new Path(dir, target)
+      fs.mkdirs(dst.getParent)
+      val clobber = fs.exists(dst)
+      if (clobber || !fs.rename(new Path(dir, s"$stageRel/$staged"), dst))
+        throw new java.io.IOException(
+          s"GraftCatalog commit failed: cannot promote $stageRel/$staged to $target" +
+            (if (clobber) " (destination already exists)" else ""))
+    }
+    fs.delete(new Path(dir, stageRel), true)
+    val promoted = moves.map(_._2)
+    try commit(promoted)
+    catch { case e: CommitConflict =>
+      (promoted ++ sidecars).foreach(f => fs.delete(new Path(dir, f), false))
+      throw e
     }
   }
 
-  private[storage] def readManifest(fs: FileSystem, dir: Path, snap: Long): Option[Seq[String]] =
-    manifestLines(fs, dir, snap).map(_.filterNot(_.startsWith("#")))
+  /** Test seam for [[GraftCatalog.migrateLayout]]'s OCC window (between
+    * file promotion and the snapshot commit): a spec swaps in a
+    * conflicting writer to pin that the migration loses the race loudly
+    * and cleans its promoted files. No-op in production. */
+  @volatile private[storage] var migratePreCommitHook: () => Unit = () => ()
 
-  /** The snapshot's recorded commit kind (`# kind:` header line); None for
-    * a missing manifest or one written before kinds were recorded —
-    * readers treat None as "may add rows" (the conservative direction). */
-  private[storage] def readCommitKind(fs: FileSystem, dir: Path, snap: Long): Option[String] =
-    parseCommitKind(manifestLines(fs, dir, snap).getOrElse(Seq.empty))
+  /** Drop main snapshots or a branch's commits (vacuum, dropBranch). */
+  private[storage] def dropManifests(
+      fs: FileSystem, dir: Path, snaps: Seq[Long], branch: Option[String] = None): Unit =
+    snaps.foreach(n => fs.delete(manifestPath(dir, n, branch), false))
 
-  private[storage] def parseCommitKind(lines: Seq[String]): Option[String] =
-    lines.find(_.startsWith("# kind:")).map(_.stripPrefix("# kind:").trim)
-      .filter(CommitKinds.contains)
-
-  /** The non-header (data file) lines of an already-read manifest. */
-  private[storage] def parseFiles(lines: Seq[String]): Seq[String] =
-    lines.filterNot(_.startsWith("#"))
-
-  /** Writer-transaction watermarks (`# txn:<appId>=<version>` header lines)
-    * recorded by the snapshot the data committed in — reading them from the
-    * latest manifest is what makes idempotent retries atomic with the data
-    * (same single-file commit point; Delta's txnAppId/txnVersion shape). */
-  private[storage] def readTxns(fs: FileSystem, dir: Path, snap: Long): Map[String, Long] =
-    parseTxns(manifestLines(fs, dir, snap).getOrElse(Seq.empty))
-
-  private[storage] def parseTxns(lines: Seq[String]): Map[String, Long] =
-    lines.filter(_.startsWith("# txn:"))
-      .flatMap { l =>
-        l.stripPrefix("# txn:").split("=", 2) match {
-          case Array(app, v) => v.toLongOption.map(app -> _)
-          case _ => None
-        }
-      }.toMap
-
-  // ── Nessie-style named refs (offline) ──────────────────────────────────
-  // The reference deploys Nessie for git-like catalog versioning
-  // (/root/reference/spark-defaults.conf:15-31 — nessie catalog impl,
-  // `ref=main`); these helpers reproduce the per-table core of that model
-  // on the same manifest machinery: a BRANCH is a fork base (`_ref-<name>`
-  // records the main snapshot it forked from) plus its own commit sequence
-  // (`_bsnap-<name>-<k>.manifest`, exclusive-create OCC like main); a TAG
-  // (`_tag-<name>`) immutably pins a main snapshot. Main's lineage is
-  // untouched by branch commits, so existing readers never see
-  // work-in-progress data — the isolation Nessie branches exist for.
+  // ── named refs: `_ref-<branch>` (fork base), `_tag-<tag>` (pinned) ─────
 
   /** Branch/tag names: path- and parse-safe. */
-  /** `incr:a..b` version-string form for incremental reads. */
-  private[storage] val IncrRange = """incr:(\d+)\.\.(\d+)""".r
-
   private[storage] def validRefName(name: String): Boolean =
     name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_' || c == '.')
 
-  private[storage] def refFile(dir: Path, name: String) = new Path(dir, s"_ref-$name")
-  private[storage] def tagFile(dir: Path, name: String) = new Path(dir, s"_tag-$name")
+  private def refFile(dir: Path, name: String) = new Path(dir, s"_ref-$name")
+  private def tagFile(dir: Path, name: String) = new Path(dir, s"_tag-$name")
 
-  private[storage] def writeNumberFileExclusive(
-      fs: FileSystem, f: Path, n: Long, label: String): Unit = {
-    // exclusive create: two racing createBranch/createTag calls cannot
-    // silently clobber each other (same OCC shape as snapshot commits)
-    val out =
-      try fs.create(f, false)
-      catch {
-        case e: java.io.IOException =>
-          throw new java.io.IOException(s"GraftCatalog: $label already exists", e)
-      }
-    try out.write(s"$n\n".getBytes("UTF-8")) finally out.close()
+  /** Exclusively create branch `name`'s ref (`tag = false`) or tag `name`
+    * (`tag = true`) at snapshot `n`: two racing creates cannot silently
+    * clobber each other. */
+  private[storage] def createRef(
+      fs: FileSystem, dir: Path, name: String, n: Long, tag: Boolean): Unit = {
+    val label = if (tag) s"tag '$name'" else s"branch '$name'"
+    createExclusive(fs, if (tag) tagFile(dir, name) else refFile(dir, name), s"$n\n",
+      s"GraftCatalog: $label already exists")
   }
 
   private def readNumberFile(fs: FileSystem, f: Path): Option[Long] = {
@@ -3264,75 +3248,35 @@ object GraftCatalog {
   private[storage] def readTagSnap(fs: FileSystem, dir: Path, tag: String): Option[Long] =
     readNumberFile(fs, tagFile(dir, tag))
 
-  /** Latest commit in the branch's own sequence (0 = none yet: the branch
-    * head is its fork base). */
-  private[storage] def latestBranchSnap(fs: FileSystem, dir: Path, branch: String): Long = {
-    val prefix = s"_bsnap-$branch-"
-    if (!fs.exists(dir)) 0L
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.startsWith(prefix) && n.endsWith(".manifest"))
-      .flatMap(_.stripPrefix(prefix).stripSuffix(".manifest").toLongOption)
-      .foldLeft(0L)(math.max)
-  }
-
-  private[storage] def writeBranchSnapshotAt(
-      fs: FileSystem, dir: Path, branch: String, next: Long,
-      files: Seq[String], txns: Map[String, Long]): Long = {
-    val header = txns.toSeq.sorted.map { case (app, v) => s"# txn:$app=$v" }
-    val out =
-      try fs.create(new Path(dir, s"_bsnap-$branch-$next.manifest"), false)
-      catch {
-        case e: java.io.IOException => throw new java.io.IOException(
-          s"GraftCatalog: concurrent commit detected on branch '$branch' — " +
-            s"commit $next was created by another writer; re-run against the " +
-            "current branch head", e)
-      }
-    try out.write(
-      ((header ++ files.sorted).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    next
-  }
-
-  private def branchManifestLines(
-      fs: FileSystem, dir: Path, branch: String): Option[Seq[String]] = {
-    val k = latestBranchSnap(fs, dir, branch)
-    if (k == 0L) None
-    else {
-      val f = new Path(dir, s"_bsnap-$branch-$k.manifest")
-      val in = fs.open(f)
-      try {
-        val reader = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
-        Some(Iterator.continually(reader.readLine()).takeWhile(_ != null)
-          .map(_.trim).filter(_.nonEmpty).toSeq)
-      } finally in.close()
+  /** All named refs: (kind, name, snapshot) — branches report their fork
+    * base, tags their pinned snapshot. */
+  private[storage] def listRefs(fs: FileSystem, dir: Path): Seq[(String, String, Long)] =
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).map(_.getPath.getName).toSeq.sorted.flatMap { n =>
+      if (n.startsWith("_ref-"))
+        readBranchBase(fs, dir, n.stripPrefix("_ref-")).map(("branch", n.stripPrefix("_ref-"), _))
+      else if (n.startsWith("_tag-"))
+        readTagSnap(fs, dir, n.stripPrefix("_tag-")).map(("tag", n.stripPrefix("_tag-"), _))
+      else None
     }
+
+  /** Delete a branch ref and its commit sequence; false if it had none. */
+  private[storage] def dropBranch(fs: FileSystem, dir: Path, branch: String): Boolean = {
+    val existed = fs.exists(refFile(dir, branch))
+    if (existed) {
+      fs.delete(refFile(dir, branch), false)
+      dropManifests(fs, dir, 1L to latestSnapshot(fs, dir, Some(branch)), Some(branch))
+    }
+    existed
   }
 
   /** Branch head file set: its own latest commit, or (no commits yet) the
     * fork-base main manifest, with the legacy dir-listing fallback. */
   private[storage] def branchHeadFiles(
       fs: FileSystem, dir: Path, branch: String): Option[Seq[String]] =
-    readBranchBase(fs, dir, branch).map { base =>
-      branchManifestLines(fs, dir, branch)
-        .map(_.filterNot(_.startsWith("#")))
-        .orElse(readManifest(fs, dir, base))
-        .getOrElse(listDataFiles(fs, dir))
-    }
-
-  /** Branch head writer-txn watermarks (fall back to the fork base's). */
-  private[storage] def branchHeadTxns(
-      fs: FileSystem, dir: Path, branch: String): Map[String, Long] =
-    branchManifestLines(fs, dir, branch) match {
-      case Some(lines) =>
-        lines.filter(_.startsWith("# txn:")).flatMap { l =>
-          l.stripPrefix("# txn:").split("=", 2) match {
-            case Array(app, v) => v.toLongOption.map(app -> _)
-            case _ => None
-          }
-        }.toMap
-      case None =>
-        readBranchBase(fs, dir, branch).map(readTxns(fs, dir, _)).getOrElse(Map.empty)
-    }
+    readBranchBase(fs, dir, branch).map(_ =>
+      head(fs, dir, Some(branch))._2.map(parseFiles).getOrElse(listDataFiles(fs, dir)))
+  // ── end of table log ───────────────────────────────────────────────────
 
   /** SQLConf entries `ParquetWriteSupport`/the schema converter read from
     * the task-side hadoop conf (Spark's own writer injects the same set),
@@ -3772,16 +3716,11 @@ private[storage] class GraftBatchWrite(
         throw new IllegalArgumentException(
           s"unknown branch '$b' — create it with GraftCatalog.createBranch first")
     }
-    val latest = GraftCatalog.latestSnapshot(fs, root)
-    // main-branch commits read the latest manifest ONCE — txns, the prior
-    // live set, and writeSnapshotAt's five header views all parse the
-    // same line list instead of re-opening the file per view (r17)
-    val latestLines: Option[Seq[String]] =
-      if (branch.isEmpty) GraftCatalog.manifestLines(fs, root, latest) else None
-    val priorTxns = branch match {
-      case Some(b) => GraftCatalog.branchHeadTxns(fs, root, b)
-      case None => GraftCatalog.parseTxns(latestLines.getOrElse(Seq.empty))
-    }
+    // the head manifest is read ONCE — txns, the prior live set, and
+    // writeSnapshotAt's five header views all parse the same line list
+    // instead of re-opening the file per view (r17)
+    val (latest, latestLines) = GraftCatalog.head(fs, root, branch)
+    val priorTxns = GraftCatalog.parseTxns(latestLines.getOrElse(Seq.empty))
     val alreadyCommitted = txn.exists { case (app, v) =>
       priorTxns.get(app).exists(_ >= v) }
     if (alreadyCommitted) {
@@ -3792,53 +3731,9 @@ private[storage] class GraftBatchWrite(
       return
     }
     val staged = messages.flatMap(_.asInstanceOf[GraftCommitMessage].files)
-    // prior live set: branch head / latest manifest, or a dir listing for
-    // legacy tables
-    val prior = branch match {
-      case Some(b) => GraftCatalog.branchHeadFiles(fs, root, b).get
-      case None => latestLines
-        .map(_.filterNot(_.startsWith("#")))
-        .getOrElse(GraftCatalog.listDataFiles(fs, root))
-    }
-    // Promote staged files CONCURRENTLY on a bounded pool: each promotion
-    // is 2-3 independent FS metadata ops (mkdirs idempotent, targets all
-    // distinct), and a multi-file commit — a partitioned append, a MERGE
-    // rewrite, a compaction — paid them serially on the driver (the same
-    // shape as the footer-stats reads, r16). Fail-loudly semantics are
-    // unchanged: any failed promotion aborts the commit before a snapshot
-    // is written; already-promoted files stay orphaned outside the
-    // manifest and are reclaimed by vacuum.
-    def promote(part: String, file: String): Unit = {
-      val dst = if (part.isEmpty) root else new Path(root, part)
-      fs.mkdirs(dst)
-      val src = if (part.isEmpty) new Path(root, s"$stagingRel/$file")
-                else new Path(root, s"$stagingRel/$part/$file")
-      val target = new Path(dst, file)
-      // rename returns false (HDFS) or clobbers (POSIX) instead of
-      // throwing; either way a silent false here would lose the staged
-      // data while the manifest records it — fail the commit instead.
-      if (fs.exists(target) || !fs.rename(src, target))
-        throw new java.io.IOException(
-          s"GraftCatalog commit failed: cannot promote $src to $target" +
-            (if (fs.exists(target)) " (destination already exists)" else ""))
-    }
-    if (staged.lengthCompare(2) < 0) staged.foreach { case (p, f) => promote(p, f) }
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(staged.length, 8))
-      try {
-        import scala.jdk.CollectionConverters._
-        val tasks = staged.map { case (p, f) =>
-          new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit = promote(p, f)
-          }
-        }
-        pool.invokeAll(tasks.toSeq.asJava).asScala.foreach(_.get()) // rethrows
-      } catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
-      } finally pool.shutdown()
-    }
-    fs.delete(new Path(root, stagingRel), true)
+    // prior live set: the head manifest, or a dir listing for legacy tables
+    val prior = latestLines.map(GraftCatalog.parseFiles)
+      .getOrElse(GraftCatalog.listDataFiles(fs, root))
     val stagedRel = staged.map { case (p, f) => if (p.isEmpty) f else s"$p/$f" }
     val touched = staged.map(_._1).distinct.filter(_.nonEmpty)
     val live = mode match {
@@ -3862,22 +3757,24 @@ private[storage] class GraftBatchWrite(
       case _ => prior ++ stagedRel // append
     }
     val txns = txn.fold(priorTxns) { case (app, v) => priorTxns + (app -> v) }
-    // snapshot id = the state this commit read + 1, NOT a fresh re-read:
-    // if another writer committed in between, the exclusive create
-    // collides and this commit fails instead of silently dropping theirs
     // commit kind: appends record `append`; truncate/dynamic overwrites
     // record `overwrite` (their added files carry a changed row set) —
     // unless the writer asserted row-set invariance (compact/clusterTable),
     // which records `rewrite` so incremental/streaming consumers skip it
     val kind = kindOverride.getOrElse(
       if (mode == "append") GraftCatalog.KindAppend else GraftCatalog.KindOverwrite)
-    branch match {
-      case Some(b) =>
-        val bk = GraftCatalog.latestBranchSnap(fs, root, b)
-        GraftCatalog.writeBranchSnapshotAt(fs, root, b, bk + 1, live.distinct, txns)
-      case None =>
-        GraftCatalog.writeSnapshotAt(fs, root, latest + 1, live.distinct, txns,
-          kind = kind, prevLinesOpt = Some(latestLines.getOrElse(Seq.empty)))
+    // staged files keep their names; snapshot id = the head this commit
+    // read + 1, NOT a fresh re-read: if another writer committed in
+    // between, the exclusive create collides and this commit fails
+    // instead of silently dropping theirs
+    GraftCatalog.publish(fs, root, stagingRel, stagedRel.toSeq.map(f => f -> f)) { _ =>
+      branch match {
+        case Some(b) =>
+          GraftCatalog.commitBranch(fs, root, b, latest + 1, live.distinct, txns)
+        case None =>
+          GraftCatalog.writeSnapshotAt(fs, root, latest + 1, live.distinct, txns,
+            kind = kind, prevLinesOpt = Some(latestLines.getOrElse(Seq.empty)))
+      }
     }
   }
 

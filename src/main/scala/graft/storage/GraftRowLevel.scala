@@ -373,66 +373,86 @@ private[storage] final case class CowProjectingFactory(
   }
 }
 
-/** Publishes the rewrite: stage through the catalog writer, promote, and
-  * commit `prior − scanned + staged` under the usual exclusive-create
-  * OCC. Mirrors [[GraftBatchWrite]]'s promotion discipline (fail the
-  * commit rather than silently lose a staged file; orphans of a failed
-  * run are vacuum's to reclaim). */
-private[storage] final class CowBatchWrite(
+/** What the row-level commits share: replacement and inserted rows are
+  * staged under `_staging-<queryId>` by the catalog's own
+  * [[GraftWriterFactory]], and the commit publishes relative to the
+  * snapshot the rewrite scan PLANNED on, not the current latest — the
+  * new live set is only meaningful against the scanned state, so a
+  * commit that landed in between must surface as an exclusive-create
+  * conflict rather than be folded into a manifest computed from stale
+  * rows. Subclasses keep what differs: the live set and the sidecars. */
+private[storage] abstract class RowLevelBatchWrite(
     op: GraftRowLevelOperation,
     dir: String,
     meta: GraftTableMeta,
     queryId: String) extends BatchWrite {
 
   private val stagingRel = s"_staging-$queryId"
+  protected val stagingDir = s"$dir/$stagingRel"
+  protected val root = new Path(dir)
+  protected def fs: org.apache.hadoop.fs.FileSystem =
+    root.getFileSystem(op.spark.sessionState.newHadoopConf())
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val inner = GraftWriterFactory(s"$dir/$stagingRel", meta.schema, meta.partitionCols,
-      GraftCatalog.parquetWriteConfs(op.spark), queryId,
-      SerializableHadoopConf.capture(op.spark),
+  protected def dataWriters(hconf: SerializableHadoopConf): GraftWriterFactory =
+    GraftWriterFactory(stagingDir, meta.schema, meta.partitionCols,
+      GraftCatalog.parquetWriteConfs(op.spark), queryId, hconf,
       meta.properties.get(GraftCatalog.TargetFileRowsProp)
         .flatMap(_.toLongOption).filter(_ > 0).getOrElse(0L),
       meta.bucket)
-    CowProjectingFactory(inner, meta.schema)
+
+  protected def staged(frag: String): Path = new Path(root, s"$stagingRel/$frag")
+
+  /** The scanned snapshot, read once: its id, manifest lines (empty for
+    * a legacy table) and live files (a dir listing for legacy tables). */
+  protected def scanState(fs: org.apache.hadoop.fs.FileSystem, what: String)
+      : (Long, Seq[String], Seq[String]) = {
+    val scanSnap = op.scanSnapshot
+    require(scanSnap >= 0, s"$what without a planned rewrite scan")
+    val lines = GraftCatalog.manifestLines(fs, root, scanSnap)
+    (scanSnap, lines.getOrElse(Seq.empty),
+      lines.map(GraftCatalog.parseFiles).getOrElse(GraftCatalog.listDataFiles(fs, root)))
   }
+
+  /** Promote `files` and commit `kept + promoted` at scan snapshot + 1
+    * as an overwrite (the row set changed), carrying the scanned
+    * snapshot's writer txns; a lost race also removes the new delete
+    * sidecars, which are written before the commit. */
+  protected def publish(
+      fs: org.apache.hadoop.fs.FileSystem, scanSnap: Long, scanLines: Seq[String],
+      files: Seq[(String, String)], kept: Seq[String],
+      newEqDels: Seq[String] = Seq.empty,
+      newPosDels: Seq[(String, String)] = Seq.empty): Unit = {
+    val rel = files.map { case (p, f) => if (p.isEmpty) f else s"$p/$f" }
+    val sidecars = (newEqDels ++ newPosDels.map(_._1)).distinct
+    GraftCatalog.publish(fs, root, stagingRel, rel.map(f => f -> f), sidecars) { promoted =>
+      GraftCatalog.writeSnapshotAt(fs, root, scanSnap + 1, (kept ++ promoted).distinct,
+        GraftCatalog.parseTxns(scanLines),
+        newEqDels = newEqDels, newPosDels = newPosDels,
+        kind = GraftCatalog.KindOverwrite, prevLinesOpt = Some(scanLines))
+    }
+  }
+
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    fs.delete(new Path(root, stagingRel), true)
+}
+
+/** Publishes the copy-on-write rewrite: `prior − scanned + staged`. */
+private[storage] final class CowBatchWrite(
+    op: GraftRowLevelOperation,
+    dir: String,
+    meta: GraftTableMeta,
+    queryId: String) extends RowLevelBatchWrite(op, dir, meta, queryId) {
+
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+    CowProjectingFactory(dataWriters(SerializableHadoopConf.capture(op.spark)), meta.schema)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(op.spark.sessionState.newHadoopConf())
-    // Commit against the snapshot the rewrite scan PLANNED on, not the
-    // current latest: `prior − scanned + staged` is only meaningful
-    // relative to the scanned state, so a commit that landed in between
-    // must surface as an exclusive-create conflict rather than be folded
-    // into a manifest computed from stale rows.
-    val scanSnap = op.scanSnapshot
-    require(scanSnap >= 0,
-      "row-level commit without a planned rewrite scan")
-    val prior = GraftCatalog.readManifest(fs, root, scanSnap)
-      .getOrElse(GraftCatalog.listDataFiles(fs, root))
-    val staged = messages.flatMap(_.asInstanceOf[GraftCommitMessage].files)
-    staged.foreach { case (part, file) =>
-      val dst = if (part.isEmpty) root else new Path(root, part)
-      fs.mkdirs(dst)
-      val src = if (part.isEmpty) new Path(root, s"$stagingRel/$file")
-                else new Path(root, s"$stagingRel/$part/$file")
-      val target = new Path(dst, file)
-      if (fs.exists(target) || !fs.rename(src, target))
-        throw new java.io.IOException(
-          s"row-level commit failed: cannot promote $src to $target")
-    }
-    fs.delete(new Path(root, stagingRel), true)
-    val stagedRel = staged.map { case (p, f) => if (p.isEmpty) f else s"$p/$f" }
+    val fs = this.fs
+    val (scanSnap, scanLines, prior) = scanState(fs, "row-level commit")
     val scanned = op.scannedFiles.toSet
-    val live = prior.filterNot(scanned) ++ stagedRel
-    GraftCatalog.writeSnapshotAt(fs, root, scanSnap + 1, live.distinct,
-      GraftCatalog.readTxns(fs, root, scanSnap),
-      kind = GraftCatalog.KindOverwrite)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(op.spark.sessionState.newHadoopConf())
-    fs.delete(new Path(root, stagingRel), true)
+    publish(fs, scanSnap, scanLines,
+      messages.flatMap(_.asInstanceOf[GraftCommitMessage].files).toSeq,
+      prior.filterNot(scanned))
   }
 }
 
@@ -530,49 +550,26 @@ private[storage] final class GraftDeltaBatchWrite(
     meta: GraftTableMeta,
     keyCols: Seq[String],
     queryId: String)
-  extends org.apache.spark.sql.connector.write.DeltaBatchWrite {
-
-  private val stagingRel = s"_staging-$queryId"
+  extends RowLevelBatchWrite(op, dir, meta, queryId)
+  with org.apache.spark.sql.connector.write.DeltaBatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DeltaWriterFactory = {
     val hconf = SerializableHadoopConf.capture(op.spark)
-    val inner = GraftWriterFactory(s"$dir/$stagingRel", meta.schema,
-      meta.partitionCols,
-      GraftCatalog.parquetWriteConfs(op.spark), queryId, hconf,
-      meta.properties.get(GraftCatalog.TargetFileRowsProp)
-        .flatMap(_.toLongOption).filter(_ > 0).getOrElse(0L),
-      meta.bucket)
     val keyTypes = keyCols.map(c =>
       meta.schema(meta.schema.fieldIndex(c)).dataType)
-    GraftDeltaWriterFactory(inner, s"$dir/$stagingRel", keyCols, keyTypes,
-      hconf)
+    GraftDeltaWriterFactory(dataWriters(hconf), stagingDir, keyCols,
+      keyTypes, hconf)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(op.spark.sessionState.newHadoopConf())
-    val scanSnap = op.scanSnapshot
-    require(scanSnap >= 0, "delta commit without a planned rewrite scan")
-    val prior = GraftCatalog.readManifest(fs, root, scanSnap)
-      .getOrElse(GraftCatalog.listDataFiles(fs, root))
+    val fs = this.fs
+    val (scanSnap, scanLines, prior) = scanState(fs, "delta commit")
     val msgs = messages.map(_.asInstanceOf[GraftDeltaCommitMessage])
-    val staged = msgs.flatMap(_.files)
-    staged.foreach { case (part, file) =>
-      val dst = if (part.isEmpty) root else new Path(root, part)
-      fs.mkdirs(dst)
-      val src = if (part.isEmpty) new Path(root, s"$stagingRel/$file")
-                else new Path(root, s"$stagingRel/$part/$file")
-      val target = new Path(dst, file)
-      if (fs.exists(target) || !fs.rename(src, target))
-        throw new java.io.IOException(
-          s"delta commit failed: cannot promote $src to $target")
-    }
     // consolidate the per-task delete fragments (delta-sized) into one
-    // sidecar; written root-side BEFORE the manifest so a conflicting
-    // commit leaves only an unreferenced sidecar for vacuum to reclaim
+    // sidecar, written root-side BEFORE the manifest
     val fragKeys: Seq[Array[Byte]] = msgs.toSeq.flatMap(_.deleteFragment).flatMap { frag =>
-      GraftCatalog.readEqDelSidecar(fs, new Path(root, s"$stagingRel/$frag"), keyCols)
+      GraftCatalog.readEqDelSidecar(fs, staged(frag), keyCols)
     }
     val sidecar: Option[String] =
       if (fragKeys.isEmpty) None
@@ -582,23 +579,8 @@ private[storage] final class GraftDeltaBatchWrite(
           fragKeys.iterator)
         Some(name)
       }
-    fs.delete(new Path(root, stagingRel), true)
-    val stagedRel = staged.map { case (p, f) => if (p.isEmpty) f else s"$p/$f" }
-    try GraftCatalog.writeSnapshotAt(fs, root, scanSnap + 1,
-      (prior ++ stagedRel).distinct,
-      GraftCatalog.readTxns(fs, root, scanSnap),
-      newEqDels = sidecar.toSeq,
-      kind = GraftCatalog.KindOverwrite)
-    catch { case e: Throwable =>
-      sidecar.foreach(s => fs.delete(new Path(root, s), false))
-      throw e
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(op.spark.sessionState.newHadoopConf())
-    fs.delete(new Path(root, stagingRel), true)
+    publish(fs, scanSnap, scanLines, msgs.toSeq.flatMap(_.files), prior,
+      newEqDels = sidecar.toSeq)
   }
 }
 
@@ -799,41 +781,19 @@ private[storage] final class GraftPosDeltaBatchWrite(
     dir: String,
     meta: GraftTableMeta,
     queryId: String)
-  extends org.apache.spark.sql.connector.write.DeltaBatchWrite {
-
-  private val stagingRel = s"_staging-$queryId"
+  extends RowLevelBatchWrite(op, dir, meta, queryId)
+  with org.apache.spark.sql.connector.write.DeltaBatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DeltaWriterFactory = {
     val hconf = SerializableHadoopConf.capture(op.spark)
-    val inner = GraftWriterFactory(s"$dir/$stagingRel", meta.schema,
-      meta.partitionCols,
-      GraftCatalog.parquetWriteConfs(op.spark), queryId, hconf,
-      meta.properties.get(GraftCatalog.TargetFileRowsProp)
-        .flatMap(_.toLongOption).filter(_ > 0).getOrElse(0L),
-      meta.bucket)
-    GraftPosDeltaWriterFactory(inner, s"$dir/$stagingRel", hconf)
+    GraftPosDeltaWriterFactory(dataWriters(hconf), stagingDir, hconf)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(op.spark.sessionState.newHadoopConf())
-    val scanSnap = op.scanSnapshot
-    require(scanSnap >= 0, "position-delta commit without a planned rewrite scan")
-    val prior = GraftCatalog.readManifest(fs, root, scanSnap)
-      .getOrElse(GraftCatalog.listDataFiles(fs, root))
+    val fs = this.fs
+    val (scanSnap, scanLines, prior) = scanState(fs, "position-delta commit")
     val msgs = messages.map(_.asInstanceOf[GraftPosDeltaCommitMessage])
-    val staged = msgs.flatMap(_.files)
-    staged.foreach { case (part, file) =>
-      val dst = if (part.isEmpty) root else new Path(root, part)
-      fs.mkdirs(dst)
-      val src = if (part.isEmpty) new Path(root, s"$stagingRel/$file")
-                else new Path(root, s"$stagingRel/$part/$file")
-      val target = new Path(dst, file)
-      if (fs.exists(target) || !fs.rename(src, target))
-        throw new java.io.IOException(
-          s"position-delta commit failed: cannot promote $src to $target")
-    }
     // consolidate per-task fragments (delta-sized) into one sidecar,
     // positions sorted+deduped per target; deletes against files not in
     // the scanned snapshot's manifest are a scan/commit bug — fail loudly
@@ -841,8 +801,7 @@ private[storage] final class GraftPosDeltaBatchWrite(
     val byTarget = scala.collection.mutable.HashMap
       .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
     msgs.toSeq.flatMap(_.deleteFragment).foreach { frag =>
-      GraftCatalog.readPosDelFragment(
-        fs, new Path(root, s"$stagingRel/$frag")).foreach { case (t, p) =>
+      GraftCatalog.readPosDelFragment(fs, staged(frag)).foreach { case (t, p) =>
         require(priorSet.contains(t),
           s"position delete targets '$t', which is not in snapshot $scanSnap")
         byTarget.getOrElseUpdate(t,
@@ -859,23 +818,8 @@ private[storage] final class GraftPosDeltaBatchWrite(
         GraftCatalog.writePosDelSidecar(fs, new Path(root, name), dels)
         Some((name, dels.map(_._1)))
       }
-    fs.delete(new Path(root, stagingRel), true)
-    val stagedRel = staged.map { case (p, f) => if (p.isEmpty) f else s"$p/$f" }
-    try GraftCatalog.writeSnapshotAt(fs, root, scanSnap + 1,
-      (prior ++ stagedRel).distinct,
-      GraftCatalog.readTxns(fs, root, scanSnap),
-      newPosDels = sidecar.toSeq.flatMap { case (sc, ts) => ts.map(sc -> _) },
-      kind = GraftCatalog.KindOverwrite)
-    catch { case e: Throwable =>
-      sidecar.foreach { case (sc, _) => fs.delete(new Path(root, sc), false) }
-      throw e
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(op.spark.sessionState.newHadoopConf())
-    fs.delete(new Path(root, stagingRel), true)
+    publish(fs, scanSnap, scanLines, msgs.toSeq.flatMap(_.files), prior,
+      newPosDels = sidecar.toSeq.flatMap { case (sc, ts) => ts.map(sc -> _) })
   }
 }
 

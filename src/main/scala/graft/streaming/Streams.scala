@@ -1125,12 +1125,4 @@ object Streams {
     * identical code plans incrementally under readStream. */
   def silverStream(rawJsonRecords: DataFrame): DataFrame =
     graft.layers.Silver.clean(graft.layers.Silver.extract(rawJsonRecords))
-
-  /** Streaming gold: running per-key counts in Update mode (same grouping
-    * as the batch Gold aggregate, minus the date filter which a stream
-    * expresses as a watermark + window instead). */
-  def goldStream(silver: DataFrame): DataFrame =
-    silver.groupBy(col("brewery_type"), col("country"), col("state"), col("city"))
-      .agg(count(lit(1)).alias("brewery_count"),
-        approx_count_distinct(col("id")).alias("unique_brewery_count"))
 }
