@@ -125,22 +125,20 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       .getOrElse(throw new NoSuchTableException(ident))
     // live view = the latest manifest (data files are immutable; overwrites
     // supersede logically). Pre-manifest tables fall back to dir listing.
-    val latest = GraftCatalog.latestSnapshot(fs, dir)
-    // ONE read + parse of the manifest serves every view (live set,
-    // stats, eqdels, add sequences, posdels) — loadTable runs per query
-    // and per refreshTable, and the five separate read*() calls each
-    // re-opened and re-scanned the same file (r17 commit-path latency)
-    val lines = GraftCatalog.manifestLines(fs, dir, latest)
-    val live = lines.map(_.filterNot(_.startsWith("#")))
-    val parsed = lines.getOrElse(Seq.empty)
-    new GraftTable(ident.toString, dir.toString, meta, live, writable = true,
-      fileStats = GraftCatalog.parseStats(parsed),
-      fileBlooms = GraftCatalog.readBloomIndex(fs, dir),
-      owner = Some(this),
-      eqDeletes = GraftCatalog.parseEqDels(parsed),
-      addSeq = GraftCatalog.parseAddMap(parsed),
-      posDeletes = GraftCatalog.parsePosDels(parsed))
+    liveTable(ident, dir, meta, GraftCatalog.head(fs, dir, None)._2)
   }
+
+  /** The writable table serving `snapshot`, the latest manifest its
+    * caller read (`None`: a legacy table, served by listing). */
+  private def liveTable(
+      ident: Identifier, dir: Path, meta: GraftTableMeta,
+      snapshot: Option[Manifest]): GraftTable =
+    new GraftTable(ident.toString, dir.toString, meta, snapshot, writable = true,
+      fileBlooms = GraftCatalog.readBloomIndex(fs, dir), owner = Some(this))
+
+  /** Files in the latest manifest (0 for a legacy table). */
+  private def headFileCount(dir: Path): Int =
+    GraftCatalog.head(fs, dir, None)._2.map(_.files.size).getOrElse(0)
 
   /** Time travel (`SELECT ... FROM t VERSION AS OF x`): a numeric `x`
     * serves the file set recorded by snapshot `x`'s manifest — every
@@ -159,17 +157,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     // one index serves every snapshot/branch/tag read: entries for files
     // outside the served set are simply never probed
     val blooms = GraftCatalog.readBloomIndex(fs, dir)
+    def pinned(name: String, snapshot: Manifest) =
+      new GraftTable(name, dir.toString, meta, Some(snapshot), writable = false,
+        fileBlooms = blooms)
+    def snapshotOf(snap: Long, missing: => Exception) =
+      GraftCatalog.manifest(fs, dir, snap).getOrElse(throw missing)
     version.toLongOption match {
       case Some(snap) =>
-        val lines = GraftCatalog.manifestLines(fs, dir, snap).getOrElse(
-          throw new IllegalArgumentException(
-            s"table $ident has no snapshot $snap (latest: ${GraftCatalog.latestSnapshot(fs, dir)})"))
-        val files = lines.filterNot(_.startsWith("#"))
-        new GraftTable(s"$ident@v$snap", dir.toString, meta, Some(files), writable = false,
-          fileStats = GraftCatalog.parseStats(lines), fileBlooms = blooms,
-          eqDeletes = GraftCatalog.parseEqDels(lines),
-          addSeq = GraftCatalog.parseAddMap(lines),
-          posDeletes = GraftCatalog.parsePosDels(lines))
+        pinned(s"$ident@v$snap", snapshotOf(snap, new IllegalArgumentException(
+          s"table $ident has no snapshot $snap (latest: ${GraftCatalog.latestSnapshot(fs, dir)})")))
       case None =>
         version match {
           case GraftCatalog.IncrRange(a, b) =>
@@ -177,52 +173,27 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
           case _ =>
             GraftCatalog.readTagSnap(fs, dir, version) match {
               case Some(snap) =>
-                val lines = GraftCatalog.manifestLines(fs, dir, snap).getOrElse(
-                  throw new IllegalStateException(
-                    s"tag '$version' pins snapshot $snap but its manifest is gone"))
-                val files = lines.filterNot(_.startsWith("#"))
-                new GraftTable(s"$ident@$version", dir.toString, meta, Some(files),
-                  writable = false,
-                  fileStats = GraftCatalog.parseStats(lines),
-                  fileBlooms = blooms,
-                  eqDeletes = GraftCatalog.parseEqDels(lines),
-                  addSeq = GraftCatalog.parseAddMap(lines),
-                  posDeletes = GraftCatalog.parsePosDels(lines))
+                pinned(s"$ident@$version", snapshotOf(snap, new IllegalStateException(
+                  s"tag '$version' pins snapshot $snap but its manifest is gone")))
               case None =>
                 val files = GraftCatalog.branchHeadFiles(fs, dir, version)
                   .getOrElse(throw new IllegalArgumentException(
                     s"table $ident has no ref '$version' (no such tag or branch)"))
-                // branch manifests record no stats; files inherited from
-                // the fork base keep the base manifest's (files are
-                // immutable), branch-written files simply have none —
-                // pruning's per-file forall and the metadata-aggregate
-                // all-files-covered gate both stay conservative
-                val baseStats = GraftCatalog.readBranchBase(fs, dir, version)
-                  .map(b => GraftCatalog.readStats(fs, dir, b))
-                  .getOrElse(Map.empty[String, Map[String, GraftCatalog.ColStat]])
-                // branch reads apply the FORK BASE's pending deletes: they
-                // were live state when the branch forked; branch commits
-                // themselves are appends and add no deletes
-                val branchBase = GraftCatalog.readBranchBase(fs, dir, version)
-                val baseDels = branchBase
-                  .map(b => (GraftCatalog.readEqDels(fs, dir, b),
-                    GraftCatalog.readAddMap(fs, dir, b)))
-                  .getOrElse((Seq.empty, Map.empty[String, Long]))
-                // BRANCH-written files are absent from the fork base's add
-                // map (branch manifests carry no add sequences) but
-                // post-date every fork-base delete by construction — stamp
-                // them newest-possible so the read's fail-loudly add-seq
-                // resolution (a genuine-miss guard) doesn't reject the
-                // branch's own appends
-                val branchAdd = baseDels._2 ++
-                  files.filterNot(baseDels._2.contains)
-                    .map(_ -> Long.MaxValue)
-                new GraftTable(s"$ident@$version", dir.toString, meta, Some(files),
-                  writable = false, fileStats = baseStats, fileBlooms = blooms,
-                  eqDeletes = baseDels._1, addSeq = branchAdd,
-                  posDeletes = branchBase
-                    .map(b => GraftCatalog.readPosDels(fs, dir, b))
-                    .getOrElse(Seq.empty))
+                // branch manifests record no stats and no deletes: a branch
+                // read serves the FORK BASE's stats (files are immutable;
+                // branch-written files simply have none, which pruning and
+                // metadata aggregates treat conservatively) and pending
+                // deletes (live state when the branch forked; branch
+                // commits are appends). BRANCH-written files are absent
+                // from the base's add map but post-date every fork-base
+                // delete by construction — stamp them newest-possible so
+                // the read's fail-loudly add-seq resolution (a genuine-miss
+                // guard) doesn't reject the branch's own appends
+                val base = GraftCatalog.readBranchBase(fs, dir, version)
+                  .flatMap(GraftCatalog.manifest(fs, dir, _)).getOrElse(Manifest.empty)
+                pinned(s"$ident@$version", base.copy(files = files,
+                  addSeq = base.addSeq ++
+                    files.filterNot(base.addSeq.contains).map(_ -> Long.MaxValue)))
             }
         }
     }
@@ -287,22 +258,19 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     // add sequence fall back to the snapshot that added it (one extra
     // header read per such snapshot — pruning and metadata aggregates
     // keep working across maintenance)
-    val statsB = GraftCatalog.readStats(fs, dir, to)
-    val retired = slice.adds.filterNot { case (f, _) => statsB.contains(f) }
+    def snapshot(s: Long) = GraftCatalog.manifest(fs, dir, s).getOrElse(Manifest.empty)
+    val end = snapshot(to)
+    val retired = slice.adds.filterNot { case (f, _) => end.stats.contains(f) }
     val retiredStats = retired.groupBy(_._2).flatMap { case (s, fl) =>
-      val st = GraftCatalog.readStats(fs, dir, s)
+      val st = snapshot(s).stats
       fl.flatMap { case (f, _) => st.get(f).map(f -> _) }
     }
-    val addB = GraftCatalog.readAddMap(fs, dir, to)
     val addSeqAll = slice.adds.map { case (f, s) =>
-      f -> addB.getOrElse(f, s) }.toMap
-    new GraftTable(s"$ident@incr:$from..$to", dir.toString, meta, Some(files),
-      writable = false,
-      fileStats = statsB ++ retiredStats,
-      fileBlooms = blooms,
-      eqDeletes = slice.eqDels,
-      addSeq = addSeqAll,
-      posDeletes = slice.posDels)
+      f -> end.addSeq.getOrElse(f, s) }.toMap
+    new GraftTable(s"$ident@incr:$from..$to", dir.toString, meta,
+      Some(Manifest(None, files, end.stats ++ retiredStats, addSeqAll,
+        slice.eqDels, slice.posDels, Map.empty)),
+      writable = false, fileBlooms = blooms)
   }
 
   /** The full incremental-walk result backing [[incrementalFiles]] and the
@@ -317,37 +285,32 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       : GraftCatalog.IncrementalSlice = {
     val dir = tableDir(ident)
     require(from <= to, s"incremental range must be from <= to, got $from..$to")
-    // one manifest read+parse per snapshot in the range — this is the
-    // streaming source's per-poll hot path, and files/kind/eqdels/posdels
-    // all come off the same header lines
-    val fromLines: Option[Seq[String]] =
-      if (from == 0L) Some(Seq.empty)
-      else GraftCatalog.manifestLines(fs, dir, from)
-    if (fromLines.isEmpty)
+    // one manifest read per snapshot in the range — this is the streaming
+    // source's per-poll hot path
+    val fromSnap: Option[Manifest] =
+      if (from == 0L) Some(Manifest.empty)
+      else GraftCatalog.manifest(fs, dir, from)
+    if (fromSnap.isEmpty)
       throw new IllegalArgumentException(
         s"table $ident has no snapshot $from (latest: ${GraftCatalog.latestSnapshot(fs, dir)})")
     val adds = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val eq = scala.collection.mutable.LinkedHashSet.empty[(String, Long)]
     val pos = scala.collection.mutable.LinkedHashSet.empty[(String, String, Long)]
-    var prev: Set[String] = GraftCatalog.parseFiles(fromLines.get).toSet
+    var prev: Set[String] = fromSnap.get.files.toSet
     var prevExists = true // `from` validated above; 0 = empty table
     var sawTo = false
-    for (s <- (from + 1) to to) GraftCatalog.manifestLines(fs, dir, s) match {
-      case Some(lines) =>
+    for (s <- (from + 1) to to) GraftCatalog.manifest(fs, dir, s) match {
+      case Some(m) =>
         if (s == to) sawTo = true
-        val cur = GraftCatalog.parseFiles(lines)
         // a gap right before `s` (manifests vacuumed away) means this diff
         // spans UNKNOWN commits — emit it even if `s` itself is a rewrite,
         // or rows appended inside the gap would be lost
-        val kind =
-          if (!prevExists) None
-          else GraftCatalog.parseCommitKind(lines)
-        val skip = prevExists && kind.exists(skipKinds.contains)
+        val skip = prevExists && m.kind.exists(skipKinds.contains)
         if (!skip)
-          cur.filterNot(prev).foreach(f => if (!adds.contains(f)) adds(f) = s)
-        eq ++= GraftCatalog.parseEqDels(lines)
-        pos ++= GraftCatalog.parsePosDels(lines)
-        prev = cur.toSet
+          m.files.filterNot(prev).foreach(f => if (!adds.contains(f)) adds(f) = s)
+        eq ++= m.eqDels
+        pos ++= m.posDels
+        prev = m.files.toSet
         prevExists = true
       case None =>
         prevExists = false
@@ -382,7 +345,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     val dir = tableDir(ident)
     if (GraftCatalog.readMeta(fs, dir).isEmpty) throw new NoSuchTableException(ident)
     val snap = snapshot.getOrElse(GraftCatalog.latestSnapshot(fs, dir))
-    require(GraftCatalog.readManifest(fs, dir, snap).isDefined,
+    require(GraftCatalog.manifest(fs, dir, snap).isDefined,
       s"table $ident has no snapshot $snap to tag")
     GraftCatalog.createRef(fs, dir, tag, snap, tag = true)
     snap
@@ -423,23 +386,24 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
         s"merge conflict: main is at snapshot $latest but branch '$branch' " +
           s"forked from $base — main advanced since the fork; re-branch and " +
           "replay the work")
-    val headLines = GraftCatalog.head(fs, dir, Some(branch))._2
-    val files = headLines.map(GraftCatalog.parseFiles)
-      .getOrElse(GraftCatalog.listDataFiles(fs, dir))
-    val txns = GraftCatalog.parseTxns(headLines.getOrElse(Seq.empty))
+    // a branch without commits of its own heads at the fork base itself
+    val (own, headSnap) = GraftCatalog.head(fs, dir, Some(branch))
+    val baseSnap =
+      (if (own == 0L) headSnap else GraftCatalog.manifest(fs, dir, base))
+        .getOrElse(Manifest.empty)
+    val files = GraftCatalog.liveFiles(fs, dir, headSnap)
     // the merge's kind is derived from its EFFECT on main, since branch
     // commits record no kinds: a merge that keeps every base file is a
     // pure append of the branch's work; one that drops base files carried
     // an overwrite/DML — incremental/streaming consumers must see it as
     // a row-set change, and an appends-only stream must skip it
-    val baseFiles = GraftCatalog.readManifest(fs, dir, base)
-      .getOrElse(Seq.empty).toSet
     val kind =
-      if (baseFiles.subsetOf(files.toSet)) GraftCatalog.KindAppend
+      if (baseSnap.files.toSet.subsetOf(files.toSet)) GraftCatalog.KindAppend
       else GraftCatalog.KindOverwrite
     // exclusive create at base+1: a concurrent main commit still loses
     // cleanly (same OCC as every commit)
-    GraftCatalog.writeSnapshotAt(fs, dir, base + 1, files, txns, kind = kind)
+    GraftCatalog.writeSnapshotAt(fs, dir, base + 1, baseSnap, files,
+      headSnap.map(_.txns).getOrElse(Map.empty), kind = kind)
   }
 
   /** Small-file compaction (Iceberg's `rewrite_data_files`): rewrite the
@@ -459,9 +423,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     val ident = Identifier.of(
       table.split("\\.").dropRight(1), table.split("\\.").last)
     val dir = tableDir(ident)
-    val before = GraftCatalog
-      .readManifest(fs, dir, GraftCatalog.latestSnapshot(fs, dir))
-      .map(_.size).getOrElse(0)
+    val before = headFileCount(dir)
     val qualified = s"$catalogName.$table"
     // coalesced rewrite through the same transactional write path; the
     // repartition bounds files per partition value
@@ -492,9 +454,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       .writeTo(qualified)
       .option(GraftCatalog.CommitKindOption, GraftCatalog.KindRewrite)
       .overwrite(org.apache.spark.sql.functions.lit(true))
-    val after = GraftCatalog
-      .readManifest(fs, dir, GraftCatalog.latestSnapshot(fs, dir))
-      .map(_.size).getOrElse(0)
+    val after = headFileCount(dir)
     // the rewrite replaced every file: an existing bloom index must be
     // re-pointed at the new files or point lookups lose their pruning
     if (refreshBloomIndex) refreshBloomIndexIfPresent(spark, table)
@@ -549,22 +509,19 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     val dir = tableDir(ident)
     val meta = GraftCatalog.readMeta(fs, dir)
       .getOrElse(throw new NoSuchTableException(ident))
-    val latest = GraftCatalog.latestSnapshot(fs, dir)
-    val live = GraftCatalog.readManifest(fs, dir, latest)
-      .getOrElse(GraftCatalog.listDataFiles(fs, dir))
+    val (latest, headSnap) = GraftCatalog.head(fs, dir, None)
+    val snap = headSnap.getOrElse(Manifest.empty)
+    val live = GraftCatalog.liveFiles(fs, dir, headSnap)
     val curLayout = GraftCatalog.currentLayout(meta)
     val legacy = live.filter(f => GraftCatalog.layoutOf(f) != curLayout)
       .sorted.take(maxFiles)
     if (legacy.isEmpty) return (0, live.size)
-    val eqDels = GraftCatalog.readEqDels(fs, dir, latest)
-    val addMap = GraftCatalog.readAddMap(fs, dir, latest)
     // position deletes restricted to LEGACY targets: those fold into the
     // rewrite; entries targeting conforming files carry by target
     // liveness in the commit below
-    val posDels = GraftCatalog.posDelMap(fs, dir,
-      GraftCatalog.readPosDels(fs, dir, latest), legacy.toSet)
+    val posDels = GraftCatalog.posDelMap(fs, dir, snap.posDels, legacy.toSet)
     val out0 = GraftCatalog.readFilesWithDeletes(
-      spark, dir, meta, legacy, eqDels, addMap, posDels)
+      spark, dir, meta, legacy, snap.eqDels, snap.addSeq, posDels)
     import org.apache.spark.sql.functions.{col, hash, lit, pmod}
     val withBucket = withBucketLevel(meta, out0)
     // bound files per partition VALUE the same way compact does: shuffle
@@ -593,8 +550,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       // postdates every pending delete, so none re-applies to migrated
       // rows. kind=rewrite: row-set invariant — incremental/streaming
       // consumers skip this commit instead of re-receiving the rows
-      GraftCatalog.writeSnapshotAt(fs, dir, latest + 1, kept ++ promoted,
-        GraftCatalog.readTxns(fs, dir, latest), kind = GraftCatalog.KindRewrite)
+      GraftCatalog.writeSnapshotAt(fs, dir, latest + 1, snap, kept ++ promoted,
+        snap.txns, kind = GraftCatalog.KindRewrite)
     }
     // the legacy files were replaced: re-point an existing bloom index at
     // the new files (incremental — conforming files keep their entries)
@@ -620,10 +577,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     val dir = tableDir(ident)
     val meta = GraftCatalog.readMeta(fs, dir)
       .getOrElse(throw new NoSuchTableException(ident))
-    val latest = GraftCatalog.latestSnapshot(fs, dir)
-    val live = GraftCatalog.readManifest(fs, dir, latest)
-      .getOrElse(GraftCatalog.listDataFiles(fs, dir))
-    val stats = GraftCatalog.readStats(fs, dir, latest)
+    val headSnap = GraftCatalog.head(fs, dir, None)._2
+    val live = GraftCatalog.liveFiles(fs, dir, headSnap)
+    val stats = headSnap.map(_.stats).getOrElse(Map.empty)
     val cur = GraftCatalog.currentLayout(meta)
     live.groupBy(GraftCatalog.layoutOf).toSeq
       .sortBy(_._1.mkString("/"))
@@ -655,12 +611,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
   def compactDeletes(
       spark: SparkSession, table: String,
       refreshBloomIndex: Boolean = true): (Int, Int) = {
-    val (dir, meta, latest, live, eqDels, addMap, affected, posDels) =
+    val (dir, meta, latest, snap, live, affected, posDels) =
       deleteCompactionPlan(spark, table)
-    if (eqDels.isEmpty && posDels.isEmpty) return (0, live.size)
+    if (snap.eqDels.isEmpty && posDels.isEmpty) return (0, live.size)
     val out =
-      runDeleteCompaction(spark, dir, meta, latest, live, eqDels, addMap,
-        affected, posDels)
+      runDeleteCompaction(spark, dir, meta, latest, snap, live, affected, posDels)
     // the affected files were replaced: re-index them into an existing
     // bloom index (buildBloomIndex only touches files without entries)
     if (refreshBloomIndex && out._1 > 0) refreshBloomIndexIfPresent(spark, table)
@@ -671,7 +626,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     * delete compaction WOULD rewrite — same distributed candidate test,
     * no commit. The operational "price this compaction" call. */
   def compactDeletesDryRun(spark: SparkSession, table: String): Seq[String] =
-    deleteCompactionPlan(spark, table)._7
+    deleteCompactionPlan(spark, table)._6
 
   /** The table's pending equality-delete sidecars at its latest snapshot:
     * (table-relative sidecar path, commit snapshot). The operational
@@ -681,8 +636,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
   def pendingDeletes(table: String): Seq[(String, Long)] = {
     val ident = Identifier.of(
       table.split("\\.").dropRight(1), table.split("\\.").last)
-    val dir = tableDir(ident)
-    GraftCatalog.readEqDels(fs, dir, GraftCatalog.latestSnapshot(fs, dir))
+    GraftCatalog.head(fs, tableDir(ident), None)._2.map(_.eqDels).getOrElse(Seq.empty)
   }
 
   /** The key-less counterpart of [[pendingDeletes]]: pending POSITION-
@@ -695,8 +649,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
   def pendingPositionDeletes(table: String): Seq[(String, String, Long)] = {
     val ident = Identifier.of(
       table.split("\\.").dropRight(1), table.split("\\.").last)
-    val dir = tableDir(ident)
-    GraftCatalog.readPosDels(fs, dir, GraftCatalog.latestSnapshot(fs, dir))
+    GraftCatalog.head(fs, tableDir(ident), None)._2.map(_.posDels).getOrElse(Seq.empty)
   }
 
   /** The table's latest committed snapshot id — the offset domain for
@@ -732,7 +685,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     // with commit stamp s — collecting per-snapshot keeps sidecars that a
     // LATER compaction in the range already folded away
     val dels = ((fromSnapshot + 1) to toSnapshot).flatMap { s =>
-      GraftCatalog.readEqDels(fs, dir, s).filter(_._2 == s)
+      GraftCatalog.manifest(fs, dir, s).toSeq.flatMap(_.eqDels).filter(_._2 == s)
     }.distinct
     if (dels.isEmpty) {
       val keyCols = meta.properties.getOrElse(GraftCatalog.MergeKeyProp, "")
@@ -768,7 +721,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     val meta = GraftCatalog.readMeta(fs, dir)
       .getOrElse(throw new NoSuchTableException(ident))
     val dels = ((fromSnapshot + 1) to toSnapshot).flatMap { s =>
-      GraftCatalog.readPosDels(fs, dir, s).filter(_._3 == s)
+      GraftCatalog.manifest(fs, dir, s).toSeq.flatMap(_.posDels).filter(_._3 == s)
     }.distinct
     if (dels.isEmpty)
       return spark.createDataFrame(
@@ -794,22 +747,22 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     if (cols.nonEmpty) buildBloomIndex(spark, table, cols.toSeq.sorted)
   }
 
+  /** The latest snapshot's delete compaction: (dir, meta, snapshot id,
+    * its manifest, live files, files to rewrite, pending position deletes
+    * by target). */
   private def deleteCompactionPlan(spark: SparkSession, table: String)
-      : (Path, GraftTableMeta, Long, Seq[String], Seq[(String, Long)],
-         Map[String, Long], Seq[String], Map[String, Array[Long]]) = {
+      : (Path, GraftTableMeta, Long, Manifest, Seq[String], Seq[String],
+         Map[String, Array[Long]]) = {
     val ident = Identifier.of(
       table.split("\\.").dropRight(1), table.split("\\.").last)
     val dir = tableDir(ident)
     val meta = GraftCatalog.readMeta(fs, dir)
       .getOrElse(throw new NoSuchTableException(ident))
-    val latest = GraftCatalog.latestSnapshot(fs, dir)
-    val live = GraftCatalog.readManifest(fs, dir, latest)
-      .getOrElse(GraftCatalog.listDataFiles(fs, dir))
-    val eqDels = GraftCatalog.readEqDels(fs, dir, latest)
-    val addMap = GraftCatalog.readAddMap(fs, dir, latest)
-    def seqOf(f: String) = addMap.getOrElse(f, 0L)
-    val seqCand = live.filter(f => eqDels.exists(_._2 > seqOf(f)))
-    val stats = GraftCatalog.readStats(fs, dir, latest)
+    val (latest, headSnap) = GraftCatalog.head(fs, dir, None)
+    val snap = headSnap.getOrElse(Manifest.empty)
+    val live = GraftCatalog.liveFiles(fs, dir, headSnap)
+    def seqOf(f: String) = snap.addSeq.getOrElse(f, 0L)
+    val seqCand = live.filter(f => snap.eqDels.exists(_._2 > seqOf(f)))
     val blooms = GraftCatalog.readBloomIndex(fs, dir)
     // distributed candidate test: delete keys never touch the driver, and
     // composite merge keys prune by per-column conjunction instead of
@@ -817,39 +770,35 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     val eqAffected: Seq[String] =
       if (seqCand.isEmpty) Seq.empty
       else GraftCatalog.deleteCandidateFiles(
-        spark, dir, meta, seqCand, seqOf, eqDels, stats, blooms)
+        spark, dir, meta, seqCand, seqOf, snap.eqDels, snap.stats, blooms)
     // position deletes name their targets outright — no candidate test
-    val posDels = GraftCatalog.posDelMap(fs, dir,
-      GraftCatalog.readPosDels(fs, dir, latest), live.toSet)
+    val posDels = GraftCatalog.posDelMap(fs, dir, snap.posDels, live.toSet)
     val affected = (eqAffected ++ posDels.keys.filterNot(eqAffected.toSet))
-    (dir, meta, latest, live, eqDels, addMap, affected, posDels)
+    (dir, meta, latest, snap, live, affected, posDels)
   }
 
   private def runDeleteCompaction(
       spark: SparkSession, dir: Path, meta: GraftTableMeta, latest: Long,
-      live: Seq[String], eqDels: Seq[(String, Long)],
-      addMap: Map[String, Long], affected: Seq[String],
-      posDels: Map[String, Array[Long]] = Map.empty): (Int, Int) = {
+      snap: Manifest, live: Seq[String], affected: Seq[String],
+      posDels: Map[String, Array[Long]]): (Int, Int) = {
     if (affected.isEmpty) {
       // dead deletes: no live file can hold their keys — clear with a
       // files-unchanged, metadata-only commit (position deletes always
       // have live targets, so an empty affected set means eq-only)
-      GraftCatalog.writeSnapshotAt(fs, dir, latest + 1, live,
-        GraftCatalog.readTxns(fs, dir, latest), clearEqDels = true,
-        kind = GraftCatalog.KindRewrite)
+      GraftCatalog.writeSnapshotAt(fs, dir, latest + 1, snap, live,
+        snap.txns, clearEqDels = true, kind = GraftCatalog.KindRewrite)
       return (0, live.size)
     }
     val out0 = GraftCatalog.readFilesWithDeletes(
-      spark, dir, meta, affected, eqDels, addMap, posDels)
+      spark, dir, meta, affected, snap.eqDels, snap.addSeq, posDels)
     val out = withBucketLevel(meta, out0).coalesce(math.max(1, affected.size))
     val kept = live.filterNot(affected.toSet)
     val (stageRel, moves) = stageParquet(dir, meta, out, "delc")
     // kind=rewrite: folding already-visible MoR deletes leaves the LOGICAL
     // row set unchanged, so incremental/streaming consumers skip it
     GraftCatalog.publish(fs, dir, stageRel, moves) { promoted =>
-      GraftCatalog.writeSnapshotAt(fs, dir, latest + 1, kept ++ promoted,
-        GraftCatalog.readTxns(fs, dir, latest), clearEqDels = true,
-        kind = GraftCatalog.KindRewrite)
+      GraftCatalog.writeSnapshotAt(fs, dir, latest + 1, snap, kept ++ promoted,
+        snap.txns, clearEqDels = true, kind = GraftCatalog.KindRewrite)
     }
     (affected.size, kept.size)
   }
@@ -871,9 +820,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     val ident = Identifier.of(
       table.split("\\.").dropRight(1), table.split("\\.").last)
     val dir = tableDir(ident)
-    val before = GraftCatalog
-      .readManifest(fs, dir, GraftCatalog.latestSnapshot(fs, dir))
-      .map(_.size).getOrElse(0)
+    val before = headFileCount(dir)
     val qualified = s"$catalogName.$table"
     val clustered = graft.ops.Layout.cluster(
       spark.table(qualified), cols, bits, numFiles)
@@ -881,9 +828,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       .writeTo(qualified)
       .option(GraftCatalog.CommitKindOption, GraftCatalog.KindRewrite)
       .overwrite(org.apache.spark.sql.functions.lit(true))
-    val after = GraftCatalog
-      .readManifest(fs, dir, GraftCatalog.latestSnapshot(fs, dir))
-      .map(_.size).getOrElse(0)
+    val after = headFileCount(dir)
     (before, after)
   }
 
@@ -951,8 +896,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       }
       name -> xxhash64(canon)
     }.toMap
-    val live = GraftCatalog.readManifest(fs, dir, GraftCatalog.latestSnapshot(fs, dir))
-      .getOrElse(GraftCatalog.listDataFiles(fs, dir))
+    val headSnap = GraftCatalog.head(fs, dir, None)._2
+    val live = GraftCatalog.liveFiles(fs, dir, headSnap)
     val existing = GraftCatalog.readBloomIndex(fs, dir)
     val missing = live.filterNot(f =>
       cols.forall(col => existing.get(f).exists(_.contains(col))))
@@ -966,8 +911,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     val bits =
       if (numBits > 0) numBits
       else {
-        val latest = GraftCatalog.latestSnapshot(fs, dir)
-        val recorded = GraftCatalog.readStats(fs, dir, latest).flatMap {
+        val recorded = headSnap.map(_.stats).getOrElse(Map.empty).flatMap {
           case (f, m) => m.get(GraftCatalog.RowCountKey)
             .filter(_.kind == "r").map(f -> _.nulls)
         }
@@ -1029,23 +973,19 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     val dir = tableDir(ident)
     if (GraftCatalog.readMeta(fs, dir).isEmpty) throw new NoSuchTableException(ident)
     val latest = GraftCatalog.latestSnapshot(fs, dir)
-    // one manifest read per retained snapshot: files, kind, and row-count
-    // stats all parse off the same lines ("zero data I/O" should not mean
-    // three metadata reads of each manifest either)
     val snaps = (1L to latest).flatMap(n =>
-      GraftCatalog.manifestLines(fs, dir, n).map(n -> _))
+      GraftCatalog.manifest(fs, dir, n).map(n -> _))
     snaps.foldLeft(
       (Seq.empty[(Long, Int, Long, Int, Int, String)], Set.empty[String])) {
-      case ((acc, prev), (snap, lines)) =>
-        val files = GraftCatalog.parseFiles(lines)
-        val stats = GraftCatalog.parseStats(lines)
-        val rowCounts = files.map(f => stats.get(f)
+      case ((acc, prev), (snap, m)) =>
+        val files = m.files
+        val rowCounts = files.map(f => m.stats.get(f)
           .flatMap(_.get(GraftCatalog.RowCountKey)).filter(_.kind == "r")
           .map(_.nulls))
         val totalRows =
           if (rowCounts.forall(_.isDefined)) rowCounts.flatten.sum else -1L
         val cur = files.toSet
-        val kind = GraftCatalog.parseCommitKind(lines).getOrElse("unknown")
+        val kind = m.kind.getOrElse("unknown")
         (acc :+ ((snap, files.size, totalRows,
           (cur -- prev).size, (prev -- cur).size, kind)), cur)
     }._1
@@ -1198,9 +1138,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     val dir = tableDir(ident)
     val meta = GraftCatalog.readMeta(fs, dir)
       .getOrElse(throw new NoSuchTableException(ident))
-    val latest: Long = {
-      val l = GraftCatalog.latestSnapshot(fs, dir)
-      if (l > 0L) l
+    val (latest, headSnap) = {
+      val (l, m) = GraftCatalog.head(fs, dir, None)
+      if (l > 0L) (l, m)
       else {
         // legacy (pre-manifest) table: readers resolve the live set by
         // LISTING the directory, so promoting rewritten files in place
@@ -1209,22 +1149,25 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
         // the rewrite publishes through a manifest flip like every other
         // commit; a concurrent adopter loses the exclusive create loudly.
         val listed = GraftCatalog.listDataFiles(fs, dir)
-        if (listed.isEmpty) l
-        else GraftCatalog.writeSnapshotAt(fs, dir, 1L, listed)
+        if (listed.isEmpty) (l, m)
+        else {
+          val n = GraftCatalog.writeSnapshotAt(fs, dir, 1L, Manifest.empty, listed)
+          (n, GraftCatalog.manifest(fs, dir, n))
+        }
       }
     }
-    val live = GraftCatalog.readManifest(fs, dir, latest)
-      .getOrElse(GraftCatalog.listDataFiles(fs, dir))
+    val snap = headSnap.getOrElse(Manifest.empty)
+    val live = GraftCatalog.liveFiles(fs, dir, headSnap)
     if (live.isEmpty) return (0, 0, 0L)
     // pending equality deletes (merge-on-read): candidate reads must
     // apply them (a deleted row copied back by the rewrite would be
     // resurrected), and no footer/stats count can be trusted row-exact
-    val eqDels = GraftCatalog.readEqDels(fs, dir, latest)
-    val addMap = GraftCatalog.readAddMap(fs, dir, latest)
-    val posDels = GraftCatalog.posDelMap(fs, dir,
-      GraftCatalog.readPosDels(fs, dir, latest), live.toSet)
+    val eqDels = snap.eqDels
+    val posDels = GraftCatalog.posDelMap(fs, dir, snap.posDels, live.toSet)
     val prefix = dir.toString.stripSuffix("/") + "/"
-    val filteredDf = spark.table(s"$catalogName.$table").filter(cond)
+    // candidates are planned over the snapshot this rewrite commits on
+    val filteredDf = org.apache.spark.sql.graftshim.Shims.tableDf(spark,
+      liveTable(ident, dir, meta, headSnap), this, ident).filter(cond)
     val scanCands: Set[String] = filteredDf
       .queryExecution.sparkPlan.collect { case b: BatchScanExec => b.scan }
       .flatMap {
@@ -1259,7 +1202,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       }.map(c => conjuncts(c).map(org.apache.spark.sql.graftshim.Spj.translateFilter))
         .getOrElse(Seq.empty)
     val translated = perConj.flatten
-    val stats = GraftCatalog.readStats(fs, dir, latest)
+    val stats = snap.stats
     // VIRTUAL partition-column stats from the file path: the scan's
     // introspection prunes by DATA-column stats/blooms only — partition
     // values live in dir names, so `WHERE p = 'a'` would otherwise make
@@ -1294,15 +1237,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       // that omits the proven files
       if (provenRows == 0L) return (0, live.size, 0L)
       val kept = live.filterNot(proven)
-      GraftCatalog.writeSnapshotAt(fs, dir, latest + 1,
-        kept, GraftCatalog.readTxns(fs, dir, latest),
+      GraftCatalog.writeSnapshotAt(fs, dir, latest + 1, snap, kept, snap.txns,
         kind = GraftCatalog.KindDelete)
       return (proven.size, kept.size, provenRows)
     }
     // candidates read with pending deletes applied — the same sequence
     // rule the table scan uses, as broadcast anti joins per add-seq group
     val candDf = GraftCatalog.readFilesWithDeletes(
-      spark, dir, meta, cands.toSeq, eqDels, addMap, posDels)
+      spark, dir, meta, cands.toSeq, eqDels, snap.addSeq, posDels)
     val hit = coalesce(cond, lit(false))
     val candMatched = candDf.filter(hit).count()
     val rowsAffected = candMatched + provenRows
@@ -1311,8 +1253,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       // only the proven files change: drop them, carry everything else —
       // no staging, no rewrite of the unmatched candidates
       val kept = live.filterNot(proven)
-      GraftCatalog.writeSnapshotAt(fs, dir, latest + 1,
-        kept, GraftCatalog.readTxns(fs, dir, latest),
+      GraftCatalog.writeSnapshotAt(fs, dir, latest + 1, snap, kept, snap.txns,
         kind = GraftCatalog.KindDelete)
       return (proven.size, kept.size, provenRows)
     }
@@ -1323,9 +1264,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     // kind=overwrite: CoW DML changes the row set — incremental consumers
     // get the rewritten files in full (the documented file-level limit)
     GraftCatalog.publish(fs, dir, stageRel, moves) { promoted =>
-      GraftCatalog.writeSnapshotAt(fs, dir, latest + 1,
-        kept ++ promoted, GraftCatalog.readTxns(fs, dir, latest),
-        kind = GraftCatalog.KindOverwrite)
+      GraftCatalog.writeSnapshotAt(fs, dir, latest + 1, snap,
+        kept ++ promoted, snap.txns, kind = GraftCatalog.KindOverwrite)
     }
     (allCands.size, kept.size, rowsAffected)
   }
@@ -1347,13 +1287,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     // files pinned by named refs survive any keepLast window: branch heads
     // and tagged snapshots stay readable (Nessie refs are GC roots)
     val refs = listRefs(ident)
-    val refLive: Set[String] = refs.flatMap {
-      case ("branch", name, _) =>
-        GraftCatalog.branchHeadFiles(fs, dir, name).getOrElse(Seq.empty)
-      case ("tag", _, snap) =>
-        GraftCatalog.readManifest(fs, dir, snap).getOrElse(Seq.empty)
-      case _ => Seq.empty
-    }.toSet
     // snapshots that must stay resolvable by manifest: tag pins, AND every
     // branch's fork base — a commit-less branch's head IS its fork-base
     // manifest (branchHeadFiles falls back to it, then to a directory
@@ -1361,11 +1294,20 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     // post-fork main data, breaking branch isolation
     val pinnedSnaps = refs.collect { case ("tag", _, snap) => snap }.toSet ++
       refs.collect { case ("branch", _, base) => base }
+    // every retained main snapshot, read once
+    val retained: Map[Long, Option[Manifest]] =
+      ((oldestKept to latest) ++ pinnedSnaps).distinct
+        .map(n => n -> GraftCatalog.manifest(fs, dir, n)).toMap
+    val refLive: Set[String] = refs.flatMap {
+      case ("branch", name, _) =>
+        GraftCatalog.branchHeadFiles(fs, dir, name).getOrElse(Seq.empty)
+      case ("tag", _, snap) => retained(snap).toSeq.flatMap(_.files)
+      case _ => Seq.empty
+    }.toSet
     val live: Set[String] =
       (if (latest == 0L) GraftCatalog.listDataFiles(fs, dir).toSet
        else (oldestKept to latest)
-         .flatMap(n => GraftCatalog.readManifest(fs, dir, n)
-           .getOrElse(GraftCatalog.listDataFiles(fs, dir)))
+         .flatMap(n => GraftCatalog.liveFiles(fs, dir, retained(n)))
          .toSet) ++ refLive
     val all = GraftCatalog.listDataFiles(fs, dir)
     val dead = all.filterNot(live)
@@ -1377,8 +1319,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     // garbage (their deletes were folded in by compaction, expired with
     // their snapshots, or orphaned by a failed delta commit)
     val liveDels: Set[String] =
-      ((math.max(1L, oldestKept) to latest) ++ pinnedSnaps)
-        .flatMap(n => GraftCatalog.readEqDels(fs, dir, n).map(_._1)).toSet
+      retained.values.flatten.flatMap(_.eqDels.map(_._1)).toSet
     fs.listStatus(dir).map(_.getPath.getName)
       .filter(n => n.startsWith("_eqdel-") && n.endsWith(".bin"))
       .filterNot(liveDels)
@@ -1387,8 +1328,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     // retained manifest (folded by compaction, target rewritten, expired,
     // or orphaned by a failed position-delta commit) → reclaim
     val livePosDels: Set[String] =
-      ((math.max(1L, oldestKept) to latest) ++ pinnedSnaps)
-        .flatMap(n => GraftCatalog.readPosDels(fs, dir, n).map(_._1)).toSet
+      retained.values.flatten.flatMap(_.posDels.map(_._1)).toSet
     fs.listStatus(dir).map(_.getPath.getName)
       .filter(n => n.startsWith("_posdel-") && n.endsWith(".bin"))
       .filterNot(livePosDels)
@@ -1470,6 +1410,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     var partitionCols = meta.partitionCols
     var bucketSpec = meta.bucket
     val droppedCols = mutable.Set.empty[String]
+    // the latest snapshot, read at most once for the guards below
+    lazy val headSnap = GraftCatalog.head(fs, dir, None)._2
+    lazy val liveFiles = GraftCatalog.liveFiles(fs, dir, headSnap)
     changes.foreach {
       case set: TableChange.SetProperty
           if set.property == GraftCatalog.PartitionByProp =>
@@ -1497,10 +1440,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
               // legacy (pre-manifest) tables fall back to the directory
               // listing like every other liveness consumer — a missing
               // manifest means "list", never "no live files"
-              val stale = GraftCatalog.readManifest(fs, dir,
-                  GraftCatalog.latestSnapshot(fs, dir))
-                .getOrElse(GraftCatalog.listDataFiles(fs, dir))
-                .filter(p => GraftCatalog.layoutOf(p) == Seq(s"__bucket_$c"))
+              val stale = liveFiles.filter(p => GraftCatalog.layoutOf(p) == Seq(s"__bucket_$c"))
               require(stale.isEmpty,
                 s"GraftCatalog: cannot evolve to bucket($n, $c) — " +
                   s"${stale.size} live file(s) already use a __bucket_$c " +
@@ -1561,11 +1501,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
           s"GraftCatalog: cannot drop bucket source column ${del.fieldNames()(0)}")
         // partition evolution leaves files under their ORIGINAL layout;
         // a column serving as a live file's dir level is still load-bearing
-        // for that file's reads even after it left the current spec
-        require(!GraftCatalog.readManifest(fs, dir,
-            GraftCatalog.latestSnapshot(fs, dir))
-          .getOrElse(Seq.empty)
-          .exists(f => GraftCatalog.layoutOf(f).contains(del.fieldNames()(0))),
+        // for that file's reads even after it left the current spec — on a
+        // legacy table too, whose live files are the directory listing
+        require(!liveFiles.exists(f => GraftCatalog.layoutOf(f).contains(del.fieldNames()(0))),
           s"GraftCatalog: cannot drop ${del.fieldNames()(0)} — live files " +
             "still carry it as a partition directory level (rewrite them " +
             "to the current spec first)")
@@ -1599,8 +1537,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
         val keyCols = meta.properties.getOrElse(GraftCatalog.MergeKeyProp, "")
           .split(",").map(_.trim).filter(_.nonEmpty).toSet
         if (keyCols.contains(name)) {
-          val latest = GraftCatalog.latestSnapshot(fs, dir)
-          require(GraftCatalog.readEqDels(fs, dir, latest).isEmpty,
+          require(headSnap.forall(_.eqDels.isEmpty),
             s"GraftCatalog: cannot widen merge-key column $name while " +
               "equality-delete sidecars are pending (their serialized keys " +
               "use the old type's encoding) — run rewrite_deletes first")
@@ -2004,9 +1941,9 @@ object GraftCatalog {
   }
 
   // ── file-level column statistics (manifest data-skipping) ─────────────
-  // `# stats:<file>=<col>|<kind>|<nulls>|<b64min>|<b64max>;...` header
-  // lines carry per-file min/max/null-count for top-level primitive
-  // columns — Iceberg's manifest-stats model in miniature. Data files are
+  // Each manifest carries per-file min/max/null-count for top-level
+  // primitive columns ([[Manifest]]) — Iceberg's manifest-stats model in
+  // miniature. Data files are
   // immutable, so a file's stats are computed ONCE (from its parquet
   // footer, at the commit that introduces it) and carried forward into
   // every later manifest; the scan side prunes whole files against pushed
@@ -2029,38 +1966,10 @@ object GraftCatalog {
 
   // unpadded: '=' stays free for the file/body separator; the decoder
   // accepts unpadded input
-  private def b64e(s: String): String =
+  private[storage] def b64e(s: String): String =
     java.util.Base64.getEncoder.withoutPadding.encodeToString(s.getBytes("UTF-8"))
-  private def b64d(s: String): String =
+  private[storage] def b64d(s: String): String =
     new String(java.util.Base64.getDecoder.decode(s), "UTF-8")
-
-  private[storage] def renderStats(file: String, cols: Map[String, ColStat]): String =
-    s"# stats:${b64e(file)}=" + cols.toSeq.sortBy(_._1).map { case (c, st) =>
-      s"${b64e(c)}|${st.kind}|${st.nulls}|${b64e(st.min)}|${b64e(st.max)}"
-    }.mkString(";")
-
-  private[storage] def readStats(
-      fs: FileSystem, dir: Path, snap: Long): Map[String, Map[String, ColStat]] =
-    parseStats(manifestLines(fs, dir, snap).getOrElse(Seq.empty))
-
-  private[storage] def parseStats(
-      lines: Seq[String]): Map[String, Map[String, ColStat]] =
-    lines.filter(_.startsWith("# stats:"))
-      .flatMap { l =>
-        l.stripPrefix("# stats:").split("=", 2) match {
-          case Array(f0, body) =>
-            val f = b64d(f0)
-            val cols = body.split(";").toSeq.flatMap { e =>
-              e.split("\\|", 5) match {
-                case Array(c, k, n, mn, mx) =>
-                  n.toLongOption.map(nl => b64d(c) -> ColStat(k, nl, b64d(mn), b64d(mx)))
-                case _ => None
-              }
-            }.toMap
-            if (cols.nonEmpty) Some(f -> cols) else None
-          case _ => None
-        }
-      }.toMap
 
   /** Per-file [min,max] of a SINGLE integral merge key, read off manifest
     * column stats (kind "l": byte/short/int/long/date — the same value
@@ -2081,62 +1990,6 @@ object GraftCatalog {
           yield f -> (mn, mx)
       }
     }
-
-  /** Live data-file set of the dir's latest snapshot (diagnostics /
-    * benches: lets a caller verify which files a commit left in place). */
-  def liveDataFiles(fs: FileSystem, dir: Path): Seq[String] =
-    readManifest(fs, dir, latestSnapshot(fs, dir))
-      .getOrElse(listDataFiles(fs, dir))
-
-  /** Per-file add-sequence map (`# add:` headers) of snapshot `snap`. */
-  private[storage] def readAddMap(
-      fs: FileSystem, dir: Path, snap: Long): Map[String, Long] =
-    parseAddMap(manifestLines(fs, dir, snap).getOrElse(Seq.empty))
-
-  private[storage] def parseAddMap(lines: Seq[String]): Map[String, Long] =
-    lines.filter(_.startsWith("# add:"))
-      .flatMap { l =>
-        l.stripPrefix("# add:").split("=", 2) match {
-          case Array(f, s) => s.toLongOption.map(b64d(f) -> _)
-          case _ => None
-        }
-      }.toMap
-
-  /** Equality-delete sidecars (`# eqdel:` headers) of snapshot `snap`:
-    * (table-relative sidecar path, commit snapshot). */
-  private[storage] def readEqDels(
-      fs: FileSystem, dir: Path, snap: Long): Seq[(String, Long)] =
-    parseEqDels(manifestLines(fs, dir, snap).getOrElse(Seq.empty))
-
-  private[storage] def parseEqDels(lines: Seq[String]): Seq[(String, Long)] =
-    lines.filter(_.startsWith("# eqdel:"))
-      .flatMap { l =>
-        l.stripPrefix("# eqdel:").split("=", 2) match {
-          case Array(f, s) => s.toLongOption.map(b64d(f) -> _)
-          case _ => None
-        }
-      }
-
-  /** Position-delete sidecar entries (`# posdel:` headers) of snapshot
-    * `snap`: (table-relative sidecar path, table-relative TARGET data
-    * file, commit snapshot) — one line per (sidecar, target) pair, so
-    * carry-pruning is exact without opening any sidecar: an entry lives
-    * exactly as long as its target file does. */
-  private[storage] def readPosDels(
-      fs: FileSystem, dir: Path, snap: Long): Seq[(String, String, Long)] =
-    parsePosDels(manifestLines(fs, dir, snap).getOrElse(Seq.empty))
-
-  private[storage] def parsePosDels(lines: Seq[String]): Seq[(String, String, Long)] =
-    lines.filter(_.startsWith("# posdel:"))
-      .flatMap { l =>
-        l.stripPrefix("# posdel:").split("=", 2) match {
-          case Array(st, s) => st.split(":", 2) match {
-            case Array(sc, t) => s.toLongOption.map((b64d(sc), b64d(t), _))
-            case _ => None
-          }
-          case _ => None
-        }
-      }
 
   /** Pending position deletes resolved for the read side: target file →
     * ascending distinct deleted positions. Each distinct sidecar is read
@@ -2804,8 +2657,8 @@ object GraftCatalog {
       val out = scala.collection.mutable.Map.empty[String, ColStat]
       // the file's ROW COUNT rides along under the reserved empty column
       // name (parquet forbids empty field names, so "" can never collide):
-      // kind "r", count in the nulls slot. It round-trips through
-      // renderStats/readStats/carry-forward untouched, and filter pruning
+      // kind "r", count in the nulls slot. It round-trips through the
+      // manifest and carry-forward untouched, and filter pruning
       // never sees it (lookups go by real attribute names). This is what
       // lets metadata-only aggregates answer count(*) without a footer.
       out(RowCountKey) = ColStat("r", md.map(_.getRowCount).sum, "", "")
@@ -2930,7 +2783,7 @@ object GraftCatalog {
   // it: MAIN (`_snap-<n>.manifest`) and each branch's own sequence
   // (`_bsnap-<b>-<n>.manifest`, named by `branch = Some(b)`); a manifest
   // lists the table-relative data files live as of commit n, under `# `
-  // header lines. Named refs (`_ref-<b>` holds a branch's fork base,
+  // header lines ([[Manifest]] is the format). Named refs (`_ref-<b>` holds a branch's fork base,
   // `_tag-<t>` an immutably pinned main snapshot) are Nessie's per-table
   // core, offline — the reference deploys Nessie for git-like catalog
   // versioning (its `spark-defaults.conf:15-31`).
@@ -2971,62 +2824,43 @@ object GraftCatalog {
       .foldLeft(0L)(math.max)
   }
 
-  private[storage] def manifestLines(
+  /** Snapshot `snap` of main or of `branch`'s own sequence, parsed; None
+    * when no such manifest exists. Every manifest read goes through here. */
+  private[storage] def manifest(
       fs: FileSystem, dir: Path, snap: Long,
-      branch: Option[String] = None): Option[Seq[String]] = {
+      branch: Option[String] = None): Option[Manifest] = {
     val f = manifestPath(dir, snap, branch)
     if (!fs.exists(f)) None
     else {
       val in = fs.open(f)
       try {
         val reader = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
-        Some(Iterator.continually(reader.readLine()).takeWhile(_ != null)
-          .map(_.trim).filter(_.nonEmpty).toSeq)
+        Some(Manifest.parse(Iterator.continually(reader.readLine()).takeWhile(_ != null).toList))
       } finally in.close()
     }
   }
 
-  /** A lineage's head: its latest commit id and that commit's lines. A
+  /** A lineage's head: its latest commit id and that commit's manifest. A
     * branch without commits of its own reads its fork base's main
-    * manifest (`None` lines = a legacy table: callers list the dir). */
+    * manifest (`None` = a legacy table: callers list the dir). */
   private[storage] def head(
-      fs: FileSystem, dir: Path, branch: Option[String]): (Long, Option[Seq[String]]) = {
+      fs: FileSystem, dir: Path, branch: Option[String]): (Long, Option[Manifest]) = {
     val n = latestSnapshot(fs, dir, branch)
-    val lines =
-      if (n > 0L || branch.isEmpty) manifestLines(fs, dir, n, branch)
-      else readBranchBase(fs, dir, branch.get).flatMap(manifestLines(fs, dir, _))
-    (n, lines)
+    val m =
+      if (n > 0L || branch.isEmpty) manifest(fs, dir, n, branch)
+      else readBranchBase(fs, dir, branch.get).flatMap(manifest(fs, dir, _))
+    (n, m)
   }
 
-  private[storage] def readManifest(fs: FileSystem, dir: Path, snap: Long): Option[Seq[String]] =
-    manifestLines(fs, dir, snap).map(parseFiles)
+  /** A snapshot's live data files: its manifest's, or for a legacy
+    * (pre-manifest) table the directory listing. */
+  private[storage] def liveFiles(fs: FileSystem, dir: Path, m: Option[Manifest]): Seq[String] =
+    m.map(_.files).getOrElse(listDataFiles(fs, dir))
 
-  /** The non-header (data file) lines of an already-read manifest. */
-  private[storage] def parseFiles(lines: Seq[String]): Seq[String] =
-    lines.filterNot(_.startsWith("#"))
-
-  private[storage] def parseCommitKind(lines: Seq[String]): Option[String] =
-    lines.find(_.startsWith("# kind:")).map(_.stripPrefix("# kind:").trim)
-      .filter(CommitKinds.contains)
-
-  /** Writer-transaction watermarks (`# txn:<appId>=<version>` header lines)
-    * recorded by the snapshot the data committed in — reading them from the
-    * latest manifest is what makes idempotent retries atomic with the data
-    * (same single-file commit point; Delta's txnAppId/txnVersion shape). */
-  private[storage] def readTxns(fs: FileSystem, dir: Path, snap: Long): Map[String, Long] =
-    parseTxns(manifestLines(fs, dir, snap).getOrElse(Seq.empty))
-
-  private[storage] def parseTxns(lines: Seq[String]): Map[String, Long] =
-    lines.filter(_.startsWith("# txn:"))
-      .flatMap { l =>
-        l.stripPrefix("# txn:").split("=", 2) match {
-          case Array(app, v) => v.toLongOption.map(app -> _)
-          case _ => None
-        }
-      }.toMap
-
-  private def renderTxns(txns: Map[String, Long]): Seq[String] =
-    txns.toSeq.sorted.map { case (app, v) => s"# txn:$app=$v" }
+  /** Live data-file set of the dir's latest snapshot (diagnostics /
+    * benches: lets a caller verify which files a commit left in place). */
+  def liveDataFiles(fs: FileSystem, dir: Path): Seq[String] =
+    liveFiles(fs, dir, head(fs, dir, None)._2)
 
   private def createExclusive(fs: FileSystem, f: Path, body: String, conflict: => String): Unit = {
     val out =
@@ -3035,7 +2869,7 @@ object GraftCatalog {
     try out.write(body.getBytes("UTF-8")) finally out.close()
   }
 
-  /** Commit `next` to main or `branch` with the given header + file lines.
+  /** Commit `next` to main or `branch` with the given manifest lines.
     * `next` must be derived from the SAME head read the lines were built
     * from — that is what makes the exclusive create a real conflict check
     * rather than a re-read. */
@@ -3056,37 +2890,26 @@ object GraftCatalog {
     next
   }
 
-  /** Commit a branch's next head: its writer-txn header, then the files. */
+  /** Commit a branch's next head: its writer txns and its files. */
   private[storage] def commitBranch(
       fs: FileSystem, dir: Path, branch: String, next: Long,
       files: Seq[String], txns: Map[String, Long]): Long =
-    commit(fs, dir, Some(branch), next, renderTxns(txns) ++ files.sorted)
+    commit(fs, dir, Some(branch), next, Manifest.empty.copy(files = files, txns = txns).render)
 
-  /** Write main snapshot `next` exclusively (see [[commit]]). Per-file
-    * column stats are carried forward from snapshot `next − 1` and computed
-    * from parquet footers for files new to main's lineage (one footer read
-    * per new file, once ever). */
+  /** Write main snapshot `next` exclusively (see [[commit]]) over `prev`,
+    * the manifest of `next − 1` as the caller read it (empty for a legacy
+    * or new table). Per-file column stats are carried forward from `prev`
+    * and computed from parquet footers for files new to main's lineage
+    * (one footer read per new file, once ever). */
   private[storage] def writeSnapshotAt(
-      fs: FileSystem, dir: Path, next: Long, files: Seq[String],
+      fs: FileSystem, dir: Path, next: Long, prev: Manifest, files: Seq[String],
       txns: Map[String, Long] = Map.empty,
       newEqDels: Seq[String] = Seq.empty,
       clearEqDels: Boolean = false,
       newPosDels: Seq[(String, String)] = Seq.empty,
-      kind: String = KindAppend,
-      prevLinesOpt: Option[Seq[String]] = None): Long = {
+      kind: String = KindAppend): Long = {
     require(CommitKinds.contains(kind),
       s"unknown commit kind '$kind' (expected one of ${CommitKinds.mkString(", ")})")
-    // ONE read + parse of the previous manifest: stats, add-sequences,
-    // live-file set, eqdels and posdels all come off the same line list —
-    // the five separate read*() calls this replaced each re-opened and
-    // re-scanned the manifest file, ~5× the driver-side commit latency
-    // on every snapshot write (r17; the per-view parse* helpers are
-    // unchanged and still serve the scan paths individually). A caller
-    // that already read snapshot `next-1`'s lines (GraftBatchWrite.commit)
-    // passes them through instead of re-reading.
-    val prevLines = prevLinesOpt.getOrElse(
-      manifestLines(fs, dir, next - 1).getOrElse(Seq.empty))
-    val carried = parseStats(prevLines)
     // Stats for files NEW to the lineage need one footer open each —
     // independent, IO-bound driver work that a multi-file commit (a
     // partitioned append, a MERGE rewrite, a compaction) would otherwise
@@ -3095,61 +2918,55 @@ object GraftCatalog {
     // (stage wall times accounted for under half their iteration time).
     // Per-file results are independent, so ordering cannot change the
     // rendered stats.
-    val newFiles = files.filterNot(carried.contains)
+    val newFiles = files.filterNot(prev.stats.contains)
     val computed: Map[String, Map[String, ColStat]] = parallel(newFiles) { f =>
       f -> (try footerStats(fs, dir, f)
             catch { case _: Exception => Map.empty[String, ColStat] })
     }.toMap
-    val stats = files.sorted.flatMap { f =>
-      val st = carried.getOrElse(f, computed.getOrElse(f, Map.empty))
-      if (st.nonEmpty) Some(renderStats(f, st)) else None
-    }
-    // Per-file ADD SEQUENCE (`# add:`): the snapshot a file first joined
-    // the manifest, carried forward while the file stays live. Equality
+    val stats = files.flatMap(f =>
+      prev.stats.get(f).orElse(computed.get(f)).map(f -> _)).toMap
+    // Per-file ADD SEQUENCE: the snapshot a file first joined the
+    // manifest, carried forward while the file stays live. Equality
     // deletes scope by it — an eqdel committed at snapshot N applies only
     // to rows of files with add < N, so a key re-inserted AFTER its
     // delete is never suppressed (Iceberg's sequence-number rule). A file
     // live in the previous manifest but never stamped (written before
-    // this header existed) gets 0: it provably predates every eqdel.
-    val prevAdd = parseAddMap(prevLines)
-    val prevFiles: Set[String] = parseFiles(prevLines).toSet
+    // add sequences were recorded) gets 0: it provably predates every eqdel.
+    val prevFiles: Set[String] = prev.files.toSet
     val addMap: Map[String, Long] = files.map { f =>
-      f -> prevAdd.getOrElse(f, if (prevFiles.contains(f)) 0L else next)
+      f -> prev.addSeq.getOrElse(f, if (prevFiles.contains(f)) 0L else next)
     }.toMap
-    // Equality-delete sidecars (`# eqdel:`): carried while ANY live file
-    // is old enough for them to apply (add < eqdel snap); self-cleaning
-    // once compaction/overwrites rotate every older file out.
-    // `clearEqDels` drops the carried set explicitly — for commits that
-    // PROVED the remaining old files hold none of the deleted keys
-    // (targeted delete compaction), which the age rule alone can't see.
+    // Equality-delete sidecars: carried while ANY live file is old enough
+    // for them to apply (add < eqdel snap); self-cleaning once
+    // compaction/overwrites rotate every older file out. `clearEqDels`
+    // drops the carried set explicitly — for commits that PROVED the
+    // remaining old files hold none of the deleted keys (targeted delete
+    // compaction), which the age rule alone can't see.
     val minAdd = if (addMap.isEmpty) Long.MaxValue else addMap.values.min
     val carriedDels =
       if (clearEqDels) Seq.empty
-      else parseEqDels(prevLines).filter(_._2 > minAdd)
+      else prev.eqDels.filter(_._2 > minAdd)
     val eqdels = (carriedDels ++ newEqDels.map(_ -> next)).distinct
-    // Position-delete entries (`# posdel:`) carry by TARGET LIVENESS —
-    // exact, not age-based: a position names one physical row of one
-    // specific file, so the entry is meaningful exactly while that file
-    // is live. Any rewrite (compaction, CoW DML, overwrite) that retires
-    // the target retires the entry with it, no clear flag needed.
+    // Position-delete entries carry by TARGET LIVENESS — exact, not
+    // age-based: a position names one physical row of one specific file,
+    // so the entry is meaningful exactly while that file is live. Any
+    // rewrite (compaction, CoW DML, overwrite) that retires the target
+    // retires the entry with it, no clear flag needed.
     val fileSet = files.toSet
-    val carriedPos = parsePosDels(prevLines)
+    val carriedPos = prev.posDels
       .filter { case (_, target, _) => fileSet.contains(target) }
     val posdels =
       (carriedPos ++ newPosDels.map { case (sc, t) => (sc, t, next) }).distinct
-    val header = Seq(s"# kind:$kind") ++ stats ++
-      addMap.toSeq.sorted.map { case (f, s) => s"# add:${b64e(f)}=$s" } ++
-      eqdels.sorted.map { case (f, s) => s"# eqdel:${b64e(f)}=$s" } ++
-      posdels.sorted.map { case (sc, t, s) =>
-        s"# posdel:${b64e(sc)}:${b64e(t)}=$s" } ++
-      renderTxns(txns)
-    commit(fs, dir, None, next, header ++ files.sorted)
+    commit(fs, dir, None, next,
+      Manifest(Some(kind), files, stats, addMap, eqdels, posdels, txns).render)
   }
 
   private[storage] def writeSnapshot(
       fs: FileSystem, dir: Path, files: Seq[String],
-      txns: Map[String, Long] = Map.empty): Long =
-    writeSnapshotAt(fs, dir, latestSnapshot(fs, dir) + 1, files, txns)
+      txns: Map[String, Long] = Map.empty): Long = {
+    val (latest, prev) = head(fs, dir, None)
+    writeSnapshotAt(fs, dir, latest + 1, prev.getOrElse(Manifest.empty), files, txns)
+  }
 
   /** `f` over `xs` on a bounded driver pool (serially below two items):
     * the promotion renames and new-file footer reads of a multi-file
@@ -3275,7 +3092,7 @@ object GraftCatalog {
   private[storage] def branchHeadFiles(
       fs: FileSystem, dir: Path, branch: String): Option[Seq[String]] =
     readBranchBase(fs, dir, branch).map(_ =>
-      head(fs, dir, Some(branch))._2.map(parseFiles).getOrElse(listDataFiles(fs, dir)))
+      liveFiles(fs, dir, head(fs, dir, Some(branch))._2))
   // ── end of table log ───────────────────────────────────────────────────
 
   /** SQLConf entries `ParquetWriteSupport`/the schema converter read from
@@ -3308,18 +3125,18 @@ private[storage] class GraftTable(
     tableName: String,
     dir: String,
     meta: GraftTableMeta,
-    pinnedFiles: Option[Seq[String]] = None,
+    snapshot: Option[Manifest] = None,
     writable: Boolean = true,
-    fileStats: Map[String, Map[String, GraftCatalog.ColStat]] = Map.empty,
     fileBlooms: Map[String, Map[String, GraftCatalog.FileBloom]] = Map.empty,
-    owner: Option[GraftCatalog] = None,
-    eqDeletes: Seq[(String, Long)] = Seq.empty,
-    addSeq: Map[String, Long] = Map.empty,
-    posDeletes: Seq[(String, String, Long)] = Seq.empty)
+    owner: Option[GraftCatalog] = None)
   extends Table with SupportsRead with SupportsWrite
   with org.apache.spark.sql.connector.catalog.SupportsDelete
   with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
   with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
+
+  // the served snapshot; a legacy table (no manifest) serves its listing
+  private val pinnedFiles = snapshot.map(_.files)
+  private val snap = snapshot.getOrElse(Manifest.empty)
 
   /** Iceberg-style metadata columns, synthesized by the read path: the
     * serving data file's table-relative path and the row's physical
@@ -3369,31 +3186,31 @@ private[storage] class GraftTable(
     * loaded (driver-side, delta-sized) plus the per-file add sequences
     * they scope by. None when the table has no pending deletes. */
   private def eqDeleteSpec: Option[org.apache.spark.sql.graftshim.EqDeleteSpec] =
-    if (eqDeletes.isEmpty) None
+    if (snap.eqDels.isEmpty) None
     else {
       val keyCols = mergeKeyCols
       val root = new Path(dir)
       val fs = root.getFileSystem(
         SparkSession.active.sparkContext.hadoopConfiguration)
-      val entries = eqDeletes.flatMap { case (rel, snap) =>
+      val entries = snap.eqDels.flatMap { case (rel, at) =>
         GraftCatalog.readEqDelSidecar(fs, new Path(root, rel), keyCols)
-          .map(_ -> snap)
+          .map(_ -> at)
       }
       Some(org.apache.spark.sql.graftshim.EqDeleteSpec(
-        keyCols, entries, addSeq, dir,
-        fileKeyRange = GraftCatalog.eqDelKeyRanges(fileStats, keyCols)))
+        keyCols, entries, snap.addSeq, dir,
+        fileKeyRange = GraftCatalog.eqDelKeyRanges(snap.stats, keyCols)))
     }
 
   /** Pending position deletes resolved for the read side: target file →
     * ascending deleted positions, restricted to the served file set. */
   private lazy val posDelMap: Map[String, Array[Long]] =
-    if (posDeletes.isEmpty) Map.empty
+    if (snap.posDels.isEmpty) Map.empty
     else {
       val root = new Path(dir)
       val fs = root.getFileSystem(
         SparkSession.active.sparkContext.hadoopConfiguration)
-      GraftCatalog.posDelMap(fs, root, posDeletes,
-        pinnedFiles.map(_.toSet).getOrElse(posDeletes.map(_._2).toSet))
+      GraftCatalog.posDelMap(fs, root, snap.posDels,
+        pinnedFiles.map(_.toSet).getOrElse(snap.posDels.map(_._2).toSet))
     }
 
   // SQL UPDATE / MERGE INTO: group-based copy-on-write rewrite by default
@@ -3544,7 +3361,7 @@ private[storage] class GraftTable(
               StructType(cols.map(c => meta.schema(meta.schema.fieldIndex(c)))))
         }
         return org.apache.spark.sql.graftshim.Evolved.scanBuilder(
-          groupTables, opts, meta.schema, fileStats, dir, fileBlooms,
+          groupTables, opts, meta.schema, snap.stats, dir, fileBlooms,
           eqDeleteSpec, posDelMap, mixedKeys, mixedKeySchema)
       case _ => ()
     }
@@ -3566,7 +3383,7 @@ private[storage] class GraftTable(
         case None => meta.partitionCols.map(Expressions.identity(_))
       }
     org.apache.spark.sql.graftshim.Spj.prunedScanBuilder(
-      pt, opts, keys, fileStats, dir, fileBlooms, eqDeleteSpec, posDelMap)
+      pt, opts, keys, snap.stats, dir, fileBlooms, eqDeleteSpec, posDelMap)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -3716,11 +3533,8 @@ private[storage] class GraftBatchWrite(
         throw new IllegalArgumentException(
           s"unknown branch '$b' — create it with GraftCatalog.createBranch first")
     }
-    // the head manifest is read ONCE — txns, the prior live set, and
-    // writeSnapshotAt's five header views all parse the same line list
-    // instead of re-opening the file per view (r17)
-    val (latest, latestLines) = GraftCatalog.head(fs, root, branch)
-    val priorTxns = GraftCatalog.parseTxns(latestLines.getOrElse(Seq.empty))
+    val (latest, headSnap) = GraftCatalog.head(fs, root, branch)
+    val priorTxns = headSnap.map(_.txns).getOrElse(Map.empty[String, Long])
     val alreadyCommitted = txn.exists { case (app, v) =>
       priorTxns.get(app).exists(_ >= v) }
     if (alreadyCommitted) {
@@ -3731,9 +3545,7 @@ private[storage] class GraftBatchWrite(
       return
     }
     val staged = messages.flatMap(_.asInstanceOf[GraftCommitMessage].files)
-    // prior live set: the head manifest, or a dir listing for legacy tables
-    val prior = latestLines.map(GraftCatalog.parseFiles)
-      .getOrElse(GraftCatalog.listDataFiles(fs, root))
+    val prior = GraftCatalog.liveFiles(fs, root, headSnap)
     val stagedRel = staged.map { case (p, f) => if (p.isEmpty) f else s"$p/$f" }
     val touched = staged.map(_._1).distinct.filter(_.nonEmpty)
     val live = mode match {
@@ -3772,8 +3584,8 @@ private[storage] class GraftBatchWrite(
         case Some(b) =>
           GraftCatalog.commitBranch(fs, root, b, latest + 1, live.distinct, txns)
         case None =>
-          GraftCatalog.writeSnapshotAt(fs, root, latest + 1, live.distinct, txns,
-            kind = kind, prevLinesOpt = Some(latestLines.getOrElse(Seq.empty)))
+          GraftCatalog.writeSnapshotAt(fs, root, latest + 1,
+            headSnap.getOrElse(Manifest.empty), live.distinct, txns, kind = kind)
       }
     }
   }

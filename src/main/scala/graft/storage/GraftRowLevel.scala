@@ -66,6 +66,10 @@ private[storage] class GraftRowLevelOperation(
     * concurrent DELETE removed). -1 until the scan is built. */
   @volatile private[storage] var scanSnapshot: Long = -1L
 
+  /** The manifest of [[scanSnapshot]] as the scan read it (None: a legacy
+    * table, whose live set is listed) — the commit's prior state. */
+  @volatile private[storage] var scanManifest: Option[Manifest] = None
+
   override def command(): RowLevelOperation.Command = cmd
   override def description(): String = s"GraftCowOperation($cmd, $tableName)"
 
@@ -99,10 +103,9 @@ private[storage] final class CowScanBuilder(
   private val spark = op.spark
   private val root = new Path(dir)
   private val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private val scanSnapshot: Long = GraftCatalog.latestSnapshot(fs, root)
-  private val live: Seq[String] = GraftCatalog
-    .readManifest(fs, root, scanSnapshot)
-    .getOrElse(GraftCatalog.listDataFiles(fs, root))
+  private val (scanSnapshot, scanManifest) = GraftCatalog.head(fs, root, None)
+  private val snap = scanManifest.getOrElse(Manifest.empty)
+  private val live: Seq[String] = GraftCatalog.liveFiles(fs, root, scanManifest)
   // The pending-delete spec is RE-DERIVED at scanSnapshot rather than
   // taken from table-load time (`eqDel`): a delta commit landing between
   // table resolution and scan planning would otherwise give a
@@ -113,7 +116,7 @@ private[storage] final class CowScanBuilder(
   // table whose merge.key property was since dropped (sidecar headers
   // self-validate the columns either way).
   private val eqDelAtScan: Option[org.apache.spark.sql.graftshim.EqDeleteSpec] = {
-    val dels = GraftCatalog.readEqDels(fs, root, scanSnapshot)
+    val dels = snap.eqDels
     if (dels.isEmpty) None
     else {
       val keyCols = meta.properties.get(GraftCatalog.MergeKeyProp)
@@ -122,14 +125,13 @@ private[storage] final class CowScanBuilder(
         .orElse(eqDel.map(_.keyCols))
         .getOrElse(throw new IllegalStateException(
           s"$dir has pending equality deletes but no ${GraftCatalog.MergeKeyProp}"))
-      val entries = dels.flatMap { case (rel, snap) =>
+      val entries = dels.flatMap { case (rel, at) =>
         GraftCatalog.readEqDelSidecar(fs, new Path(root, rel), keyCols)
-          .map(_ -> snap)
+          .map(_ -> at)
       }
       Some(org.apache.spark.sql.graftshim.EqDeleteSpec(
-        keyCols, entries, GraftCatalog.readAddMap(fs, root, scanSnapshot), dir,
-        fileKeyRange = GraftCatalog.eqDelKeyRanges(
-          GraftCatalog.readStats(fs, root, scanSnapshot), keyCols)))
+        keyCols, entries, snap.addSeq, dir,
+        fileKeyRange = GraftCatalog.eqDelKeyRanges(snap.stats, keyCols)))
     }
   }
   // Pending POSITION deletes at the scan snapshot (key-less merge-on-read
@@ -137,8 +139,7 @@ private[storage] final class CowScanBuilder(
   // stale row would re-match the MERGE source, and a position-delta
   // commit would then stamp the wrong surviving positions.
   private val posAtScan: Map[String, Array[Long]] =
-    GraftCatalog.posDelMap(fs, root,
-      GraftCatalog.readPosDels(fs, root, scanSnapshot), live.toSet)
+    GraftCatalog.posDelMap(fs, root, snap.posDels, live.toSet)
   private var kept: Seq[String] = live
   private var requiredSchema: Option[StructType] = None
 
@@ -159,13 +160,12 @@ private[storage] final class CowScanBuilder(
     val translated = filters.flatMap(
       org.apache.spark.sql.graftshim.Spj.translateFilter)
     if (translated.nonEmpty) {
-      val latest = GraftCatalog.latestSnapshot(fs, root)
-      val stats = GraftCatalog.readStats(fs, root, latest)
       val blooms = GraftCatalog.readBloomIndex(fs, root)
-      // virtual partition-column stats from each file's dir path: an
-      // UPDATE scoped to a partition rewrites that partition's files only
+      // prune by the scanned snapshot's stats, the state the commit
+      // replaces; virtual partition-column stats from each file's dir
+      // path scope an UPDATE on a partition to that partition's files
       kept = live.filter(f => FileStatsPruning.mayMatchAll(
-        GraftCatalog.partitionPathStats(f, meta) ++ stats.getOrElse(f, Map.empty),
+        GraftCatalog.partitionPathStats(f, meta) ++ snap.stats.getOrElse(f, Map.empty),
         blooms.getOrElse(f, Map.empty), translated))
     }
     filters // nothing claimed: the condition must run row-side, post-scan
@@ -178,6 +178,7 @@ private[storage] final class CowScanBuilder(
   override def build(): Scan = {
     op.scannedFiles = kept
     op.scanSnapshot = scanSnapshot
+    op.scanManifest = scanManifest
     val prefix = dir.stripSuffix("/") + "/"
     val paths =
       if (kept.nonEmpty) kept.map(f => s"$prefix$f")
@@ -402,15 +403,14 @@ private[storage] abstract class RowLevelBatchWrite(
 
   protected def staged(frag: String): Path = new Path(root, s"$stagingRel/$frag")
 
-  /** The scanned snapshot, read once: its id, manifest lines (empty for
-    * a legacy table) and live files (a dir listing for legacy tables). */
+  /** The scanned snapshot as the scan read it: its id, manifest (empty
+    * for a legacy table) and live files (a dir listing for legacy tables). */
   protected def scanState(fs: org.apache.hadoop.fs.FileSystem, what: String)
-      : (Long, Seq[String], Seq[String]) = {
+      : (Long, Manifest, Seq[String]) = {
     val scanSnap = op.scanSnapshot
     require(scanSnap >= 0, s"$what without a planned rewrite scan")
-    val lines = GraftCatalog.manifestLines(fs, root, scanSnap)
-    (scanSnap, lines.getOrElse(Seq.empty),
-      lines.map(GraftCatalog.parseFiles).getOrElse(GraftCatalog.listDataFiles(fs, root)))
+    (scanSnap, op.scanManifest.getOrElse(Manifest.empty),
+      GraftCatalog.liveFiles(fs, root, op.scanManifest))
   }
 
   /** Promote `files` and commit `kept + promoted` at scan snapshot + 1
@@ -418,17 +418,17 @@ private[storage] abstract class RowLevelBatchWrite(
     * snapshot's writer txns; a lost race also removes the new delete
     * sidecars, which are written before the commit. */
   protected def publish(
-      fs: org.apache.hadoop.fs.FileSystem, scanSnap: Long, scanLines: Seq[String],
+      fs: org.apache.hadoop.fs.FileSystem, scanSnap: Long, scanned: Manifest,
       files: Seq[(String, String)], kept: Seq[String],
       newEqDels: Seq[String] = Seq.empty,
       newPosDels: Seq[(String, String)] = Seq.empty): Unit = {
     val rel = files.map { case (p, f) => if (p.isEmpty) f else s"$p/$f" }
     val sidecars = (newEqDels ++ newPosDels.map(_._1)).distinct
     GraftCatalog.publish(fs, root, stagingRel, rel.map(f => f -> f), sidecars) { promoted =>
-      GraftCatalog.writeSnapshotAt(fs, root, scanSnap + 1, (kept ++ promoted).distinct,
-        GraftCatalog.parseTxns(scanLines),
+      GraftCatalog.writeSnapshotAt(fs, root, scanSnap + 1, scanned,
+        (kept ++ promoted).distinct, scanned.txns,
         newEqDels = newEqDels, newPosDels = newPosDels,
-        kind = GraftCatalog.KindOverwrite, prevLinesOpt = Some(scanLines))
+        kind = GraftCatalog.KindOverwrite)
     }
   }
 
@@ -448,11 +448,11 @@ private[storage] final class CowBatchWrite(
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val fs = this.fs
-    val (scanSnap, scanLines, prior) = scanState(fs, "row-level commit")
-    val scanned = op.scannedFiles.toSet
-    publish(fs, scanSnap, scanLines,
+    val (scanSnap, scanned, prior) = scanState(fs, "row-level commit")
+    val replaced = op.scannedFiles.toSet
+    publish(fs, scanSnap, scanned,
       messages.flatMap(_.asInstanceOf[GraftCommitMessage].files).toSeq,
-      prior.filterNot(scanned))
+      prior.filterNot(replaced))
   }
 }
 
@@ -564,7 +564,7 @@ private[storage] final class GraftDeltaBatchWrite(
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val fs = this.fs
-    val (scanSnap, scanLines, prior) = scanState(fs, "delta commit")
+    val (scanSnap, scanned, prior) = scanState(fs, "delta commit")
     val msgs = messages.map(_.asInstanceOf[GraftDeltaCommitMessage])
     // consolidate the per-task delete fragments (delta-sized) into one
     // sidecar, written root-side BEFORE the manifest
@@ -579,7 +579,7 @@ private[storage] final class GraftDeltaBatchWrite(
           fragKeys.iterator)
         Some(name)
       }
-    publish(fs, scanSnap, scanLines, msgs.toSeq.flatMap(_.files), prior,
+    publish(fs, scanSnap, scanned, msgs.toSeq.flatMap(_.files), prior,
       newEqDels = sidecar.toSeq)
   }
 }
@@ -792,7 +792,7 @@ private[storage] final class GraftPosDeltaBatchWrite(
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val fs = this.fs
-    val (scanSnap, scanLines, prior) = scanState(fs, "position-delta commit")
+    val (scanSnap, scanned, prior) = scanState(fs, "position-delta commit")
     val msgs = messages.map(_.asInstanceOf[GraftPosDeltaCommitMessage])
     // consolidate per-task fragments (delta-sized) into one sidecar,
     // positions sorted+deduped per target; deletes against files not in
@@ -818,7 +818,7 @@ private[storage] final class GraftPosDeltaBatchWrite(
         GraftCatalog.writePosDelSidecar(fs, new Path(root, name), dels)
         Some((name, dels.map(_._1)))
       }
-    publish(fs, scanSnap, scanLines, msgs.toSeq.flatMap(_.files), prior,
+    publish(fs, scanSnap, scanned, msgs.toSeq.flatMap(_.files), prior,
       newPosDels = sidecar.toSeq.flatMap { case (sc, ts) => ts.map(sc -> _) })
   }
 }

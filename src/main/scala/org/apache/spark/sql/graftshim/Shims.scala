@@ -69,6 +69,17 @@ object Shims {
     classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession],
       df.asInstanceOf[classic.Dataset[_]].logicalPlan)
 
+  /** `table` as a DataFrame of `spark` (`Dataset.ofRows` is
+    * `private[sql]`): a catalog operation that already read the table's
+    * snapshot plans over that snapshot instead of loading the table again. */
+  def tableDf(
+      spark: SparkSession, table: org.apache.spark.sql.connector.catalog.Table,
+      catalog: org.apache.spark.sql.connector.catalog.CatalogPlugin,
+      ident: org.apache.spark.sql.connector.catalog.Identifier): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+        .create(table, Some(catalog), Some(ident)))
+
   /** Block until every queued listener event has been delivered
     * (`SparkContext.listenerBus` is `private[spark]`): a profiler reading
     * its own SparkListener state right after an action must drain the

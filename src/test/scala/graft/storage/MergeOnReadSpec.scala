@@ -39,14 +39,14 @@ class MergeOnReadSpec extends SparkSpec {
   private def manifestFiles(name: String): Seq[String] = {
     val dir = new Path(s"$wh/s/$name")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    GraftCatalog.readManifest(fs, dir,
-      GraftCatalog.latestSnapshot(fs, dir)).get
+    GraftCatalog.manifest(fs, dir,
+      GraftCatalog.latestSnapshot(fs, dir)).map(_.files).get
   }
 
   private def eqDels(name: String): Seq[(String, Long)] = {
     val dir = new Path(s"$wh/s/$name")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    GraftCatalog.readEqDels(fs, dir, GraftCatalog.latestSnapshot(fs, dir))
+    GraftCatalog.manifest(fs, dir, GraftCatalog.latestSnapshot(fs, dir)).toSeq.flatMap(_.eqDels)
   }
 
   test("MERGE INTO commits a delta: no data file rewritten, results and " +
@@ -807,7 +807,7 @@ class MergeOnReadSpec extends SparkSpec {
     assert(before.subsetOf(manifestFiles("m7").toSet))
     val dir = new Path(s"$wh/s/m7")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(GraftCatalog.readPosDels(fs, dir,
-      GraftCatalog.latestSnapshot(fs, dir)).nonEmpty)
+    assert(GraftCatalog.manifest(fs, dir,
+      GraftCatalog.latestSnapshot(fs, dir)).toSeq.flatMap(_.posDels).nonEmpty)
   }
 }

@@ -32,8 +32,8 @@ class PartitionEvolutionSpec extends SparkSpec {
   private def manifestFiles(name: String): Seq[String] = {
     val dir = new Path(s"$wh/s/$name")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    GraftCatalog.readManifest(fs, dir,
-      GraftCatalog.latestSnapshot(fs, dir)).get
+    GraftCatalog.manifest(fs, dir,
+      GraftCatalog.latestSnapshot(fs, dir)).map(_.files).get
   }
 
   private def evolve(name: String, spec: String): Unit =
@@ -112,6 +112,15 @@ class PartitionEvolutionSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("partition directory level"),
       s"expected the legacy-layout drop guard, got: ${e.getMessage}")
+    // a pre-manifest table's live files are its listing: the same guard
+    new java.io.File(s"$wh/s/e3").listFiles()
+      .filter(_.getName.startsWith("_snap-")).foreach(_.delete())
+    spark.catalog.refreshTable("evocat.s.e3")
+    val legacy = intercept[Exception] {
+      spark.sql("ALTER TABLE evocat.s.e3 DROP COLUMN k")
+    }
+    assert(legacy.getMessage.contains("partition directory level"),
+      s"expected the legacy-layout drop guard, got: ${legacy.getMessage}")
   }
 
   test("row-level DML and targeted compaction on an evolved table " +
@@ -535,9 +544,10 @@ class PartitionEvolutionSpec extends SparkSpec {
     // a conflicting writer lands INSIDE the OCC window — after migrate
     // promoted its files, before its snapshot commit (files unchanged:
     // a metadata-only commit is the cheapest conflicting writer)
-    GraftCatalog.migratePreCommitHook = () =>
-      GraftCatalog.writeSnapshotAt(fsys, dir, latest + 1, liveBefore,
-        GraftCatalog.readTxns(fsys, dir, latest))
+    GraftCatalog.migratePreCommitHook = () => {
+      val prev = GraftCatalog.manifest(fsys, dir, latest).get
+      GraftCatalog.writeSnapshotAt(fsys, dir, latest + 1, prev, liveBefore, prev.txns)
+    }
     val e =
       try intercept[java.io.IOException] { cat.migrateLayout(spark, "s.m4") }
       finally GraftCatalog.migratePreCommitHook = () => ()
@@ -604,8 +614,8 @@ class PartitionEvolutionSpec extends SparkSpec {
     spark.catalog.refreshTable("evocat.s.m2")
     val dir = new Path(s"$wh/s/m2")
     val fsys = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(GraftCatalog.readEqDels(fsys, dir,
-      GraftCatalog.latestSnapshot(fsys, dir)).nonEmpty, "setup: eqdel pending")
+    assert(GraftCatalog.manifest(fsys, dir,
+      GraftCatalog.latestSnapshot(fsys, dir)).toSeq.flatMap(_.eqDels).nonEmpty, "setup: eqdel pending")
     val rep = spark.sql("CALL evocat.system.migrate_layout('s.m2', 1)").head
     assert(rep.getInt(0) >= 1)
     spark.catalog.refreshTable("evocat.s.m2")
@@ -616,8 +626,8 @@ class PartitionEvolutionSpec extends SparkSpec {
       .collect().sorted.toSeq == Seq(2L, 4L))
     assert(manifestFiles("m2").forall(f =>
       GraftCatalog.layoutOf(f) == Seq("region")))
-    assert(GraftCatalog.readEqDels(fsys, dir,
-      GraftCatalog.latestSnapshot(fsys, dir)).nonEmpty,
+    assert(GraftCatalog.manifest(fsys, dir,
+      GraftCatalog.latestSnapshot(fsys, dir)).toSeq.flatMap(_.eqDels).nonEmpty,
       "the delete pending against the untouched conforming file must carry")
     // later targeted compaction still folds the carried delete cleanly
     val (rew, _) = cat.compactDeletes(spark, "s.m2")

@@ -46,13 +46,13 @@ class PositionDeleteSpec extends SparkSpec {
 
   private def manifestFiles(name: String): Seq[String] = {
     val (fs, dir) = fsDir(name)
-    GraftCatalog.readManifest(fs, dir,
-      GraftCatalog.latestSnapshot(fs, dir)).get
+    GraftCatalog.manifest(fs, dir,
+      GraftCatalog.latestSnapshot(fs, dir)).map(_.files).get
   }
 
   private def posDels(name: String): Seq[(String, String, Long)] = {
     val (fs, dir) = fsDir(name)
-    GraftCatalog.readPosDels(fs, dir, GraftCatalog.latestSnapshot(fs, dir))
+    GraftCatalog.manifest(fs, dir, GraftCatalog.latestSnapshot(fs, dir)).toSeq.flatMap(_.posDels)
   }
 
   private def collectIdW(name: String): Seq[(Long, String)] =
@@ -393,9 +393,9 @@ class PositionDeleteSpec extends SparkSpec {
     spark.catalog.refreshTable("poscat.s.p11")
     val (fs, dir) = fsDir("p11")
     val latest = GraftCatalog.latestSnapshot(fs, dir)
-    assert(GraftCatalog.readEqDels(fs, dir, latest).nonEmpty,
+    assert(GraftCatalog.manifest(fs, dir, latest).toSeq.flatMap(_.eqDels).nonEmpty,
       "the keyed merge must land an equality-delete sidecar")
-    assert(GraftCatalog.readPosDels(fs, dir, latest).nonEmpty,
+    assert(GraftCatalog.manifest(fs, dir, latest).toSeq.flatMap(_.posDels).nonEmpty,
       "the older position sidecar must still be pending")
     // one read applies BOTH families
     assert(collectIdW("p11") == Seq((1L, "a"), (3L, "C3"), (4L, "d"),
@@ -412,8 +412,8 @@ class PositionDeleteSpec extends SparkSpec {
     assert(rew > 0)
     spark.catalog.refreshTable("poscat.s.p11")
     assert(posDels("p11").isEmpty &&
-      GraftCatalog.readEqDels(fs, dir,
-        GraftCatalog.latestSnapshot(fs, dir)).isEmpty)
+      GraftCatalog.manifest(fs, dir,
+        GraftCatalog.latestSnapshot(fs, dir)).toSeq.flatMap(_.eqDels).isEmpty)
     assert(collectIdW("p11") == Seq((1L, "a"), (3L, "C3"), (4L, "d"),
       (5L, "E5")))
   }

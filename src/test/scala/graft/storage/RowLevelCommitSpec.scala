@@ -42,7 +42,8 @@ class RowLevelCommitSpec extends SparkSpec {
     val scanned = GraftCatalog.latestSnapshot(fs, dir)
     assert(op.scanSnapshot == scanned && op.scannedFiles.nonEmpty)
     // an interloper commits (e.g. a concurrent DELETE) after the scan
-    GraftCatalog.writeSnapshotAt(fs, dir, scanned + 1, Seq.empty)
+    GraftCatalog.writeSnapshotAt(fs, dir, scanned + 1,
+      GraftCatalog.manifest(fs, dir, scanned).get, Seq.empty)
     // the row-level commit must LOSE the race loudly, not publish a
     // manifest computed from the pre-delete rows
     val e = intercept[java.io.IOException] {
@@ -51,7 +52,7 @@ class RowLevelCommitSpec extends SparkSpec {
     assert(e.getMessage.contains("concurrent commit"))
     // the interloper's state stands
     assert(GraftCatalog.latestSnapshot(fs, dir) == scanned + 1)
-    assert(GraftCatalog.readManifest(fs, dir, scanned + 1).get.isEmpty)
+    assert(GraftCatalog.manifest(fs, dir, scanned + 1).map(_.files).get.isEmpty)
   }
 
   test("row-level commit without an interloper publishes at scan + 1") {
@@ -68,7 +69,7 @@ class RowLevelCommitSpec extends SparkSpec {
     // the shape is what matters (publishes at exactly scanned + 1)
     new CowBatchWrite(op, dir.toString, meta, "clean-q").commit(Array.empty)
     assert(GraftCatalog.latestSnapshot(fs, dir) == scanned + 1)
-    assert(GraftCatalog.readManifest(fs, dir, scanned + 1).get.isEmpty)
+    assert(GraftCatalog.manifest(fs, dir, scanned + 1).map(_.files).get.isEmpty)
   }
 
   /** Write a per-task position-delete fragment the way a
@@ -93,8 +94,8 @@ class RowLevelCommitSpec extends SparkSpec {
       .createOrReplace()
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val meta = GraftCatalog.readMeta(fs, dir).get
-    val target = GraftCatalog.readManifest(fs, dir,
-      GraftCatalog.latestSnapshot(fs, dir)).get.head
+    val target = GraftCatalog.manifest(fs, dir,
+      GraftCatalog.latestSnapshot(fs, dir)).map(_.files).get.head
     val op = new GraftPosDeltaOperation(dir.toString, meta, "s.prace",
       RowLevelOperation.Command.MERGE)
     op.newScanBuilder(CaseInsensitiveStringMap.empty()).build()
@@ -105,8 +106,8 @@ class RowLevelCommitSpec extends SparkSpec {
     writeFragment(fs, new Path(dir, "_staging-pq/_posdel-frag-0-0.bin"),
       Seq((target, 0L)))
     // interloper lands between scan and publish
-    GraftCatalog.writeSnapshotAt(fs, dir, scanned + 1,
-      GraftCatalog.readManifest(fs, dir, scanned).get)
+    val prev = GraftCatalog.manifest(fs, dir, scanned).get
+    GraftCatalog.writeSnapshotAt(fs, dir, scanned + 1, prev, prev.files)
     val e = intercept[java.io.IOException] {
       new GraftPosDeltaBatchWrite(op, dir.toString, meta, "pq").commit(
         Array(GraftPosDeltaCommitMessage(Seq.empty,

@@ -4,11 +4,15 @@ import java.net.URI
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileSystem, FilterFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.connector.write.RowLevelOperation
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.SparkSpec
@@ -18,7 +22,7 @@ import graft.SparkSpec
   * its bytes landed (a failure AFTER the exclusive create succeeded), and
   * a callback run once before the first promotion rename out of a
   * staging dir (a concurrent commit landing inside the promote → commit
-  * window). */
+  * window). It also counts the opens of each main-lineage manifest. */
 class FaultInjectingFs extends FilterFileSystem(new RawLocalFileSystem {
   override def getUri: URI = URI.create("graftfault:///")
 }) {
@@ -38,6 +42,13 @@ class FaultInjectingFs extends FilterFileSystem(new RawLocalFileSystem {
     }, null)
   }
 
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    if (f.getName.startsWith("_snap-"))
+      FaultInjectingFs.manifestOpens.computeIfAbsent(f.toUri.getPath,
+        _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
+    super.open(f, bufferSize)
+  }
+
   override def rename(src: Path, dst: Path): Boolean = {
     if (src.toString.contains("/_stag"))
       Option(FaultInjectingFs.beforePromote.getAndSet(null)).foreach(_.apply())
@@ -48,6 +59,9 @@ class FaultInjectingFs extends FilterFileSystem(new RawLocalFileSystem {
 object FaultInjectingFs {
   @volatile var failManifestClose = false
   val beforePromote = new java.util.concurrent.atomic.AtomicReference[() => Unit]()
+  /** Opens per main manifest, keyed by path. */
+  val manifestOpens =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]()
 }
 
 /** The table log is the one place a table changes: every manifest, ref
@@ -85,8 +99,30 @@ class TableLogSpec extends SparkSpec {
   /** Data files on disk that no retained manifest lists. */
   private def orphans(fs: FileSystem, dir: Path): Seq[String] = {
     val listed = (1L to GraftCatalog.latestSnapshot(fs, dir))
-      .flatMap(GraftCatalog.readManifest(fs, dir, _).getOrElse(Seq.empty)).toSet
+      .flatMap(GraftCatalog.manifest(fs, dir, _).map(_.files).getOrElse(Seq.empty)).toSet
     GraftCatalog.listDataFiles(fs, dir).filterNot(listed)
+  }
+
+  /** `body`'s result, and how often it opened the latest main manifest
+    * of `dir` as it stood before `body` ran. */
+  private def latestOpens[T](dir: Path)(body: => T): (T, Int) = {
+    val latest = new Path(dir,
+      s"_snap-${GraftCatalog.latestSnapshot(fsOf(dir), dir)}.manifest").toUri.getPath
+    FaultInjectingFs.manifestOpens.clear()
+    val out = body
+    (out, Option(FaultInjectingFs.manifestOpens.get(latest)).fold(0)(_.get))
+  }
+
+  /** Writes `rows` as one parquet file under `dir/rel`, where the
+    * catalog's writers stage a file for promotion; returns its name. */
+  private def stage(dir: Path, rel: String, rows: Seq[(Long, String)]): String = {
+    val src = java.nio.file.Files.createTempDirectory("graft-tl-staged").toString
+    rows.toDF("id", "w").repartition(1).write.mode("overwrite").parquet(src)
+    val part = new java.io.File(src).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    fsOf(dir).copyFromLocalFile(new Path(part.getAbsolutePath),
+      new Path(dir, s"$rel/${part.getName}"))
+    part.getName
   }
 
   private def causes(t: Throwable): Seq[Throwable] =
@@ -96,9 +132,9 @@ class TableLogSpec extends SparkSpec {
     "and for refs and tags") {
     val dir = new Path(java.nio.file.Files.createTempDirectory("graft-tl").toString)
     val fs = fsOf(dir)
-    GraftCatalog.writeSnapshotAt(fs, dir, 1L, Seq("a.parquet"))
+    GraftCatalog.writeSnapshotAt(fs, dir, 1L, Manifest.empty, Seq("a.parquet"))
     val main = intercept[GraftCatalog.CommitConflict] {
-      GraftCatalog.writeSnapshotAt(fs, dir, 1L, Seq("b.parquet"))
+      GraftCatalog.writeSnapshotAt(fs, dir, 1L, Manifest.empty, Seq("b.parquet"))
     }
     assert(main.getMessage.contains("concurrent commit"))
     GraftCatalog.createRef(fs, dir, "dev", 1L, tag = false)
@@ -113,7 +149,7 @@ class TableLogSpec extends SparkSpec {
     }
     assert(tag.getMessage.contains("tag 'v1' already exists"))
     // the winners stand
-    assert(GraftCatalog.readManifest(fs, dir, 1L).get == Seq("a.parquet"))
+    assert(GraftCatalog.manifest(fs, dir, 1L).map(_.files).get == Seq("a.parquet"))
     assert(GraftCatalog.branchHeadFiles(fs, dir, "dev").get == Seq("c.parquet"))
     assert(GraftCatalog.listRefs(fs, dir) ==
       Seq(("branch", "dev", 1L), ("tag", "v1", 1L)))
@@ -136,7 +172,7 @@ class TableLogSpec extends SparkSpec {
     assert(e.getMessage.contains("injected close failure"), e.getMessage)
     // the create succeeded: the manifest exists and names the promoted file
     assert(GraftCatalog.latestSnapshot(fs, dir) == before + 1)
-    val live = GraftCatalog.readManifest(fs, dir, before + 1).get
+    val live = GraftCatalog.manifest(fs, dir, before + 1).map(_.files).get
     assert(live.exists(_.startsWith("del-")), live)
     live.foreach(f => assert(fs.exists(new Path(dir, f)), s"$f is listed but gone"))
     spark.catalog.refreshTable("tlcat.s.closecow")
@@ -168,11 +204,11 @@ class TableLogSpec extends SparkSpec {
     assert(!causes(e).exists(_.isInstanceOf[GraftCatalog.CommitConflict]), e)
     val after = GraftCatalog.latestSnapshot(fs, dir)
     assert(after == before + 1)
-    val sidecars = GraftCatalog.readEqDels(fs, dir, after).filter(_._2 == after)
+    val sidecars = GraftCatalog.manifest(fs, dir, after).toSeq.flatMap(_.eqDels).filter(_._2 == after)
     assert(sidecars.size == 1, sidecars)
     sidecars.foreach { case (sc, _) =>
       assert(fs.exists(new Path(dir, sc)), s"sidecar $sc is listed but gone") }
-    GraftCatalog.readManifest(fs, dir, after).get.foreach(f =>
+    GraftCatalog.manifest(fs, dir, after).map(_.files).get.foreach(f =>
       assert(fs.exists(new Path(dir, f)), s"$f is listed but gone"))
     spark.catalog.refreshTable("tlcat.s.closemor")
     assert(spark.table("tlcat.s.closemor").orderBy("id").as[(Long, String)]
@@ -187,9 +223,10 @@ class TableLogSpec extends SparkSpec {
     val fs = fsOf(dir)
     val read = GraftCatalog.latestSnapshot(fs, dir)
     // another writer commits read + 1 after the append read the head
-    FaultInjectingFs.beforePromote.set(() =>
-      GraftCatalog.writeSnapshotAt(fs, dir, read + 1,
-        GraftCatalog.readManifest(fs, dir, read).get))
+    FaultInjectingFs.beforePromote.set { () =>
+      val prev = GraftCatalog.manifest(fs, dir, read).get
+      GraftCatalog.writeSnapshotAt(fs, dir, read + 1, prev, prev.files)
+    }
     val e =
       try intercept[Exception] {
         Seq((2L, "b"), (3L, "c")).toDF("id", "w").repartition(2)
@@ -222,13 +259,14 @@ class TableLogSpec extends SparkSpec {
     fs.copyFromLocalFile(new Path(part.getAbsolutePath),
       new Path(dir, s"_staging-cq/${part.getName}"))
     // the interloper commits scan + 1 first
-    GraftCatalog.writeSnapshotAt(fs, dir, scanned + 1, Seq.empty)
+    GraftCatalog.writeSnapshotAt(fs, dir, scanned + 1,
+      GraftCatalog.manifest(fs, dir, scanned).get, Seq.empty)
     val e = intercept[GraftCatalog.CommitConflict] {
       new CowBatchWrite(op, dir.toString, meta, "cq")
         .commit(Array(GraftCommitMessage(Seq(("", part.getName)))))
     }
     assert(e.getMessage.contains("concurrent commit"))
-    assert(GraftCatalog.readManifest(fs, dir, scanned + 1).get.isEmpty)
+    assert(GraftCatalog.manifest(fs, dir, scanned + 1).map(_.files).get.isEmpty)
     assert(orphans(fs, dir).isEmpty, s"orphans: ${orphans(fs, dir)}")
     assert(!fs.exists(new Path(dir, part.getName)))
     assert(!fs.exists(new Path(dir, "_staging-cq")))
@@ -272,5 +310,72 @@ class TableLogSpec extends SparkSpec {
     assert(inside.exists(l => create.findFirstIn(l).isDefined && l.contains("false")))
     assert(inside.exists(l => rename.findFirstIn(l).isDefined))
     assert(inside.exists(l => nameLiteral.findFirstIn(l).isDefined))
+  }
+
+  test("delete compaction, layout migration, a copy-on-write DELETE and a " +
+    "merge-on-read MERGE's scan and commit each open the latest manifest once") {
+    wh
+    // delete compaction folding one pending equality delete
+    Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "w").repartition(1)
+      .writeTo("tlcat.s.opendel").using("parquet")
+      .tableProperty(GraftCatalog.MergeModeProp, "merge-on-read")
+      .tableProperty(GraftCatalog.MergeKeyProp, "id")
+      .createOrReplace()
+    spark.sql("DELETE FROM tlcat.s.opendel WHERE id = 2 AND length(w) > 0")
+    val (compacted, compactOpens) =
+      latestOpens(tableDir("opendel"))(cat.compactDeletes(spark, "s.opendel"))
+    assert(compacted == ((1, 0)))
+    assert(compactOpens == 1, s"compactDeletes opened it $compactOpens times")
+
+    // layout migration of one legacy flat file
+    Seq((1L, "us"), (2L, "de")).toDF("id", "w").repartition(1)
+      .writeTo("tlcat.s.openmig").using("parquet").createOrReplace()
+    spark.sql("ALTER TABLE tlcat.s.openmig SET TBLPROPERTIES " +
+      s"('${GraftCatalog.PartitionByProp}' = 'w')")
+    Seq((3L, "fr")).toDF("id", "w").writeTo("tlcat.s.openmig").append()
+    val (migrated, migrateOpens) =
+      latestOpens(tableDir("openmig"))(cat.migrateLayout(spark, "s.openmig"))
+    assert(migrated == ((1, 1)))
+    assert(migrateOpens == 1, s"migrateLayout opened it $migrateOpens times")
+
+    // copy-on-write DELETE rewriting one file
+    Seq.tabulate(20)(i => (i.toLong, s"w$i")).toDF("id", "w").repartition(1)
+      .writeTo("tlcat.s.opencow").using("parquet").createOrReplace()
+    val (deleted, deleteOpens) = latestOpens(tableDir("opencow"))(
+      cat.deleteWhere(spark, "s.opencow", col("id") === 7L))
+    assert(deleted == ((1, 0, 1L)))
+    assert(deleteOpens == 1, s"deleteWhere opened it $deleteOpens times")
+
+    // merge-on-read MERGE: the rewrite scan with its pushed ON condition,
+    // then the delta commit of one replacement row and its delete key
+    Seq((1L, "a"), (2L, "b")).toDF("id", "w").repartition(1)
+      .writeTo("tlcat.s.openmor").using("parquet")
+      .tableProperty(GraftCatalog.MergeModeProp, "merge-on-read")
+      .tableProperty(GraftCatalog.MergeKeyProp, "id")
+      .createOrReplace()
+    val dir = tableDir("openmor")
+    val fs = fsOf(dir)
+    val meta = GraftCatalog.readMeta(fs, dir).get
+    val on = spark.table("tlcat.s.openmor").filter(col("id") === 2L)
+      .queryExecution.analyzed.collectFirst { case f: Filter => f.condition }.get
+    val file = stage(dir, "_staging-mq", Seq((2L, "B")))
+    val key = UnsafeProjection.create(Array[DataType](LongType))
+      .apply(InternalRow(2L)).getBytes
+    GraftCatalog.writeEqDelSidecar(fs, new Path(dir, "_staging-mq/_eqdel-frag-0-0.bin"),
+      Seq("id"), Iterator(key))
+    val (_, mergeOpens) = latestOpens(dir) {
+      val op = new GraftDeltaOperation(dir.toString, meta, "s.openmor",
+        RowLevelOperation.Command.MERGE, Seq("id"), None)
+      val scan = op.newScanBuilder(CaseInsensitiveStringMap.empty())
+        .asInstanceOf[CowScanBuilder]
+      scan.pushFilters(Seq(on))
+      scan.build()
+      new GraftDeltaBatchWrite(op, dir.toString, meta, Seq("id"), "mq").commit(
+        Array(GraftDeltaCommitMessage(Seq(("", file)), Some("_eqdel-frag-0-0.bin"), 1L)))
+    }
+    assert(mergeOpens == 1, s"the MERGE's scan and commit opened it $mergeOpens times")
+    spark.catalog.refreshTable("tlcat.s.openmor")
+    assert(spark.table("tlcat.s.openmor").orderBy("id").as[(Long, String)]
+      .collect().toSeq == Seq((1L, "a"), (2L, "B")))
   }
 }
