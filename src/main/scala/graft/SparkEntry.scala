@@ -1455,11 +1455,7 @@ object SparkEntry {
       val pairs = Dedup.minhashLsh(d, "doc_id", "text", k = 3, numHashes = 32,
           bands = 8, minJaccard = 0.5, tokenHash = Dedup.oracleHash)
         .select("id_a", "id_b")
-      d.select(col("doc_id"))
-        .join(Dedup.clustersFast(pairs, maxIter = 25)
-          .withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("cluster_id"), col("doc_id")).alias("cluster_id"))
+      Dedup.labelEvery(d, Dedup.clustersFast(pairs, maxIter = 25), "doc_id")
         .orderBy("doc_id")
     }),
     // Incremental component maintenance replayed as a daily ingest: docs
@@ -1478,17 +1474,11 @@ object SparkEntry {
       val oldPairs = pairs.filter(!isNew(col("id_a")) && !isNew(col("id_b")))
       val newPairs = pairs.filter(isNew(col("id_a")) || isNew(col("id_b")))
       // yesterday's converged labels over EVERY old doc (paired or singleton)
-      val history = d.filter(!isNew(col("doc_id")))
-        .select(col("doc_id").alias("id"))
-        .join(Dedup.clustersFast(oldPairs, maxIter = 25), Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("cluster_id"), col("id")).alias("cluster_id"))
-      val labels = Dedup.clustersIncremental(history, newPairs, maxIter = 25)
-        .withColumnRenamed("id", "doc_id")
-      d.select(col("doc_id"))
-        .join(labels, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("cluster_id"), col("doc_id")).alias("cluster_id"))
+      val history = Dedup.labelEvery(
+        d.filter(!isNew(col("doc_id"))).select(col("doc_id").alias("id")),
+        Dedup.clustersFast(oldPairs, maxIter = 25))
+      Dedup.labelEvery(d, Dedup.clustersIncremental(history, newPairs, maxIter = 25),
+          "doc_id")
         .orderBy("doc_id")
     }),
     "dedup_ngram_jaccard" -> ((s, dir) => {

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -220,6 +220,16 @@ object BloomFunctions {
       numHashes: Int = DefaultHashes): Column =
     Shims.column(BloomAgg(Shims.expression(h), numBits, numHashes)
       .toAggregateExpression())
+
+  /** The one-row filter over `rows`' hashes `h` with its build parameters,
+    * (bloom, num_bits, num_hashes): the row the maintenance sinks keep and
+    * [[graft.ops.Dedup.incrementalBloom]]'s `precomputed` probes. */
+  def bloomRow(rows: DataFrame, h: Column, numBits: Int = DefaultBits,
+      numHashes: Int = DefaultHashes): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    rows.agg(bloom_agg(h, numBits, numHashes).alias("bloom"))
+      .select(col("bloom"), lit(numBits).alias("num_bits"), lit(numHashes).alias("num_hashes"))
+  }
 
   def bloom_might_contain(bitset: Column, h: Column,
       numBits: Int = DefaultBits, numHashes: Int = DefaultHashes): Column =

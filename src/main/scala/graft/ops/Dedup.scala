@@ -580,11 +580,16 @@ object Dedup {
       .unionByName(p0.select(col("id_b").alias("id")))
       .distinct()
       .join(h.select(col("id")), Seq("id"), "left_anti")
-    val nOut = newNodes.join(cl, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("cluster_id"), col("id")).alias("cluster_id"))
-    (hOut.unionByName(nOut), rounds)
+    (hOut.unionByName(labelEvery(newNodes, cl)), rounds)
   }
+
+  /** Every id of `ids`' `idCol` with its label from `components` (id,
+    * cluster_id); an id in no component is a singleton and keeps its own
+    * id. Output: (idCol, cluster_id). */
+  def labelEvery(ids: DataFrame, components: DataFrame, idCol: String = "id"): DataFrame =
+    ids.select(col(idCol))
+      .join(components.withColumnRenamed("id", idCol), Seq(idCol), "left")
+      .select(col(idCol), coalesce(col("cluster_id"), col(idCol)).alias("cluster_id"))
 
   /** End-to-end corpus dedup: MinHash-LSH near-dup pairs above
     * `minJaccard` → connected components → keep the lowest-id doc per

@@ -404,18 +404,6 @@ object TrainPrep {
       minDistinctRatio: Double = 0.5,
       budget: Int = 512,
       textHash: Column => Column = c => xxhash64(c)): DataFrame = {
-    val scrubbed = docs.select(
-      col(idCol), col(langCol),
-      regexp_replace(regexp_replace(col(textCol), EmailRe, "<EMAIL>"),
-        LongNumRe, "<NUM>").alias("scrubbed"),
-      (regexp_count(col(textCol), lit(EmailRe)) +
-        regexp_count(col(textCol), lit(LongNumRe))).cast("long").alias("n_redactions"))
-    val toks = TextAnalysis.tokens(col("scrubbed"))
-    val gated = scrubbed
-      .withColumn("n_tokens", size(toks).cast("long"))
-      .withColumn("distinct_ratio",
-        size(array_distinct(toks)).cast("double") / size(toks).cast("double"))
-      .filter(col("n_tokens") >= minTokens && col("distinct_ratio") >= minDistinctRatio)
     // keep the lowest-id doc per identical scrubbed text — ONE min_by
     // aggregate on the fingerprint instead of the former keeper aggregate
     // + self-join: that spelling evaluated the scrub/tokenize front TWICE
@@ -430,57 +418,28 @@ object TrainPrep {
     // join's survivor set. Only manifest columns enter the struct; the
     // scrubbed payload never crosses the exchange (`textHash` injectable
     // for the cross-engine oracle, like Dedup).
-    val surviving = gated
-      .withColumn("__fp", textHash(col("scrubbed")))
+    val surviving = gatedWithFp(docs, idCol, textCol, langCol, minTokens,
+        minDistinctRatio, textHash)
       .groupBy(col("__fp"))
       .agg(min_by(
         struct(col(idCol), col(langCol), col("n_tokens"), col("n_redactions")),
         col(idCol)).alias("__r"))
       .select(col("__r.*"))
-    // prune to the manifest columns BEFORE the two-pass packing: its pin
-    // materializes the input schema as-is, and the scrubbed text must not
-    // ride into the cache
-    val split = splitByHash(surviving, idCol)
-      .select(col(idCol), col(langCol), col("split"), col("n_tokens"),
-        col("n_redactions"))
-    groupedRunningSum(split, Seq("split", langCol), Seq(idCol),
-      col("n_tokens"), "__cum")
-      .withColumn("seq_id",
-        floor((col("__cum") - col("n_tokens")) / lit(budget)).cast("long"))
-      .select(col(idCol), col(langCol), col("split"), col("n_tokens"),
-        col("n_redactions"), col("seq_id"))
+    packManifest(surviving, idCol, langCol, budget)
   }
 
-  /** Public alias of the gated front — what a production deployment runs
-    * once per corpus slice to build the stored state [[incrementalFold]]
-    * consumes. */
-  def gatedFront(
+  /** Shared narrow front of the corpus pipelines: PII scrub + quality gate
+    * + text fingerprint, per row — columns (id, lang, scrubbed,
+    * n_redactions, n_tokens, distinct_ratio, __fp). */
+  private[ops] def gatedWithFp(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       langCol: String,
       minTokens: Int = 20,
       minDistinctRatio: Double = 0.5,
-      textHash: Column => Column = c => xxhash64(c)): DataFrame =
-    gatedWithFp(docs, idCol, textCol, langCol, minTokens, minDistinctRatio, textHash)
-
-  /** Shared narrow front of the corpus pipelines: PII scrub + quality gate
-    * + text fingerprint, per row — columns (id, lang, scrubbed,
-    * n_redactions, n_tokens, distinct_ratio, __fp). */
-  private def gatedWithFp(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      langCol: String,
-      minTokens: Int,
-      minDistinctRatio: Double,
-      textHash: Column => Column): DataFrame = {
-    val scrubbed = docs.select(
-      col(idCol), col(langCol),
-      regexp_replace(regexp_replace(col(textCol), EmailRe, "<EMAIL>"),
-        LongNumRe, "<NUM>").alias("scrubbed"),
-      (regexp_count(col(textCol), lit(EmailRe)) +
-        regexp_count(col(textCol), lit(LongNumRe))).cast("long").alias("n_redactions"))
+      textHash: Column => Column = c => xxhash64(c)): DataFrame = {
+    val scrubbed = docs.select(col(idCol) +: col(langCol) +: scrubbedCols(textCol): _*)
     val toks = TextAnalysis.tokens(col("scrubbed"))
     scrubbed
       .withColumn("n_tokens", size(toks).cast("long"))
@@ -534,11 +493,7 @@ object TrainPrep {
     // the scrub/gate front twice (see [[prepareCorpus]]); (priority, id)
     // is unique per row (ids are), so the min row is exactly the old
     // keeper join's survivor
-    val surv = gated
-      .groupBy(col("__fp"))
-      .agg(min_by(struct(gated.columns.map(col): _*),
-        struct(col("__prio"), col(idCol))).alias("__r"))
-      .select(col("__r.*"))
+    val surv = CorpusState.keepers(gated, struct(col("__prio"), col(idCol)))
     val pairs = graft.ops.Dedup.minhashLsh(
         surv.select(col(idCol), col("scrubbed")), idCol, "scrubbed",
         k, numHashes, bands, minJaccard, tokenHash)
@@ -572,10 +527,10 @@ object TrainPrep {
     *    the text. Replay-idempotent: folding the same batch twice yields
     *    the identical manifest (every row exact-dups the history).
     *
-    * This correctness spelling replays "yesterday" (history keepers,
-    * labels) from the history frame so the oracle can check the whole
-    * composition; production persists those as tables (see
-    * Bench.productionSetup's incremental-components shape). */
+    * This correctness spelling builds "yesterday" ([[CorpusState.build]])
+    * from the history frame so the oracle can check the whole
+    * composition; production stores that state as tables (see
+    * [[CorpusState.write]]). */
   def prepareCorpusIncremental(
       history: DataFrame,
       batch: DataFrame,
@@ -592,51 +547,18 @@ object TrainPrep {
       tokenHash: Column => Column = graft.ops.Dedup.xxHash,
       textHash: Column => Column = c => xxhash64(c),
       maxIter: Int = 25): DataFrame = {
-    val gh = gatedWithFp(history, idCol, textCol, langCol, minTokens,
-      minDistinctRatio, textHash)
-    // yesterday's state, derived here so the oracle can check the whole
-    // composition; production stores all three (gated survivors, their
-    // minhash signatures, converged labels) as catalog tables — see
-    // Bench.productionSetup
-    val survH = gh
-      .groupBy(col("__fp"))
-      .agg(min_by(struct(gh.columns.map(col): _*), col(idCol)).alias("__r"))
-      .select(col("__r.*")).localCheckpoint(false)
-    val histSigs = graft.ops.Dedup.minhashSignatures(
-      survH.select(col(idCol), col("scrubbed")), idCol, "scrubbed",
-      k, numHashes, tokenHash).localCheckpoint(false)
-    val histLabels = survH.select(col(idCol).alias("id"))
-      .join(graft.ops.Dedup.clustersFast(
-        graft.ops.Dedup.minhashLshFromSigs(histSigs, numHashes, bands, minJaccard)
-          .select("id_a", "id_b"), maxIter), Seq("id"), "left")
-      .select(col("id"), coalesce(col("cluster_id"), col("id")).alias("cluster_id"))
-    incrementalFold(survH, histSigs, histLabels, None, batch,
+    val state = CorpusState.build(history, idCol, textCol, langCol, minTokens,
+      minDistinctRatio, minJaccard, k, numHashes, bands, tokenHash, textHash, maxIter)
+    incrementalFold(state.gated, state.sigs, state.labels, state.bloom, batch,
       idCol, textCol, langCol, minTokens, minDistinctRatio, budget,
       minJaccard, k, numHashes, bands, tokenHash, textHash, maxIter)
   }
 
-  /** The production daily fold behind [[prepareCorpusIncremental]],
-    * consuming STORED history state so the recurring cost is
-    * batch-proportional:
-    *
-    *  - `historyGated`: the exact-dedup survivors' gated rows
-    *    (id, lang, scrubbed, n_redactions, n_tokens, __fp);
-    *  - `historySigs`: their minhash signatures (mh_id, sig) — re-used by
-    *    the band join instead of re-shingling the corpus;
-    *  - `historyLabels`: yesterday's converged component labels
-    *    (id, cluster_id);
-    *  - `bloom`: optionally, the maintained one-row fingerprint filter
-    *    with its build parameters — (bloom, num_bits, num_hashes), the
-    *    row [[graft.streaming.Streams.sinkWithBloomMaintenance]] keeps —
-    *    so the exact gate skips the history scan on the provably-new
-    *    majority.
-    *
-    * The batch gates narrowly, exact-dedups through the Bloom gate
-    * (first-seen wins), its pair generation probes batch band keys
-    * against stored ∪ batch keys ([[graft.ops.Dedup.minhashPairsAgainst]]
-    * — batch-proportional), components fold via
-    * [[graft.ops.Dedup.clustersIncremental]] (rounds bounded by the batch
-    * graph), and only manifest rows (ids + counts) reach the re-pack. */
+  /** The production daily fold behind [[prepareCorpusIncremental]]: the
+    * batch folds into the STORED history state ([[CorpusState]]'s four
+    * tables, [[CorpusState.fold]]) so the recurring cost is
+    * batch-proportional, and only manifest rows (ids + counts) of the
+    * history's and the batch's survivors reach the re-pack. */
   def incrementalFold(
       historyGated: DataFrame,
       historySigs: DataFrame,
@@ -656,51 +578,12 @@ object TrainPrep {
       tokenHash: Column => Column = graft.ops.Dedup.xxHash,
       textHash: Column => Column = c => xxhash64(c),
       maxIter: Int = 25): DataFrame = {
-    // The batch's narrow front (two regexp_replace + two regexp_count +
-    // tokenize — the fold's dominant per-row cost) feeds BOTH the Bloom
-    // gate's (fp, id) aggregate and the survivor join's probe side.
-    // r16 evaluated it twice per run; r17 materializes it ONCE with a
-    // localCheckpoint — batch-sized, the state a daily fold holds anyway
-    // — so both consumers read the computed rows (guide §2.3: don't
-    // compute things twice; the r16-rejected alternative — carrying the
-    // payload through a min_by(struct) gate — forced a sort aggregate +
-    // payload shuffle and measured 4.6 → 6.4 s; the checkpoint keeps the
-    // gate aggregate (fp, id)-keyed and hash-aggregable). Local sf0.1
-    // A/B is NEUTRAL (interleaved best-of-tail medians 3.47 → 3.42 s):
-    // the two evaluations ran CONCURRENTLY (broadcast-build thread vs
-    // main stage) on an idle local box, so wall time hid the duplicate
-    // CPU — at cluster scale the duplicated corpus-front CPU is paid for
-    // real, which is why the single materialization is kept. Balancing
-    // the batch before the front (repartition when below one scan split)
-    // was A/B'd on top and measured NET-SLOWER (3.47 → 3.79 s median) —
-    // the exchange of the batch text costs more than the serialization
-    // it removes, consistent with the r16 tWide sweep — rejected.
-    val gb = gatedWithFp(batch, idCol, textCol, langCol, minTokens,
-      minDistinctRatio, textHash).localCheckpoint(false)
-    // batch fold: within-batch min per fingerprint, Bloom-gated anti join
-    // against the history's fingerprints — first seen wins. Measured
-    // (Pin.measured): its input crosses the gate's aggregate and joins,
-    // so a plain checkpoint would carry their multiplied size estimate
-    // into the signature, pair and manifest joins below. `gb` above and
-    // `batchSigs` below are narrow over a file scan or this checkpoint —
-    // their estimates are already right, so they stay lazy.
-    val (survB, _) = Pin.measured(gb.join(
-      graft.ops.Dedup.incrementalBloom(historyGated, gb, Seq("__fp"), idCol,
-          precomputed = bloom)
-        .select(col(idCol)), Seq(idCol)))
-    // checkpoint the batch signatures: minhashPairsAgainst references
-    // them THREE times (its own band keys, the history∪batch band keys,
-    // and the scoring join's signature lookup) — unpinned, the
-    // tokenize+shingle+numHashes-permutations narrow chain re-runs per
-    // reference; checkpointed it runs once over the batch survivors
-    val batchSigs = graft.ops.Dedup.minhashSignatures(
-      survB.select(col(idCol), col("scrubbed")), idCol, "scrubbed",
-      k, numHashes, tokenHash).localCheckpoint(false)
-    val newPairs = graft.ops.Dedup.minhashPairsAgainst(
-        batchSigs, historySigs.unionByName(batchSigs), numHashes, bands, minJaccard)
-      .select("id_a", "id_b")
-    val labels = graft.ops.Dedup.clustersIncremental(historyLabels, newPairs, maxIter)
-    manifestFromState(historyGated.unionByName(survB), labels, idCol, langCol, budget)
+    val day = CorpusState.fold(
+      CorpusState(historyGated, historySigs, historyLabels, bloom), batch,
+      idCol, textCol, langCol, minTokens, minDistinctRatio, minJaccard, k,
+      numHashes, bands, tokenHash = tokenHash, textHash = textHash, maxIter = maxIter)
+    manifestFromState(historyGated.unionByName(day.survivors), day.labels, idCol, langCol,
+      budget)
   }
 
   /** The manifest read-path over maintained corpus state: keep each
@@ -741,12 +624,14 @@ object TrainPrep {
   val LongNumRe = "[0-9]{4,}"
 
   def scrubText(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(
-      col(idCol),
-      regexp_replace(regexp_replace(col(textCol), EmailRe, "<EMAIL>"),
-        LongNumRe, "<NUM>").alias("scrubbed"),
-      (regexp_count(col(textCol), lit(EmailRe)) +
-        regexp_count(col(textCol), lit(LongNumRe))).cast("long").alias("n_redactions"))
+    docs.select(col(idCol) +: scrubbedCols(textCol): _*)
+
+  /** The scrub's two columns: `scrubbed` text and its `n_redactions`. */
+  private def scrubbedCols(textCol: String): Seq[Column] = Seq(
+    regexp_replace(regexp_replace(col(textCol), EmailRe, "<EMAIL>"),
+      LongNumRe, "<NUM>").alias("scrubbed"),
+    (regexp_count(col(textCol), lit(EmailRe)) +
+      regexp_count(col(textCol), lit(LongNumRe))).cast("long").alias("n_redactions"))
 
   /** Test-set decontamination: flag every training document that shares at
     * least one word `k`-gram with the contamination corpus (benchmark /

@@ -65,10 +65,12 @@ object Manifest {
     Manifest(None, Seq.empty, Map.empty, Map.empty, Seq.empty, Seq.empty, Map.empty)
 
   /** One pass over a manifest's lines. Lenient: blank and malformed
-    * header lines are skipped, a stats entry with no well-formed column
-    * is dropped, and only the first `# kind:` line counts, read as `None`
-    * unless it names one of [[GraftCatalog.CommitKinds]]. A repeated file
-    * key keeps its last entry. */
+    * header lines are skipped (a stats column, add, eqdel or posdel
+    * entry with a field that is not base64 is malformed), a stats entry
+    * with no well-formed column is dropped, and only the first `# kind:`
+    * line counts, read as `None` unless it names one of
+    * [[GraftCatalog.CommitKinds]]. A repeated file key keeps its last
+    * entry. */
   def parse(lines: Seq[String]): Manifest = {
     var kind = Option.empty[String]
     var sawKind = false
@@ -83,6 +85,8 @@ object Manifest {
       case Array(k, v) => v.toLongOption.map(k -> _)
       case _ => None
     }
+    def dec(field: String): Option[String] =
+      try Some(b64d(field)) catch { case _: IllegalArgumentException => None }
     lines.iterator.map(_.trim).filter(_.nonEmpty).foreach { l =>
       if (!l.startsWith("#")) files += l
       else if (l.startsWith(KindH)) {
@@ -93,21 +97,22 @@ object Manifest {
           val cols = body.split(";").toSeq.flatMap { e =>
             e.split("\\|", 5) match {
               case Array(c, k, n, mn, mx) =>
-                n.toLongOption.map(nl => b64d(c) -> ColStat(k, nl, b64d(mn), b64d(mx)))
+                for (nl <- n.toLongOption; cd <- dec(c); lo <- dec(mn); hi <- dec(mx))
+                  yield cd -> ColStat(k, nl, lo, hi)
               case _ => None
             }
           }.toMap
-          if (cols.nonEmpty) stats += b64d(f) -> cols
+          if (cols.nonEmpty) dec(f).foreach(stats += _ -> cols)
         case _ =>
       }
       else if (l.startsWith(AddH))
-        entry(l.stripPrefix(AddH)).foreach { case (f, s) => adds += b64d(f) -> s }
+        entry(l.stripPrefix(AddH)).foreach { case (f, s) => dec(f).foreach(adds += _ -> s) }
       else if (l.startsWith(EqDelH))
-        entry(l.stripPrefix(EqDelH)).foreach { case (f, s) => eqDels += b64d(f) -> s }
+        entry(l.stripPrefix(EqDelH)).foreach { case (f, s) => dec(f).foreach(eqDels += _ -> s) }
       else if (l.startsWith(PosDelH))
         entry(l.stripPrefix(PosDelH)).foreach { case (st, s) =>
           st.split(":", 2) match {
-            case Array(sc, t) => posDels += ((b64d(sc), b64d(t), s))
+            case Array(sc, t) => for (scd <- dec(sc); td <- dec(t)) posDels += ((scd, td, s))
             case _ =>
           }
         }

@@ -513,6 +513,40 @@ object Streams {
     stored
   }
 
+  /** The stored one-row filter `stored` OR-merged with the filter over
+    * `rows`' hashes `h`, as (bloom, num_bits, num_hashes). zip_with
+    * NULL-PADS on length mismatch — a stored row built with different
+    * numBits would silently merge into a corrupt filter whose probes miss
+    * real duplicates; a different numHashes is invisible to the bitset but
+    * equally corrupting, which is why the stored row carries BOTH
+    * parameters as columns. A mismatch fails the merge loudly (a sink's
+    * checkpoint retries the batch after the operator is fixed). */
+  private def mergeBloom(stored: DataFrame, rows: DataFrame,
+      h: org.apache.spark.sql.Column, site: String, numBits: Int,
+      numHashes: Int): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val words = numBits / 64
+    requireBloomSchema(stored, site).alias("p")
+      .crossJoin(graft.functions.BloomFunctions.bloomRow(rows, h, numBits, numHashes)
+        .alias("b")) // 1 row × 1 row
+      .select(
+        when(size(col("p.bloom")) === words &&
+            col("p.num_bits") === numBits &&
+            col("p.num_hashes") === numHashes,
+          zip_with(col("p.bloom"), col("b.bloom"),
+            (a, b) => a.bitwiseOR(b)))
+        .otherwise(raise_error(format_string(
+          s"$site: stored filter was " +
+            "built with num_bits=%s, num_hashes=%s (%s 64-bit words) " +
+            s"but the sink runs at numBits=$numBits, " +
+            s"numHashes=$numHashes ($words words) — refusing to merge " +
+            "(a parameter mismatch would corrupt the gate)",
+          col("p.num_bits"), col("p.num_hashes"), size(col("p.bloom")))))
+        .alias("bloom"),
+        lit(numBits).alias("num_bits"),
+        lit(numHashes).alias("num_hashes"))
+  }
+
   /** Streaming maintenance of the dedup Bloom filter
     * ([[graft.functions.BloomAgg]]): each micro-batch's key-hash bitset ORs
     * into ONE stored `bits/64`-long row — OR is commutative and idempotent,
@@ -537,36 +571,9 @@ object Streams {
         import graft.storage.GraftCatalog.{TxnAppIdOption, TxnVersionOption}
         import org.apache.spark.sql.functions._
         val spark = batch.sparkSession
-        val batchBloom = batch
-          .agg(graft.functions.BloomFunctions.bloom_agg(
-            xxhash64(keyCols.map(col): _*), numBits, numHashes).alias("bloom"))
-        // zip_with NULL-PADS on length mismatch — a stored row built with
-        // different numBits would silently merge into a corrupt filter
-        // whose probes miss real duplicates; a different numHashes is
-        // invisible to the bitset but equally corrupting, which is why the
-        // stored row carries BOTH parameters as columns. A mismatch fails
-        // the batch loudly (the checkpoint retries it after the operator
-        // is fixed).
-        val words = numBits / 64
-        val merged = requireBloomSchema(spark.table(bloomTable),
-            s"sinkWithBloomMaintenance($bloomTable)").alias("p")
-          .crossJoin(batchBloom.alias("b")) // 1 row × 1 row
-          .select(
-            when(size(col("p.bloom")) === words &&
-                col("p.num_bits") === numBits &&
-                col("p.num_hashes") === numHashes,
-              zip_with(col("p.bloom"), col("b.bloom"),
-                (a, b) => a.bitwiseOR(b)))
-            .otherwise(raise_error(format_string(
-              s"sinkWithBloomMaintenance($bloomTable): stored filter was " +
-                "built with num_bits=%s, num_hashes=%s (%s 64-bit words) " +
-                s"but the sink runs at numBits=$numBits, " +
-                s"numHashes=$numHashes ($words words) — refusing to merge " +
-                "(a parameter mismatch would corrupt the gate)",
-              col("p.num_bits"), col("p.num_hashes"), size(col("p.bloom")))))
-            .alias("bloom"),
-            lit(numBits).alias("num_bits"),
-            lit(numHashes).alias("num_hashes"))
+        val merged = mergeBloom(spark.table(bloomTable), batch,
+          xxhash64(keyCols.map(col): _*), s"sinkWithBloomMaintenance($bloomTable)",
+          numBits, numHashes)
         merged.localCheckpoint(true) // materialize BEFORE truncating input
           .writeTo(bloomTable)
           .option(TxnAppIdOption, s"$checkpointDir#bloom")
@@ -618,9 +625,10 @@ object Streams {
       .start()
 
   /** Create the four corpus-state tables [[sinkWithCorpusMaintenance]]
-    * maintains, seeded empty (stream everything through the sink) —
-    * schemas come from running the real operators on zero rows, so they
-    * can never drift from what the sink writes:
+    * maintains, seeded empty (stream everything through the sink) with
+    * [[graft.ops.CorpusState.empty]]'s tables — schemas come from
+    * analysing the real operators over zero rows, so they can never drift
+    * from what the sink writes:
     *
     *  - `<prefix>_gated`  — exact-dedup survivors' gated rows;
     *  - `<prefix>_sigs`   — their minhash signatures;
@@ -644,25 +652,14 @@ object Streams {
       numHashes: Int = graft.functions.BloomFunctions.DefaultHashes,
       k: Int = 3,
       sigHashes: Int = 32): Unit = {
-    import org.apache.spark.sql.types._
-    val emptyDocs = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      StructType(Seq(StructField(idCol, LongType), StructField(textCol, StringType),
-        StructField(langCol, StringType))))
-    val g = graft.ops.TrainPrep.gatedFront(emptyDocs, idCol, textCol, langCol)
-    g.writeTo(s"${tablePrefix}_gated").using("parquet").createOrReplace()
-    graft.ops.Dedup.minhashSignatures(g.select(col(idCol), col("scrubbed")),
-        idCol, "scrubbed", k, sigHashes)
-      .writeTo(s"${tablePrefix}_sigs").using("parquet").createOrReplace()
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(Seq(StructField("id", LongType), StructField("cluster_id", LongType),
-          StructField("seq", LongType))))
-      .writeTo(s"${tablePrefix}_labels").using("parquet").createOrReplace()
-    emptyDocs.agg(graft.functions.BloomFunctions.bloom_agg(
-        xxhash64(col(idCol)), dim, numHashes).alias("bloom"))
-      .select(col("bloom"), lit(dim).alias("num_bits"),
-        lit(numHashes).alias("num_hashes"))
-      .writeTo(s"${tablePrefix}_bloom").using("parquet").createOrReplace()
+    val state = graft.ops.CorpusState.empty(spark, idCol, textCol, langCol, k, sigHashes,
+      dim, numHashes)
+    def create(t: String, df: DataFrame): Unit =
+      df.writeTo(s"${tablePrefix}_$t").using("parquet").createOrReplace()
+    create("gated", state.gated)
+    create("sigs", state.sigs)
+    create("labels", state.labels.withColumn("seq", lit(null).cast("long")))
+    state.bloom.foreach(create("bloom", _))
   }
 
   /** Latest-seq-wins resolution of the append-only label-delta table:
@@ -709,16 +706,20 @@ object Streams {
   /** Streaming maintenance of the WHOLE incremental-corpus state
     * ([[graft.ops.TrainPrep.incrementalFold]]'s inputs) — the
     * training-data pipeline as a maintained system rather than a nightly
-    * rebuild. Each micro-batch:
+    * rebuild. Each micro-batch folds into the stored state
+    * ([[graft.ops.CorpusState.fold]]), which
     *
-    *  1. gates narrowly ([[graft.ops.TrainPrep.gatedFront]]);
+    *  1. gates narrowly;
     *  2. exact-dedups through the MAINTAINED bloom row (first-seen wins —
     *     a fingerprint the corpus ever saw never re-enters);
     *  3. probes the batch's band keys against the STORED signatures
     *     ([[graft.ops.Dedup.minhashPairsAgainst]] — batch-proportional);
-    *  4. folds components ([[graft.ops.Dedup.clustersIncremental]]) and
-    *     appends only the CHANGED labels as deltas;
-    *  5. appends survivors + signatures, OR-folds the bloom row;
+    *  4. folds components ([[graft.ops.Dedup.clustersIncremental]]);
+    *
+    * and the sink then
+    *
+    *  5. appends only the CHANGED labels as deltas, appends survivors +
+    *     signatures and OR-folds the bloom row;
     *  6. every `squashLabelsEvery` batches (0 = never), [[squashLabels]]
     *     compacts the delta table to latest-per-id so the per-batch
     *     [[latestLabels]] read stays O(corpus) instead of growing with
@@ -758,57 +759,26 @@ object Streams {
         def txnTo(t: String)(w: org.apache.spark.sql.DataFrameWriterV2[_]) = w
           .option(TxnAppIdOption, s"$checkpointDir#$t")
           .option(TxnVersionOption, batchId.toString)
-        val storedGated = spark.table(s"${tablePrefix}_gated")
-        val gb = graft.ops.TrainPrep.gatedFront(batch, idCol, textCol, langCol,
-          textHash = textHash)
+        def stored(t: String) = spark.table(s"${tablePrefix}_$t")
         // materialize each state delta BEFORE any table it reads is
-        // appended to (same discipline as the sketch sinks)
-        val survB = gb.join(
-          graft.ops.Dedup.incrementalBloom(storedGated, gb, Seq("__fp"), idCol,
-              numBits, numHashes,
-              precomputed = Some(spark.table(s"${tablePrefix}_bloom")))
-            .select(col(idCol)), Seq(idCol))
-          .localCheckpoint(true)
-        val batchSigs = graft.ops.Dedup.minhashSignatures(
-            survB.select(col(idCol), col("scrubbed")), idCol, "scrubbed",
-            k, sigHashes, tokenHash)
-          .localCheckpoint(true)
-        val newPairs = graft.ops.Dedup.minhashPairsAgainst(batchSigs,
-            spark.table(s"${tablePrefix}_sigs").unionByName(batchSigs),
-            sigHashes, bands, minJaccard)
-          .select("id_a", "id_b")
+        // appended to (same discipline as the sketch sinks): the fold
+        // checkpoints its survivors eagerly, its signatures read only them
         val cur = latestLabels(spark, tablePrefix).localCheckpoint(true)
-        val labels = graft.ops.Dedup.clustersIncremental(cur, newPairs, maxIter)
-        val delta = labels
+        val day = graft.ops.CorpusState.fold(
+          graft.ops.CorpusState(stored("gated"), stored("sigs"), cur, Some(stored("bloom"))),
+          batch, idCol, textCol, langCol, minJaccard = minJaccard, k = k,
+          numHashes = sigHashes, bands = bands, bloomBits = numBits, bloomHashes = numHashes,
+          tokenHash = tokenHash, textHash = textHash, maxIter = maxIter)
+        val delta = day.labels
           .join(cur.withColumnRenamed("cluster_id", "__old"), Seq("id"), "left")
           .filter(col("__old").isNull || col("__old") =!= col("cluster_id"))
           .select(col("id"), col("cluster_id"), lit(batchId).alias("seq"))
           .localCheckpoint(true)
-        val batchBloom = survB.agg(graft.functions.BloomFunctions.bloom_agg(
-          xxhash64(col("__fp")), numBits, numHashes).alias("bloom"))
-        val words = numBits / 64
-        val mergedBloom = requireBloomSchema(
-            spark.table(s"${tablePrefix}_bloom"),
-            s"sinkWithCorpusMaintenance($tablePrefix)").alias("p")
-          .crossJoin(batchBloom.alias("b")) // 1 row × 1 row
-          .select(
-            when(size(col("p.bloom")) === words &&
-                col("p.num_bits") === numBits &&
-                col("p.num_hashes") === numHashes,
-              zip_with(col("p.bloom"), col("b.bloom"),
-                (a, b) => a.bitwiseOR(b)))
-            .otherwise(raise_error(format_string(
-              s"sinkWithCorpusMaintenance($tablePrefix): stored filter was " +
-                "built with num_bits=%s, num_hashes=%s (%s words) but the " +
-                s"sink runs at numBits=$numBits, numHashes=$numHashes " +
-                s"($words words) — refusing to merge",
-              col("p.num_bits"), col("p.num_hashes"), size(col("p.bloom")))))
-            .alias("bloom"),
-            lit(numBits).alias("num_bits"),
-            lit(numHashes).alias("num_hashes"))
+        val mergedBloom = mergeBloom(stored("bloom"), day.survivors, xxhash64(col("__fp")),
+            s"sinkWithCorpusMaintenance($tablePrefix)", numBits, numHashes)
           .localCheckpoint(true)
-        txnTo("gated")(survB.writeTo(s"${tablePrefix}_gated")).append()
-        txnTo("sigs")(batchSigs.writeTo(s"${tablePrefix}_sigs")).append()
+        txnTo("gated")(day.survivors.writeTo(s"${tablePrefix}_gated")).append()
+        txnTo("sigs")(day.sigs.writeTo(s"${tablePrefix}_sigs")).append()
         txnTo("labels")(delta.writeTo(s"${tablePrefix}_labels")).append()
         txnTo("bloom")(mergedBloom.writeTo(s"${tablePrefix}_bloom"))
           .overwrite(lit(true))

@@ -132,6 +132,54 @@ class TrainPrepSpec extends SparkSpec {
     assert(kept == Seq(7L), s"history must win the exact tie, kept $kept")
   }
 
+  test("CorpusState: a built state written, read back and folded manifests " +
+    "exactly prepareCorpusIncremental") {
+    import graft.ops.CorpusState
+    val d = queries.Parity.t(spark, s"${sys.props("user.home")}/testdata/sf0.001", "documents")
+    val isNew = pmod(col("doc_id"), lit(5)) === 0
+    val dir = java.nio.file.Files.createTempDirectory("graft-corpus-state").toString
+    CorpusState.build(d.filter(!isNew), "doc_id", "text", "lang").write(dir)
+    val state = CorpusState.read(spark, dir, "doc_id", "text", "lang")
+    val day = CorpusState.fold(state, d.filter(isNew), "doc_id", "text", "lang")
+    val got = TrainPrep.manifestFromState(state.gated.unionByName(day.survivors),
+      day.labels, "doc_id", "lang")
+    val inc = TrainPrep.prepareCorpusIncremental(
+      d.filter(!isNew), d.filter(isNew), "doc_id", "text", "lang")
+    assert(got.exceptAll(inc).isEmpty && inc.exceptAll(got).isEmpty,
+      "the stored state's fold must equal the in-memory incremental day")
+    // the day's survivors are batch rows only, and the labels cover every
+    // stored id
+    assert(day.survivors.filter(!isNew).isEmpty)
+    assert(state.labels.select("id").exceptAll(day.labels.select("id")).isEmpty)
+  }
+
+  test("CorpusState.read: the stored state plans its read with the engine's " +
+    "schemas, so no schema-inference job runs") {
+    import graft.ops.CorpusState
+    val d = queries.Parity.t(spark, s"${sys.props("user.home")}/testdata/sf0.001", "documents")
+    val dir = java.nio.file.Files.createTempDirectory("graft-corpus-read").toString
+    val built = CorpusState.build(d, "doc_id", "text", "lang")
+    built.write(dir)
+    val sc = spark.sparkContext
+    sc.setJobGroup("state-read", "state-read", interruptOnCancel = false)
+    val state = try {
+      val s = CorpusState.read(spark, dir, "doc_id", "text", "lang")
+      (Seq(s.gated, s.sigs, s.labels) ++ s.bloom).foreach(_.queryExecution.executedPlan)
+      s
+    } finally sc.clearJobGroup()
+    org.apache.spark.sql.graftshim.Shims.drainListenerBus(sc)
+    val jobs = sc.statusTracker.getJobIdsForGroup("state-read").length
+    assert(jobs == 0, s"$jobs jobs to read and plan the stored state")
+    // the rows read back are the rows written, under the schema a footer
+    // read infers
+    Seq("gated" -> (built.gated, state.gated), "sigs" -> (built.sigs, state.sigs),
+        "labels" -> (built.labels, state.labels), "bloom" -> (built.bloom.get, state.bloom.get))
+      .foreach { case (name, (w, r)) =>
+        assert(r.schema == spark.read.parquet(s"$dir/$name").schema, name)
+        assert(w.exceptAll(r).isEmpty && r.exceptAll(w).isEmpty, name)
+      }
+  }
+
   test("incrementalFold over the stored production state: the day's job " +
     "count stays at what measured checkpoints plan") {
     val sf = s"${sys.props("user.home")}/testdata/sf0.001"
@@ -144,10 +192,12 @@ class TrainPrepSpec extends SparkSpec {
     org.apache.spark.sql.graftshim.Shims.drainListenerBus(sc)
     val jobs = sc.statusTracker.getJobIdsForGroup("fold-jobs").length
     // every checkpoint over a join or aggregate is measured (Pin.measured),
-    // so its consumers plan broadcasts before execution: 45 jobs here,
+    // so its consumers plan broadcasts before execution: 41 jobs here,
     // where plain checkpoints ran 55 (AQE shuffled both sides of each
-    // small join, then broadcast one)
-    assert(rows > 0 && jobs <= 45, s"$jobs jobs for $rows manifest rows")
+    // small join, then broadcast one); the state's four tables are read
+    // with the schemas the engine wrote, so no footer-inference job runs
+    // (45 while they were inferred)
+    assert(rows > 0 && jobs <= 41, s"$jobs jobs for $rows manifest rows")
   }
 
   test("temperatureMixture: sqrt weights flatten source skew; Hamilton " +

@@ -128,6 +128,22 @@ class TableLogSpec extends SparkSpec {
   private def causes(t: Throwable): Seq[Throwable] =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
 
+  test("a manifest entry whose field is not base64 is skipped, not fatal") {
+    val m = Manifest.parse(Seq(
+      // the second stats column's max is "|", which no base64 decodes
+      "# stats:YS5wYXJxdWV0=aWQ|l|0|NQ|OQ;Yw|r|3|||",
+      "# stats:!!=aWQ|l|0|NQ|OQ",
+      "# add:!!!=1",
+      "# add:YS5wYXJxdWV0=1",
+      "# eqdel:!!=2",
+      "# posdel:X3Bvc2RlbC0xLmJpbg:!!=1",
+      "a.parquet"))
+    assert(m.files == Seq("a.parquet"))
+    assert(m.stats == Map("a.parquet" -> Map("id" -> GraftCatalog.ColStat("l", 0L, "5", "9"))))
+    assert(m.addSeq == Map("a.parquet" -> 1L))
+    assert(m.eqDels.isEmpty && m.posDels.isEmpty)
+  }
+
   test("a lost exclusive create is a typed CommitConflict on every lineage " +
     "and for refs and tags") {
     val dir = new Path(java.nio.file.Files.createTempDirectory("graft-tl").toString)
