@@ -156,7 +156,7 @@ object Bench {
     // dedup, batch-keyed pair probe, component fold, re-pack. Production
     // hashes (xxhash64) — the correctness entry keeps the oracle hashes.
     "prep_corpus_incremental" -> ((s, dir) => {
-      val state = ops.CorpusState.read(s, s"$incStateDir/corpus", "doc_id", "text", "lang")
+      val state = ops.CorpusState.read(s, s"$incStateDir/corpus", "doc_id", "lang")
       // NOTE r16: a tWide-balanced batch read was A/B-tested here (the
       // fold's scrub front is two serial single-task stages) and measured
       // NET-SLOWER (3.6 -> 3.8 s) — the exchange of the batch text costs

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -26,7 +27,8 @@ final case class CorpusState(
     gated: DataFrame, sigs: DataFrame, labels: DataFrame, bloom: Option[DataFrame]) {
 
   /** Writes each table as parquet under `dir/<name>`, the layout
-    * [[CorpusState.read]] reads. */
+    * [[CorpusState.read]] reads; a state without a bloom row writes no
+    * `bloom` table. */
   def write(dir: String): Unit =
     (Seq("gated" -> gated, "sigs" -> sigs, "labels" -> labels) ++ bloom.map("bloom" -> _))
       .foreach { case (name, df) => df.write.mode("overwrite").parquet(s"$dir/$name") }
@@ -72,42 +74,38 @@ object CorpusState {
   /** The state over zero documents. Its tables have the schemas that
     * [[build]] and [[fold]] produce, because they come from analysing the
     * same operators, and analysis runs no job. Zero rows form no
-    * component, so the labels are every id labelling itself. */
+    * component, so the labels are every id labelling itself. Only the
+    * bloom parameters reach the data (the one bloom row); the source text
+    * column, the shingle size and the signature length change no output
+    * schema, so the zero-row input names its text `__text` and the
+    * signatures take any size. */
   def empty(
       spark: SparkSession,
       idCol: String,
-      textCol: String,
       langCol: String,
-      k: Int = 3,
-      numHashes: Int = 32,
       bloomBits: Int = DefaultBits,
       bloomHashes: Int = DefaultHashes): CorpusState = {
     val docs = spark.createDataFrame(new java.util.ArrayList[Row](), StructType(Seq(
-      StructField(idCol, LongType), StructField(textCol, StringType),
+      StructField(idCol, LongType), StructField("__text", StringType),
       StructField(langCol, StringType))))
-    val gated = keepers(TrainPrep.gatedWithFp(docs, idCol, textCol, langCol), col(idCol))
-    val ids = gated.select(col(idCol).alias("id"))
-    CorpusState(gated, signatures(gated, idCol, k, numHashes, Dedup.xxHash),
-      Dedup.labelEvery(ids, ids.withColumn("cluster_id", col("id"))),
+    val gated = keepers(TrainPrep.gatedWithFp(docs, idCol, "__text", langCol), col(idCol))
+    CorpusState(gated, signatures(gated, idCol, 1, 1, Dedup.xxHash),
+      gated.select(col(idCol).alias("id"), col(idCol).alias("cluster_id")),
       Some(bloomRow(gated, xxhash64(col("__fp")), bloomBits, bloomHashes)))
   }
 
   /** The state [[CorpusState.write]] left under `dir`, each table read with
     * the schema of [[empty]]'s: no parquet footer is opened to infer one,
-    * so neither the read nor its planning runs a job. */
-  def read(
-      spark: SparkSession,
-      dir: String,
-      idCol: String,
-      textCol: String,
-      langCol: String,
-      k: Int = 3,
-      numHashes: Int = 32): CorpusState = {
-    val e = empty(spark, idCol, textCol, langCol, k, numHashes)
+    * so neither the read nor its planning runs a job. The bloom row is
+    * `None` when `dir` holds no `bloom` table. */
+  def read(spark: SparkSession, dir: String, idCol: String, langCol: String): CorpusState = {
+    val e = empty(spark, idCol, langCol)
     def table(name: String, like: DataFrame) =
       spark.read.schema(like.schema).parquet(s"$dir/$name")
+    val bloomDir = new Path(s"$dir/bloom")
+    val hasBloom = bloomDir.getFileSystem(spark.sessionState.newHadoopConf()).exists(bloomDir)
     CorpusState(table("gated", e.gated), table("sigs", e.sigs), table("labels", e.labels),
-      e.bloom.map(table("bloom", _)))
+      e.bloom.filter(_ => hasBloom).map(table("bloom", _)))
   }
 
   /** Folds `batch` into `state`: the batch gates narrowly, exact-dedups

@@ -75,7 +75,7 @@ object TrainPrepScenarios {
       ops.CorpusState.build(history, "doc_id", "text", "lang").write(dir)
 
       def fold(): Long = {
-        val state = ops.CorpusState.read(spark, dir, "doc_id", "text", "lang")
+        val state = ops.CorpusState.read(spark, dir, "doc_id", "lang")
         TrainPrep.incrementalFold(state.gated, state.sigs, state.labels, state.bloom,
           batch, "doc_id", "text", "lang").count()
       }

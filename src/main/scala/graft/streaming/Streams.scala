@@ -641,6 +641,10 @@ object Streams {
     *    carrying its (num_bits, num_hashes) build parameters so every
     *    probe/merge site can witness them (a mismatch means false
     *    negatives, so it fails loudly instead).
+    *
+    * Only `dim` and `numHashes` reach the data (the bloom row). `textCol`,
+    * `k` and `sigHashes` name the sink's text column and signature
+    * parameters, which no empty table's schema depends on.
     */
   def bootstrapCorpusState(
       spark: org.apache.spark.sql.SparkSession,
@@ -652,8 +656,7 @@ object Streams {
       numHashes: Int = graft.functions.BloomFunctions.DefaultHashes,
       k: Int = 3,
       sigHashes: Int = 32): Unit = {
-    val state = graft.ops.CorpusState.empty(spark, idCol, textCol, langCol, k, sigHashes,
-      dim, numHashes)
+    val state = graft.ops.CorpusState.empty(spark, idCol, langCol, dim, numHashes)
     def create(t: String, df: DataFrame): Unit =
       df.writeTo(s"${tablePrefix}_$t").using("parquet").createOrReplace()
     create("gated", state.gated)

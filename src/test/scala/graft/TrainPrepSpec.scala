@@ -139,7 +139,7 @@ class TrainPrepSpec extends SparkSpec {
     val isNew = pmod(col("doc_id"), lit(5)) === 0
     val dir = java.nio.file.Files.createTempDirectory("graft-corpus-state").toString
     CorpusState.build(d.filter(!isNew), "doc_id", "text", "lang").write(dir)
-    val state = CorpusState.read(spark, dir, "doc_id", "text", "lang")
+    val state = CorpusState.read(spark, dir, "doc_id", "lang")
     val day = CorpusState.fold(state, d.filter(isNew), "doc_id", "text", "lang")
     val got = TrainPrep.manifestFromState(state.gated.unionByName(day.survivors),
       day.labels, "doc_id", "lang")
@@ -163,7 +163,7 @@ class TrainPrepSpec extends SparkSpec {
     val sc = spark.sparkContext
     sc.setJobGroup("state-read", "state-read", interruptOnCancel = false)
     val state = try {
-      val s = CorpusState.read(spark, dir, "doc_id", "text", "lang")
+      val s = CorpusState.read(spark, dir, "doc_id", "lang")
       (Seq(s.gated, s.sigs, s.labels) ++ s.bloom).foreach(_.queryExecution.executedPlan)
       s
     } finally sc.clearJobGroup()
@@ -178,6 +178,10 @@ class TrainPrepSpec extends SparkSpec {
         assert(r.schema == spark.read.parquet(s"$dir/$name").schema, name)
         assert(w.exceptAll(r).isEmpty && r.exceptAll(w).isEmpty, name)
       }
+    // a state without a bloom row writes no bloom table and reads back
+    // without one
+    built.copy(bloom = None).write(s"$dir-nobloom")
+    assert(CorpusState.read(spark, s"$dir-nobloom", "doc_id", "lang").bloom.isEmpty)
   }
 
   test("incrementalFold over the stored production state: the day's job " +
