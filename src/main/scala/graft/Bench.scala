@@ -160,9 +160,12 @@ object Bench {
       // NOTE r16: a tWide-balanced batch read was A/B-tested here (the
       // fold's scrub front is two serial single-task stages) and measured
       // NET-SLOWER (3.6 -> 3.8 s) — the exchange of the batch text costs
-      // more than the serialization it removes; keep the exact read
+      // more than the serialization it removes; keep the exact read. Its
+      // schema is declared (the columns the fold reads), so no parquet
+      // footer is opened to infer one: a job outside any query
       graft.ops.TrainPrep.incrementalFold(state.gated, state.sigs, state.labels, state.bloom,
-        queries.Parity.t(s, dir, "documents").filter(isNewDoc),
+        Engine.tune(s).read.schema("doc_id long, text string, lang string")
+          .parquet(s"$dir/documents.parquet").filter(isNewDoc),
         "doc_id", "text", "lang")
     }),
     "q_dml_point_delete" -> ((s, _) => {

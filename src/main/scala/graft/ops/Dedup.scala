@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -453,38 +456,111 @@ object Dedup {
     (ck, seen("labelSum").asInstanceOf[java.math.BigDecimal])
   }
 
-  /** Connected components in O(log diameter) rounds: min-label propagation
-    * WITH POINTER DOUBLING (shortcutting) — each round every node takes the
-    * minimum of (its label, its neighbors' labels, its LABEL'S label). The
-    * third term is the doubling step: the distance a label has travelled
-    * doubles every round, so a path graph of diameter D converges in
-    * ~log₂ D rounds where [[clusters]]' pure propagation needs D — the
-    * difference between 17 rounds and 100 000 on a 100 k-node chain. Same
-    * output as a converged [[clusters]]: every node labelled with the
-    * smallest id in its component.
+  /** Connected components: every node of `pairs` (id_a, id_b) labelled with
+    * the smallest id in its component, output (id, cluster_id). A pair with
+    * a null end is no edge.
     *
-    * Each round is two shuffles (the neighbor-min aggregate and the
-    * label-table self-join) over the LABEL table — never more than one
-    * row per node — plus one pass of the static edge list and one
-    * partial-aggregated convergence scan ([[labelChecksum]]: label sums
-    * are strictly decreasing until the fixpoint, so a scalar comparison
-    * replaces a join).
-    * Intermediate frames are localCheckpoint'd (the [[clusters]] /
-    * [[graft.ops.Graph.pageRank]] iterative-lineage hygiene). This is the
-    * default component engine for the dedup pipelines; near-dup clusters
-    * have tiny diameters, but a boilerplate chain (doc A≈B, B≈C, …) is
-    * exactly the adversarial shape crawl corpora produce.
+    * The algorithm is chosen at run time from the pair table's measured
+    * size ([[Pin.measured]]), as Spark chooses a broadcast join:
+    *  - at most `spark.sql.autoBroadcastJoinThreshold` (a threshold above
+    *    0, `long` ids): union-find in ONE task ([[unionFind]]), one job
+    *    whatever the diameter. The task holds about 2–3× the measured pair
+    *    bytes (the pairs, the sorted ids and the parent array), as a
+    *    broadcast build side of that size would. It always converges;
+    *    `maxIter` does not bound it.
+    *  - above it: the distributed loop of [[clustersFastCounted]], min-label
+    *    propagation with pointer doubling, which stops after `maxIter`
+    *    rounds.
+    *
+    * This is the default component engine for the dedup pipelines; near-dup
+    * clusters have tiny diameters, but a boilerplate chain (doc A≈B, B≈C, …)
+    * is exactly the adversarial shape crawl corpora produce.
     */
   def clustersFast(pairs: DataFrame, maxIter: Int = 25): DataFrame =
-    clustersFastCounted(pairs, maxIter)._1
+    clustersFastChosen(pairs, maxIter)._1
 
-  /** [[clustersFast]] plus the number of rounds the loop executed —
-    * exposed so [[clustersIncremental]] can PROVE its round count is
-    * bounded by the new batch's diameter, not the corpus's. */
+  /** [[clustersFast]] and whether it ran in one task. */
+  private[graft] def clustersFastChosen(
+      pairs: DataFrame, maxIter: Int = 25): (DataFrame, Boolean) = {
+    val (p0, inTask) = pairTable(pairs)
+    (if (inTask) unionFind(p0) else doubling(p0, maxIter, prePartition = true)._1, inTask)
+  }
+
+  /** The distributed path of [[clustersFast]] at any pair-table size, plus
+    * the number of rounds it executed: connected components in O(log
+    * diameter) rounds by min-label propagation WITH POINTER DOUBLING
+    * (shortcutting) — each round every node takes the minimum of (its
+    * label, its neighbors' labels, its LABEL'S label). The third term is
+    * the doubling step: the distance a label has travelled doubles every
+    * round, so a path graph of diameter D converges in ~log₂ D rounds where
+    * [[clusters]]' pure propagation needs D — the difference between 17
+    * rounds and 100 000 on a 100 k-node chain. Converged, it equals
+    * [[clusters]].
+    *
+    * Each round is two shuffles over the LABEL table — never more than one
+    * row per node: one aggregate takes each node's minimum over its own
+    * label and its neighbors' (`edges ⋈ labels(dst)` unioned with the
+    * labels), and the label-table self-join doubles. Convergence rides the
+    * round's checkpoint ([[checkpointWithChecksum]]: label sums are
+    * strictly decreasing until the fixpoint, so a scalar comparison
+    * replaces a join). Intermediate frames are localCheckpoint'd (the
+    * [[clusters]] / [[graft.ops.Graph.pageRank]] iterative-lineage
+    * hygiene). The round count lets [[clustersIncremental]] PROVE its
+    * rounds are bounded by the new batch's diameter, not the corpus's. */
   private[graft] def clustersFastCounted(
       pairs: DataFrame, maxIter: Int = 25,
-      prePartition: Boolean = true): (DataFrame, Int) = {
-    val (p0, _) = Pin.measured(pairs.select(col("id_a"), col("id_b")))
+      prePartition: Boolean = true): (DataFrame, Int) =
+    doubling(pairTable(pairs)._1, maxIter, prePartition)
+
+  /** `pairs`' (id_a, id_b) without the pairs that have a null end, measured
+    * ([[Pin.measured]]), and whether the components over it run in one
+    * task ([[clustersFast]]'s rule). */
+  private def pairTable(pairs: DataFrame): (DataFrame, Boolean) = {
+    val (p0, seen) = Pin.measured(pairs.select(col("id_a"), col("id_b"))
+      .filter(col("id_a").isNotNull && col("id_b").isNotNull))
+    val threshold = p0.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val bytes = Option(seen("bytes")).fold(0L)(_.asInstanceOf[Long])
+    (p0, threshold > 0 && bytes <= threshold && p0.schema.forall(_.dataType == LongType))
+  }
+
+  /** Components of the pair table `p0` in one task: the ids sorted and
+    * distinct in a `long` array, each pair's ends found by binary search, an
+    * `int` parent array with path compression, and every union keeping the
+    * smaller root, so a root is its component's minimum id. One job: the
+    * task runs inside the measured checkpoint's materialization. The
+    * output, one partition, has the converged distributed loop's rows and
+    * schema. */
+  private def unionFind(p0: DataFrame): DataFrame = {
+    val nullable = p0.schema.exists(_.nullable)
+    val out = StructType(Seq(StructField("id", LongType, nullable),
+      StructField("cluster_id", LongType, nullable)))
+    Pin.measured(p0.coalesce(1).mapPartitions { rows =>
+      val (as, bs) = (new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofLong)
+      rows.foreach { r => as += r.getLong(0); bs += r.getLong(1) }
+      val (a, b) = (as.result(), bs.result())
+      val ids = a ++ b
+      java.util.Arrays.sort(ids)
+      var n = 0
+      for (i <- ids.indices if n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+      val parent = Array.range(0, n)
+      def find(i: Int): Int = {
+        var root = i
+        while (parent(root) != root) root = parent(root)
+        var j = i
+        while (parent(j) != root) { val up = parent(j); parent(j) = root; j = up }
+        root
+      }
+      for (k <- a.indices) {
+        val ra = find(java.util.Arrays.binarySearch(ids, 0, n, a(k)))
+        val rb = find(java.util.Arrays.binarySearch(ids, 0, n, b(k)))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      }
+      Iterator.range(0, n).map(i => Row(ids(i), ids(find(i))))
+    }(Encoders.row(out)))._1
+  }
+
+  /** [[clustersFastCounted]]'s loop over the measured pair table `p0`. */
+  private def doubling(p0: DataFrame, maxIter: Int, prePartition: Boolean): (DataFrame, Int) = {
     val edges =
       if (prePartition) edgeTable(p0)
       else p0.select(col("id_a").alias("src"), col("id_b").alias("dst"))
@@ -498,14 +574,14 @@ object Dedup {
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
-      val viaNbr = edges
+      // each node's own label and its neighbors' in one aggregate (its own
+      // label is in every group: the coalesce only keeps the id's nullability)
+      val stepped = edges
         .join(labels.withColumnRenamed("id", "dst2"), col("dst") === col("dst2"))
-        .groupBy(col("src").alias("id"))
-        .agg(min(col("label")).alias("nbr_label"))
-      val stepped = labels.join(viaNbr, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nbr_label"), col("label")))
-            .alias("label"))
+        .select(col("src").alias("id"), col("label"))
+        .unionByName(labels)
+        .groupBy(col("id"))
+        .agg(coalesce(min(col("label")), col("id")).alias("label"))
       // doubling: labels are always node ids, so label's label exists
       val (next, nextSum) = checkpointWithChecksum(
         stepped
@@ -532,16 +608,22 @@ object Dedup {
     * component can be CONTRACTED to its representative: the new pairs'
     * endpoints are mapped through their labels (ids absent from history
     * pass through — they're new nodes), intra-cluster pairs vanish as
-    * self-loops, and pointer doubling runs on that contracted batch graph
+    * self-loops, and components are found on that contracted batch graph
     * only. Representatives are component minima, so the contracted
     * component's minimum IS the merged component's true minimum — the
     * output equals a from-scratch [[clustersFast]] over the union graph
-    * (history edges + new pairs) exactly, while rounds scale with the NEW
-    * batch's contracted diameter, O(log D_batch). The history contributes
-    * two label joins (shuffles sized by the BATCH, since the pair table
-    * drives them) plus one relabel join over the label table — at 100 TB,
-    * the daily cost of corpus-wide component maintenance becomes the
-    * day's batch, not the corpus.
+    * (history edges + new pairs) exactly. The history contributes two label
+    * joins (shuffles sized by the BATCH, since the pair table drives them)
+    * plus one relabel join over the label table — at 100 TB, the daily
+    * cost of corpus-wide component maintenance becomes the day's batch, not
+    * the corpus.
+    *
+    * The contracted graph's components follow [[clustersFast]]'s rule,
+    * decided by the measured size of the day's pair table (the contracted
+    * table has no more rows): at most the broadcast threshold, union-find
+    * in one task, which always converges and holds about 2–3× those bytes;
+    * above it, pointer doubling, whose rounds scale with the batch's
+    * contracted diameter, O(log D_batch), and stop at `maxIter`.
     *
     * Output covers every history id plus every id in `newPairs`.
     */
@@ -549,11 +631,12 @@ object Dedup {
       history: DataFrame, newPairs: DataFrame, maxIter: Int = 25): DataFrame =
     clustersIncrementalCounted(history, newPairs, maxIter)._1
 
+  /** [[clustersIncremental]] plus the doubling rounds run (0 in one task). */
   private[graft] def clustersIncrementalCounted(
       history: DataFrame, newPairs: DataFrame,
       maxIter: Int = 25): (DataFrame, Int) = {
     val h = history.select(col("id"), col("cluster_id"))
-    val (p0, _) = Pin.measured(newPairs.select(col("id_a"), col("id_b")))
+    val (p0, inTask) = pairTable(newPairs)
     // contract each endpoint to its history representative; new ids pass
     // through (they are their own contracted node)
     val byA = h.select(col("id").alias("id_a"), col("cluster_id").alias("__ra"))
@@ -565,15 +648,19 @@ object Dedup {
         coalesce(col("__ra"), col("id_a")).alias("id_a"),
         coalesce(col("__rb"), col("id_b")).alias("id_b"))
       .filter(col("id_a") =!= col("id_b")) // intra-cluster edges contract away
-    val (cl, rounds) = clustersFastCounted(contracted, maxIter,
-      prePartition = false)
+    val (cl, rounds) =
+      if (inTask) (unionFind(contracted), 0)
+      else clustersFastCounted(contracted, maxIter, prePartition = false)
     // history members follow their representative's new label (unchanged
     // representatives are absent from `cl` — keep the old label)
     val rep = cl.select(
       col("id").alias("cluster_id"), col("cluster_id").alias("__relabel"))
-    val hOut = h.join(rep, Seq("cluster_id"), "left")
+    // measured: the join's estimate is the product of h's and rep's sizes,
+    // so at some inputs a consumer's join over the labels planned sort-merge
+    // and AQE shuffled both sides before demoting it to a broadcast
+    val (hOut, _) = Pin.measured(h.join(rep, Seq("cluster_id"), "left")
       .select(col("id"),
-        coalesce(col("__relabel"), col("cluster_id")).alias("cluster_id"))
+        coalesce(col("__relabel"), col("cluster_id")).alias("cluster_id")))
     // batch-only nodes: labelled by the contracted run, or themselves if
     // every one of their pairs contracted to a self-loop
     val newNodes = p0.select(col("id_a").alias("id"))

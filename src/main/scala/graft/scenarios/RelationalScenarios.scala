@@ -136,7 +136,10 @@ object RelationalScenarios {
      * ([[ops.Graph.triangleCounts]]) bounds every out-degree by O(√m).
      * COMPONENTS on chains of length D over `n` nodes: min-label
      * propagation ([[ops.Dedup.clusters]]) needs D rounds, pointer doubling
-     * ([[ops.Dedup.clustersFast]]) ~log₂ D. Both pairs must agree per node. */
+     * ([[ops.Dedup.clustersFastCounted]]) ~log₂ D; [[ops.Dedup.clustersFast]]
+     * is timed too, with the path its measured pair table chose (one task at
+     * or under the broadcast threshold). Every labelling must equal
+     * doubling's, node by node. */
     Scenario("graph_skew", Seq("5000000", "10000", "2000000"), (spark, _, args) => {
       val m = args(0).toLong
       val hub = args(1).toLong
@@ -191,12 +194,20 @@ object RelationalScenarios {
         val (tSlow, (slow, slowRounds)) =
           time(ops.Dedup.clustersCounted(chainPairs, maxIter = d.toInt + 2))
         val sc = slow.localCheckpoint(false); sc.count()
-        val diff = fc.withColumnRenamed("cluster_id", "a")
-          .join(sc.withColumnRenamed("cluster_id", "b"), Seq("id"))
-          .filter(col("a") =!= col("b")).count()
-        require(diff == 0, s"labellings diverged at D=$d: $diff")
-        chainPairs.unpersist(); fc.unpersist(); sc.unpersist()
+        // clustersFast's own choice: one task while the measured pair table
+        // fits the broadcast threshold, the doubling loop above it
+        val (tChosen, (chosen, inTask)) =
+          time(ops.Dedup.clustersFastChosen(chainPairs, maxIter = 50))
+        val cc = chosen.localCheckpoint(false); cc.count()
+        Seq("propagation" -> sc, "chosen path" -> cc).foreach { case (what, other) =>
+          val diff = fc.withColumnRenamed("cluster_id", "a")
+            .join(other.withColumnRenamed("cluster_id", "b"), Seq("id"), "full")
+            .filter(!col("a").eqNullSafe(col("b"))).count()
+          require(diff == 0, s"doubling and $what labellings diverged at D=$d: $diff")
+        }
+        chainPairs.unpersist(); fc.unpersist(); sc.unpersist(); cc.unpersist()
         Seq("d" -> d, "doubling_s" -> tFast, "doubling_rounds" -> fastRounds,
+          "chosen_s" -> tChosen, "chosen_path" -> (if (inTask) "in_task" else "distributed"),
           "propagation_s" -> tSlow, "propagation_rounds" -> slowRounds)
       }
       Seq("m" -> m, "hub" -> hub, "n" -> n,

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 import graft.ops.{Dedup, Similarity, TextAnalysis}
 
@@ -282,6 +284,111 @@ class OpsSpec extends SparkSpec {
       s"batch of diameter 2 took $incRounds rounds (history needed $histRounds)")
     assert(histRounds >= 7,
       "premise: the 300-chain history itself needs ~log2(300) rounds")
+  }
+
+  /** The jobs `body` runs, counted under its own job group. */
+  private def jobsOf(group: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group, interruptOnCancel = false)
+    try body finally sc.clearJobGroup()
+    org.apache.spark.sql.graftshim.Shims.drainListenerBus(sc)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  /** `body` with broadcast joins off, which forces the distributed
+    * component loop; `body` must run its actions inside. */
+  private def distributed[A](body: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try body finally spark.conf.set(key, prev)
+  }
+
+  private def labelling(components: DataFrame): Map[Long, Long] =
+    components.collect()
+      .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster_id")).toMap
+
+  test("clustersFast: the in-task union-find and the distributed doubling " +
+    "loop label random graphs alike, and as a reference search does") {
+    // ids 0..39: a few components, duplicate and reversed pairs, self-loops
+    val edge = for {
+      a <- Gen.chooseNum(0L, 39L)
+      b <- Gen.frequency(5 -> Gen.chooseNum(0L, 39L), 1 -> Gen.const(a))
+    } yield (a, b)
+    val graph = for {
+      es <- Gen.chooseNum(1, 30).flatMap(Gen.listOfN(_, edge))
+      again <- Gen.someOf(es)
+    } yield es ++ again.zipWithIndex.map { case (e, i) => if (i % 2 == 0) e.swap else e }
+    val graphs = Seq.empty[(Long, Long)] +:
+      (0 until 6).flatMap(i => graph.apply(Gen.Parameters.default, Seed(90L + i)))
+    assert(graphs.size == 7)
+    graphs.foreach { es =>
+      val pairs = es.toDF("id_a", "id_b")
+      // reference: each node's component minimum by repeated relaxation
+      val ref = scala.collection.mutable.Map[Long, Long]()
+      es.foreach { case (a, b) => ref(a) = a; ref(b) = b }
+      var changed = true
+      while (changed) {
+        changed = false
+        es.foreach { case (a, b) =>
+          val m = math.min(ref(a), ref(b))
+          if (ref(a) != m || ref(b) != m) { ref(a) = m; ref(b) = m; changed = true }
+        }
+      }
+      val (inTask, one) = ops.Dedup.clustersFastChosen(pairs)
+      val (dist, many) = distributed {
+        val (d, chosen) = ops.Dedup.clustersFastChosen(pairs); (labelling(d), chosen)
+      }
+      assert(one && !many, s"paths: at the default threshold $one, at -1 $many")
+      assert(inTask.schema == ops.Dedup.clustersFastCounted(pairs)._1.schema)
+      assert(labelling(inTask) == ref.toMap && dist == ref.toMap, es)
+    }
+  }
+
+  test("clustersFast in one task: as many jobs on a 3-node chain as on a " +
+    "300-node one") {
+    val jobs = Seq(3L, 300L).map { n =>
+      val chain = (0L until n - 1).map(i => (i, i + 1)).toDF("id_a", "id_b")
+      var got: (DataFrame, Boolean) = null
+      val ran = jobsOf(s"cc-in-task-$n") { got = ops.Dedup.clustersFastChosen(chain) }
+      assert(got._2 && labelling(got._1) == (0L until n).map(_ -> 0L).toMap)
+      ran
+    }
+    assert(jobs.distinct.size == 1 && jobs.head <= 2, s"jobs per chain: $jobs")
+  }
+
+  test("clustersFastCounted: a doubling round is 4 jobs, the own and the " +
+    "neighbors' labels folded in one aggregate") {
+    val chain = (0L until 299L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    // the 300-chain takes ~9 rounds: 2 and 4 both stop at maxIter
+    def jobs(rounds: Int) = jobsOf(s"cc-rounds-$rounds") {
+      assert(ops.Dedup.clustersFastCounted(chain, maxIter = rounds)._2 == rounds)
+    }
+    val perRound = (jobs(4) - jobs(2)) / 2
+    // 6 while each node's own label came in through a second, chained
+    // broadcast join
+    assert(perRound == 4, s"$perRound jobs per doubling round")
+    val pairs = Seq((2L, 1L), (2L, 3L), (5L, 4L), (7L, 8L), (8L, 9L), (9L, 10L))
+      .toDF("id_a", "id_b")
+    assert(labelling(ops.Dedup.clustersFastCounted(pairs, maxIter = 6)._1) ==
+      labelling(ops.Dedup.clusters(pairs, maxIter = 6)))
+  }
+
+  test("clustersIncremental in one task equals the distributed fold and a " +
+    "from-scratch run") {
+    val chainPairs = (0L until 299L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val h = ops.Dedup.clustersFastCounted(chainPairs, maxIter = 15)._1.localCheckpoint(false)
+    val batch = Seq((299L, 300L), (300L, 301L), (400L, 401L), (5L, 250L))
+      .toDF("id_a", "id_b")
+    val (inTask, inTaskRounds) = ops.Dedup.clustersIncrementalCounted(h, batch, maxIter = 15)
+    val (dist, distRounds) = distributed {
+      val (d, r) = ops.Dedup.clustersIncrementalCounted(h, batch, maxIter = 15)
+      (labelling(d), r)
+    }
+    val scratch = labelling(ops.Dedup.clustersFast(chainPairs.unionByName(batch)))
+    assert(labelling(inTask) == dist && dist == scratch && scratch.size == 304)
+    assert(inTaskRounds == 0 && distRounds >= 1 && distRounds <= 4,
+      s"rounds: in one task $inTaskRounds, distributed $distRounds")
   }
 
   test("triangleCounts: degree-oriented wedge join finds each triangle once") {

@@ -81,6 +81,11 @@ class ScenarioSpec extends SparkSpec {
     }
   }
 
+  test("graph_skew's tiny chains take clustersFast's in-task path") {
+    val line = Await.result(started("graph_skew"), 10.minutes)
+    assert(""""chosen_path":"in_task"""".r.findAllIn(line).size == 2, line)
+  }
+
   test("scenarios leave the caller's session conf as it was") {
     assert(watched.map(k => k -> spark.conf.getOption(k)) == confBefore)
   }
