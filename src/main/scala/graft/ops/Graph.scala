@@ -1,9 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType,
+  StructField, StructType}
 
 /** Distributed graph operators over edge tables.
   *
@@ -19,7 +23,13 @@ import org.apache.spark.sql.internal.SQLConf
   *    1e-12, per-edge contributions use floor division (`div`), and the
   *    damping step is `base + 85 * sum div 100`. Sums of bigints are
   *    order-independent, so results are bit-identical across partitionings,
-  *    retries, and engines — a floating PageRank would drift per run.
+  *    retries, and engines — a floating PageRank would drift per run;
+  *  - a graph whose measured edge list fits one AQE advisory partition —
+  *    the loop's own layout would be a single partition — runs the whole
+  *    rank loop inside that partition's task, with the same arithmetic
+  *    (see [[pageRank]]): a single-worker loop beats a distributed one
+  *    whenever the graph fits the worker (McSherry et al., "Scalability!
+  *    But at what COST?", HotOS 2015).
   */
 object Graph {
 
@@ -46,15 +56,121 @@ object Graph {
     * all in exact 1e-12-unit bigint arithmetic (see object doc).
     *
     * Returns (node, rank_units) for all nodes, rank in 1e-12 units.
+    *
+    * The algorithm is chosen at run time from the deduplicated edge list's
+    * measured bytes ([[Pin.measured]]), which also size the distributed
+    * loop's layout: `ceil(bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes)`
+    * partitions.
+    *  - one partition, with `src` and `dst` of one integral or
+    *    default-collation string type: the whole loop runs in that
+    *    partition's task ([[rankInTask]]), inside the consumer's job,
+    *    whatever the iteration count. The task holds about 8 B per edge
+    *    plus the per-node arrays, under the measured bytes.
+    *  - otherwise: the distributed loop ([[rankLoop]]), one join and one
+    *    aggregation per iteration over a `src`-clustered adjacency. The
+    *    measuring job(s) run once before it.
+    * Both paths give the same rows and schema.
     */
   def pageRank(
       edges: DataFrame,
       iterations: Int,
+      assumeDistinct: Boolean = false): DataFrame =
+    pageRankChosen(edges, iterations, assumeDistinct)._1
+
+  /** [[pageRank]] and whether it ran in one task. */
+  private[graft] def pageRankChosen(
+      edges: DataFrame,
+      iterations: Int,
+      assumeDistinct: Boolean = false): (DataFrame, Boolean) = {
+    val (e, nParts) = edgeList(edges, assumeDistinct)
+    val key = e.schema("src").dataType
+    val inTask = nParts == 1 && key == e.schema("dst").dataType &&
+      Seq(ByteType, ShortType, IntegerType, LongType, StringType).contains(key)
+    (if (inTask) rankInTask(e, iterations) else rankLoop(e, nParts, iterations), inTask)
+  }
+
+  /** [[pageRank]]'s distributed loop at any edge-list size. */
+  private[graft] def pageRankDistributed(
+      edges: DataFrame,
+      iterations: Int,
       assumeDistinct: Boolean = false): DataFrame = {
-    // One pass over the (huge) edge table: dedup + out-degree, persisted and
-    // partitioned on src — the loop below never re-reads the raw edges. The
-    // static node list is persisted separately: each iteration's rank table
-    // is then consumed exactly ONCE (the contribution join), so lineage
+    val (e, nParts) = edgeList(edges, assumeDistinct)
+    rankLoop(e, nParts, iterations)
+  }
+
+  private final val unit = 1000000000000L // 1e12 units == rank 1.0
+  private final val base = 150000000000L  // 0.15
+
+  /** The (src, dst) edge list, deduplicated unless `assumeDistinct`,
+    * measured ([[Pin.measured]]), and the rank loop's partition count: its
+    * measured bytes over the AQE advisory partition size, so the layout
+    * tracks data scale, not core count. */
+  private def edgeList(edges: DataFrame, assumeDistinct: Boolean): (DataFrame, Int) = {
+    val (e, seen) = Pin.measured(
+      if (assumeDistinct) edges.select("src", "dst")
+      else edges.select("src", "dst").distinct())
+    val advisory = e.sparkSession.sessionState.conf
+      .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val bytes = Option(seen("bytes")).fold(0L)(_.asInstanceOf[Long])
+    (e, ((bytes + advisory - 1) / advisory).max(1L).min(1L << 20).toInt)
+  }
+
+  /** The whole rank loop in one task over the measured edge list `e`: every
+    * key indexed once in a hash map (JVM equality, which equals Spark's
+    * grouping equality for the key types [[pageRankChosen]] admits), the
+    * edges as `int` src/dst index arrays, and `long` degree, rank and mass
+    * arrays. The arithmetic is [[rankLoop]]'s: truncating `div`, the same
+    * damping step, and `long` sums that wrap as Spark's non-ANSI `sum`
+    * does. A null `src` is a node that sends nothing; a null `dst`, or one
+    * that is no `src`, receives nothing. Lazy: the consumer's job runs it. */
+  private def rankInTask(e: DataFrame, iterations: Int): DataFrame = {
+    val src = e.schema("src")
+    val out = StructType(Seq(StructField("node", src.dataType, src.nullable),
+      StructField("rank_units", LongType, nullable = iterations > 0)))
+    e.coalesce(1).mapPartitions { rows =>
+      val index = new java.util.HashMap[Any, Integer]
+      val keys = new mutable.ArrayBuffer[Any]
+      def id(k: Any): Int = if (k == null) -1 else {
+        val seen = index.putIfAbsent(k, keys.size)
+        if (seen != null) seen else { keys += k; keys.size - 1 }
+      }
+      val isSrc = new java.util.BitSet
+      var nullSrc = false
+      val (ss, ds) = (new mutable.ArrayBuilder.ofInt, new mutable.ArrayBuilder.ofInt)
+      rows.foreach { r =>
+        val s = id(r.get(0))
+        if (s < 0) nullSrc = true else isSrc.set(s)
+        ss += s; ds += id(r.get(1))
+      }
+      val (s, d) = (ss.result(), ds.result())
+      val deg = new Array[Long](keys.size)
+      s.foreach(i => if (i >= 0) deg(i) += 1)
+      // keep only the edges that carry rank: a node to a node
+      var m = 0
+      for (k <- s.indices if s(k) >= 0 && d(k) >= 0 && isSrc.get(d(k))) {
+        s(m) = s(k); d(m) = d(k); m += 1
+      }
+      val rank = Array.fill(keys.size)(unit)
+      val mass = new Array[Long](keys.size)
+      for (_ <- 1 to iterations) {
+        java.util.Arrays.fill(mass, 0L)
+        for (k <- 0 until m) mass(d(k)) += rank(s(k)) / deg(s(k))
+        for (i <- rank.indices)
+          rank(i) = base + (mass(i) / 100) * 85 + ((mass(i) % 100) * 85) / 100
+      }
+      val nullRank = if (iterations > 0) base else unit
+      keys.indices.iterator.filter(isSrc.get).map(i => Row(keys(i), rank(i))) ++
+        (if (nullSrc) Iterator(Row(null, nullRank)) else Iterator.empty)
+    }(Encoders.row(out))
+  }
+
+  /** The distributed rank loop over the measured edge list `e`, laid out in
+    * `nParts` partitions. */
+  private def rankLoop(e: DataFrame, nParts: Int, iterations: Int): DataFrame = {
+    // One pass over the (huge) edge table: out-degree, partitioned on src —
+    // the loop below never re-reads the raw edges. The static node list is
+    // materialized separately: each iteration's rank table is then
+    // consumed exactly ONCE (the contribution join), so lineage
     // grows linearly with iterations. (Referencing `ranks` twice per
     // iteration — once for contributions, once for the node spine — doubles
     // the replayed subtree every iteration: 2^T recomputes. Measured here:
@@ -68,43 +184,25 @@ object Graph {
     // lands in one window task, but the src-keyed join concentrates that
     // key into one task regardless — the window does not worsen the skew
     // worst case it shares with the join it feeds.)
-    val e =
-      if (assumeDistinct) edges.select("src", "dst")
-      else edges.select("src", "dst").distinct()
+    //
+    // The layout is SIZED, not inherited from spark.sql.shuffle.partitions:
+    // `nParts` comes from the measured bytes ([[edgeList]]), so a small
+    // graph does not run 32 near-empty tasks per stage (BENCH_r16's
+    // 8-core/32-core ratio of 0.71 was that empty-task tax). adj is
+    // materialized clustered on src ([[Pin.clustered]]), not cached: an
+    // adaptively-partitioned cache loses the reported hash layout, and the
+    // loop re-planned Exchange+Sort on the adjacency side of every round's
+    // join (r17) — a per-round shuffle of the biggest table at 100 TB. With
+    // the clustered checkpoint every round's contribution join consumes adj
+    // with no exchange and no sort, and the degree window rides the same
+    // edge shuffle. nodes inherits the co-partitioned layout (distinct over
+    // adj adds no exchange).
     val w = Window.partitionBy("src")
-    // r17: SIZE the loop layout instead of inheriting the session shuffle
-    // partition count. A raw persist() froze adj/nodes — and, because the
-    // caches anchor every join in the loop, EVERY per-round exchange — at
-    // spark.sql.shuffle.partitions (32 near-empty tasks per stage at
-    // sf0.1; BENCH_r16's 8-core/32-core ratio of 0.71 is that empty-task
-    // tax). An adaptively-partitioned CACHE (ops.Pin) fixes the count but
-    // loses the reported hash layout: measured here, the loop re-planned
-    // Exchange+Sort on the adjacency side of every round's join — fine at
-    // sf0.1, a per-round shuffle of the biggest table at 100 TB. So the
-    // partition count is derived from the PLANNER's size estimate of the
-    // edge relation against the AQE advisory partition size (bytes-derived,
-    // so it tracks data scale, not core count; session partitioning is
-    // kept when the estimate is unavailable), and adj is materialized
-    // clustered on src (Pin.clustered): every round's contribution join
-    // consumes it with no exchange and no sort, and the degree window
-    // rides the same edge shuffle. nodes inherits the co-partitioned
-    // layout (distinct over adj adds no exchange).
-    val conf = edges.sparkSession.sessionState.conf
-    val sizeEst = e.queryExecution.optimizedPlan.stats.sizeInBytes
-    val advisory = conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    val unknown = sizeEst <= 0 ||
-      sizeEst >= BigInt(Long.MaxValue) / 4 // defaultSizeInBytes: no estimate
-    val nParts =
-      if (unknown) conf.defaultNumShufflePartitions
-      else ((sizeEst + advisory - 1) / advisory)
-        .max(1).min(1 << 20).toInt
     val adj = Pin.clustered(e, Seq(col("src")), nParts,
       _.withColumn("deg", count(lit(1)).over(w)))
     val nodes = Pin.clustered(adj, Seq(col("src")), nParts,
       _.select(col("src").as("node")).distinct())
     nodes.count() // materialize adj + nodes once, before the loop
-    val unit = 1000000000000L // 1e12 units == rank 1.0
-    val base = 150000000000L  // 0.15
     var ranks = nodes.withColumn("r", lit(unit))
     for (_ <- 1 to iterations) {
       val contrib = adj.join(ranks, adj("src") === ranks("node"))
@@ -177,9 +275,12 @@ object Graph {
   /** Headline query: 3-iteration PageRank over the part↔supplier graph,
     * top 20 nodes. `rank_units` is exact (1e-12 units) — hash-comparable.
     * The human-readable `p:`/`s:` label is formatted on the k output rows
-    * only; everything upstream shuffles long ids. */
+    * only; everything upstream shuffles long ids. The lineitem read declares
+    * the two key columns it uses (int64 in every dataset), so no parquet
+    * footer is opened to infer a schema: a job outside any query. */
   def pageRankTop(spark: SparkSession, sfDir: String, k: Int = 20): DataFrame = {
-    val li = graft.queries.Parity.t(spark, sfDir, "lineitem")
+    val li = graft.Engine.tune(spark).read.schema("l_partkey long, l_suppkey long")
+      .parquet(s"$sfDir/lineitem.parquet")
     pageRank(partSupplierEdges(li), iterations = 3, assumeDistinct = true)
       .orderBy(col("rank_units").desc, col("node").asc)
       .limit(k)

@@ -139,7 +139,10 @@ object RelationalScenarios {
      * ([[ops.Dedup.clustersFastCounted]]) ~log₂ D; [[ops.Dedup.clustersFast]]
      * is timed too, with the path its measured pair table chose (one task at
      * or under the broadcast threshold). Every labelling must equal
-     * doubling's, node by node. */
+     * doubling's, node by node. PAGERANK on the hub graph: the path
+     * [[ops.Graph.pageRankChosen]] takes (one task while the measured edge
+     * list fits one advisory partition) is timed against the distributed
+     * loop, and their ranks must be equal. */
     Scenario("graph_skew", Seq("5000000", "10000", "2000000"), (spark, _, args) => {
       val m = args(0).toLong
       val hub = args(1).toLong
@@ -181,6 +184,21 @@ object RelationalScenarios {
         .join(naiveRows.withColumnRenamed("n_triangles", "b"), Seq("node"), "full")
         .filter(coalesce(col("a"), lit(-1)) =!= coalesce(col("b"), lit(-1))).count()
       require(mismatch == 0, s"per-node triangle counts diverged: $mismatch")
+
+      // PageRank over the same graph: the path its measured edge list chose
+      // (one task while it fits one advisory partition) against the
+      // distributed loop; the ranks must agree node by node
+      val rankEdges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      val (tRankChosen, (rankChosen, rankInTask)) = time {
+        val (ranks, inTask) = ops.Graph.pageRankChosen(rankEdges, iterations = 3)
+        (ranks.localCheckpoint(), inTask)
+      }
+      val (tRankLoop, rankLoop) =
+        time(ops.Graph.pageRankDistributed(rankEdges, iterations = 3).localCheckpoint())
+      val rankDiff = rankChosen.withColumnRenamed("rank_units", "a")
+        .join(rankLoop.withColumnRenamed("rank_units", "b"), Seq("node"), "full")
+        .filter(!col("a").eqNullSafe(col("b"))).count()
+      require(rankDiff == 0, s"chosen and distributed PageRank diverged: $rankDiff nodes")
       pairs.unpersist()
 
       val components = Seq(8L, 64L).map { d =>
@@ -213,6 +231,8 @@ object RelationalScenarios {
       Seq("m" -> m, "hub" -> hub, "n" -> n,
         "triangle_slots" -> oTotal,
         "triangles_oriented_s" -> tOriented, "triangles_id_oriented_s" -> tNaive,
+        "pagerank_chosen_s" -> tRankChosen, "pagerank_distributed_s" -> tRankLoop,
+        "pagerank_path" -> (if (rankInTask) "in_task" else "distributed"),
         "components" -> components)
     }),
 

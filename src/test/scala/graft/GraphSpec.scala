@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 import graft.ops.{Graph, Similarity}
 
@@ -89,6 +92,93 @@ class GraphSpec extends SparkSpec {
     // >= N * 0.15 (the base term alone)
     assert(total <= n * 1000000000000L)
     assert(total >= n * 150000000000L)
+  }
+
+  /** The jobs and the stages `body` submits, counted under its own job
+    * group. */
+  private def submitted(group: String)(body: => Unit): (Int, Int) = {
+    val sc = spark.sparkContext
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (s.properties != null &&
+            s.properties.getProperty("spark.jobGroup.id") == group) stages.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, group, interruptOnCancel = false)
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.sql.graftshim.Shims.drainListenerBus(sc)
+      sc.removeSparkListener(l)
+    }
+    (sc.statusTracker.getJobIdsForGroup(group).length, stages.get)
+  }
+
+  private def rows(ranks: DataFrame): Seq[String] =
+    ranks.collect().map(_.toString).toSeq.sorted
+
+  test("pageRank: the in-task loop equals the distributed one on random " +
+    "graphs, rows and schema") {
+    // nodes 0..9; 20..22 are dangling (never a src); null ends, self-loops
+    val key = Gen.frequency(8 -> Gen.chooseNum(0L, 9L).map(Option(_)), 1 -> Gen.const(None))
+    val edge = for {
+      a <- key
+      b <- Gen.frequency(6 -> key, 1 -> Gen.const(a),
+        1 -> Gen.chooseNum(20L, 22L).map(Option(_)))
+    } yield (a, b)
+    val graph = for {
+      es <- Gen.chooseNum(1, 25).flatMap(Gen.listOfN(_, edge))
+      again <- Gen.someOf(es)
+    } yield es ++ again
+    val graphs = Seq.empty[(Option[Long], Option[Long])] +:
+      (0 until 6).flatMap(i => graph.apply(Gen.Parameters.default, Seed(110L + i)))
+    assert(graphs.size == 7)
+    // 0 to 4 iterations, each at least once
+    graphs.zipWithIndex.foreach { case (es, i) =>
+      val iterations = i % 5
+      val strings = es.map { case (a, b) => (a.map(x => s"n$x"), b.map(x => s"n$x")) }
+      Seq(es.toDF("src", "dst"), strings.toDF("src", "dst")).foreach { edges =>
+        val (inTask, one) = Graph.pageRankChosen(edges, iterations)
+        val dist = Graph.pageRankDistributed(edges, iterations)
+        assert(one, s"a ${edges.schema("src").dataType} graph left the in-task path")
+        assert(inTask.schema == dist.schema, s"$es at $iterations iterations")
+        assert(rows(inTask) == rows(dist), s"$es at $iterations iterations")
+      }
+    }
+  }
+
+  test("pageRank in one task: as many jobs at 10 iterations as at 1") {
+    val edges = Seq.tabulate(40)(i => (i % 7L, (i * 3 + 1) % 7L)).toDF("src", "dst")
+    val jobs = Seq(1, 10).map(n => submitted(s"pr-in-task-$n") {
+      val (ranks, inTask) = Graph.pageRankChosen(edges, n)
+      assert(inTask)
+      ranks.collect()
+    }._1)
+    assert(jobs.distinct.size == 1, s"jobs at 1 and 10 iterations: $jobs")
+  }
+
+  test("pageRank distributed: the stage structure is fixed run over run " +
+    "and bounded, so lineage does not grow across iterations") {
+    val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+    val stages = Seq(1, 2).map(run => submitted(s"pr-distributed-$run") {
+      Graph.pageRankDistributed(Graph.partSupplierEdges(li), iterations = 3).count()
+    }._2)
+    assert(stages.distinct.size == 1,
+      s"stage structure must be deterministic run over run: $stages")
+    // measuring the edge list + degree window + 3 × (contribution join +
+    // spine join) + count; a lineage blowup doubles stages per iteration
+    assert(stages.head <= 22, s"3-iteration PageRank submitted ${stages.head} stages")
+  }
+
+  test("pageRank: double keys keep the distributed path") {
+    // -0.0 and 0.0 are one group to Spark and two keys to the JVM
+    val edges = Seq((1.0, 2.0), (2.0, 1.0), (-0.0, 1.0), (0.0, 2.0), (2.0, 0.0))
+      .toDF("src", "dst")
+    val (ranks, inTask) = Graph.pageRankChosen(edges, 2)
+    assert(!inTask)
+    assert(rows(ranks) == rows(Graph.pageRankDistributed(edges, 2)))
   }
 
   private lazy val labeled = Seq(

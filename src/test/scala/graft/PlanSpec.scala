@@ -317,7 +317,14 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_pagerank: one materialized adjacency feeds all three iterations") {
-    val p = plan("q_pagerank")
+    // q_pagerank's edge list fits one advisory partition here, so the query
+    // runs in one task (next case); this pins the distributed loop on the
+    // same part↔supplier edges.
+    val li = spark.read.schema("l_partkey long, l_suppkey long")
+      .parquet(s"$sf/lineitem.parquet")
+    val p = graft.ops.Graph.pageRankDistributed(graft.ops.Graph.partSupplierEdges(li),
+        iterations = 3, assumeDistinct = true)
+      .queryExecution.explainString(FormattedMode)
     // r17: the edge table materializes once as a size-partitioned
     // localCheckpoint (not a cache — an adaptively-partitioned cache
     // loses its reported hash layout and re-plans Exchange+Sort on the
@@ -328,6 +335,15 @@ class PlanSpec extends SparkSpec {
         && l.contains("deg#")) >= 3, p.take(800))
     assert(!p.contains("InMemoryTableScan"),
       "the rank loop must read the checkpointed adjacency, not a cache")
+  }
+
+  test("q_pagerank: the in-task plan has no exchange after the measured checkpoint") {
+    val p = plan("q_pagerank")
+    // the measured edge list is the plan's only leaf; one coalesced
+    // mapPartitions runs the whole loop
+    assert(p.contains("Scan ExistingRDD") && p.contains("Coalesce") &&
+      p.contains("MapPartitions"), p.take(1500))
+    assert(!p.contains("Exchange"), p.take(1500))
   }
 
   test("dedup_span: semi-join against the deduplicated shared-hash set") {

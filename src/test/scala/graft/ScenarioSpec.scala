@@ -86,6 +86,11 @@ class ScenarioSpec extends SparkSpec {
     assert(""""chosen_path":"in_task"""".r.findAllIn(line).size == 2, line)
   }
 
+  test("graph_skew's tiny hub graph takes pageRank's in-task path") {
+    val line = Await.result(started("graph_skew"), 10.minutes)
+    assert(""""pagerank_path":"in_task"""".r.findAllIn(line).size == 1, line)
+  }
+
   test("scenarios leave the caller's session conf as it was") {
     assert(watched.map(k => k -> spark.conf.getOption(k)) == confBefore)
   }
