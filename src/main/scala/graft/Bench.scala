@@ -141,10 +141,12 @@ object Bench {
     // into the stored labels and emit the day's labelling. The correctness
     // entry (SparkEntry.queries) keeps the full replay — building
     // "yesterday" from scratch — so its oracle hash is untouched; this
-    // variant measures the operator, not the scenario construction.
+    // variant measures the operator, not the scenario construction. Both
+    // tables are read with the schemas the setup wrote, so no footer is
+    // opened to infer one.
     "dedup_incremental_components" -> ((s, dir) => {
-      val history = s.read.parquet(s"$incStateDir/history_labels")
-      val newPairs = s.read.parquet(s"$incStateDir/new_pairs")
+      val history = s.read.schema("id long, cluster_id long").parquet(s"$incStateDir/history_labels")
+      val newPairs = s.read.schema("id_a long, id_b long").parquet(s"$incStateDir/new_pairs")
       ops.Dedup.labelEvery(queries.Parity.t(s, dir, "documents"),
         ops.Dedup.clustersIncremental(history, newPairs, maxIter = 25), "doc_id")
     }),
@@ -160,12 +162,10 @@ object Bench {
       // NOTE r16: a tWide-balanced batch read was A/B-tested here (the
       // fold's scrub front is two serial single-task stages) and measured
       // NET-SLOWER (3.6 -> 3.8 s) — the exchange of the batch text costs
-      // more than the serialization it removes; keep the exact read. Its
-      // schema is declared (the columns the fold reads), so no parquet
-      // footer is opened to infer one: a job outside any query
+      // more than the serialization it removes; keep the exact read
       graft.ops.TrainPrep.incrementalFold(state.gated, state.sigs, state.labels, state.bloom,
-        Engine.tune(s).read.schema("doc_id long, text string, lang string")
-          .parquet(s"$dir/documents.parquet").filter(isNewDoc),
+        queries.Parity.t(s, dir, "documents").select("doc_id", "text", "lang")
+          .filter(isNewDoc),
         "doc_id", "text", "lang")
     }),
     "q_dml_point_delete" -> ((s, _) => {
@@ -293,7 +293,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+    val spark = Engine.tune(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
@@ -301,9 +301,8 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.maxResultSize", "4g")
-      .getOrCreate()
+      .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
-    Engine.tune(spark)
 
     // warm-up: JVM/parquet-footer caches shared by every query
     try SparkEntry.queries("q_gold_agg")(spark, sfDir).count()

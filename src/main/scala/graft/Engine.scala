@@ -22,8 +22,8 @@ object Engine {
   def session(
       master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
       appName: String = "graft",
-      shufflePartitions: Int = 32): SparkSession = {
-    val spark = SparkSession
+      shufflePartitions: Int = 32): SparkSession =
+    tune(SparkSession
       .builder()
       .master(master)
       .appName(appName)
@@ -35,13 +35,14 @@ object Engine {
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    tune(spark)
-    spark
-  }
+      .getOrCreate())
 
-  /** Runtime confs safe to (re)apply on an externally-created session
-    * (Verify/Bench build their own sessions per the driver contract). */
+  /** The engine's session semantics, set once per session where it is
+    * built or adopted: [[session]], the Verify/Bench/Scenarios mains, the
+    * driver's session in [[SparkEntry.entry]] and a pipeline
+    * [[pipeline.Runner]]'s. Queries, operators and readers never call it,
+    * so two queries sharing a session never write conf under each other.
+    * Idempotent. */
   def tune(spark: SparkSession): SparkSession = {
     // Reference parity: PySpark 3.5 semantics — failed casts yield null.
     spark.conf.set("spark.sql.ansi.enabled", "false")
@@ -66,12 +67,9 @@ object Engine {
     // (tests, Verify/Bench per the driver contract) get the same rule
     // through experimental.extraOptimizations, which feeds the same
     // user-provided optimizer batch
-    if (!spark.experimental.extraOptimizations
-          .contains(graft.sources.PruneGraftStreamColumns)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          graft.sources.PruneGraftStreamColumns
-    }
+    val extra = spark.experimental.extraOptimizations
+    if (!extra.contains(graft.sources.PruneGraftStreamColumns))
+      spark.experimental.extraOptimizations = extra :+ graft.sources.PruneGraftStreamColumns
     spark
   }
 }

@@ -17,15 +17,15 @@ import graft.queries.Parity
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame =
+  def entry(spark: SparkSession): DataFrame = {
+    Engine.tune(spark) // the driver's own session, adopted here
     Parity.pricingSummary(spark, "/root/testdata/sf0.001")
+  }
 
+  // the exact one-file scan: the catalog-lifecycle queries' write side
+  // commits a pinned number of files per snapshot (bounded
+  // migrate_layout, per-layout-group counts)
   private def docs(s: SparkSession, dir: String) = Parity.t(s, dir, "documents")
-  // unbalanced read for the catalog-LIFECYCLE queries: their write side
-  // must commit a pinned number of files per snapshot (bounded
-  // migrate_layout, per-layout-group counts) — see Parity.tRaw
-  private def docsRaw(s: SparkSession, dir: String) =
-    Parity.tRaw(s, dir, "documents")
   // balanced read (Parity.tWide, guide §2.5 input skew) for the queries
   // whose FIRST stage is dominated by serial narrow work over the
   // one-row-group corpus file — opt-in per the r16 A/B sweep
@@ -108,7 +108,7 @@ object SparkEntry {
       // name; createOrReplace keeps reruns fresh)
       graft.storage.GraftCatalog.registerTemp(s, "qmor")
       s.sql("CREATE NAMESPACE IF NOT EXISTS qmor.s")
-      val d = docsRaw(s, dir).select(
+      val d = docs(s, dir).select(
         coalesce(col("doc_id"), lit(-1L)).alias("doc_id"),
         col("source"), col("n_chars"))
       d.filter(pmod(col("doc_id"), lit(4)) =!= 0)
@@ -149,7 +149,7 @@ object SparkEntry {
       // rerun's table fresh
       graft.storage.GraftCatalog.registerTemp(s, "qevo")
       s.sql("CREATE NAMESPACE IF NOT EXISTS qevo.s")
-      val d = docsRaw(s, dir).select(col("doc_id"), col("source"), col("n_chars"))
+      val d = docs(s, dir).select(col("doc_id"), col("source"), col("n_chars"))
       // null-safe split key: both pmod predicates are NULL for null
       // doc_id, which would land those rows in NEITHER append while the
       // oracle keeps them — coalesce so the two writes partition ALL rows
@@ -176,7 +176,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions._
       graft.storage.GraftCatalog.registerTemp(s, "qevoa")
       s.sql("CREATE NAMESPACE IF NOT EXISTS qevoa.s")
-      val d = docsRaw(s, dir).select(col("doc_id"), col("source"), col("n_chars"))
+      val d = docs(s, dir).select(col("doc_id"), col("source"), col("n_chars"))
       val splitKey = pmod(coalesce(col("doc_id"), lit(-1L)), lit(3))
       d.filter(splitKey =!= 0)
         .writeTo("qevoa.s.t").using("parquet").createOrReplace()
@@ -201,7 +201,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions._
       graft.storage.GraftCatalog.registerTemp(s, "qevoh")
       s.sql("CREATE NAMESPACE IF NOT EXISTS qevoh.s")
-      val d = docsRaw(s, dir).select(col("doc_id"), col("source"), col("n_chars"))
+      val d = docs(s, dir).select(col("doc_id"), col("source"), col("n_chars"))
       val splitKey = pmod(coalesce(col("doc_id"), lit(-1L)), lit(3))
       d.filter(splitKey =!= 0)
         .writeTo("qevoh.s.t").using("parquet").createOrReplace()
@@ -226,7 +226,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions._
       graft.storage.GraftCatalog.registerTemp(s, "qmig")
       s.sql("CREATE NAMESPACE IF NOT EXISTS qmig.s")
-      val d = docsRaw(s, dir).select(col("doc_id"), col("source"), col("n_chars"))
+      val d = docs(s, dir).select(col("doc_id"), col("source"), col("n_chars"))
       val splitKey = pmod(coalesce(col("doc_id"), lit(-1L)), lit(3))
       d.filter(splitKey =!= 0)
         .writeTo("qmig.s.t").using("parquet").createOrReplace()
@@ -259,7 +259,7 @@ object SparkEntry {
       // name; createOrReplace keeps reruns fresh)
       graft.storage.GraftCatalog.registerTemp(s, "qpos")
       s.sql("CREATE NAMESPACE IF NOT EXISTS qpos.s")
-      val d = docsRaw(s, dir).select(
+      val d = docs(s, dir).select(
         coalesce(col("doc_id"), lit(-1L)).alias("doc_id"),
         col("source"), col("n_chars"))
       d.filter(pmod(col("doc_id"), lit(5)) =!= 0)

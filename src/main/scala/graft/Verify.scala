@@ -14,12 +14,12 @@ object Verify {
     // prefix (local iteration aid; the driver always passes two args).
     val prefix = if (args.length > 2) args(2) else ""
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val spark = Engine.tune(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(_._1.startsWith(prefix)).foreach { case (name, fn) =>

@@ -275,12 +275,9 @@ object Graph {
   /** Headline query: 3-iteration PageRank over the part↔supplier graph,
     * top 20 nodes. `rank_units` is exact (1e-12 units) — hash-comparable.
     * The human-readable `p:`/`s:` label is formatted on the k output rows
-    * only; everything upstream shuffles long ids. The lineitem read declares
-    * the two key columns it uses (int64 in every dataset), so no parquet
-    * footer is opened to infer a schema: a job outside any query. */
+    * only; everything upstream shuffles long ids. */
   def pageRankTop(spark: SparkSession, sfDir: String, k: Int = 20): DataFrame = {
-    val li = graft.Engine.tune(spark).read.schema("l_partkey long, l_suppkey long")
-      .parquet(s"$sfDir/lineitem.parquet")
+    val li = graft.queries.Parity.t(spark, sfDir, "lineitem")
     pageRank(partSupplierEdges(li), iterations = 3, assumeDistinct = true)
       .orderBy(col("rank_units").desc, col("node").asc)
       .limit(k)

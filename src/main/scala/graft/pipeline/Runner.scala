@@ -22,11 +22,13 @@ import graft.storage.Storage
   */
 final class Runner(spark: SparkSession, storage: Storage, fetcher: RecordFetcher) {
 
+  // the session the Runner adopts gets the engine's semantics once: ANSI
+  // off for Silver's null-tolerant casts, dynamic partition overwrite
+  graft.Engine.tune(spark)
+
   final case class RunReport(bronzeRows: Long, silverRows: Long, goldRows: Long, totalCount: Long)
 
   def run(runDate: LocalDate): RunReport = {
-    graft.Engine.tune(spark)
-
     val bronze = write(Bronze.build(spark, fetcher.fetch(), runDate), "bronze")
     val silver = write(Silver.transform(storage.read("bronze"), runDate), "silver")
     val gold = write(Gold.aggregate(storage.read("silver"), runDate), "gold", Gold.totalColumn)

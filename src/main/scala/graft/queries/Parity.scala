@@ -3,8 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Engine
-
 /** SURVEY.md §2.6's declared query inventory, parameterized over the driver
   * testdata (TESTDATA.md). Each query here has a matching DuckDB oracle in
   * [[graft.SparkEntry.oracleSql]] and is hash-compared by the driver at
@@ -26,21 +24,15 @@ import graft.Engine
   */
 object Parity {
 
-  /** Read one testdata table; applies Engine.tune for reference-parity
-    * session semantics (ANSI off, nanos-as-long) on externally-built
-    * sessions (Verify/Bench). */
-  def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    Engine.tune(spark)
-    spark.read.parquet(s"$sfDir/$name.parquet")
-  }
-
-  /** Alias of [[t]], kept for call sites that must DOCUMENT the exact
-    * file-backed layout requirement (catalog-lifecycle queries whose
-    * write side commits a pinned number of files per snapshot — e.g.
-    * q_migrate_layout's bounded `migrate_layout(…, max_files = 1)`
-    * migrates exactly the one legacy file the flat write produced). */
-  def tRaw(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    t(spark, sfDir, name)
+  /** The one reader of a testdata table: the exact file scan, under the
+    * schema [[graft.sources.Tables.schemas]] declares, so reading and
+    * planning run no job and write no session conf. The session is
+    * expected to be tuned already ([[graft.Engine.tune]], where it was built or
+    * adopted). `events` alone is read with its footer's schema: its `ts`
+    * has shipped in two parquet shapes, which [[eventsUs]] tells apart. */
+  def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    graft.sources.Tables.schemas.get(name).fold(spark.read)(spark.read.schema(_))
+      .parquet(s"$sfDir/$name.parquet")
 
   /** [[t]] plus the input-skew guard of optimization guide §2.5 ("one
     * huge unsplittable file"): the driver's testdata ships each table as
@@ -92,7 +84,7 @@ object Parity {
     * The driver's testdata has shipped `ts` in two parquet shapes across
     * generations, and this helper accepts both:
     *  - TIMESTAMP(NANOS): Spark can't represent nanos, so under
-    *    `spark.sql.legacy.parquet.nanosAsLong` (set in [[Engine.tune]]) it
+    *    `spark.sql.legacy.parquet.nanosAsLong` (set in [[graft.Engine.tune]]) it
     *    surfaces as plain LongType of nanos → `div 1000` is exact micros;
     *  - TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark reads
     *    TIMESTAMP_NTZ → cast to the pinned-UTC session's TIMESTAMP and

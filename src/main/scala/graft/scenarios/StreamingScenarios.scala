@@ -47,8 +47,7 @@ object StreamingScenarios {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val batches = args(0).toInt
       // unique key per lineitem row (linenumber <= 7), payload = comment
-      val rows: Array[(Long, String)] = spark.read
-        .parquet(s"$sfDir/lineitem.parquet")
+      val rows: Array[(Long, String)] = queries.Parity.t(spark, sfDir, "lineitem")
         .selectExpr("l_orderkey * 10 + l_linenumber AS k",
           "concat(l_returnflag, l_linestatus, '-', l_shipdate, '-', l_extendedprice) AS payload")
         .as[(Long, String)].collect()
@@ -80,8 +79,7 @@ object StreamingScenarios {
       GraftCatalog.registerTemp(spark, "sbcorp")
       spark.sql("CREATE NAMESPACE IF NOT EXISTS sbcorp.s")
       Streams.bootstrapCorpusState(spark, "sbcorp.s.docs", "doc_id", "text", "lang")
-      val docs: Array[(Long, String, String)] = spark.read
-        .parquet(s"$sfDir/documents.parquet")
+      val docs: Array[(Long, String, String)] = queries.Parity.t(spark, sfDir, "documents")
         .selectExpr("doc_id", "text", "lang")
         .as[(Long, String, String)].collect()
       val input = MemoryStream[(Long, String, String)]

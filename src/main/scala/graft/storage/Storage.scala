@@ -95,8 +95,12 @@ final class CatalogWarehouse(spark: SparkSession, namespace: String = "graft")
       // is V1 insertInto under partitionOverwriteMode=dynamic; on an
       // Iceberg catalog the same call site would be
       // `df.writeTo(t).overwritePartitions()`.
-      // Conf, not a write option: V1 insertInto ignores the option on Spark 4.1.2.
-      df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      // Conf, not a write option: V1 insertInto ignores the option on
+      // Spark 4.1.2. Engine.tune sets it once per session; an untuned
+      // session's static mode would replace every partition.
+      val mode = df.sparkSession.conf.get("spark.sql.sources.partitionOverwriteMode")
+      require(mode.equalsIgnoreCase("dynamic"), s"partitionOverwriteMode is $mode: a re-run " +
+        s"overwrites every partition of ${qualified(table)}; tune the session (Engine.tune)")
       df.write.mode(SaveMode.Overwrite).insertInto(qualified(table))
     }
 

@@ -1,5 +1,6 @@
 package graft
 
+import java.time.LocalDate
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -14,12 +15,15 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoi
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shims
 
+import graft.ingest.RecordFetcher
 import graft.ops.{Dedup, Graph, Pin}
-import graft.queries.TpchSuite
+import graft.pipeline.Runner
+import graft.queries.{Parity, TpchSuite}
+import graft.storage.ParquetWarehouse
 
 /** The materialization primitives in [[graft.ops.Pin]]: their contracts,
-  * and that no operator writes the shared session conf while
-  * materializing. */
+  * and that no operator, testdata read or pipeline run writes the shared
+  * session conf while another query plans on it. */
 class PinSpec extends SparkSpec {
 
   import spark.implicits._
@@ -134,19 +138,36 @@ class PinSpec extends SparkSpec {
       .localCheckpoint(false)
     val edges = s.range(60)
       .select((col("id") % 9).alias("src"), (col("id") * 7 % 11).alias("dst"))
-    // the four tables q21 reads, small and synthetic
+    // the four tables q21 reads, small and synthetic, in the column types
+    // Parity.t declares for the testdata
     val tpch = java.nio.file.Files.createTempDirectory("pin-tpch").toString
     Seq("lineitem" -> s.range(400).select((col("id") % 50).as("l_orderkey"),
         (col("id") % 7).as("l_suppkey"),
-        expr("timestamp'1995-01-01' + make_interval(0, 0, 0, cast(id % 90 as int))")
+        expr("timestamp_ntz'1995-01-01' + make_interval(0, 0, 0, cast(id % 90 as int))")
           .as("l_shipdate")),
       "orders" -> s.range(50).select(col("id").as("o_orderkey"),
-        expr("timestamp'1995-01-01'").as("o_orderdate"), lit("F").as("o_orderstatus")),
+        expr("timestamp_ntz'1995-01-01'").as("o_orderdate"), lit("F").as("o_orderstatus")),
       "supplier" -> s.range(7).select(col("id").as("s_suppkey"),
-        concat(lit("S"), col("id")).as("s_name"), (col("id") % 3).as("s_nationkey")),
-      "nation" -> s.range(10).select(col("id").as("n_nationkey"),
+        concat(lit("S"), col("id")).as("s_name"), (col("id") % 3).cast("int").as("s_nationkey")),
+      "nation" -> s.range(10).select(col("id").cast("int").as("n_nationkey"),
         concat(lit("NATION_"), col("id")).as("n_name"))
     ).foreach { case (name, df) => df.write.parquet(s"$tpch/$name.parquet") }
+    // a testdata query and a medallion day, each checked against its serial run
+    val breweries = (1 to 3).map(i => s"""{"id": "b-$i", "name": "Brewery $i",
+      "brewery_type": "micro", "city": "Portland", "state_province": "Oregon",
+      "country": "United States", "longitude": "-122.5", "latitude": "45.5",
+      "phone": "(503) 555-000$i"}""")
+    val sf = s"${sys.props("user.home")}/testdata/sf0.001"
+    def testdataQuery() = Parity.pricingSummary(s, sf).collect().toSeq
+    def medallionDay() = {
+      val wh = new ParquetWarehouse(s,
+        java.nio.file.Files.createTempDirectory("pin-medallion").toString)
+      val r = new Runner(s, wh, new RecordFetcher { def fetch(): Seq[String] = breweries })
+        .run(LocalDate.of(2024, 1, 15))
+      (r.bronzeRows, r.silverRows, r.goldRows, r.totalCount)
+    }
+    val (serialQuery, serialDay) = (testdataQuery(), medallionDay())
+    assert(serialQuery.nonEmpty && serialDay._1 == 3L && serialDay._2 == 3L, serialDay)
     val problems = new ConcurrentLinkedQueue[String]()
     @volatile var done = false
     val planned = new AtomicInteger(0)
@@ -156,8 +177,13 @@ class PinSpec extends SparkSpec {
         Graph.pageRank(edges, iterations = 2)
         TpchSuite.q21(s, tpch)
         Pin(s.range(500).groupBy((col("id") % 7).as("k")).count()).unpersist()
-      } catch { case t: Throwable => problems.add(s"operator thread: $t") }
-      finally done = true)
+      } catch { case t: Throwable => problems.add(s"operator thread: $t") })
+    val readers = new Thread(() =>
+      try for (_ <- 1 to 3) {
+        if (testdataQuery() != serialQuery) problems.add("testdata query differs from serial")
+        val day = medallionDay()
+        if (day != serialDay) problems.add(s"medallion day $day differs from serial $serialDay")
+      } catch { case t: Throwable => problems.add(s"reader thread: $t") })
     val planner = new Thread(() =>
       try while (!done) {
         val q = s.range(200).groupBy((col("id") % 5).as("k")).count()
@@ -168,8 +194,10 @@ class PinSpec extends SparkSpec {
         if (s.conf.get(cachedKey) != "false") problems.add(s"$cachedKey read flipped")
         planned.incrementAndGet()
       } catch { case t: Throwable => problems.add(s"planning thread: $t") })
-    operators.start(); planner.start()
-    operators.join(); planner.join()
+    operators.start(); readers.start(); planner.start()
+    operators.join(); readers.join()
+    done = true
+    planner.join()
     assert(problems.isEmpty, problems.asScala.take(5).mkString("\n"))
     assert(planned.get() > 0)
   }
@@ -180,12 +208,26 @@ class PinSpec extends SparkSpec {
     assert(dirs.forall(_.isDirectory), dirs)
     def files(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    def lines(f: java.io.File) =
+      java.nio.file.Files.readAllLines(f.toPath).asScala.zipWithIndex.toSeq
     val writes = "conf\\.(set|unset)\\(".r
+    val storage = new java.io.File("src/main/scala/graft/storage/Storage.scala")
     val hits = for {
-      f <- dirs.flatMap(files) if f.getName.endsWith(".scala")
-      (line, i) <- java.nio.file.Files.readAllLines(f.toPath).asScala.zipWithIndex
+      f <- dirs.flatMap(files) :+ storage if f.getName.endsWith(".scala")
+      (line, i) <- lines(f)
       if writes.findFirstIn(line).isDefined
     } yield s"${f.getPath}:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("\n"))
+    // the session is tuned once, where it is built or adopted: at most one
+    // call in each of these files, none anywhere else
+    val tuneSites = Set("Verify", "Bench", "Scenarios", "SparkEntry", "pipeline/Runner")
+      .map(n => s"src/main/scala/graft/$n.scala")
+    val tunes = for {
+      f <- files(new java.io.File("src/main/scala")) if f.getName.endsWith(".scala")
+      calls = lines(f).filter(_._1.contains("Engine.tune("))
+      if !(tuneSites(f.getPath) && calls.size <= 1)
+      (line, i) <- calls
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(tunes.isEmpty, tunes.mkString("\n"))
   }
 }

@@ -127,6 +127,18 @@ class PipelineSpec extends SparkSpec with TimeLimits {
       .filter(col("extraction_date") === lit(java.sql.Date.valueOf(d))).count() == 3)
   }
 
+  test("catalog warehouse: a re-run write on an untuned session fails " +
+      "instead of overwriting every partition") {
+    val s = spark.newSession()
+    val wh = new CatalogWarehouse(s, "graft_untuned")
+    wh.writePartitioned(Bronze.build(s, sample, d), "bronze")
+    val e = intercept[IllegalArgumentException](
+      wh.writePartitioned(Bronze.build(s, sample, d.plusDays(1)), "bronze"))
+    assert(e.getMessage.contains("Engine.tune"), e.getMessage)
+    assert(wh.read("bronze").filter(col("extraction_date") === lit(java.sql.Date.valueOf(d)))
+      .count() == 3)
+  }
+
   private def v2Warehouse(catalog: String): V2CatalogWarehouse = {
     spark.conf.set(s"spark.sql.catalog.$catalog", classOf[graft.storage.GraftCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$catalog.warehouse",
