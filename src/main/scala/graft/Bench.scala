@@ -54,7 +54,7 @@ object Bench {
     "prep_negatives", "prep_bpe_pairs",
     // round-6 graph/classifier/ordering operators: the iterative PageRank
     // (multi-job loop — a cost profile nothing else in the set has), the
-    // fixed-point centroid aggregate, and the two-pass global enumeration
+    // fixed-point centroid aggregate, and the global enumeration
     "q_pagerank", "sim_label_confusion", "prep_shuffle_order",
     // the mergeable count-min sketch, the capped posting-list self-join,
     // and the two-tower sparse+dense fusion

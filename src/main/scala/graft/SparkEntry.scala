@@ -802,8 +802,8 @@ object SparkEntry {
         .orderBy("doc_id")),
     // Distributed suffix-array ranks by prefix doubling (Manber–Myers /
     // Flick–Aluru; the Lee et al. 2107.06499 §4 index) — ⌈log₂ maxlen⌉
-    // rounds of bounded shuffles, dense ranks via the range-sort
-    // enumeration, never a single-partition window.
+    // rounds of bounded shuffles, dense ranks via TrainPrep's running
+    // count, never a data-wide single-partition window.
     "dedup_suffix_array" -> ((s, dir) =>
       Dedup.suffixRanks(docs(s, dir), "doc_id", "text")
         .orderBy("doc_id", "pos")),

@@ -518,9 +518,11 @@ object Dedup {
   private def pairTable(pairs: DataFrame): (DataFrame, Boolean) = {
     val (p0, seen) = Pin.measured(pairs.select(col("id_a"), col("id_b"))
       .filter(col("id_a").isNotNull && col("id_b").isNotNull))
+    // the broadcast threshold, not Pin.partitions: union-find holds 2–3×
+    // the pair bytes, as a broadcast build side does
     val threshold = p0.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val bytes = Option(seen("bytes")).fold(0L)(_.asInstanceOf[Long])
-    (p0, threshold > 0 && bytes <= threshold && p0.schema.forall(_.dataType == LongType))
+    (p0, threshold > 0 && Pin.bytes(seen) <= threshold &&
+      p0.schema.forall(_.dataType == LongType))
   }
 
   /** Components of the pair table `p0` in one task: the ids sorted and
@@ -1143,10 +1145,12 @@ object Dedup {
     * O(longest doc). Each round is three bounded shuffles: the (doc,pos)
     * self-join that aligns the shifted ranks (per-key fanout exactly 1 —
     * no skew at any corpus shape), a DISTINCT over rank pairs, and the
-    * [[graft.ops.TrainPrep.groupedRunningSum]] range-sort enumeration that
-    * assigns dense ranks to the distinct pairs — never a data-wide
-    * single-partition window. Rounds exit early once all ranks are unique
-    * (checked against the pinned distinct-pair count, one cached scalar).
+    * [[graft.ops.TrainPrep.groupedRunningSum]] running count that assigns
+    * dense ranks to the distinct pairs — one sorted task while they fit
+    * one advisory partition, the two-pass sliced enumeration above it,
+    * never a data-wide single-partition window. Rounds exit early once
+    * all ranks are unique (checked against the distinct-pair count the
+    * running sum measured).
     * Iterative lineage is localCheckpoint-truncated, the
     * [[clustersFast]]/PageRank hygiene.
     *
@@ -1219,17 +1223,16 @@ object Dedup {
         .select(col("__id"), col("pos"), col("__r1"),
           coalesce(col("__r2"), lit(0L)).alias("__r2"))
         .localCheckpoint(false)
-      val keys = Pin(paired.select(col("__r1"), col("__r2")).distinct())
-      val ranks = TP.groupedRunningSum(keys, Nil, Seq("__r1", "__r2"),
-        lit(1L), "r")
+      // the running sum measures the distinct pairs: that is their count
+      val (ranks, _, nRanks) = TP.groupedRunningSumChosen(
+        paired.select(col("__r1"), col("__r2")).distinct(), Nil,
+        Seq("__r1", "__r2"), lit(1L), "r")
       cur = paired.join(ranks, Seq("__r1", "__r2"))
         .select(col("__id"), col("pos"), col("r"))
         .localCheckpoint(false)
       levels += cur
-      val nRanks = keys.count()
       converged = nRanks == nRows || nRanks == prevRanks
       prevRanks = nRanks
-      keys.unpersist()
       k *= 2
     }
     (cur, levels.toSeq)
@@ -1342,8 +1345,8 @@ object Dedup {
     * Scale shape: the index is [[suffixRankLevels]]' log-round bounded
     * shuffles (built with `startWidth` = the largest power of two
     * dividing k, so the LCP walk's widths can express exactly k); the
-    * run assignment is one two-pass [[graft.ops.TrainPrep
-    * .groupedRunningSum]] over the CLASS table in rank order; cuts and
+    * run assignment is one [[graft.ops.TrainPrep.groupedRunningSum]]
+    * over the CLASS table in rank order; cuts and
     * the rewrite are the fixed-k path's own tail (one run-keyed
     * aggregate, the two-pointer excision). */
   def exciseDuplicateSpansSA(

@@ -5,7 +5,6 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType,
   StructField, StructType}
 
@@ -102,17 +101,14 @@ object Graph {
   private final val base = 150000000000L  // 0.15
 
   /** The (src, dst) edge list, deduplicated unless `assumeDistinct`,
-    * measured ([[Pin.measured]]), and the rank loop's partition count: its
-    * measured bytes over the AQE advisory partition size, so the layout
-    * tracks data scale, not core count. */
+    * measured ([[Pin.measured]]), and the rank loop's partition count:
+    * [[Pin.partitions]] of its measured bytes, so the layout tracks data
+    * scale, not core count. */
   private def edgeList(edges: DataFrame, assumeDistinct: Boolean): (DataFrame, Int) = {
     val (e, seen) = Pin.measured(
       if (assumeDistinct) edges.select("src", "dst")
       else edges.select("src", "dst").distinct())
-    val advisory = e.sparkSession.sessionState.conf
-      .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    val bytes = Option(seen("bytes")).fold(0L)(_.asInstanceOf[Long])
-    (e, ((bytes + advisory - 1) / advisory).max(1L).min(1L << 20).toInt)
+    (e, Pin.partitions(e, seen))
   }
 
   /** The whole rank loop in one task over the measured edge list `e`: every

@@ -123,7 +123,22 @@ private[graft] object Pin {
           .alias("bytes") +: metrics: _*)
       .localCheckpoint(true)
     val seen = obs.get
-    val bytes = Option(seen("bytes")).fold(0L)(_.asInstanceOf[Long])
-    (Shims.withStats(ck, seen("rows").asInstanceOf[Long], bytes), seen)
+    (Shims.withStats(ck, seen("rows").asInstanceOf[Long], bytes(seen)), seen)
+  }
+
+  /** The measured bytes among [[measured]]'s metrics (0 over no rows). */
+  def bytes(seen: Map[String, Any]): Long =
+    Option(seen("bytes")).fold(0L)(_.asInstanceOf[Long])
+
+  /** The size rule of the engine's in-task paths: a [[measured]]
+    * checkpoint's bytes in `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+    * partitions, rounded up, at least 1: the partition count AQE would
+    * coalesce it to. 1 means the data fits one task, and a loop over it
+    * runs in that task; above 1 the distributed form runs, laid out in
+    * that many partitions where it has a layout of its own to size. */
+  def partitions(ck: DataFrame, seen: Map[String, Any]): Int = {
+    val advisory = ck.sparkSession.sessionState.conf
+      .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    ((bytes(seen) + advisory - 1) / advisory).max(1L).min(1L << 20).toInt
   }
 }

@@ -1,8 +1,11 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{ArrayBinarySearch, Literal}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shims
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 
 /** Training-set preparation operators: the steps between a cleaned corpus
   * and a tokenizer — deterministic splits, token-budget sequence packing,
@@ -11,8 +14,9 @@ import org.apache.spark.sql.functions._
   * All deterministic (no RNG — reruns and backfills must route every doc
   * to the same split/sequence), all narrow or single-shuffle:
   *  - [[splitByHash]]: per-row arithmetic, zero shuffle;
-  *  - [[packSequences]]: one shuffle on the pack group (window running
-  *    sum), the distributed next-fit approximation of bin packing;
+  *  - [[packSequences]]: a per-group running sum ([[groupedRunningSum]]:
+  *    one task when the input fits one advisory partition, a two-pass
+  *    sliced enumeration above that), next-fit bin packing;
   *  - [[topTokens]]: explode + count + global top-k (partial aggregation
   *    map-side; the final top-k reduces per-partition winners);
   *  - [[scrubText]]: per-row regex, zero shuffle.
@@ -37,74 +41,158 @@ object TrainPrep {
           .otherwise("test"))
   }
 
-  /** Per-group global running sum WITHOUT a group-wide sort task — the
-    * [[shuffleOrder]] two-pass enumeration generalized to groups.
+  /** Per-group global running sum: `out` is the sum of `value` over the
+    * rows of the row's group (`groupCols`; none is one global group, and a
+    * null key is a group of its own) up to and including the row, in
+    * `orderCols` order. Callers guarantee that `value` is non-null and
+    * that the order keys are unique within a group, so the sum is one
+    * function of the rows whatever the partitioning. Output: the group
+    * columns, `df`'s other columns, then `out`, with `df`'s nullability.
     *
-    * `Window.partitionBy(group)` puts each group's ENTIRE corpus through
-    * ONE task's sort: at 100 TB with O(30) languages that is a ~30-task
-    * serialization of the biggest shuffle in the prep pipeline. Here
-    * instead:
-    *  1. range-repartition + sort on (group ++ order) — Spark samples
-    *     bounds, so a big group spans MANY balanced partitions and a
-    *     small one shares a partition with its neighbors;
-    *  2. per-(partition, group) value sums — tiny aggregate;
-    *  3. per-group exclusive prefix over partition ids (window over
-    *     #partitions×#groups-spanning rows, never data rows);
-    *  4. broadcast the offsets back; each row's running sum = its group's
-    *     offset in this partition + the within-(partition, group) running
-    *     sum (that window re-keys on (pid, group): every task handles a
-    *     bounded partition SLICE of a group, never the whole group).
-    * Two passes over the data, every stage parallel; output values are
-    * identical to the serial single-window form (and invariant to the
-    * partition count — offsets re-derive the same global order).
-    *
-    * The range-partitioned frame is pinned (persist + eager count): range
-    * bounds are SAMPLED, and both the counts and the final join must
-    * observe the same bounds — exchange reuse normally guarantees that,
-    * but it is an optimization, not a contract.
+    * The input is measured once ([[Pin.measured]], which also computes
+    * `value`), and the size rule ([[Pin.partitions]]) picks the form:
+    *  - one advisory partition: the serial window, `sum(value)` over
+    *    `partitionBy(group).orderBy(order)`, in the checkpoint's single
+    *    coalesced task. `SinglePartition` satisfies the window, so the
+    *    consumer's job runs it with no exchange: no range sample, no
+    *    offsets, no window re-shuffle.
+    *  - more: the two-pass form ([[twoPass]]), in which no task sorts a
+    *    whole group (`Window.partitionBy(group)` would put each group's
+    *    ENTIRE corpus through ONE task's sort: at 100 TB with O(30)
+    *    languages that is a ~30-task serialization of the biggest shuffle
+    *    in the prep pipeline).
+    * Both forms give the same rows and schema.
     */
   private[graft] def groupedRunningSum(
       df: DataFrame,
       groupCols: Seq[String],
       orderCols: Seq[String],
       value: Column,
-      out: String): DataFrame = {
-    val keys = (groupCols ++ orderCols).map(col)
+      out: String): DataFrame =
+    groupedRunningSumChosen(df, groupCols, orderCols, value, out)._1
+
+  /** [[groupedRunningSum]], whether it ran in one task, and its row count
+    * (the input's, measured: no job). */
+  private[graft] def groupedRunningSumChosen(
+      df: DataFrame,
+      groupCols: Seq[String],
+      orderCols: Seq[String],
+      value: Column,
+      out: String): (DataFrame, Boolean, Long) = {
+    val (in, seen) = Pin.measured(df.withColumn("__grs_v", value.cast("long")))
+    val rows = seen("rows").asInstanceOf[Long]
+    val inTask = Pin.partitions(in, seen) == 1 && !forcedTwoPass.value
+    val w = BoundedWindow.partitionBy(groupCols.map(col))
+      .orderBy(orderCols.map(col(_).asc): _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val summed =
+      if (inTask) in.coalesce(1).withColumn(out, sum(col("__grs_v")).over(w))
+      else twoPass(in, rows, groupCols, orderCols, out)
+    (summed.select((groupCols ++ df.columns.filterNot(groupCols.contains) :+ out)
+      .map(c => col(s"`$c`")): _*), inTask, rows)
+  }
+
+  /** Runs `body` with every [[groupedRunningSum]] it builds on its
+    * two-pass form, at any size: the seam that compares the two forms. */
+  private[graft] def twoPassRunningSums[T](body: => T): T =
+    forcedTwoPass.withValue(true)(body)
+
+  private val forcedTwoPass = new scala.util.DynamicVariable(false)
+
+  /** [[groupedRunningSum]]'s two-pass form over the measured input `in`
+    * of `rows` rows:
+    *  1. slice the rows by (group ++ order) at bounds sampled from `in`
+    *     ([[slices]]), so a big group spans MANY balanced slices and a
+    *     small one shares a slice with its neighbors;
+    *  2. per-(slice, group) value sums — tiny aggregate;
+    *  3. per-group exclusive prefix over slice ids (window over
+    *     #slices×#groups-spanning rows, never data rows);
+    *  4. broadcast the offsets back (a null-safe join: a null group key
+    *     is one group, as in the window); each row's running sum = its
+    *     group's offset in this slice + the within-(slice, group) running
+    *     sum (that window keys on (slice, group): every task handles a
+    *     bounded SLICE of a group, never the whole group).
+    * Two passes over the data, every stage parallel; the values are
+    * invariant to the slice count (offsets re-derive the same global
+    * order).
+    *
+    * The sums and the join must see the same slice for every row, and so
+    * must every later recompute of the result. The slice is a function of
+    * the row's keys and literal bounds, so they do, with no exchange or
+    * materialization shared between them. (A range exchange's
+    * `spark_partition_id()` is not such a function: Spark seeds the
+    * exchange's bound sample with the sampled RDD's id, so each planning
+    * of it, for the sums and again for the join, drew other bounds, and
+    * 40 % of the running sums came out wrong over 20 000 rows.) */
+  private def twoPass(in: DataFrame, rows: Long, groupCols: Seq[String],
+      orderCols: Seq[String], out: String): DataFrame = {
     val parts = math.max(2,
-      df.sparkSession.sessionState.conf.defaultNumShufflePartitions / 2)
-    val parted = Pin(df
-      .withColumn("__grs_v", value.cast("long"))
-      .repartitionByRange(parts, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .withColumn("__grs_pid", spark_partition_id()))
+      in.sparkSession.sessionState.conf.defaultNumShufflePartitions / 2)
+    val parted = in.withColumn("__grs_pid", slices(in, rows, groupCols ++ orderCols, parts))
     val sums = parted
       .groupBy(("__grs_pid" +: groupCols).map(col): _*)
       .agg(sum(col("__grs_v")).alias("__grs_s"))
-    // #(partition, group)-row frame; ungrouped calls take BoundedWindow's
+    // #(slice, group)-row frame; ungrouped calls take BoundedWindow's
     // constant key so the (bounded) serial window never reads as data-wide
     val offW = BoundedWindow.partitionBy(groupCols.map(col))
       .orderBy(col("__grs_pid").asc)
       .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = sums // #(partition, group) rows — the only serial window
+    val g = groupCols.indices.map(i => s"__grs_g$i")
+    val offsets = sums // #(slice, group) rows — the only serial window
       .withColumn("__grs_off", coalesce(sum(col("__grs_s")).over(offW), lit(0L)))
-      .select(("__grs_pid" +: groupCols).map(col) :+ col("__grs_off"): _*)
+      .select(col("__grs_pid").alias("__grs_opid") +:
+        groupCols.zip(g).map { case (c, a) => col(c).alias(a) } :+ col("__grs_off"): _*)
     val rnW = Window.partitionBy(("__grs_pid" +: groupCols).map(col): _*)
       .orderBy(orderCols.map(col(_).asc): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    parted.join(broadcast(offsets), "__grs_pid" +: groupCols)
+    val on = groupCols.zip(g).foldLeft(col("__grs_pid") === col("__grs_opid")) {
+      case (c, (k, a)) => c && (col(k) <=> col(a)) }
+    parted.join(broadcast(offsets), on)
       .withColumn(out, col("__grs_off") + sum(col("__grs_v")).over(rnW))
-      .drop("__grs_v", "__grs_pid", "__grs_off")
+  }
+
+  /** [[twoPass]]'s slice id of a row, `0 until parts`: the number of
+    * bounds below the row's `keys` (a key equal to repeated bounds takes
+    * one of their indices: the id stays monotone in the key, which is
+    * all the offsets need), compared as one struct (ascending, nulls
+    * first: the order the sorts use), found by one binary search of the
+    * bounds as one sorted array literal, so the expression's size does
+    * not grow with `parts`. The `parts - 1` bounds are evenly spaced rows
+    * of a fixed-seed sample of `in` (`rows` rows), sorted in one task: one
+    * job. The sample is the range exchange's: about
+    * `spark.sql.execution.rangeExchange.sampleSizePerPartition` rows per
+    * slice, at most 1 M. */
+  private def slices(in: DataFrame, rows: Long, keys: Seq[String], parts: Int): Column = {
+    val names = keys.indices.map(i => s"k$i")
+    val key = struct(keys.zip(names).map { case (c, n) => col(c).alias(n) }: _*)
+    val keyType = StructType(keys.zip(names).map { case (c, n) =>
+      StructField(n, in.schema(c).dataType) })
+    val perSlice = in.sparkSession.sessionState.conf.rangeExchangeSampleSizePerPartition
+    val sampled = math.min(perSlice.toDouble * parts, 1e6)
+    val sample = in.select(keys.map(col): _*)
+      .sample(withReplacement = false, math.min(1.0, sampled / math.max(rows, 1L)), 0L)
+      .coalesce(1).sortWithinPartitions(keys.map(col): _*).collect()
+    if (sample.isEmpty) lit(0)
+    else {
+      val bounds = Literal.create((1 until parts)
+        .map(i => sample((i.toLong * sample.length / parts).toInt)),
+        ArrayType(keyType, containsNull = false))
+      // the index of an equal bound, else -(the number of bounds below) - 1
+      val at = Shims.column(ArrayBinarySearch(bounds, Shims.expression(key)))
+      when(at >= 0, at).otherwise(-at - 1)
+    }
   }
 
   /** Pack documents into fixed token-budget training sequences: within each
     * `groupCol` (e.g. language), docs ordered by `idCol` fill sequences of
     * at most `budget` tokens — next-fit bin packing as a running sum:
-    * `seq_id = floor(exclusive_cumsum / budget)`. The cumsum is the
-    * [[groupedRunningSum]] two-pass form, so no task ever sorts a whole
-    * group; docs larger than the budget take dedicated sequences.
-    * Deterministic: same corpus → same packing. Callers should prune to
-    * the columns they need first — the two-pass pin materializes the
-    * input schema as-is. */
+    * `seq_id = floor(exclusive_cumsum / budget)`. The cumsum is
+    * [[groupedRunningSum]]'s: the serial window in one task when the input
+    * fits one advisory partition, and above that the two-pass form, in
+    * which no task sorts a whole group. Docs larger than the budget take
+    * dedicated sequences. Deterministic: same corpus → same packing.
+    * Callers should prune to the columns they need first — the running
+    * sum measures and materializes the input schema as-is. */
   def packSequences(
       df: DataFrame,
       idCol: String,
@@ -126,9 +214,10 @@ object TrainPrep {
     *    boundary (contiguous-stream packing splits the tail into the
     *    following sequence(s) — the standard pack-then-split layout).
     *
-    * Same single enumeration as [[packSequences]] (the manifest columns are
-    * pure projections of the running sum — no extra shuffle), same
-    * determinism: corpus → identical manifest on any engine. */
+    * Same single running sum as [[packSequences]], under the same size
+    * rule (the manifest columns are pure projections of it — no extra
+    * shuffle), same determinism: corpus → identical manifest on any
+    * engine. */
   def packManifest(
       df: DataFrame,
       idCol: String,
@@ -337,11 +426,12 @@ object TrainPrep {
     *  - deterministic: same corpus → same negatives, any engine;
     *  - uniform-ish: ring order is hash order, uncorrelated with id order
     *    or content;
-    *  - positions come from [[groupedRunningSum]]'s two-pass enumeration —
-    *    no task ever sorts a whole group (the former
-    *    `Window.partitionBy(group)` serialized each language through one
-    *    task at scale); the neighbor lookup is a position-keyed self-join,
-    *    hash-parallel across positions;
+    *  - positions come from [[groupedRunningSum]]: one task when the ring
+    *    fits one advisory partition, and above that the two-pass
+    *    enumeration, in which no task sorts a whole group (a
+    *    `Window.partitionBy(group)` at any size would serialize each
+    *    language through one task at scale); the neighbor lookup is a
+    *    position-keyed self-join, hash-parallel across positions;
     *  - wrap-around means every doc gets exactly `min(k, group size − 1)`
     *    negatives (singleton groups get none).
     *
@@ -386,11 +476,13 @@ object TrainPrep {
     *     ([[Dedup.exactByKey]]) — one shuffle on the text fingerprint;
     *  4. deterministic train/val/test split ([[splitByHash]]) — narrow;
     *  5. token-budget sequence packing per (split, lang)
-    *     ([[packSequences]]) — one window shuffle.
+    *     ([[packSequences]]) — one task within an advisory partition, the
+    *     two-pass enumeration above it.
     *
     * Output: one row per surviving doc with its split and sequence
     * assignment — the manifest a tokenizer consumes. Wide shuffles: the
-    * dedup fingerprint groupBy and the packing window; the surviving-id
+    * dedup fingerprint groupBy and, above one advisory partition, the
+    * packing's (slice, group) window exchange; the surviving-id
     * join broadcasts while the id list fits (measured plan at test scale)
     * and degrades to an id-keyed shuffle join beyond that — ids only,
     * never text.
@@ -603,17 +695,11 @@ object TrainPrep {
         .select(col(idCol), col("cluster_id")), Seq(idCol), "left")
       .filter(coalesce(col("cluster_id"), col(idCol)) === col(idCol))
       .drop("cluster_id")
-    // r17: prune to the manifest columns and MATERIALIZE before packing —
-    // packManifest's repartitionByRange computes its input twice (the
-    // range-partitioner's sampling pass, then the shuffle write), and
-    // here that input is the whole keeper join tree (gated ∪ batch ⋈ the
-    // incremental label assembly's four joins). The checkpoint is skinny
-    // (ids + counts, never text) so at any scale it trades one re-run of
-    // the join tree for a manifest-width materialization (guide §2.3).
-    // Measured: the packing's joins then plan by its real size.
-    val (keptSkinny, _) = Pin.measured(kept
-      .select(col(idCol), col(langCol), col("n_tokens"), col("n_redactions")))
-    packManifest(keptSkinny, idCol, langCol, budget)
+    // prune to the manifest columns (ids + counts, never text): the
+    // packing's running sum measures its input, so the keeper join tree
+    // (gated ∪ batch ⋈ the incremental label assembly) runs once
+    packManifest(kept.select(col(idCol), col(langCol), col("n_tokens"),
+      col("n_redactions")), idCol, langCol, budget)
   }
 
   /** PII scrubbing: replace email-shaped and long-digit-run substrings with
@@ -936,7 +1022,7 @@ object TrainPrep {
       .select(col("__r.*"))
     val chunks = chunkDocuments(
       surviving, idCol, "scrubbed", chunkSize, stride, carryCols = Seq(langCol))
-    // prune to the manifest columns BEFORE the two-pass packing (its pin
+    // prune to the manifest columns BEFORE the packing (its measurement
     // materializes the input schema as-is; chunk text must not ride along)
     val split = splitByHash(chunks, idCol)
       .select(col(idCol), col("chunk_id"), col(langCol), col("split"),
@@ -1171,19 +1257,19 @@ object TrainPrep {
   /** Deterministic global training-order shuffle: every row gets a unique
     * contiguous position `pos` (0-based) in hash-of-id order.
     *
-    * The scalable global-enumeration pattern — NOT a single-partition
-    * `row_number()` window (which serializes the corpus through one task):
-    *  1. range-repartition + sort within partitions on (hash, id) — Spark
-    *     samples range bounds, so partitions are balanced;
-    *  2. count rows per partition (tiny aggregate: one row per partition);
-    *  3. prefix-sum those counts into per-partition offsets (window over
-    *     #partitions rows, not data rows);
-    *  4. broadcast-join offsets back and add the within-partition
-    *     `row_number()` (parallel: each window partition IS a data
-    *     partition).
-    * Two passes over the data, every stage parallel — the same shape RDD
-    * `zipWithIndex` uses, expressed in DataFrame operators so pushdown and
-    * codegen survive. */
+    * The ungrouped case of [[groupedRunningSum]], a running count in
+    * (hash, id) order, under its size rule:
+    *  - input within one advisory partition: the running count is one
+    *    sorted window in one task;
+    *  - above it, the scalable global-enumeration pattern — NOT a
+    *    single-partition window, which would serialize the corpus through
+    *    one task: slice the rows by (hash, id) at sampled bounds, so
+    *    slices are balanced, count rows per slice (one row per slice),
+    *    prefix-sum those counts into per-slice offsets, and
+    *    broadcast-join them back to the within-slice running count.
+    *    Two passes over the data, every stage parallel — the same shape
+    *    RDD `zipWithIndex` uses, expressed in DataFrame operators so
+    *    pushdown and codegen survive. */
   def shuffleOrder(df: DataFrame, idCol: String): DataFrame = {
     // Small additive constant: keeps id*mult+add inside 63 bits for any id
     // the oracle engines see — bigint overflow WRAPS in Spark (ANSI off)
@@ -1191,9 +1277,6 @@ object TrainPrep {
     val hashed = df.withColumn("h",
       pmod(col(idCol).cast("long") * lit(2654435761L) + lit(40507L),
         lit(4294967296L)))
-    // the degenerate (single global group) case of the two-pass per-group
-    // enumeration; the helper pins its range-partitioned frame, so the
-    // sampled bounds are observed exactly once by both consumers
     groupedRunningSum(hashed, Nil, Seq("h", idCol), lit(1L), "__pos")
       .withColumn("pos", col("__pos") - 1)
       .drop("__pos")

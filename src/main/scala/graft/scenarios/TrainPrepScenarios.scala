@@ -232,11 +232,14 @@ object TrainPrepScenarios {
         "rows" -> manyRows)
     }),
 
-    /* The two-pass grouped enumeration (SCALE.md §grouped-enumeration) on
+    /* [[TrainPrep.groupedRunningSum]] (SCALE.md §Grouped enumeration) on
      * a corpus where ONE language holds 90 % of the rows — the shape that
      * serializes a `Window.partitionBy(lang)` running sum through a single
-     * task: the group-wide window (the pre-round-7 packSequences) against
-     * [[TrainPrep.packSequences]]. Seq assignments must be identical. */
+     * task. Times the packing's running sum three ways: the group-wide
+     * serial window (the pre-round-7 packSequences), the form the size
+     * rule chooses (`path`: `in_task` within one advisory partition, else
+     * `distributed`), and the two-pass form forced at any size. Seq
+     * assignments must be identical. */
     Scenario("grouped_enum", Seq("5000000"), (spark, _, args) => {
       val n = args(0).toLong
       // 90 % of rows in "en", the rest across 9 small languages
@@ -244,18 +247,21 @@ object TrainPrepScenarios {
         col("id").alias("doc_id"),
         when(pmod(col("id"), lit(10)) < 9, lit("en"))
           .otherwise(concat(lit("l"), pmod(col("id"), lit(10)))).alias("lang"),
-        (pmod(col("id"), lit(100)) + 10).alias("toks"))
-
-      def serialPack() = {
-        val w = Window.partitionBy(col("lang")).orderBy(col("doc_id").asc)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        docs.withColumn("n_tokens", col("toks"))
-          .withColumn("__cum", sum(col("n_tokens")).over(w))
-          .withColumn("seq_id",
-            floor((col("__cum") - col("n_tokens")) / lit(512)).cast("long"))
-          .drop("__cum")
+        (pmod(col("id"), lit(100)) + 10).alias("n_tokens"))
+      def seqIds(cum: DataFrame) = cum.select(col("doc_id"),
+        floor((col("__cum") - col("n_tokens")) / lit(512)).cast("long").alias("seq_id"))
+      def serial() = seqIds(docs.withColumn("__cum", sum(col("n_tokens")).over(
+        Window.partitionBy(col("lang")).orderBy(col("doc_id").asc)
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow))))
+      var inTask = false
+      def chosen() = {
+        val (cum, one, _) = TrainPrep.groupedRunningSumChosen(docs, Seq("lang"), Seq("doc_id"),
+          col("n_tokens"), "__cum")
+        inTask = one
+        seqIds(cum)
       }
-      def twoPass() = TrainPrep.packSequences(docs, "doc_id", "lang", col("toks"), 512)
+      def twoPass() = TrainPrep.twoPassRunningSums(seqIds(TrainPrep.groupedRunningSum(
+        docs, Seq("lang"), Seq("doc_id"), col("n_tokens"), "__cum")))
 
       // aggregate over seq_id so the enumeration cannot be pruned away (a
       // bare count() lets ColumnPruning delete the unused window entirely)
@@ -263,18 +269,25 @@ object TrainPrepScenarios {
         val t = time(df.agg(sum(col("seq_id")), max(col("seq_id"))).collect())._1
         spark.catalog.clearCache(); t
       }
-      // warm both plans once at 1/10 size for JIT parity, then measure
-      TrainPrep.packSequences(docs.limit((n / 10).toInt), "doc_id", "lang",
-        col("toks"), 512).count()
+      // warm the plans once at 1/10 size for JIT parity, then measure; the
+      // two-pass form forced too, since 1/10 of the rows may fit one task
+      val small = docs.limit((n / 10).toInt)
+      TrainPrep.packSequences(small, "doc_id", "lang", col("n_tokens"), 512).count()
+      TrainPrep.twoPassRunningSums(
+        TrainPrep.packSequences(small, "doc_id", "lang", col("n_tokens"), 512).count())
       spark.catalog.clearCache()
-      val s1 = measure(serialPack())
-      val s2 = measure(twoPass())
-      // identical assignments — the two forms are the same function
-      val mism = serialPack().select(col("doc_id"), col("seq_id").alias("a"))
-        .join(twoPass().select(col("doc_id"), col("seq_id").alias("b")), "doc_id")
-        .filter(col("a") =!= col("b")).count()
-      require(mism == 0, s"seq assignments diverged: $mism")
-      Seq("rows" -> n, "serial_s" -> s1, "two_pass_s" -> s2)
+      val serialS = measure(serial())
+      val chosenS = measure(chosen())
+      val twoPassS = measure(twoPass())
+      // identical assignments — the three forms are the same function
+      val joined = serial().withColumnRenamed("seq_id", "a")
+        .join(chosen().withColumnRenamed("seq_id", "b"), "doc_id")
+        .join(twoPass().withColumnRenamed("seq_id", "c"), "doc_id")
+      val (rows, mism) = (joined.count(),
+        joined.filter(col("a") =!= col("b") || col("a") =!= col("c")).count())
+      require(rows == n && mism == 0, s"seq assignments diverged: $mism of $rows rows")
+      Seq("rows" -> n, "path" -> (if (inTask) "in_task" else "distributed"),
+        "serial_s" -> serialS, "chosen_s" -> chosenS, "two_pass_s" -> twoPassS)
     }),
 
     /* [[TrainPrep.bigramFamiliarity]] on a deterministic Zipfian corpus

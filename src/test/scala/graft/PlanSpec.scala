@@ -134,23 +134,46 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("partial_count") || p.contains("Partial"))
   }
 
-  /** The packing stage is the two-pass grouped enumeration
-    * ([[graft.ops.TrainPrep.groupedRunningSum]]): its data-wide shuffles
-    * are the sampled RANGE partition plus ONE hash exchange for the
-    * (pid, group)-sliced running-sum window — no task ever sorts a whole
-    * (split, lang) group. The remaining hash exchanges carry reduced rows:
-    * the per-(pid, group) partial-aggregate and the #partitions-sized
-    * offsets prefix-sum. Signature census (dedup'd by grouping keys, so
-    * the pinned cache's double-rendered subplan doesn't double-count). */
+  /** Above one advisory partition the packing stage is the two-pass
+    * grouped enumeration ([[graft.ops.TrainPrep.groupedRunningSum]]; these
+    * cases force it at sf0.001 through its seam): rows are sliced by a
+    * binary search of sampled bounds, and its one data-wide shuffle is the
+    * hash exchange for the (pid, group)-sliced running-sum window — no
+    * task ever sorts a whole (split, lang) group. The remaining hash
+    * exchanges carry reduced rows: the per-(pid, group) partial-aggregate
+    * and the #slices-sized offsets prefix-sum. Signature census (dedup'd
+    * by grouping keys, so a subplan rendered twice doesn't double-count). */
   private def hashExchangeKeys(p: String): Set[String] =
     p.linesIterator.filter(_.contains("Arguments: hashpartitioning"))
       .map(_.replaceAll(".*hashpartitioning\\(", "").replaceAll("#\\d+L?", "")
         .replaceAll(", \\d+\\).*", "")).toSet
 
+  /** `q`'s plan on the forced two-pass form, after the plans of the
+    * executions that building it runs: the running sum measures its input
+    * eagerly, so the stages upstream of the packing (the fingerprint
+    * dedup) run in that measurement, not in the final plan. */
+  private def twoPassPlans(q: String): String = {
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            ran.add(s.physicalPlanDescription)
+          case _ =>
+        }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val p = graft.ops.TrainPrep.twoPassRunningSums(plan(q))
+      org.apache.spark.sql.graftshim.Shims.drainListenerBus(spark.sparkContext)
+      (ran.toArray.toSeq :+ p).mkString("\n")
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   test("prep_corpus: dedup groupBy + two-pass packing, no group-wide window") {
-    val p = plan("prep_corpus")
-    assert(p.toLowerCase.contains("rangepartitioning"),
-      s"packing must range-partition (two-pass enumeration):\n$p")
+    val p = twoPassPlans("prep_corpus")
+    assert(p.contains("binarySearch"),
+      s"packing must slice by sampled bounds (two-pass enumeration):\n$p")
     val keys = hashExchangeKeys(p)
     assert(keys == Set("__fp", "__grs_pid, split, lang", "split, lang"),
       s"unexpected hash-exchange key census: $keys\n$p")
@@ -162,8 +185,8 @@ class PlanSpec extends SparkSpec {
   test("prep_corpus_chunked: chunking adds NO shuffle over prep_corpus") {
     // same wide stages as prep_corpus — fingerprint dedup + the two-pass
     // packing; the chunk explode and the doc-hash split are narrow
-    val p = plan("prep_corpus_chunked")
-    assert(p.toLowerCase.contains("rangepartitioning"), p)
+    val p = twoPassPlans("prep_corpus_chunked")
+    assert(p.contains("binarySearch"), p)
     val keys = hashExchangeKeys(p)
     assert(keys == Set("__fp", "__grs_pid, split, lang", "split, lang"),
       s"unexpected hash-exchange key census: $keys\n$p")

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 import graft.ops.{TextAnalysis, TrainPrep}
 
@@ -201,8 +204,9 @@ class TrainPrepSpec extends SparkSpec {
     // broadcast one); the state's four tables are read with the schemas the
     // engine wrote and the batch with a declared one, so no footer-inference
     // job runs; the components run in one task (Dedup.clustersFast's rule;
-    // 41 jobs with the doubling loop's rounds)
-    assert(rows > 0 && jobs <= 29, s"$jobs jobs for $rows manifest rows")
+    // 41 jobs with the doubling loop's rounds), and so does the re-pack's
+    // running sum (groupedRunningSum's rule; 29 jobs with the two-pass form)
+    assert(rows > 0 && jobs <= 21, s"$jobs jobs for $rows manifest rows")
   }
 
   test("temperatureMixture: sqrt weights flatten source skew; Hamilton " +
@@ -955,9 +959,13 @@ class TrainPrepSpec extends SparkSpec {
     "in one partition") {
     import spark.implicits._
     val df = Seq.tabulate(50)(i => (i.toLong, s"d$i")).toDF("id", "text")
-    val plan = TrainPrep.shuffleOrder(df, "id")
+    // the two-pass form, forced: 50 rows fit one advisory partition
+    val plan = TrainPrep.twoPassRunningSums(TrainPrep.shuffleOrder(df, "id"))
       .queryExecution.executedPlan.toString
-    assert(plan.contains("rangepartitioning") || plan.contains("RangePartitioning"))
+    // the rows are sliced by a binary search of sampled bounds on
+    // (hash, id) over the measured checkpoint, with no range exchange
+    assert(plan.contains("Scan ExistingRDD") && plan.contains("binarySearch"), plan)
+    assert(!plan.toLowerCase.contains("rangepartitioning"), plan)
     // the per-partition enumeration window is keyed by pid — a non-empty
     // windowspecdefinition, so no data-wide single-partition window
     // (plan string, not a tree collect: AQE wraps the tree pre-execution)
@@ -968,10 +976,13 @@ class TrainPrepSpec extends SparkSpec {
     "range partitioning, no group-wide window over the data") {
     val df = Seq.tabulate(60)(i => (i.toLong, if (i % 3 == 0) "en" else "fr", 10L))
       .toDF("doc_id", "lang", "toks")
-    val pPack = TrainPrep.packSequences(df, "doc_id", "lang", col("toks"), 512)
+    // the two-pass form, forced: 60 rows fit one advisory partition
+    val pPack = TrainPrep.twoPassRunningSums(
+        TrainPrep.packSequences(df, "doc_id", "lang", col("toks"), 512))
       .queryExecution.executedPlan.toString
-    assert(pPack.toLowerCase.contains("rangepartitioning"),
-      s"packing must range-partition, not hash the whole group to one task:\n$pPack")
+    // sliced by a binary search of sampled bounds over the measured checkpoint
+    assert(pPack.contains("Scan ExistingRDD") && pPack.contains("binarySearch"), pPack)
+    assert(!pPack.toLowerCase.contains("rangepartitioning"), pPack)
     // every data-sized window is keyed by (pid, group) — a whole group
     // never sorts in one task; the only lang-keyed windowspec without a
     // pid prefix is the offsets prefix-sum over #partitions-sized input
@@ -980,12 +991,77 @@ class TrainPrepSpec extends SparkSpec {
     assert(!pPack.contains("windowspecdefinition(lang#") ||
       pPack.contains("windowspecdefinition(__grs_pid"),
       s"group-wide data window found:\n$pPack")
-    val pNeg = TrainPrep.negativeSamples(df, "doc_id", "lang", k = 2)
+    val pNeg = TrainPrep.twoPassRunningSums(
+        TrainPrep.negativeSamples(df, "doc_id", "lang", k = 2))
       .queryExecution.executedPlan.toString
-    assert(pNeg.toLowerCase.contains("rangepartitioning"),
-      s"ring positions must come from the two-pass enumeration:\n$pNeg")
+    assert(pNeg.contains("Scan ExistingRDD") && pNeg.contains("binarySearch"), pNeg)
     assert(pNeg.contains("windowspecdefinition(__grs_pid"),
       s"expected the (pid, group)-sliced position window:\n$pNeg")
+  }
+
+  test("groupedRunningSum: the in-task window keeps the measured checkpoint's " +
+    "one partition — no exchange, the window keyed by the group") {
+    val df = Seq.tabulate(60)(i => (i.toLong, if (i % 3 == 0) "en" else "fr", 10L))
+      .toDF("doc_id", "lang", "toks")
+    val (packed, inTask, _) = TrainPrep.groupedRunningSumChosen(df, Seq("lang"),
+      Seq("doc_id"), col("toks"), "cum")
+    assert(inTask)
+    val p = packed.queryExecution.executedPlan.toString
+    assert(p.contains("Scan ExistingRDD") && p.contains("Coalesce 1"), p)
+    assert(!p.contains("Exchange") && !p.toLowerCase.contains("rangepartitioning"), p)
+    assert(p.contains("windowspecdefinition(lang#") && !p.contains("__grs_pid"), p)
+  }
+
+  private def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+
+  test("groupedRunningSum: the in-task and two-pass forms give equal rows and " +
+    "schemas on random tables") {
+    // non-null values; o1 is unique, so every order key is unique per group
+    val row = for {
+      g1 <- Gen.oneOf(Some("a"), Some("b"), None)
+      g2 <- Gen.oneOf(Some(1), Some(2), None)
+      o2 <- Gen.chooseNum(0, 3)
+      v <- Gen.chooseNum(-5L, 100L)
+    } yield (g1, g2, o2, v)
+    val table = Gen.chooseNum(2, 40).flatMap(Gen.listOfN(_, row))
+    // 1000 rows: enough that the two-pass form samples, not takes, the
+    // rows its slice bounds come from
+    val tables = Seq(Nil, List((Some("a"), None, 1, 7L))) ++
+      (0 until 5).flatMap(i => table.apply(Gen.Parameters.default, Seed(120L + i))) ++
+      Gen.listOfN(1000, row).apply(Gen.Parameters.default, Seed(130L))
+    assert(tables.size == 8)
+    val calls = Seq(Nil -> Seq("o1"), Seq("g1") -> Seq("o1"),
+      Seq("g1", "g2") -> Seq("o2", "o1"), Seq("g2") -> Seq("o2", "o1"))
+    // the 1000-row table also runs at 16 shuffle partitions: 8 slices, 7
+    // bounds to search (2 slices at the suite's 4)
+    val wide = Engine.tune(spark.newSession())
+    wide.conf.set("spark.sql.shuffle.partitions", "16")
+    for (rs <- tables; s <- if (rs.size == 1000) Seq(spark, wide) else Seq(spark);
+         (groups, orders) <- calls) {
+      val df = s.createDataFrame(rs.zipWithIndex.map { case ((g1, g2, o2, v), i) =>
+        (g1, g2, i * 7919L % 1009, o2, v) }).toDF("g1", "g2", "o1", "o2", "v")
+      val (one, inTask, _) = TrainPrep.groupedRunningSumChosen(df, groups, orders, col("v"), "s")
+      val two = TrainPrep.twoPassRunningSums(
+        TrainPrep.groupedRunningSum(df, groups, orders, col("v"), "s"))
+      assert(inTask, s"$rs left the in-task path")
+      assert(one.schema == two.schema, s"$groups / $orders over $rs")
+      assert(sorted(one) == sorted(two), s"$groups / $orders over $rs")
+    }
+  }
+
+  test("packSequences: null-group docs are kept and packed as one group on " +
+    "both forms") {
+    val docs = Seq[(Long, Option[String], Long)]((0L, Some("en"), 300L),
+      (1L, None, 300L), (2L, Some("en"), 300L), (3L, None, 300L))
+      .toDF("doc_id", "lang", "toks")
+    def packed(df: DataFrame) = df.collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("seq_id")).toMap
+    val one = packed(TrainPrep.packSequences(docs, "doc_id", "lang", col("toks"), 300))
+    val two = packed(TrainPrep.twoPassRunningSums(
+      TrainPrep.packSequences(docs, "doc_id", "lang", col("toks"), 300)))
+    // each group's exclusive cumsums are 0, 300 -> seqs 0, 1
+    assert(one == Map(0L -> 0L, 1L -> 0L, 2L -> 1L, 3L -> 1L), one)
+    assert(two == one, two)
   }
 
   test("preferencePairs: max/min by score with deterministic id tiebreak, " +
