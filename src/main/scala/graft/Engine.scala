@@ -65,11 +65,14 @@ object Engine {
     // streaming column pruning for graft-table sources — sessions built
     // here get it via GraftExtensions; externally-created sessions
     // (tests, Verify/Bench per the driver contract) get the same rule
-    // through experimental.extraOptimizations, which feeds the same
-    // user-provided optimizer batch
+    // through experimental.extraOptimizations. That batch runs after
+    // Spark's V2Writes has planned each write's distribution, so it is
+    // also where a catalog write whose input fits one advisory partition
+    // trades its rebalance shuffle for one task (graft.storage.OneTaskWrite)
     val extra = spark.experimental.extraOptimizations
-    if (!extra.contains(graft.sources.PruneGraftStreamColumns))
-      spark.experimental.extraOptimizations = extra :+ graft.sources.PruneGraftStreamColumns
+    val missing = Seq(graft.sources.PruneGraftStreamColumns, graft.storage.OneTaskWrite)
+      .filterNot(extra.contains)
+    if (missing.nonEmpty) spark.experimental.extraOptimizations = extra ++ missing
     spark
   }
 }

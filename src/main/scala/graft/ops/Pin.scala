@@ -132,13 +132,18 @@ private[graft] object Pin {
 
   /** The size rule of the engine's in-task paths: a [[measured]]
     * checkpoint's bytes in `spark.sql.adaptive.advisoryPartitionSizeInBytes`
-    * partitions, rounded up, at least 1: the partition count AQE would
-    * coalesce it to. 1 means the data fits one task, and a loop over it
-    * runs in that task; above 1 the distributed form runs, laid out in
-    * that many partitions where it has a layout of its own to size. */
-  def partitions(ck: DataFrame, seen: Map[String, Any]): Int = {
-    val advisory = ck.sparkSession.sessionState.conf
-      .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    ((bytes(seen) + advisory - 1) / advisory).max(1L).min(1L << 20).toInt
-  }
+    * partitions ([[partitions(bytes:BigInt,advisory:Long)*]]). 1 means the
+    * data fits one task, and a loop over it runs in that task; above 1 the
+    * distributed form runs, laid out in that many partitions where it has
+    * a layout of its own to size. */
+  def partitions(ck: DataFrame, seen: Map[String, Any]): Int =
+    partitions(BigInt(bytes(seen)), ck.sparkSession.sessionState.conf
+      .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+
+  /** `bytes` in `advisory`-byte partitions, rounded up, at least 1: the
+    * partition count AQE would coalesce them to. The one size test of
+    * the in-task paths above and of the catalog's one-task writes
+    * ([[graft.storage.OneTaskWrite]]), which pass a plan's size estimate. */
+  def partitions(bytes: BigInt, advisory: Long): Int =
+    ((bytes + advisory - 1) / advisory).max(1).min(1 << 20).toInt
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shims
 
 /** SURVEY.md §2.6's declared query inventory, parameterized over the driver
   * testdata (TESTDATA.md). Each query here has a matching DuckDB oracle in
@@ -28,11 +29,15 @@ object Parity {
     * schema [[graft.sources.Tables.schemas]] declares, so reading and
     * planning run no job and write no session conf. The session is
     * expected to be tuned already ([[graft.Engine.tune]], where it was built or
-    * adopted). `events` alone is read with its footer's schema: its `ts`
-    * has shipped in two parquet shapes, which [[eventsUs]] tells apart. */
-  def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    graft.sources.Tables.schemas.get(name).fold(spark.read)(spark.read.schema(_))
-      .parquet(s"$sfDir/$name.parquet")
+    * adopted). `events` alone is read with its footer's schema, resolved
+    * on the driver ([[Shims.parquetSchema]]): its `ts` has shipped in two
+    * parquet shapes, which [[eventsUs]] tells apart. */
+  def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    graft.sources.Tables.schemas.get(name)
+      .fold(spark.read.schema(Shims.parquetSchema(spark, path)))(spark.read.schema(_))
+      .parquet(path)
+  }
 
   /** [[t]] plus the input-skew guard of optimization guide §2.5 ("one
     * huge unsplittable file"): the driver's testdata ships each table as

@@ -27,4 +27,22 @@ object Scenario {
     val timed = (1 to runs).map(_ => time(f))
     (timed.map(_._1).sorted.apply(runs / 2), timed.last._2)
   }
+
+  /** The executed plans of the executions `body` completes on `spark`, in
+    * order, with every listener event of `body` delivered on return. */
+  def executedPlans(spark: SparkSession)(body: => Unit): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      body
+      org.apache.spark.sql.graftshim.Shims.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    plans.toArray(Array.empty[String]).toSeq
+  }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.KeyedScan
 
 import graft.storage.GraftCatalog
-import Scenario.{time, warmMedian}
+import Scenario.{executedPlans, time, warmMedian}
 
 /** The GraftCatalog write, row-level DML, layout and read paths
   * ([[storage.GraftCatalog]]). */
@@ -492,5 +492,97 @@ object StorageScenarios {
         "fully_clustered_sec" -> tFully, "fully_clustered_tasks" -> tasksFully,
         "partially_clustered_sec" -> tPartial, "partially_clustered_tasks" -> tasksPartial,
         "shuffle_join_sec" -> tShuffle)
+    }),
+
+    /* The medallion day over the catalog: `days` run-dates of `records`
+     * seeded synthetic API records (1 in 50 with a null id), each through
+     * the pipeline Runner on a V2CatalogWarehouse. Per layer write on the
+     * last day: its jobs, its tasks and the path its plan took
+     * (`one_task`: a `Coalesce 1` in place of the rebalance, see
+     * [[graft.storage.OneTaskWrite]]; `rebalance`: the AQE rebalance
+     * shuffle); per layer the most files any run-date partition holds;
+     * and the silver input's size estimate on the first and the last day,
+     * which counts the run-date's bronze partition only, whatever the
+     * warehouse's age. Every day's run report must count its records. */
+    Scenario("medallion_day", Seq("40", "10000"), (spark, _, args) => {
+      val days = args(0).toInt
+      val records = args(1).toInt
+      val wh = GraftCatalog.registerTemp(spark, "medday")
+      val rnd = new scala.util.Random(7)
+      val types = Seq("micro", "brewpub", "large", "regional", "contract", "planning")
+      val states = Seq("Oregon", "Colorado", "Texas", "Maine", "Ohio", "Utah")
+      def record(day: Int, i: Int): String = {
+        val id = if (rnd.nextInt(50) == 0) "null" else s""""b-$day-$i""""
+        s"""{"id": $id, "name": "Brewery $i", "brewery_type": "${types(rnd.nextInt(6))}", """ +
+          s""""address_1": "${rnd.nextInt(999)} Main St", "city": "City ${rnd.nextInt(40)}", """ +
+          s""""state_province": "${states(rnd.nextInt(6))}", "postal_code": "${rnd.nextInt(99999)}", """ +
+          s""""country": "United States", "longitude": "${-120 + rnd.nextDouble()}", """ +
+          s""""latitude": "${40 + rnd.nextDouble()}", "phone": "(503) 555-${rnd.nextInt(9999)}", """ +
+          s""""website_url": "http://b$i.example.com"}"""
+      }
+      val layers = Seq("bronze", "silver", "gold")
+      // jobs are told apart by a local property of the writing thread, so
+      // scenarios running beside this one on the same context never count
+      val Layer = "graft.medallion_day.layer"
+      val jobs = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+      val tasks = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+      val stageLayer = scala.collection.mutable.Map.empty[Int, String]
+      val plans = scala.collection.mutable.Map.empty[String, String]
+      val sc = spark.sparkContext
+      val counter = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          Option(j.properties).flatMap(p => Option(p.getProperty(Layer))).foreach { l =>
+            jobs(l) += 1
+            j.stageIds.foreach(stageLayer(_) = l)
+          }
+        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          stageLayer.get(t.stageId).foreach(tasks(_) += 1)
+      }
+      val inner = new graft.storage.V2CatalogWarehouse(spark, "medday", "day")
+      val storage = new graft.storage.Storage {
+        def read(table: String): DataFrame = inner.read(table)
+        def exists(table: String): Boolean = inner.exists(table)
+        // the session's own executions only (the scenario runs in a
+        // clone), each write's events delivered before the next starts
+        def writePartitioned(df: DataFrame, table: String, partitionCol: String): Unit = {
+          sc.setLocalProperty(Layer, table)
+          try executedPlans(spark)(inner.writePartitioned(df, table, partitionCol))
+            .lastOption.foreach(plans(table) = _)
+          finally sc.setLocalProperty(Layer, null)
+        }
+      }
+      var batch: Seq[String] = Nil
+      val runner = new graft.pipeline.Runner(spark, storage,
+        new graft.ingest.RecordFetcher { def fetch(): Seq[String] = batch })
+      val base = java.time.LocalDate.of(2024, 1, 1)
+      def silverEstimate(d: java.time.LocalDate): BigInt =
+        graft.layers.Silver.transform(storage.read("bronze"), d)
+          .queryExecution.optimizedPlan.stats.sizeInBytes
+      sc.addSparkListener(counter)
+      val (wall, estimates) = try time((0 until days).map { day =>
+        batch = (0 until records).map(record(day, _))
+        val d = base.plusDays(day.toLong)
+        jobs.clear(); tasks.clear(); plans.clear()
+        val r = runner.run(d)
+        val ids = batch.count(!_.startsWith("""{"id": null"""))
+        require(r.bronzeRows == records && r.silverRows == ids && r.totalCount == ids,
+          s"$d: run report $r for $records records, $ids ids")
+        silverEstimate(d)
+      }) finally sc.removeSparkListener(counter)
+      def path(plan: String): String =
+        if (plan.contains("REBALANCE_PARTITIONS_BY_COL")) "rebalance"
+        else if (plan.contains("Coalesce 1") && !plan.contains("Exchange")) "one_task"
+        else "other"
+      def maxFilesPerDate(layer: String): Int =
+        new java.io.File(s"$wh/day/$layer").listFiles().toSeq
+          .filter(_.getName.startsWith("extraction_date="))
+          .map(_.listFiles().count(_.getName.endsWith(".parquet"))).max
+      Seq("days" -> days, "records" -> records, "wall_sec" -> wall,
+        "advisory_bytes" -> spark.sessionState.conf
+          .getConf(org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)) ++
+        layers.flatMap(l => Seq(s"${l}_jobs" -> jobs(l), s"${l}_tasks" -> tasks(l),
+          s"${l}_path" -> plans.get(l).fold("none")(path),
+          s"${l}_files_per_date" -> maxFilesPerDate(l))) ++
+        Seq("silver_estimate_first" -> estimates.head, "silver_estimate_last" -> estimates.last)
     }))
 }

@@ -3137,6 +3137,15 @@ private[storage] class GraftTable(
   // the served snapshot; a legacy table (no manifest) serves its listing
   private val pinnedFiles = snapshot.map(_.files)
   private val snap = snapshot.getOrElse(Manifest.empty)
+  // the scans' file stats: the manifest's column stats plus each file's
+  // partition values from its path (as deleteCandidateFiles reads them),
+  // so a partition filter prunes the served file set and the scan's size
+  // estimate counts only the kept partitions, not the whole table
+  private lazy val scanStats = pinnedFiles match {
+    case Some(files) if meta.partitionCols.nonEmpty => files.map(f =>
+      f -> (GraftCatalog.partitionPathStats(f, meta) ++ snap.stats.getOrElse(f, Map.empty))).toMap
+    case _ => snap.stats
+  }
 
   /** Iceberg-style metadata columns, synthesized by the read path: the
     * serving data file's table-relative path and the row's physical
@@ -3361,7 +3370,7 @@ private[storage] class GraftTable(
               StructType(cols.map(c => meta.schema(meta.schema.fieldIndex(c)))))
         }
         return org.apache.spark.sql.graftshim.Evolved.scanBuilder(
-          groupTables, opts, meta.schema, snap.stats, dir, fileBlooms,
+          groupTables, opts, meta.schema, scanStats, dir, fileBlooms,
           eqDeleteSpec, posDelMap, mixedKeys, mixedKeySchema)
       case _ => ()
     }
@@ -3383,7 +3392,7 @@ private[storage] class GraftTable(
         case None => meta.partitionCols.map(Expressions.identity(_))
       }
     org.apache.spark.sql.graftshim.Spj.prunedScanBuilder(
-      pt, opts, keys, snap.stats, dir, fileBlooms, eqDeleteSpec, posDelMap)
+      pt, opts, keys, scanStats, dir, fileBlooms, eqDeleteSpec, posDelMap)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -3451,6 +3460,9 @@ private[storage] class GraftWriteBuilder(
     // value instead of one straggler task (Iceberg pairs its hash
     // distribution with advisory-partition-size subsplitting the same
     // way; the row-level delta writes here already did — GraftRowLevel).
+    // When the input's size estimate fits one partition at this
+    // advisory size, OneTaskWrite replaces the rebalance with a narrow
+    // Coalesce 1: the same files, written by one task with no shuffle.
     override def distributionStrictlyRequired(): Boolean = false
     override def advisoryPartitionSizeInBytes(): Long =
       meta.properties.get(GraftCatalog.AdvisoryWriteBytesProp)

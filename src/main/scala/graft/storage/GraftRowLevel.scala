@@ -500,7 +500,9 @@ private[storage] final class GraftDeltaOperation(
           // REBALANCE, which coalesces the write to the advisory
           // partition size — a small delta lands as one file (per
           // partition value) instead of one per task. The shuffle is
-          // delta-sized by definition of the path.
+          // delta-sized by definition of the path; a delta whose size
+          // estimate fits one advisory partition skips it, written by one
+          // task through a narrow Coalesce 1 (OneTaskWrite).
           override def requiredDistribution
               : org.apache.spark.sql.connector.distributions.Distribution = {
             // derived partition levels (__bucket_*) are not query columns —
@@ -757,7 +759,9 @@ private[storage] final class GraftPosDeltaOperation(
           // `_file` bucket every inserted row of an unpartitioned
           // key-less MERGE hashes to, which would otherwise serialize
           // into a single write task (split granularity is the map-output
-          // chunk, so parallelism recovers up to the upstream task count)
+          // chunk, so parallelism recovers up to the upstream task count).
+          // A delta whose size estimate fits one advisory partition is
+          // written by one task with no rebalance (OneTaskWrite).
           override def advisoryPartitionSizeInBytes(): Long =
             meta.properties.get(GraftCatalog.AdvisoryWriteBytesProp)
               .flatMap(_.toLongOption).filter(_ > 0).getOrElse(0L)

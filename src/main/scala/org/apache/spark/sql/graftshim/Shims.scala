@@ -46,10 +46,11 @@ object Shims {
     onSession(df, clone)
   }
 
-  /** Checkpoint `df` (a bare `LogicalRDD`) with `rows` and `bytes` as its
-    * plan statistics. `LogicalRDD`'s origin statistics are otherwise the
-    * estimate of the plan it was taken from, which multiplies across every
-    * join below it. */
+  /** `df`, a bare `LogicalRDD` (a checkpoint, or a frame over an RDD),
+    * with `rows` and `bytes` as its plan statistics. A checkpoint's origin
+    * statistics are otherwise the estimate of the plan it was taken from,
+    * which multiplies across every join below it, and an RDD frame's are
+    * `spark.sql.defaultSizeInBytes`. */
   def withStats(df: DataFrame, rows: Long, bytes: Long): DataFrame = {
     val ds = df.asInstanceOf[classic.Dataset[_]]
     ds.logicalPlan match {
@@ -59,8 +60,23 @@ object Shims {
         classic.Dataset.ofRows(ds.sparkSession,
           r.copy()(ds.sparkSession, Some(stats), Some(r.constraints)))
       case p => throw new IllegalArgumentException(
-        s"withStats needs a checkpoint, got ${p.nodeName}")
+        s"withStats needs a LogicalRDD, got ${p.nodeName}")
     }
+  }
+
+  /** The schema `spark.read.parquet(file)` infers for one parquet file,
+    * resolved on the driver from its footer, with no job. The footer's
+    * Spark schema wins where one was written; otherwise the session's
+    * parquet conversion confs apply, `spark.sql.legacy.parquet.nanosAsLong`
+    * among them. Nullable, as every file source reports its schema. */
+  def parquetSchema(spark: SparkSession, file: String): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val state = spark.asInstanceOf[classic.SparkSession].sessionState
+    val p = new org.apache.hadoop.fs.Path(file)
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(state.newHadoopConf(), p,
+      org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new org.apache.parquet.hadoop.Footer(p, footer),
+      new ParquetToSparkSchemaConverter(state.conf)).asNullable
   }
 
   /** `df`'s analyzed plan as a DataFrame of `session`, which shares

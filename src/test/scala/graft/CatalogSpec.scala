@@ -922,4 +922,49 @@ class CatalogSpec extends SparkSpec {
     assert(!cat.dropBranch(id("br3"), "tmp")) // already gone
     assert(spark.table("graftv2.bronze.br3").count() == 1) // main intact
   }
+
+  // 40 rows over 5 run-dates from 8 range tasks: a ~2 KB estimate
+  private def fiveDays = spark.range(0, 40, 1, 8).select(col("id"),
+    concat(lit("n"), col("id").cast("string")).as("name"),
+    concat(lit("2024-01-1"), pmod(col("id"), lit(5)).cast("string")).as("extraction_date"))
+
+  private def filesPerDay(table: String): Map[String, Int] =
+    new java.io.File(s"$wh/bronze/$table").listFiles().toSeq
+      .filter(_.getName.startsWith("extraction_date="))
+      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+
+  test("an append that fits one advisory partition plans one task with no " +
+      "exchange and writes one file per partition value") {
+    wh
+    fiveDays.limit(0).writeTo("graftv2.bronze.onetask").using("parquet")
+      .partitionedBy(col("extraction_date")).createOrReplace()
+    val Seq(plan) = executedPlans(fiveDays.writeTo("graftv2.bronze.onetask").append())
+    assert(plan.contains("Coalesce 1") && !plan.contains("Exchange"), plan)
+    assert(filesPerDay("onetask") == (0 until 5).map(i => s"extraction_date=2024-01-1$i" -> 1).toMap)
+    assert(spark.table("graftv2.bronze.onetask").count() == 40)
+  }
+
+  test("an append above the table's advisory partition size keeps its rebalance") {
+    wh
+    fiveDays.limit(0).writeTo("graftv2.bronze.rebal").using("parquet")
+      .tableProperty(GraftCatalog.AdvisoryWriteBytesProp, "1024")
+      .partitionedBy(col("extraction_date")).createOrReplace()
+    val Seq(plan) = executedPlans(fiveDays.writeTo("graftv2.bronze.rebal").append())
+    assert(plan.contains("REBALANCE_PARTITIONS_BY_COL") && !plan.contains("Coalesce 1"), plan)
+    assert(spark.table("graftv2.bronze.rebal").count() == 40)
+  }
+
+  test("a partition filter's scan estimates the kept partitions' bytes, not the table's") {
+    wh
+    t((1L, "a", "2024-01-15"), (2L, "b", "2024-01-15"))
+      .writeTo("graftv2.bronze.twoday").using("parquet")
+      .partitionedBy(col("extraction_date")).createOrReplace()
+    t((3L, "c", "2024-01-16")).writeTo("graftv2.bronze.twoday").append()
+    def bytes(day: String) = new java.io.File(s"$wh/bronze/twoday/extraction_date=$day")
+      .listFiles().filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    val all = spark.table("graftv2.bronze.twoday")
+    def estimate(df: org.apache.spark.sql.DataFrame) = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(estimate(all) == bytes("2024-01-15") + bytes("2024-01-16"))
+    assert(estimate(all.filter(col("extraction_date") === "2024-01-15")) == bytes("2024-01-15"))
+  }
 }

@@ -1225,11 +1225,12 @@ class FileSkippingSpec extends SparkSpec {
     val all = spark.table("skipcat.s.pblm")
     assert(scannedFiles(all) === 4)
     // partition filter + point probe: the bloom drops both EVEN files
-    // from the served set (scannedFiles counts the served file set —
-    // hive partition pruning applies below this metric, at split
-    // planning), and the result is partition-correct
+    // and the partition value drops b's odd file from the served set
+    // (scannedFiles counts the served file set; a file's partition value
+    // from its path prunes it there like a column stat), so one file is
+    // served, and the result is partition-correct
     val q = all.filter(col("part") === "a" && col("id") === 43L)
-    assert(scannedFiles(q) === 2)
+    assert(scannedFiles(q) === 1)
     assert(q.count() === 1)
     // point probe alone: one file per partition survives (the odd ones)
     val q2 = all.filter(col("id") === 43L)

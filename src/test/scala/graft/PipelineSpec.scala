@@ -201,7 +201,7 @@ class PipelineSpec extends SparkSpec with TimeLimits {
     }
   }
 
-  test("a medallion day runs 6 jobs: 2 per layer write, none for the report") {
+  test("a medallion day runs 3 jobs: each layer write in one task, one file per date") {
     val runner = new Runner(spark, v2Warehouse("g2jobs"),
       new RecordFetcher { def fetch(): Seq[String] = shrinking })
     runner.run(d) // the create path; count a later day's overwrite path
@@ -211,14 +211,24 @@ class PipelineSpec extends SparkSpec with TimeLimits {
         n.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(l)
-    try {
+    val written = try executedPlans {
       runner.run(d.plusDays(1))
       // the listener bus is async; settle on a stable count
       var last = -1
       var cur = n.get()
       while (cur != last) { Thread.sleep(200); last = cur; cur = n.get() }
     } finally spark.sparkContext.removeSparkListener(l)
-    assert(n.get() == 6)
+    assert(n.get() == 3)
+    assert(written.size == 3, written.mkString("\n"))
+    written.foreach { p =>
+      assert(p.contains("Coalesce 1") && !p.contains("Exchange"), p)
+    }
+    for (layer <- Seq("bronze", "silver", "gold")) {
+      val files = Option(new java.io.File(spark.conf.get("spark.sql.catalog.g2jobs.warehouse"),
+        s"med/$layer/extraction_date=${d.plusDays(1)}").listFiles()).toSeq.flatten
+        .filter(_.getName.endsWith(".parquet"))
+      assert(files.size == 1, s"$layer: ${files.mkString(", ")}")
+    }
   }
 
   test("table setup creates layered namespaces with declared schemas") {

@@ -41,6 +41,7 @@ class ScenarioSpec extends SparkSpec {
     "evolution" -> Seq("4000", "16"),
     "bloom_index" -> Seq("8000", "4"),
     "spj_skew" -> Seq("2000"),
+    "medallion_day" -> Seq("2", "100"),
     "stream" -> Seq("1"),
     "label_squash" -> Seq("2", "100", "500"))
 
@@ -97,6 +98,12 @@ class ScenarioSpec extends SparkSpec {
 
   test("grouped_enum's tiny run takes groupedRunningSum's in-task path") {
     assert(line("grouped_enum").contains(""""path":"in_task""""), line("grouped_enum"))
+  }
+
+  test("medallion_day's tiny run writes each layer in one task, one file per run-date") {
+    val l = line("medallion_day")
+    assert(""""[a-z]+_path":"one_task"""".r.findAllIn(l).size == 3, l)
+    assert(""""[a-z]+_files_per_date":1[,}]""".r.findAllIn(l).size == 3, l)
   }
 
   test("scenarios leave the caller's session conf as it was") {

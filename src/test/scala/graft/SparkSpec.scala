@@ -9,6 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.shared
+
+  /** The executed plans of the executions `body` completes on [[spark]],
+    * in order. */
+  def executedPlans(body: => Unit): Seq[String] =
+    graft.scenarios.Scenario.executedPlans(spark)(body)
 }
 
 object SparkSpec {

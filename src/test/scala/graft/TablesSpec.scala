@@ -41,6 +41,38 @@ class TablesSpec extends SparkSpec {
     assert(s.conf.getAll == before)
   }
 
+  test("events' schema, read from its footer on the driver, is spark.read's inference " +
+      "in each testdata scale and in both ts shapes, with no job") {
+    val dirs = Option(testdata.listFiles()).toSeq.flatten
+      .filter(d => d.isDirectory && d.getName.startsWith("sf")).sortBy(_.getName)
+    for (d <- dirs) assert(Parity.t(spark, d.getPath, "events").schema ==
+      spark.read.parquet(s"$d/events.parquet").schema, d)
+    // the two parquet shapes events.ts has shipped in: NANOS (a LONG under
+    // spark.sql.legacy.parquet.nanosAsLong) and MICROS-NTZ
+    val tmp = java.nio.file.Files.createTempDirectory("events-ts")
+    for ((name, ts) <- Seq("nanos" -> "NANOS", "micros" -> "MICROS")) {
+      val f = new org.apache.hadoop.fs.Path(s"$tmp/$name/events.parquet")
+      val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+        s"message events { required int64 event_id; optional int64 ts (TIMESTAMP($ts,false)); " +
+          "optional binary props (STRING); }")
+      val w = org.apache.parquet.hadoop.example.ExampleParquetWriter.builder(f)
+        .withType(schema).build()
+      try w.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+        .newGroup().append("event_id", 1L).append("ts", 1000L).append("props", "{}"))
+      finally w.close()
+      val inferred = spark.read.parquet(f.toString).schema
+      assert(inferred("ts").dataType == (if (name == "nanos") org.apache.spark.sql.types.LongType
+        else org.apache.spark.sql.types.TimestampNTZType))
+      assert(Parity.t(spark, s"$tmp/$name", "events").schema == inferred, name)
+    }
+    val sc = spark.sparkContext
+    sc.setJobGroup("events-read", "events-read", interruptOnCancel = false)
+    try Parity.t(spark, sf, "events").queryExecution.executedPlan
+    finally sc.clearJobGroup()
+    Shims.drainListenerBus(sc)
+    assert(sc.statusTracker.getJobIdsForGroup("events-read").isEmpty)
+  }
+
   test("SparkEntry.entry on an untuned session returns the shared session's rows") {
     val s = spark.newSession()
     assert(s.conf.get("spark.sql.ansi.enabled") == "true") // Spark 4's default
