@@ -497,7 +497,8 @@ object StorageScenarios {
     /* The medallion day over the catalog: `days` run-dates of `records`
      * seeded synthetic API records (1 in 50 with a null id), each through
      * the pipeline Runner on a V2CatalogWarehouse. Per layer write on the
-     * last day: its jobs, its tasks and the path its plan took
+     * last day: its jobs, its tasks, its wall seconds and the path its
+     * plan took
      * (`one_task`: a `Coalesce 1` in place of the rebalance, see
      * [[graft.storage.OneTaskWrite]]; `rebalance`: the AQE rebalance
      * shuffle); per layer the most files any run-date partition holds;
@@ -528,6 +529,7 @@ object StorageScenarios {
       val tasks = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
       val stageLayer = scala.collection.mutable.Map.empty[Int, String]
       val plans = scala.collection.mutable.Map.empty[String, String]
+      val secs = scala.collection.mutable.Map.empty[String, Double].withDefaultValue(0.0)
       val sc = spark.sparkContext
       val counter = new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -546,9 +548,11 @@ object StorageScenarios {
         // clone), each write's events delivered before the next starts
         def writePartitioned(df: DataFrame, table: String, partitionCol: String): Unit = {
           sc.setLocalProperty(Layer, table)
-          try executedPlans(spark)(inner.writePartitioned(df, table, partitionCol))
-            .lastOption.foreach(plans(table) = _)
-          finally sc.setLocalProperty(Layer, null)
+          try {
+            val (s, ps) = time(executedPlans(spark)(inner.writePartitioned(df, table, partitionCol)))
+            secs(table) = s
+            ps.lastOption.foreach(plans(table) = _)
+          } finally sc.setLocalProperty(Layer, null)
         }
       }
       var batch: Seq[String] = Nil
@@ -562,7 +566,7 @@ object StorageScenarios {
       val (wall, estimates) = try time((0 until days).map { day =>
         batch = (0 until records).map(record(day, _))
         val d = base.plusDays(day.toLong)
-        jobs.clear(); tasks.clear(); plans.clear()
+        jobs.clear(); tasks.clear(); plans.clear(); secs.clear()
         val r = runner.run(d)
         val ids = batch.count(!_.startsWith("""{"id": null"""))
         require(r.bronzeRows == records && r.silverRows == ids && r.totalCount == ids,
@@ -581,6 +585,7 @@ object StorageScenarios {
         "advisory_bytes" -> spark.sessionState.conf
           .getConf(org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)) ++
         layers.flatMap(l => Seq(s"${l}_jobs" -> jobs(l), s"${l}_tasks" -> tasks(l),
+          s"${l}_write_s" -> secs(l),
           s"${l}_path" -> plans.get(l).fold("none")(path),
           s"${l}_files_per_date" -> maxFilesPerDate(l))) ++
         Seq("silver_estimate_first" -> estimates.head, "silver_estimate_last" -> estimates.last)

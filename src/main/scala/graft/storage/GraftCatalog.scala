@@ -1209,7 +1209,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     // EVERY file a rewrite candidate (churning untouched partitions
     // through identical copies)
     def statsFor(f: String): Map[String, GraftCatalog.ColStat] =
-      GraftCatalog.partitionPathStats(f, meta) ++ stats.getOrElse(f, Map.empty)
+      GraftCatalog.fileStats(f, meta, stats)
     val allCands =
       if (translated.isEmpty) scanCands
       else scanCands.filter(f =>
@@ -2237,7 +2237,7 @@ object GraftCatalog {
           StructField(s"__bnh_$i", IntegerType, nullable = true))
       })
     val fRows: Seq[org.apache.spark.sql.Row] = seqCand.map { f =>
-      val st = partitionPathStats(f, meta) ++ stats.getOrElse(f, Map.empty)
+      val st = fileStats(f, meta, stats)
       val bl = blooms.getOrElse(f, Map.empty)
       org.apache.spark.sql.Row.fromSeq(
         Seq(f, Long.box(seqOf(f))) ++ keyCols.zipWithIndex.flatMap { case (c, i) =>
@@ -2490,14 +2490,31 @@ object GraftCatalog {
     }
   }
 
-  private[storage] def partitionPathStats(
+  /** One file's stats as pruning and metadata-only aggregates read them:
+    * its manifest column stats plus its partition values from its dir path
+    * (data files leave partition columns out, so the path is their only
+    * record). A null path value's null count is the file's recorded row
+    * count (−1, unknown, when none is recorded, so `count(part)` falls
+    * back to a scan). */
+  private[storage] def fileStats(
+      relPath: String, meta: GraftTableMeta,
+      stats: Map[String, Map[String, ColStat]]): Map[String, ColStat] = {
+    val own = stats.getOrElse(relPath, Map.empty)
+    val rows = own.get(RowCountKey).filter(_.kind == "r").map(_.nulls)
+    partitionPathStats(relPath, meta).map {
+      case (c, st) if st.kind == "n" => c -> st.copy(nulls = rows.getOrElse(-1L))
+      case kv => kv
+    } ++ own
+  }
+
+  private def partitionPathStats(
       relPath: String, meta: GraftTableMeta): Map[String, ColStat] =
     relPath.split("/").dropRight(1).flatMap { seg =>
       seg.split("=", 2) match {
         case Array(c, raw) if meta.partitionCols.contains(c) && !c.startsWith("__bucket_") =>
           meta.schema.fields.find(_.name == c).flatMap { fld =>
             parsePartValue(raw, fld.dataType).flatMap {
-              case null => Some(c -> ColStat("n", 1L, "", ""))
+              case null => Some(c -> ColStat("n", -1L, "", ""))
               case u: org.apache.spark.unsafe.types.UTF8String =>
                 Some(c -> ColStat("s", 0L, u.toString, u.toString))
               case n @ (_: Byte | _: Short | _: Int | _: Long) =>
@@ -3137,13 +3154,14 @@ private[storage] class GraftTable(
   // the served snapshot; a legacy table (no manifest) serves its listing
   private val pinnedFiles = snapshot.map(_.files)
   private val snap = snapshot.getOrElse(Manifest.empty)
-  // the scans' file stats: the manifest's column stats plus each file's
-  // partition values from its path (as deleteCandidateFiles reads them),
-  // so a partition filter prunes the served file set and the scan's size
-  // estimate counts only the kept partitions, not the whole table
+  // the scans' file stats (GraftCatalog.fileStats): the manifest's column
+  // stats plus each file's partition values from its path, so a partition
+  // filter prunes the served file set and the scan's size estimate counts
+  // only the kept partitions, not the whole table; metadata-only
+  // aggregates read the same map
   private lazy val scanStats = pinnedFiles match {
     case Some(files) if meta.partitionCols.nonEmpty => files.map(f =>
-      f -> (GraftCatalog.partitionPathStats(f, meta) ++ snap.stats.getOrElse(f, Map.empty))).toMap
+      f -> GraftCatalog.fileStats(f, meta, snap.stats)).toMap
     case _ => snap.stats
   }
 

@@ -165,7 +165,7 @@ private[storage] final class CowScanBuilder(
       // replaces; virtual partition-column stats from each file's dir
       // path scope an UPDATE on a partition to that partition's files
       kept = live.filter(f => FileStatsPruning.mayMatchAll(
-        GraftCatalog.partitionPathStats(f, meta) ++ snap.stats.getOrElse(f, Map.empty),
+        GraftCatalog.fileStats(f, meta, snap.stats),
         blooms.getOrElse(f, Map.empty), translated))
     }
     filters // nothing claimed: the condition must run row-side, post-scan
@@ -325,7 +325,7 @@ private[storage] final class GroupFilterableScan(
       val kept =
         if (noMatches) Seq.empty[String]
         else files.filter(f => FileStatsPruning.mayMatchAll(
-          GraftCatalog.partitionPathStats(f, meta), Map.empty, v1))
+          GraftCatalog.fileStats(f, meta, Map.empty), Map.empty, v1))
       if (kept.size < files.size) {
         files = kept
         op.scannedFiles = kept

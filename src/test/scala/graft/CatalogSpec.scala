@@ -967,4 +967,25 @@ class CatalogSpec extends SparkSpec {
     assert(estimate(all) == bytes("2024-01-15") + bytes("2024-01-16"))
     assert(estimate(all.filter(col("extraction_date") === "2024-01-15")) == bytes("2024-01-15"))
   }
+
+  test("metadata-only aggregates over a null partition value equal the full scan's") {
+    wh
+    t((1L, "a", "2024-01-15"), (2L, "b", null), (3L, "c", null), (4L, "d", "2024-01-16"))
+      .writeTo("graftv2.bronze.nullday").using("parquet")
+      .partitionedBy(col("extraction_date")).createOrReplace()
+    t((5L, "e", null)).writeTo("graftv2.bronze.nullday").append()
+    val aggs = "count(extraction_date) AS cd, count(*) AS c, " +
+      "min(extraction_date) AS mn, max(extraction_date) AS mx FROM graftv2.bronze.nullday"
+    val qs = Seq(s"SELECT $aggs", s"SELECT extraction_date, $aggs GROUP BY extraction_date")
+    def rows(q: String) = spark.sql(q).collect().map(_.toString).sorted.toSeq
+    // the partition values ride the file paths: answered without a file scan
+    assert(spark.sql(qs.head).queryExecution.sparkPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b }.isEmpty)
+    val answered = qs.map(rows)
+    spark.conf.set("spark.sql.graft.manifestAggregates", "false")
+    val scanned = try qs.map(rows) finally
+      spark.conf.set("spark.sql.graft.manifestAggregates", "true")
+    assert(answered == scanned)
+    assert(answered.head == Seq("[2,5,2024-01-15,2024-01-16]"))
+  }
 }
